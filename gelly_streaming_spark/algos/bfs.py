@@ -30,44 +30,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
+from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
 
 
-def _try_small_bfs(
-    eu: DataFrame, sources: DataFrame, max_hops: int, small_input_rows: int
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC _try_small_union_find
-    doctrine): one bounded Arrow collect of the directed adjacency plus
-    one bounded collect of the source ids, then a driver-local
-    deque-free BFS — a multi-round distributed frontier loop on a
-    sub-100k-edge snapshot is all job-floor overhead (measured r12:
-    2.0 s distributed vs ~0.3 s driver-local at sf0.1). Spills over the
-    limit -> None, caller runs the distributed loop; tests force it
-    with small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    # the source set rides the same bound: a huge seed set over a tiny
-    # graph must not flood the driver — spill over -> distributed path
-    stbl = bounded_take(
-        sources.select(sources.columns[0]).distinct(),
-        small_input_rows,
-        as_arrow=True,
-    )
-    if stbl.num_rows > small_input_rows:
-        return None
+def _bfs_hops(edges: list[tuple], sources: list, max_hops: int) -> list[tuple]:
+    """Driver kernel of ``bfs_distances`` over the directed adjacency
+    (measured r12 at sf0.1: 2.0 s distributed vs ~0.3 s driver-local)."""
     adj: dict = {}
-    for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
+    for a, b in edges:
         adj.setdefault(a, []).append(b)
-    dist = {v: 0 for v in stbl.column(0).to_pylist()}
+    dist = {v: 0 for v in sources}
     frontier = list(dist)
     for h in range(max_hops):
         nxt = []
@@ -79,8 +56,7 @@ def _try_small_bfs(
         if not nxt:
             break
         frontier = nxt
-    pdf = pd.DataFrame(sorted(dist.items()), columns=["id", "dist"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, dist int")
+    return sorted(dist.items())
 
 
 def bfs_distances(
@@ -106,7 +82,18 @@ def bfs_distances(
         eu = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     else:
         eu = e
-    small = _try_small_bfs(eu, sources, max_hops, small_input_rows)
+    # the distributed loop's ids are the sources unioned with reached dsts
+    ids = sources.select(F.col(sources.columns[0]).alias("id")).unionByName(
+        eu.select(F.col("dst").alias("id"))
+    )
+    small = driver_fast_path(
+        eu,
+        small_input_rows,
+        ("id", StructField("dist", IntegerType(), False)),
+        lambda edges, srcs: _bfs_hops(edges, srcs, max_hops),
+        ids=ids,
+        sources=sources,
+    )
     if small is not None:
         return small
 
@@ -123,9 +110,8 @@ def bfs_distances(
     # JOB-FLOOR-bound — ~1 eager localCheckpoint job per hop (which the
     # emptiness observation and next round's frontier read ride) plus 2
     # standalone count jobs. Measured levers, kept and rejected:
-    # - shuffle-width right-sizing (the pagerank/CC doctrine): ~neutral
-    #   here (the jobs are floor-bound, not task-bound) — kept anyway,
-    #   it can only help and matches the sibling loops;
+    # - shuffle-width right-sizing (plans.shuffle): ~neutral here (the
+    #   jobs are floor-bound, not task-bound) — kept anyway;
     # - folding the eu/initial-dist counts into checkpoint observations
     #   (two fewer jobs): kept;
     # - disabling AQE at tiny widths (the pagerank lever): measured
@@ -142,9 +128,6 @@ def bfs_distances(
     # each round's frontier depends on the last; small graphs where
     # that floor dominates are exactly what the driver-local fast path
     # above serves (0.8-0.9 s on the same fixture).
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
 
     # Initial settled count rides the dist checkpoint the same way.
     obs0 = Observation()
@@ -160,35 +143,34 @@ def bfs_distances(
         return dist.select("id", "dist")
     frontier = dist
     try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for h in range(max_hops):
-            msgs = (
-                eu.join(frontier, eu["src"] == frontier["id"])
-                .select(F.col("dst").alias("id"))
-                .distinct()
-            )
-            new = msgs.join(dist, "id", "left_anti").withColumn(
-                "dist", F.lit(h + 1)
-            )
-            obs = Observation()
-            nxt = (
-                dist.unionByName(new)
-                .observe(
-                    obs,
-                    F.count_if(F.col("dist") == h + 1).alias("added"),
+        with loop_shuffle_width(stream.edges.sparkSession, int(obs_e.get["n"])):
+            for h in range(max_hops):
+                msgs = (
+                    eu.join(frontier, eu["src"] == frontier["id"])
+                    .select(F.col("dst").alias("id"))
+                    .distinct()
                 )
-                .localCheckpoint()
-            )
-            added = int(obs.get["added"])
-            free_checkpoint(dist)
-            dist = nxt
-            if added == 0:
-                break
-            # next round's frontier = exactly the rows discovered this
-            # round; reading them off the fresh checkpoint costs no
-            # recompute
-            frontier = dist.where(F.col("dist") == h + 1)
+                new = msgs.join(dist, "id", "left_anti").withColumn(
+                    "dist", F.lit(h + 1)
+                )
+                obs = Observation()
+                nxt = (
+                    dist.unionByName(new)
+                    .observe(
+                        obs,
+                        F.count_if(F.col("dist") == h + 1).alias("added"),
+                    )
+                    .localCheckpoint()
+                )
+                added = int(obs.get["added"])
+                free_checkpoint(dist)
+                dist = nxt
+                if added == 0:
+                    break
+                # next round's frontier = exactly the rows discovered this
+                # round; reading them off the fresh checkpoint costs no
+                # recompute
+                frontier = dist.where(F.col("dist") == h + 1)
     finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
         free_checkpoint(eu)
     return dist.select("id", "dist")

@@ -21,11 +21,13 @@ Spark-native formulations:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -35,15 +37,15 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def _odd_vertex_reach_local(spark: SparkSession, rows) -> DataFrame:
-    """Driver-local 2-coloring over collected (graph, src, dst) rows —
-    symmetrization and dedup happen as dict inserts, then one BFS per
-    component: odd vertex ⇔ lies in a non-bipartite component."""
+def _odd_vertex_counts(rows: list[tuple]) -> list[tuple]:
+    """Driver kernel of ``odd_vertex_reach``: 2-coloring over collected
+    (graph, src, dst) rows — symmetrization and dedup happen as dict
+    inserts (spending cluster jobs on them bought nothing), then one BFS
+    per component: odd vertex ⇔ lies in a non-bipartite component."""
     import collections as _c
 
     adj: dict = _c.defaultdict(lambda: _c.defaultdict(set))
     for g, a, b in rows:
-        a, b = int(a), int(b)
         adj[g][a].add(b)
         adj[g][b].add(a)
     out = []
@@ -69,9 +71,7 @@ def _odd_vertex_reach_local(spark: SparkSession, rows) -> DataFrame:
             if not ok:
                 odd_vertices += len(comp)
         out.append((g, odd_vertices == 0, odd_vertices))
-    return spark.createDataFrame(
-        out, "graph string, is_bipartite boolean, odd_vertices long"
-    )
+    return out
 
 
 def odd_vertex_reach(
@@ -80,23 +80,23 @@ def odd_vertex_reach(
     """``tagged_edges``: (graph, src, dst). Returns one row per graph:
     (graph, is_bipartite, odd_vertices).
 
-    Adaptive: under ``small_input_rows`` raw edges the parity closure
-    runs driver-local (per-graph BFS parity sets) instead of the
+    Under ``small_input_rows`` raw edges the parity closure runs
+    driver-local (``plans.probe.driver_fast_path``) instead of the
     distributed pair fixpoint, whose O(n²) pair state is pure job
-    overhead at fixture sizes; ``small_input_rows=0`` forces the
-    distributed path. The probe is ONE bounded ``limit(N+1).collect()``
-    job on the raw input (the same fused move as connected_components'
-    fast path): symmetrization and dedup are O(E) dict inserts on the
-    driver, so spending cluster jobs on them (the old checkpoint →
-    count → toPandas chain, 3 jobs) bought nothing."""
-    if small_input_rows > 0:
-        from gelly_streaming_spark.plans.probe import bounded_take
-
-        rows = bounded_take(
-            tagged_edges.select("graph", "src", "dst"), small_input_rows
-        )
-        if len(rows) <= small_input_rows:
-            return _odd_vertex_reach_local(tagged_edges.sparkSession, rows)
+    overhead at fixture sizes."""
+    small = driver_fast_path(
+        tagged_edges.select("graph", "src", "dst"),
+        small_input_rows,
+        (
+            "graph",
+            StructField("is_bipartite", BooleanType(), False),
+            StructField("odd_vertices", LongType(), False),
+        ),
+        _odd_vertex_counts,
+        ids=tagged_edges.select("graph"),
+    )
+    if small is not None:
+        return small
     eu = _symmetrize(tagged_edges).localCheckpoint()
     walk = (
         eu.select("graph", F.col("src").alias("root"))

@@ -32,44 +32,22 @@ from pyspark.sql import types as T
 from gelly_streaming_spark.operators.aggregation import SummaryAggregation
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint, track_persist
+from gelly_streaming_spark.plans.probe import _estimated_bytes, driver_fast_path
+from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
 
 # Measured edge count above which the alternating-CC star operations
 # switch to their skew-safe (partial-agg + AQE-splittable join) form.
 _SKEW_SAFE_EDGES = 50_000_000
 
 
-def _try_small_union_find(e: DataFrame, small_input_rows: int) -> DataFrame | None:
-    """Adaptive small-graph fast path, fused to ONE driver action.
-
-    ``limit(N+1).collect()`` replaces the round-2 localCheckpoint → count →
-    toPandas → createDataFrame chain (4 jobs, one materializing the whole
-    symmetrized set) with a single bounded collect: at most N+1 canonical
-    edge rows ever cross to the driver, whatever the input size. If the
-    limit spills over, return None — the caller runs the distributed plan,
-    having wasted a ≤N-row transfer plus the dedup's map side (callers
-    that KNOW the input is huge pass ``small_input_rows=0`` and skip the
-    probe entirely). Union-find needs no symmetrization (union(a,b) is
-    direction-free), so the caller's canonical set is collected as-is.
-
-    Both driver transfers ride Arrow: ``collect()``'s per-Row Py4J
-    boxing measured ~1 s for a 191 k-edge probe where the Arrow batch
-    is tens of ms, and the label table returns through a pandas
-    createDataFrame (one Arrow batch) instead of a list-of-tuples."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(e.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+def _union_find_labels(edges: list[tuple]) -> list[tuple]:
+    """Driver kernel of both CC entry points: union-find needs no
+    symmetrization (union(a, b) is direction-free), so the canonical
+    edge set is folded as collected."""
     ds = DisjointSet()
-    for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
+    for a, b in edges:
         ds.union(a, b)
-    out = sorted((x, ds.find(x)) for x in ds.parent)
-    pdf = pd.DataFrame(out, columns=["id", "component"], dtype="int64")
-    return e.sparkSession.createDataFrame(pdf, "id long, component long")
+    return sorted((x, ds.find(x)) for x in ds.parent)
 
 
 def connected_components(
@@ -80,12 +58,8 @@ def connected_components(
 ) -> DataFrame:
     """Per-vertex minimum-reachable-id labels: rows (id, component).
 
-    Adaptive execution (the same move as broadcast-join selection): a
-    graph whose symmetrized edge list is under ``small_input_rows`` is
-    solved with a driver-local union-find — O(E α(E)) in one task beats a
-    multi-round distributed fixpoint whose per-round cost is all job
-    overhead at that size. Larger inputs run the distributed min-label
-    propagation; ``small_input_rows=0`` forces it (tests do).
+    A graph of at most ``small_input_rows`` canonical edges is solved by
+    a driver-local union-find (``plans.probe.driver_fast_path``).
 
     ``check_every`` label-propagation rounds run between convergence
     checks — each check is a driver action, so batching rounds roughly
@@ -101,7 +75,9 @@ def connected_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    small = _try_small_union_find(e, small_input_rows)
+    small = driver_fast_path(
+        e, small_input_rows, ("id", "component"), _union_find_labels
+    )
     if small is not None:
         return small
     # Symmetrize once; reuse across every iteration.
@@ -109,18 +85,10 @@ def connected_components(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
 
-    # Right-size the iteration's shuffle width to the measured edge count
-    # (count over the just-materialized checkpoint is a cache read — see
-    # the alternating variant for the rationale). Restored in `finally`.
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(old_parts), eu.count() // 500_000 + 1))
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if loop_parts <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
-
+    # the width count over the just-materialized checkpoint is a cache read
+    with loop_shuffle_width(
+        stream.edges.sparkSession, eu.count(), aqe_off_when_tiny=True
+    ):
         # Convergence via an OBSERVED (count, exact label sum) signature
         # on each block's checkpoint job: per-vertex labels are
         # monotonically non-increasing under min-label steps, so the sum
@@ -173,9 +141,6 @@ def connected_components(
                 converged = True
                 break
             prev_sig = sig
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
     if not converged:
         free_checkpoint(eu)
         free_checkpoint(labels)
@@ -215,10 +180,8 @@ def connected_components_alternating(
     minimum). ``stats``, if given, receives ``{"rounds": N}`` — the
     convergence-rate property tests read it — and ``{"skew_safe": bool}``.
 
-    Adaptive (same policy as ``connected_components``): inputs under
-    ``small_input_rows`` canonical edges run a driver-local union-find —
-    a multi-round distributed fixpoint over a bounded graph is pure job
-    overhead; ``small_input_rows=0`` forces the distributed path.
+    Inputs of at most ``small_input_rows`` canonical edges run the same
+    driver-local union-find as ``connected_components``.
 
     ``skew_safe`` picks the neighborhood-min formulation:
 
@@ -245,7 +208,9 @@ def connected_components_alternating(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    small = _try_small_union_find(e, small_input_rows)
+    small = driver_fast_path(
+        e, small_input_rows, ("id", "component"), _union_find_labels
+    )
     if small is not None:
         if stats is not None:
             stats["rounds"] = 0
@@ -314,33 +279,20 @@ def connected_components_alternating(
 
     rounds = 0
     converged = False
-    # Right-size the shuffle width BEFORE any job runs, from Catalyst's
+    # The first width comes BEFORE any job runs, from Catalyst's
     # optimized-plan size estimate (parquet footer sizes — available
-    # without running a job); once round 1's observation returns the
-    # MEASURED contracted edge count, the loop re-sizes from that. On a
-    # contracted/small graph each job at the session's full shuffle
-    # width is pure task-launch + AQE-replan overhead (measured ~25% of
-    # q15d wall-clock). Static right-sizing up front beats AQE
-    # discovering the same coalesce per stage, per job — and never
-    # widens past the session default, so a 100 TB run keeps its
-    # configured width. Conf is restored in `finally` (runtime conf,
-    # driver-sequential loop — no concurrent-query interference).
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    from gelly_streaming_spark.plans.probe import _estimated_bytes
-
-    est_bytes = _estimated_bytes(e)  # shared helper (unknown → huge)
-    width0 = max(1, min(int(old_parts), est_bytes // (64 << 20) + 1))
+    # without running a job, one partition per 64 MB); once round 1's
+    # observation returns the MEASURED contracted edge count, the loop
+    # re-sizes from that at 250k edges per partition.
+    est_bytes = _estimated_bytes(e)  # unknown → huge
     if skew_safe is None:
         # auto: ~16 bytes/canonical edge — flip to the skew-safe star
         # ops when the estimate clears the threshold; re-decided per
         # round below once measured counts exist
         skew["safe"] = est_bytes > _SKEW_SAFE_EDGES * 16
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(width0))
-        if width0 <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
+    with loop_shuffle_width(
+        stream.edges.sparkSession, est_bytes, 64 << 20, aqe_off_when_tiny=True
+    ) as resize:
         # No up-front checksum job: round 1 both materializes the
         # persist and records the first (count, set-hash) signature via
         # its observe(), so convergence tracking starts one round in.
@@ -389,19 +341,8 @@ def connected_components_alternating(
                 converged = True
                 break
             if prev_sum is None:
-                # first measured edge count — re-size the loop's shuffle
-                # width to the data (same policy the old up-front
-                # checksum applied, now from a free side-observation)
-                loop_parts = max(
-                    1, min(int(old_parts), cur_sum[0] // 250_000 + 1)
-                )
-                sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-                if loop_parts <= 4:
-                    # tiny regime: AQE replan latency outweighs anything
-                    # it could re-decide over ≤4 right-sized partitions
-                    sess_conf.set("spark.sql.adaptive.enabled", "false")
-                else:
-                    sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
+                # first measured edge count, from a free side-observation
+                resize(cur_sum[0], 250_000)
             if skew_safe is None:
                 # a contracting graph legitimately shrinks back under the
                 # threshold — fall back to the cheaper window form then
@@ -439,9 +380,6 @@ def connected_components_alternating(
             e.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()
         )
         out = labels.localCheckpoint()
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
     e0.unpersist()
     free_checkpoint(e)
     return out

@@ -27,65 +27,43 @@ and the step's surviving-edge count rides the checkpoint job's
 Observation so the early exit costs zero extra jobs. All arithmetic is
 integer — no float margins exist for the cross-engine hash. Snapshots
 whose symmetrized edge list fits ``small_input_rows`` peel
-driver-locally instead (the CC/BFS/LPA bounded-collect doctrine —
-measured r15: the distributed loop's per-round floor is ~0.1 s job
+driver-locally instead (``plans.probe.driver_fast_path`` — measured
+r15: the distributed loop's per-round floor is ~0.1 s job
 submit + ~0.2 s compute+checkpoint at loop_parts=1, so 3 rounds on a
 20k-edge snapshot pay ~1.6 s of fixed floors the driver peel avoids).
 """
 
 from __future__ import annotations
 
+import collections
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
+from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
 
 
-def _try_small_kcore(
-    eu_plan: DataFrame,
-    k: int,
-    rounds: int,
-    converged: bool,
-    small_input_rows: int,
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS/LPA doctrine): one
-    bounded Arrow collect of the symmetrized distinct adjacency, then a
-    driver-local synchronous peel — a multi-round distributed loop on a
-    sub-100k-edge snapshot is all job-floor overhead (measured r15 at
-    sf0.1: 3 distributed peel rounds cost 1.6-1.9 s of which ~0.3 s is
-    real per-round compute and the rest is fixed job/checkpoint floors;
-    the driver peel returns the same rows in ~0.4 s). Spills over the
-    limit -> None, caller runs the distributed loop; tests force it
-    with small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import collections
-
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu_plan, small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    pairs = list(
-        zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
-    )
+def _kcore_peel(
+    edges: list[tuple], k: int, rounds: int, converged: bool
+) -> list[tuple]:
+    """Driver kernel of ``k_core``: the same synchronous peel over the
+    collected symmetrized adjacency."""
     step = 0
-    while pairs:
+    while edges:
         step += 1
-        deg = collections.Counter(u for u, _v in pairs)
+        deg = collections.Counter(u for u, _v in edges)
         keep = {v for v, d in deg.items() if d >= k}
-        nxt = [(u, v) for u, v in pairs if u in keep and v in keep]
-        if len(nxt) == len(pairs):
+        nxt = [(u, v) for u, v in edges if u in keep and v in keep]
+        if len(nxt) == len(edges):
             break  # fixpoint — remaining steps are no-ops
-        pairs = nxt
+        edges = nxt
         if not converged and step >= rounds:
             break
-    deg = collections.Counter(u for u, _v in pairs)
-    pdf = pd.DataFrame(sorted(deg.items()), columns=["id", "degree"])
-    return eu_plan.sparkSession.createDataFrame(pdf, "id long, degree long")
+    return sorted(collections.Counter(u for u, _v in edges).items())
 
 
 def k_core(
@@ -99,8 +77,7 @@ def k_core(
     ``rounds`` synchronous k-core peel steps (``converged=True`` peels
     to the true k-core fixpoint instead). Inputs whose symmetrized
     distinct edge list fits ``small_input_rows`` peel driver-locally
-    (bounded-collect doctrine); the distributed loop below is the scale
-    path, forced in tests with ``small_input_rows=0``."""
+    (``plans.probe.driver_fast_path``)."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
     if rounds < 1:
@@ -115,7 +92,12 @@ def k_core(
     eu_plan = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    small = _try_small_kcore(eu_plan, k, rounds, converged, small_input_rows)
+    small = driver_fast_path(
+        eu_plan,
+        small_input_rows,
+        ("id", StructField("degree", LongType(), False)),
+        lambda edges: _kcore_peel(edges, k, rounds, converged),
+    )
     if small is not None:
         return small
     obs0 = Observation()
@@ -126,16 +108,8 @@ def k_core(
     # contract
     eu = eu_plan.observe(obs0, F.count(F.lit(1)).alias("m")).localCheckpoint()
     m_prev = int(obs0.get["m"])
-    prev_ckpt = eu
-    # loop shuffle width right-sized to the measured edge count (the
-    # LPA/PageRank convention — 32-way exchanges on a 10k-edge snapshot
-    # are pure task overhead); conf restored in finally
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), m_prev // 500_000 + 1))
     step = 0
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    with loop_shuffle_width(stream.edges.sparkSession, m_prev):
         while m_prev > 0:
             step += 1
             deg = eu.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
@@ -148,16 +122,13 @@ def k_core(
                 .localCheckpoint()
             )
             m = int(obs.get["m"])
-            free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
+            free_checkpoint(eu)
             eu = nxt
             if m == m_prev or m == 0:
                 break  # fixpoint (or empty) — remaining steps are no-ops
             m_prev = m
             if not converged and step >= rounds:
                 break
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
     return eu.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )

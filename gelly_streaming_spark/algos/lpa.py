@@ -26,12 +26,11 @@ labels before the exchange) and one dst-keyed argmax fold —
 ``max(struct(cnt, -lbl))`` picks most-frequent-then-smallest WITHOUT a
 window sort — then one left join back to the |V|-row label table;
 every per-round frame is |V|- or |E|-bounded, the label table
-checkpoints per round (plan depth O(1); the changed-label observation
-rides that job, so the early exit is free), and the loop's
-shuffle width is right-sized to the measured edge count exactly as the
-sibling loops do (conf restored in ``finally``). The changed-label
-count rides the checkpoint job's Observation — early exit costs zero
-extra jobs (the CC convergence trick).
+checkpoints per round (plan depth O(1)), and the changed-label count
+rides that checkpoint job's Observation — early exit costs zero extra
+jobs (the CC convergence trick). Unweighted LPA is the weighted loop
+with unit weights over the distinct symmetrized edges (a sum of ones is
+the count), so both entry points share one driver kernel and one loop.
 """
 
 from __future__ import annotations
@@ -41,72 +40,19 @@ from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
+from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
 
 
-def _try_small_lpa(
-    eu: DataFrame, iters: int, small_input_rows: int
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS doctrine): one bounded
-    Arrow collect of the symmetrized adjacency, then a driver-local
-    synchronous LPA — a multi-round distributed loop on a sub-100k-edge
-    snapshot is all job-floor overhead. Spills over the limit -> None,
-    caller runs the distributed loop; tests force it with
-    small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    # eu is symmetrized by the caller, so every vertex appears as a
-    # source — adjacency keys ARE the vertex set
-    adj: dict = {}
-    for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
-        adj.setdefault(a, []).append(b)
-    lbl = {v: v for v in adj}
-    for _ in range(iters):
-        nxt = {}
-        changed = False
-        for v, neigh in adj.items():
-            counts: dict = {}
-            for u in neigh:
-                counts[lbl[u]] = counts.get(lbl[u], 0) + 1
-            # most frequent, ties -> smallest label
-            best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            nxt[v] = best
-            changed = changed or best != lbl[v]
-        lbl = nxt
-        if not changed:
-            break
-    pdf = pd.DataFrame(sorted(lbl.items()), columns=["id", "lbl"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, lbl long")
-
-
-def _try_small_weighted_lpa(
-    eu: DataFrame, iters: int, small_input_rows: int
-) -> DataFrame | None:
-    """Weighted sibling of _try_small_lpa: the collected weights are
-    exact decimals (python Decimal), so driver-side score sums and
+def _lpa_labels(edges: list[tuple], iters: int) -> list[tuple]:
+    """Driver kernel over the collected symmetrized (src, dst, w) rows.
+    Decimal weights arrive as Python ``Decimal``, so score sums and
     comparisons are exact — identical to the distributed decimal path
     and the oracle's DECIMAL arithmetic."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst", "w"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+    # symmetrized input: every vertex appears as a source, so adjacency
+    # keys ARE the vertex set
     adj: dict = {}
-    for a, b, w in zip(
-        tbl.column("src").to_pylist(),
-        tbl.column("dst").to_pylist(),
-        tbl.column("w").to_pylist(),
-    ):
+    for a, b, w in edges:
         adj.setdefault(a, []).append((b, w))
     lbl = {v: v for v in adj}
     for _ in range(iters):
@@ -116,14 +62,79 @@ def _try_small_weighted_lpa(
             scores: dict = {}
             for u, w in neigh:
                 scores[lbl[u]] = scores.get(lbl[u], 0) + w
+            # largest score, ties -> smallest label
             best = min(scores.items(), key=lambda kv: (-kv[1], kv[0]))[0]
             nxt[v] = best
             changed = changed or best != lbl[v]
         lbl = nxt
         if not changed:
             break
-    pdf = pd.DataFrame(sorted(lbl.items()), columns=["id", "lbl"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, lbl long")
+    return sorted(lbl.items())
+
+
+def _propagate(eu: DataFrame, iters: int, small_input_rows: int) -> DataFrame:
+    """Synchronous LPA over the symmetrized (src, dst, w) plan ``eu``:
+    the driver kernel when ``eu`` fits ``small_input_rows``
+    (``plans.probe.driver_fast_path``), else the distributed loop."""
+    small = driver_fast_path(
+        eu, small_input_rows, ("id", "lbl"), lambda edges: _lpa_labels(edges, iters)
+    )
+    if small is not None:
+        return small
+
+    from pyspark.sql import Observation
+
+    obs_e = Observation()
+    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    labels = (
+        eu.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("lbl", F.col("id"))
+        .localCheckpoint()
+    )
+    try:
+        with loop_shuffle_width(eu.sparkSession, int(obs_e.get["n"])):
+            for _ in range(iters):
+                # neighbor labels arrive at dst; (dst, lbl) partial-agg
+                # score sum, then the argmax fold: max(struct(score, -lbl))
+                # is largest-then-SMALLEST-label without a window sort
+                cnt = (
+                    eu.join(labels, eu["src"] == labels["id"])
+                    .select(F.col("dst").alias("vid"), "lbl", "w")
+                    .groupBy("vid", "lbl")
+                    .agg(F.sum("w").alias("c"))
+                )
+                pick = cnt.groupBy("vid").agg(
+                    (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl")))["nl"])
+                    .alias("new_lbl")
+                )
+                obs = Observation()
+                nxt = (
+                    labels.join(pick, labels["id"] == pick["vid"], "left")
+                    .select(
+                        "id",
+                        F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
+                        (
+                            F.coalesce(F.col("new_lbl"), F.col("lbl"))
+                            != F.col("lbl")
+                        ).alias("_chg"),
+                    )
+                    .observe(obs, F.count_if(F.col("_chg")).alias("chg"))
+                    .select("id", "lbl")
+                    .localCheckpoint()
+                )
+                changed = int(obs.get["chg"])
+                # every round checkpoints: the changed-label Observation
+                # needs a per-round action anyway; free the superseded
+                # checkpoint (the initial one too — ADVICE r13) once its
+                # successor landed
+                free_checkpoint(labels)
+                labels = nxt
+                if changed == 0:
+                    break  # synchronous LPA is idempotent from here on
+    finally:
+        free_checkpoint(eu)
+    return labels.select("id", "lbl")
 
 
 def weighted_label_propagation(
@@ -142,13 +153,7 @@ def weighted_label_propagation(
     margins (the q60 integer-exactness property, kept under weighting).
     Parallel edges and both directions of an unordered pair SUM into
     one symmetric weight before the loop (one (src, dst) partial-agg
-    shuffle); self-loops are dropped.
-
-    Same 100 TB loop shape as ``label_propagation``: per round ONE
-    (vertex, label)-keyed partial-agg SUM shuffle, the windowless
-    ``max(struct(score, -lbl))`` argmax fold, one left join back to the
-    |V|-row label table, per-round checkpoint carrying the changed-label
-    observation."""
+    shuffle); self-loops are dropped."""
     if iters < 1:
         raise ValueError(
             f"weighted_label_propagation: iters must be >= 1, got {iters}"
@@ -164,65 +169,7 @@ def weighted_label_propagation(
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    small = _try_small_weighted_lpa(eu, iters, small_input_rows)
-    if small is not None:
-        return small
-
-    from pyspark.sql import Observation
-
-    obs_e = Observation()
-    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
-
-    labels = (
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint()
-    )
-    prev_ckpt = labels
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for i in range(iters):
-            cnt = (
-                eu.join(labels, eu["src"] == labels["id"])
-                .select(F.col("dst").alias("vid"), "lbl", "w")
-                .groupBy("vid", "lbl")
-                .agg(F.sum("w").alias("c"))
-            )
-            pick = cnt.groupBy("vid").agg(
-                (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl")))["nl"])
-                .alias("new_lbl")
-            )
-            obs = Observation()
-            nxt = (
-                labels.join(pick, labels["id"] == pick["vid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-                    (
-                        F.coalesce(F.col("new_lbl"), F.col("lbl"))
-                        != F.col("lbl")
-                    ).alias("_chg"),
-                )
-                .observe(obs, F.count_if(F.col("_chg")).alias("chg"))
-                .select("id", "lbl")
-                .localCheckpoint()
-            )
-            changed = int(obs.get["chg"])
-            if prev_ckpt is not None:
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
-            labels = nxt
-            if changed == 0:
-                break
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(eu)
-    return labels.select("id", "lbl")
+    return _propagate(eu, iters, small_input_rows)
 
 
 def label_propagation(
@@ -246,73 +193,4 @@ def label_propagation(
     eu = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    small = _try_small_lpa(eu, iters, small_input_rows)
-    if small is not None:
-        return small
-
-    from pyspark.sql import Observation
-
-    obs_e = Observation()
-    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
-
-    labels = (
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint()
-    )
-    # start the free chain at the initial checkpoint so round 1 releases
-    # it once `nxt` lands (ADVICE r13: it leaked one |V|-row storage
-    # block per call until GC; BFS already frees its initial dist)
-    prev_ckpt = labels
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for i in range(iters):
-            # neighbor labels arrive at dst; (dst, lbl) partial-agg
-            # count, then the argmax fold: max(struct(cnt, -lbl)) is
-            # most-frequent-then-SMALLEST-label without a window sort
-            cnt = (
-                eu.join(labels, eu["src"] == labels["id"])
-                .select(F.col("dst").alias("vid"), "lbl")
-                .groupBy("vid", "lbl")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            pick = cnt.groupBy("vid").agg(
-                (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl")))["nl"])
-                .alias("new_lbl")
-            )
-            obs = Observation()
-            nxt = (
-                labels.join(pick, labels["id"] == pick["vid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-                    (
-                        F.coalesce(F.col("new_lbl"), F.col("lbl"))
-                        != F.col("lbl")
-                    ).alias("_chg"),
-                )
-                .observe(obs, F.count_if(F.col("_chg")).alias("chg"))
-                .select("id", "lbl")
-                .localCheckpoint()
-            )
-            changed = int(obs.get["chg"])
-            # every round checkpoints: the changed-label Observation
-            # needs a per-round action anyway (no cadence knob — unlike
-            # pagerank, whose convergence is not observed, LPA's early
-            # exit rides this job); free the superseded checkpoint once
-            # its successor landed
-            if prev_ckpt is not None:
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
-            labels = nxt
-            if changed == 0:
-                break  # synchronous LPA is idempotent from here on
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(eu)
-    return labels.select("id", "lbl")
+    return _propagate(eu.withColumn("w", F.lit(1)), iters, small_input_rows)

@@ -23,19 +23,20 @@ each iteration is one src-keyed join against the |V|-row rank table,
 one dst-keyed partial/final sum, and one left join back to the vertex
 set — three keyed shuffles over monotonically |V|-bounded data, with
 the rank table checkpointed per round so the plan depth stays O(1)
-however many iterations run. Shuffle width is right-sized to the
-measured edge count exactly as the CC loop does (32-way exchanges on a
-1k-vertex snapshot are pure task overhead; the conf is restored in
-``finally``).
+however many iterations run, at the width ``plans.shuffle`` sets from
+the measured edge count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
+from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
 
 
 def _round_pr_exact(fr) -> float:
@@ -57,18 +58,15 @@ def _round_pr_exact(fr) -> float:
     )
 
 
-def _try_small_pagerank(
-    e_plan: DataFrame,
+def _pagerank_exact(
+    edges: list[tuple],
+    sources: list | None,
     iters: int,
     damping: float,
-    sources: DataFrame | None,
-    small_input_rows: int,
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS/LPA/k-core/HITS
-    doctrine — VERDICT r15 item 5): one bounded Arrow collect of the
-    distinct directed edges, then driver-local power iteration in EXACT
-    rational arithmetic (``fractions.Fraction``): damping enters as the
-    exact binary value of the double literal the distributed plan uses,
+) -> list[tuple]:
+    """Driver kernel of ``pagerank``: power iteration in EXACT rational
+    arithmetic (``fractions.Fraction``): damping enters as the exact
+    binary value of the double literal the distributed plan uses,
     teleport and 1/n are exact rationals, so the iterated rank is the
     true real number the JVM doubles approximate to ~1e-13. The output
     rounding (9dp→6dp HALF_UP, ``_round_pr_exact``) therefore lands on
@@ -77,39 +75,18 @@ def _try_small_pagerank(
     hold — bit-safe by construction, no float-summation-order hazard at
     all. The r15 loop-tax decomposition (q72/q73) measured ~80% of a
     3-round distributed loop on a ~1k-vertex snapshot as fixed
-    job/checkpoint floors; the driver loop removes every one of them.
-    Spills over the row bound -> None (caller runs the distributed
-    loop; tests force it with ``small_input_rows=0``)."""
-    if small_input_rows <= 0:
-        return None
+    job/checkpoint floors; the driver loop removes every one of them."""
     import collections
     from fractions import Fraction
 
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(e_plan, small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    edges = list(
-        zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
-    )
     if not edges:
-        return None  # caller's n == 0 branch owns the empty contract
+        return []  # the distributed loop's empty-graph answer
     verts = sorted({u for u, _ in edges} | {v for _, v in edges})
     n = len(verts)
     tele: dict | None = None
     if sources is not None:
-        stbl = bounded_take(
-            sources.select(F.col(sources.columns[0]).alias("id")).distinct(),
-            small_input_rows,
-            as_arrow=True,
-        )
-        if stbl.num_rows > small_input_rows:
-            return None
         vset = set(verts)
-        srcs = {x for x in stbl.column("id").to_pylist() if x in vset}
+        srcs = {x for x in sources if x in vset}
         if not srcs:
             raise ValueError(
                 "pagerank: sources is empty (or disjoint from the graph) "
@@ -134,22 +111,7 @@ def _try_small_pagerank(
             r = {v: base + d * sums[v] for v in verts}
         else:
             r = {v: one_minus_d * tele[v] + d * sums[v] for v in verts}
-    pdf = pd.DataFrame(
-        [(v, _round_pr_exact(r[v])) for v in verts], columns=["id", "pr"]
-    )
-    # Schema derived from the input (VERDICT r16 #3): the distributed
-    # loop's `id` inherits the edge src/dst type, so a hard-coded
-    # `id long` would return a DIFFERENT schema on the fast path for a
-    # non-long-id graph (string ids, int32 ids) than the scale path.
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("id", e_plan.schema["src"].dataType, True),
-            StructField("pr", DoubleType(), True),
-        ]
-    )
-    return e_plan.sparkSession.createDataFrame(pdf, schema)
+    return [(v, _round_pr_exact(r[v])) for v in verts]
 
 
 def pagerank(
@@ -190,17 +152,19 @@ def pagerank(
     plan) runs verbatim.
 
     Graphs whose distinct edge list fits ``small_input_rows`` run the
-    driver-local exact-rational fast path (``_try_small_pagerank`` —
-    bounded-collect doctrine, bit-safe rounding by construction); the
-    distributed loop below is the scale path, forced in tests with
-    ``small_input_rows=0``."""
+    driver-local exact-rational kernel (``plans.probe.driver_fast_path``;
+    bit-safe rounding by construction)."""
     if iters < 1:
         raise ValueError(f"pagerank: iters must be >= 1, got {iters}")
     if checkpoint_every < 1:
         raise ValueError(f"pagerank: checkpoint_every must be >= 1, got {checkpoint_every}")
     e_plan = stream.edges.select("src", "dst").distinct()
-    small = _try_small_pagerank(
-        e_plan, iters, damping, sources, small_input_rows
+    small = driver_fast_path(
+        e_plan,
+        small_input_rows,
+        ("id", StructField("pr", DoubleType(), True)),
+        lambda edges, srcs=None: _pagerank_exact(edges, srcs, iters, damping),
+        sources=sources,
     )
     # ``stats``, if given, receives {"fast_path": bool} — the q56d
     # distributed-path certification asserts on it (the q15d convention:
@@ -220,84 +184,78 @@ def pagerank(
     n = verts.count()
     if n == 0:
         # Empty edge stream: 1/n and (1-d)/n are undefined. Return the
-        # empty (id, pr) frame instead of an opaque ZeroDivisionError
-        # (ADVICE r12) — the checkpoints just created are freed since
-        # nothing downstream will reference them.
+        # empty (id, pr) frame, typed as the non-empty answer, instead of
+        # an opaque ZeroDivisionError (ADVICE r12) — the checkpoints just
+        # created are freed since nothing downstream will reference them.
         free_checkpoint(e)
         free_checkpoint(verts)
         return verts.select(
-            F.col("id"), F.lit(0.0).alias("pr")
+            F.col("id"), F.lit(None).cast("double").alias("pr")
         ).where(F.lit(False))
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(old_parts), e.count() // 500_000 + 1))
     eo = None
     ranks = None
     vt = verts
     try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if loop_parts <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
-        od = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        eo = e.join(od, "src").localCheckpoint()  # loop-invariant
-        if sources is not None:
-            s = (
-                sources.select(F.col(sources.columns[0]).alias("id"))
-                .distinct()
-                .join(verts, "id", "left_semi")
-            )
-            ns = s.count()
-            if ns == 0:
-                raise ValueError(
-                    "pagerank: sources is empty (or disjoint from the graph) "
-                    "— personalized teleport mass is undefined"
+        with loop_shuffle_width(
+            stream.edges.sparkSession, e.count(), aqe_off_when_tiny=True
+        ):
+            od = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
+            eo = e.join(od, "src").localCheckpoint()  # loop-invariant
+            if sources is not None:
+                s = (
+                    sources.select(F.col(sources.columns[0]).alias("id"))
+                    .distinct()
+                    .join(verts, "id", "left_semi")
                 )
-            # teleport column rides the checkpointed vertex table; the
-            # per-round left join below reads vt either way, so the
-            # personalized loop costs no extra shuffle
-            vt = verts.join(
-                s.withColumn("_s", F.lit(True)), "id", "left"
-            ).select(
-                "id",
-                F.when(F.col("_s"), F.lit(1.0 / ns))
-                .otherwise(F.lit(0.0))
-                .alias("tele"),
-            ).localCheckpoint()
-        base = (1.0 - damping) / n
-        ranks = (
-            verts.withColumn("r", F.lit(1.0 / n))
-            if sources is None
-            else vt.select("id", F.col("tele").alias("r"))
-        )
-        prev_ckpt = None  # the superseded rank checkpoint, freed after its successor lands
-        for i in range(iters):
-            contribs = eo.join(ranks, eo["src"] == ranks["id"]).select(
-                F.col("dst").alias("id"), (F.col("r") / F.col("deg")).alias("c")
-            )
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("s"))
-            propagated = F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-            new = vt.join(sums, "id", "left").select(
-                "id",
-                (
-                    (
-                        F.lit(base)
-                        if sources is None
-                        else F.lit(1.0 - damping) * F.col("tele")
+                ns = s.count()
+                if ns == 0:
+                    raise ValueError(
+                        "pagerank: sources is empty (or disjoint from the graph) "
+                        "— personalized teleport mass is undefined"
                     )
-                    + propagated
-                ).alias("r"),
+                # teleport column rides the checkpointed vertex table; the
+                # per-round left join below reads vt either way, so the
+                # personalized loop costs no extra shuffle
+                vt = verts.join(
+                    s.withColumn("_s", F.lit(True)), "id", "left"
+                ).select(
+                    "id",
+                    F.when(F.col("_s"), F.lit(1.0 / ns))
+                    .otherwise(F.lit(0.0))
+                    .alias("tele"),
+                ).localCheckpoint()
+            base = (1.0 - damping) / n
+            ranks = (
+                verts.withColumn("r", F.lit(1.0 / n))
+                if sources is None
+                else vt.select("id", F.col("tele").alias("r"))
             )
-            if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-                new = new.localCheckpoint()
-                if prev_ckpt is not None:
-                    # the fresh checkpoint no longer reads the old one
-                    free_checkpoint(prev_ckpt)
-                prev_ckpt = new
-            ranks = new
+            prev_ckpt = None  # the superseded rank checkpoint, freed after its successor lands
+            for i in range(iters):
+                contribs = eo.join(ranks, eo["src"] == ranks["id"]).select(
+                    F.col("dst").alias("id"), (F.col("r") / F.col("deg")).alias("c")
+                )
+                sums = contribs.groupBy("id").agg(F.sum("c").alias("s"))
+                propagated = F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                new = vt.join(sums, "id", "left").select(
+                    "id",
+                    (
+                        (
+                            F.lit(base)
+                            if sources is None
+                            else F.lit(1.0 - damping) * F.col("tele")
+                        )
+                        + propagated
+                    ).alias("r"),
+                )
+                if (i + 1) % checkpoint_every == 0 or i == iters - 1:
+                    new = new.localCheckpoint()
+                    if prev_ckpt is not None:
+                        # the fresh checkpoint no longer reads the old one
+                        free_checkpoint(prev_ckpt)
+                    prev_ckpt = new
+                ranks = new
     finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
         free_checkpoint(e)
         if eo is not None:
             free_checkpoint(eo)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import track_persist
+from gelly_streaming_spark.plans.probe import bounded_take
 
 
 def _canonical(edges: DataFrame, extra_keys: list[str] | None = None) -> DataFrame:
@@ -165,8 +166,6 @@ def triangle_count(
             # broadcast_limit+1 rows — if the limit spills over, fall to
             # the joins plan having transferred a bounded amount, else
             # the arrow table is already in hand (no separate count job)
-            from gelly_streaming_spark.plans.probe import bounded_take
-
             tbl = bounded_take(
                 e.select("src", "dst"), broadcast_limit, as_arrow=True
             )
@@ -182,7 +181,17 @@ def triangle_count(
             nrows, bc = cached[1], cached[2]
         else:
             if tbl is None:
-                tbl = e.select("src", "dst").toArrow()
+                # a caller-forced strategy gets the same bound as the probe
+                tbl = bounded_take(
+                    e.select("src", "dst"), broadcast_limit, as_arrow=True
+                )
+                if tbl.num_rows > broadcast_limit:
+                    raise ValueError(
+                        f"triangle_count: strategy='broadcast_kernel' needs at "
+                        f"most broadcast_limit={broadcast_limit} canonical "
+                        f"edges; this input has more — use strategy='joins' "
+                        f"or 'auto'"
+                    )
             nrows = tbl.num_rows
             if nrows < 3:
                 prep = None

@@ -544,3 +544,104 @@ def test_lpa_triangle_converges_and_early_exit(spark):
     )
     out = {r.id: r.lbl for r in label_propagation(loops, 2).collect()}
     assert set(out) == {2, 3}
+
+
+# ---------------------------------------------------------------------------
+# The shared driver fast path (plans.probe.driver_fast_path)
+# ---------------------------------------------------------------------------
+
+# a triangle (odd cycle, 2-core), a tail hanging off it, a reverse edge,
+# a parallel edge and a self-loop, plus a separate path component
+_PARITY_EDGES = [
+    (1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (2, 1, 0.5), (3, 4, 3.0),
+    (4, 5, 1.0), (4, 5, 1.0), (6, 7, 1.0), (7, 8, 2.0), (8, 8, 1.0),
+]
+
+
+def _parity_entry_points():
+    from gelly_streaming_spark.algos.bfs import bfs_distances
+    from gelly_streaming_spark.algos.bipartiteness import odd_vertex_reach
+    from gelly_streaming_spark.algos.connected_components import (
+        connected_components_alternating,
+    )
+    from gelly_streaming_spark.algos.hits import hits
+    from gelly_streaming_spark.algos.kcore import k_core
+    from gelly_streaming_spark.algos.lpa import (
+        label_propagation,
+        weighted_label_propagation,
+    )
+    from gelly_streaming_spark.algos.pagerank import pagerank
+
+    def odd(gs, src, **kw):
+        tagged = gs.edges.select(
+            F.when(F.col("src") < 6, "a").otherwise("b").alias("graph"),
+            "src",
+            "dst",
+        )
+        return odd_vertex_reach(tagged, **kw)
+
+    return {
+        "cc": lambda gs, src, **kw: connected_components(gs, **kw),
+        "cc_alternating": lambda gs, src, **kw: connected_components_alternating(gs, **kw),
+        "odd_vertex_reach": odd,
+        "bfs_all": lambda gs, src, **kw: bfs_distances(gs, src, direction="all", **kw),
+        "bfs_out": lambda gs, src, **kw: bfs_distances(gs, src, direction="out", **kw),
+        "bfs_in": lambda gs, src, **kw: bfs_distances(gs, src, direction="in", **kw),
+        "lpa": lambda gs, src, **kw: label_propagation(gs, **kw),
+        "weighted_lpa": lambda gs, src, **kw: weighted_label_propagation(gs, **kw),
+        "k_core": lambda gs, src, **kw: k_core(gs, **kw),
+        "hits": lambda gs, src, **kw: hits(gs, **kw),
+        "pagerank": lambda gs, src, **kw: pagerank(gs, **kw),
+        "pagerank_sources": lambda gs, src, **kw: pagerank(gs, sources=src, **kw),
+    }
+
+
+@pytest.mark.parametrize("ids", ["int", "long", "empty"])
+@pytest.mark.parametrize("entry", list(_parity_entry_points()))
+def test_fast_path_matches_forced_loop(spark, entry, ids):
+    """Every graph entry point with a driver fast path returns the same
+    schema (types and nullability) and the same rows from the fast path
+    as from the forced distributed loop — on int ids (the fast path used
+    to widen them to bigint), long ids, and an empty edge set."""
+    ty = "long" if ids == "long" else "int"
+    rows = [] if ids == "empty" else _PARITY_EDGES
+    gs = GraphStream(
+        spark.createDataFrame(rows, f"src {ty}, dst {ty}, val double")
+    )
+    src = spark.createDataFrame([(1,), (6,)], f"id {ty}")
+    run = _parity_entry_points()[entry]
+    fast = run(gs, src)
+    forced = run(gs, src, small_input_rows=0)
+    assert fast.schema == forced.schema, (fast.schema, forced.schema)
+    assert sorted(map(tuple, fast.collect())) == sorted(
+        map(tuple, forced.collect())
+    )
+
+
+def test_algos_leave_session_conf_and_fast_paths_to_plans():
+    """The fast-path contract and the loop shuffle-width policy live in
+    ``plans/``: no algorithm writes session configuration or grows its
+    own hand-written fast path."""
+    import pathlib
+    import re
+
+    import gelly_streaming_spark.algos as algos
+
+    banned = re.compile(r'conf\.set\(|conf\.unset\(|"spark\.sql\.|def _try_small_')
+    found = [
+        f"{p.name}:{i}: {line.strip()}"
+        for p in sorted(pathlib.Path(algos.__file__).parent.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not found, found
+
+
+def test_forced_broadcast_kernel_is_bounded(spark):
+    """A caller-forced ``strategy="broadcast_kernel"`` collects under
+    ``broadcast_limit`` like the auto probe does, and refuses an input
+    over it instead of pulling it all to the driver."""
+    gs = GraphStream(fixture_graph(spark, "g1"))
+    assert triangle_count(gs, strategy="broadcast_kernel").collect()[0].n_triangles == 3
+    with pytest.raises(ValueError, match="broadcast_limit=2"):
+        triangle_count(gs, strategy="broadcast_kernel", broadcast_limit=2)

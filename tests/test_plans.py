@@ -331,6 +331,38 @@ def test_bounded_take_one_pass_and_conf_restore(spark):
     assert spark.conf.get(_CONF, None) == before
 
 
+def test_loop_shuffle_width_sizes_and_restores_on_error(spark):
+    """The loop-width scope sets the policy's width (and AQE off at a
+    tiny width when asked), re-sizes mid-loop, and restores both session
+    settings when the loop body raises — also after it turned AQE off."""
+    import pytest
+
+    from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
+
+    parts, aqe = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before = (spark.conf.get(parts), spark.conf.get(aqe))
+    try:
+        spark.conf.set(parts, "8")
+        spark.conf.set(aqe, "true")
+        with pytest.raises(RuntimeError, match="mid-loop"):
+            with loop_shuffle_width(spark, 10, aqe_off_when_tiny=True) as resize:
+                assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("1", "false")
+                assert resize(3_000_000) == 7
+                assert spark.conf.get(aqe) == "true"  # > 4 partitions
+                assert resize(10**12, 250_000) == 8  # never past the session width
+                resize(0)
+                raise RuntimeError("mid-loop")
+        assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("8", "true")
+        # loops that leave AQE alone do not touch it
+        spark.conf.set(aqe, "false")
+        with loop_shuffle_width(spark, 5_000_000):
+            assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("8", "false")
+        assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("8", "false")
+    finally:
+        spark.conf.set(parts, before[0])
+        spark.conf.set(aqe, before[1])
+
+
 def test_fixture_graphs_are_local_relations(spark):
     """Fixtures must stay driver-local data: a parallelized
     createDataFrame puts ≤9 rows in defaultParallelism RDD slices, so
