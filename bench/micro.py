@@ -296,41 +296,6 @@ def main() -> None:
     out["ann_bucket_sec"] = round(min(runs), 3)
     vecs.unpersist()
 
-    # multimodal codec throughput: images/sec through extract_features
-    # with the REAL pure-Python decoders (64x48 RGB payloads; quantifies
-    # the documented codec bound — production injects a codec library
-    # through the same hook) -------------------------------------------
-    import numpy as np
-
-    from gelly_streaming_spark.ext.jpeg import encode_jpeg
-    from gelly_streaming_spark.ext.multimodal import (
-        encode_png,
-        extract_features,
-        media_decoder,
-    )
-
-    rng = np.random.RandomState(7)
-    base = rng.randint(0, 256, (48, 64, 3), dtype=np.uint8)
-    n_img = 256
-    rows = []
-    for i in range(n_img):
-        px = np.clip(base.astype(int) + (i % 32), 0, 255).astype(np.uint8)
-        payload = encode_jpeg(px, 85) if i % 2 else encode_png(px)
-        rows.append((i, "image", bytearray(payload), None))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    ).repartition(int(args.cpus))
-    feats = extract_features(media, decoder=media_decoder)
-    feats.write.mode("overwrite").format("noop").save()  # warm
-    t0 = time.time()
-    feats.write.mode("overwrite").format("noop").save()
-    dt = time.time() - t0
-    out["codec_images_per_sec"] = int(n_img / dt)
-    out["codec_sec"] = round(dt, 3)
-    out["codec_images"] = n_img
-
     print(json.dumps(out))
 
 

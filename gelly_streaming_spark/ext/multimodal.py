@@ -1,21 +1,20 @@
 """Multimodal (image/audio/video) column plumbing (north-star extension).
 
-Media payloads are opaque ``binary`` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages so payload bytes never round-trip through the
-driver and batches stay columnar end-to-end.
+Media payloads are opaque ``binary`` columns with a typed metadata struct
+(``MEDIA_SCHEMA``). Decode / feature-extract / resize / frame-sample run
+as Arrow-batched ``mapInPandas`` stages, so payload bytes never
+round-trip through the driver and batches stay columnar end-to-end.
 
-Decoders: ``media_decoder`` REALLY decodes uncompressed 24-bit BMP,
-non-interlaced 8-bit PNG (full inflate + scanline un-filtering with
-stdlib ``zlib`` only), baseline-sequential JPEG (pure-numpy Huffman +
-DCT codec, ext/jpeg.py — the format real multimodal tables actually
-use), and 16-bit PCM WAV, all with pure-Python/numpy parsing (no
-imaging or audio library required), so the plumbing is exercised
-end-to-end on real compressed bytes. Remaining formats (progressive
-JPEG, MP3/MP4…) honestly raise ``NotImplementedError`` via
-``strict_decoder`` — inject a real decoder callable in production.
-``decoder=None`` selects a deterministic fake decoder for synthetic
-payloads (test harness over the documents table).
+The engine ships no codec. The caller injects one:
+
+- ``decoder(payload: bytes, kind: str) -> (width, height, n_frames,
+  feature)`` for ``extract_features`` and ``frame_sample``; its four
+  values become one ``FEATURE_SCHEMA`` row;
+- ``resizer(payload: bytes, width: int, height: int) -> bytes`` for
+  ``resize_media``; it sees only ``kind == 'image'`` rows, and its
+  output replaces the payload and ``meta.bytes``.
+
+The callables run inside Python workers, so they must be picklable.
 """
 
 from __future__ import annotations
@@ -57,311 +56,12 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def strict_decoder(payload: bytes, kind: str):
-    raise NotImplementedError(
-        "real media decoding requires image/audio libraries not present in "
-        "this environment; inject a decoder callable"
-    )
-
-
-def _bmp_pixels(payload: bytes):
-    """Parse an uncompressed 24-bit BMP into a top-down (rows, w, 3)
-    uint8 array (pure Python/numpy — no imaging library)."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    off = struct.unpack_from("<I", payload, 10)[0]
-    w = struct.unpack_from("<i", payload, 18)[0]
-    h = struct.unpack_from("<i", payload, 22)[0]
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    comp = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or comp != 0:
-        raise NotImplementedError("only uncompressed 24-bit BMP supported")
-    rows = abs(h)
-    stride = (w * 3 + 3) // 4 * 4
-    px = (
-        np.frombuffer(payload, np.uint8, count=stride * rows, offset=off)
-        .reshape(rows, stride)[:, : w * 3]
-        .reshape(rows, w, 3)
-    )
-    if h > 0:  # positive height = bottom-up row order
-        px = px[::-1]
-    return w, rows, px
-
-
-def encode_bmp(px) -> bytes:
-    """Re-encode a top-down (rows, w, 3) uint8 array as an uncompressed
-    24-bit bottom-up BMP (inverse of _bmp_pixels)."""
-    import struct
-
-    import numpy as np
-
-    rows, w = px.shape[0], px.shape[1]
-    stride = (w * 3 + 3) // 4 * 4
-    body = np.zeros((rows, stride), np.uint8)
-    body[:, : w * 3] = px[::-1].reshape(rows, w * 3)
-    data = body.tobytes()
-    off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", off + len(data), 0, 0, off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, rows, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-    return header + info + data
-
-
-def decode_bmp(payload: bytes):
-    """Real decoder for uncompressed 24-bit BMP. Returns
-    (width, height, 1, 8-dim feature): per-channel mean and std (B, G, R)
-    plus log-area and aspect ratio."""
-    import math
-
-    import numpy as np
-
-    w, rows, px = _bmp_pixels(payload)
-    ch = px.reshape(-1, 3).astype(np.float64)
-    feat = [
-        *(float(x) for x in ch.mean(axis=0)),
-        *(float(x) for x in ch.std(axis=0)),
-        math.log1p(float(w * rows)),
-        float(w) / float(rows or 1),
-    ]
-    return int(w), int(rows), 1, feat
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_pixels(payload: bytes):
-    """Parse a non-interlaced 8-bit PNG (gray / gray+alpha / RGB / RGBA)
-    into a top-down (h, w, channels) uint8 array using ONLY stdlib
-    ``zlib`` + numpy: chunk walk, IDAT concat, inflate, and per-scanline
-    un-filtering (filter types 0-4: None/Sub/Up/Average/Paeth per the
-    PNG spec). Palette, 16-bit, and Adam7-interlaced images raise.
-
-    Throughput bound: filters None/Up un-filter vectorized; Sub/Average/
-    Paeth are inherently left-sequential and run a per-byte Python loop
-    (~1-3 s per megapixel-scale image). Fine for thumbnails and test
-    fixtures; for heavy PNG volume inject a codec-library decoder via
-    the ``decoder=`` hook — the Spark-side plumbing is identical."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, idat, ihdr = 8, [], None
-    while pos + 8 <= len(payload):
-        size, cid = struct.unpack_from(">I4s", payload, pos)
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
-        elif cid == b"IDAT":
-            idat.append(body)
-        elif cid == b"IEND":
-            break
-        pos += 12 + size  # length + type + body + crc
-    if ihdr is None or not idat:
-        raise ValueError("missing IHDR/IDAT chunk")
-    w, h, depth, color, comp, filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
-    if depth != 8 or channels is None or comp != 0 or filt != 0 or interlace != 0:
-        raise NotImplementedError(
-            "only non-interlaced 8-bit gray/gray+alpha/RGB/RGBA PNG supported"
-        )
-    raw = zlib.decompress(b"".join(idat))
-    stride = w * channels
-    if len(raw) < h * (stride + 1):
-        raise ValueError("truncated PNG pixel data")
-    lines = np.frombuffer(raw, np.uint8, count=h * (stride + 1)).reshape(
-        h, stride + 1
-    )
-    bpp = channels  # bytes per pixel at depth 8
-    out = np.zeros((h, stride), np.uint16)
-    for y in range(h):
-        f, cur = lines[y, 0], lines[y, 1:].astype(np.uint16)
-        prev = out[y - 1] if y else np.zeros(stride, np.uint16)
-        if f == 0:
-            out[y] = cur
-        elif f == 1:  # Sub: left neighbor — sequential in x
-            row = cur.copy()
-            for x in range(bpp, stride):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
-            out[y] = row
-        elif f == 2:  # Up
-            out[y] = (cur + prev) & 0xFF
-        elif f == 3:  # Average
-            row = cur.copy()
-            for x in range(stride):
-                left = row[x - bpp] if x >= bpp else 0
-                row[x] = (row[x] + ((int(left) + int(prev[x])) >> 1)) & 0xFF
-            out[y] = row
-        elif f == 4:  # Paeth
-            row = cur.copy()
-            for x in range(stride):
-                a = int(row[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (row[x] + pred) & 0xFF
-            out[y] = row
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-    return w, h, channels, out.astype(np.uint8).reshape(h, w, channels)
-
-
-def encode_png(px) -> bytes:
-    """Re-encode a top-down (h, w, channels) uint8 array (1/2/3/4
-    channels) as a non-interlaced 8-bit PNG, filter 0 per scanline,
-    stdlib zlib (inverse of _png_pixels)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = np.ascontiguousarray(px, np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, channels = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + cid
-            + body
-            + struct.pack(">I", zlib.crc32(cid + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    lines = np.zeros((h, w * channels + 1), np.uint8)
-    lines[:, 1:] = px.reshape(h, w * channels)
-    idat = zlib.compress(lines.tobytes(), 6)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_png(payload: bytes):
-    """Real decoder for non-interlaced 8-bit PNG (stdlib zlib only).
-    Returns (width, height, 1, 8-dim feature): per-channel mean and std
-    over an RGB view (gray replicated, alpha dropped) plus log-area and
-    aspect ratio — the same feature contract as decode_bmp."""
-    import math
-
-    import numpy as np
-
-    w, h, channels, px = _png_pixels(payload)
-    rgb = px[:, :, :3] if channels >= 3 else np.repeat(px[:, :, :1], 3, axis=2)
-    ch = rgb.reshape(-1, 3).astype(np.float64)
-    feat = [
-        *(float(x) for x in ch.mean(axis=0)),
-        *(float(x) for x in ch.std(axis=0)),
-        math.log1p(float(w * h)),
-        float(w) / float(h or 1),
-    ]
-    return int(w), int(h), 1, feat
-
-
-def decode_wav(payload: bytes):
-    """Real decoder for 16-bit PCM WAV (pure RIFF chunk walk). Returns
-    (sample_rate, channels, n_samples, 8-dim feature): rms, mean, peak,
-    zero-crossing rate, and energy in four equal time bands."""
-    import struct
-
-    import numpy as np
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, size = payload[pos : pos + 4], struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_fmt, channels, rate, _, _, bits = fmt
-    if audio_fmt != 1 or bits != 16:
-        raise NotImplementedError("only 16-bit PCM WAV supported")
-    x = np.frombuffer(data, "<i2").astype(np.float64) / 32768.0
-    n = len(x) // max(1, channels)
-    if len(x) == 0:
-        return int(rate), int(channels), 0, [0.0] * 8
-    zcr = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-    bands = [float(np.mean(b * b)) if len(b) else 0.0 for b in np.array_split(x, 4)]
-    feat = [
-        float(np.sqrt(np.mean(x * x))),
-        float(np.mean(x)),
-        float(np.max(np.abs(x))),
-        zcr,
-        *bands,
-    ]
-    return int(rate), int(channels), int(n), feat
-
-
-def media_decoder(payload: bytes, kind: str):
-    """Format-sniffing real decoder: BMP and 16-bit PCM WAV are decoded
-    with the pure-Python kernels above; every other container honestly
-    raises (the sandbox has no imaging/audio libraries — inject a real
-    decoder in production)."""
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        from gelly_streaming_spark.ext.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    return strict_decoder(payload, kind)
-
-
-def fake_decoder(payload: bytes, kind: str):
-    """Deterministic stand-in decoder: derives (width, height, n_frames)
-    and an 8-dim feature from payload byte statistics. Keeps every
-    schema/batch contract of a real decoder."""
-    n = len(payload)
-    w = 16 + (sum(payload[:16]) % 1024) if n else 0
-    h = 16 + (sum(payload[16:32]) % 1024) if n > 16 else 0
-    nf = 1 + (n % 64)
-    body = payload[:256]
-    feat = [float(sum(body[i::8]) % 997) for i in range(8)]
-    return int(w), int(h), int(nf), feat
-
-
-def synthetic_media(docs: DataFrame, kind: str = "image") -> DataFrame:
-    """Build a deterministic media table from the documents table (test
-    harness for the plumbing; payload = utf-8 text bytes)."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.col("text").cast("binary").alias("payload"),
-        F.struct(
-            F.col("source").alias("source"),
-            F.lit("application/x-fake").alias("mime"),
-            F.length(F.col("text").cast("binary")).cast("long").alias("bytes"),
-        ).alias("meta"),
-    )
-
-
 def extract_features(
-    media: DataFrame, decoder: Callable | None = None, batch_hint: int | None = None
+    media: DataFrame, decoder: Callable[[bytes, str], tuple]
 ) -> DataFrame:
     """Decode + feature-extract each media row via Arrow-batched
     mapInPandas. Partitioning: payloads stay where they were scanned —
     no shuffle; each task streams batches through the decoder."""
-    decode = decoder or fake_decoder
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -370,7 +70,7 @@ def extract_features(
                 "n_frames": [], "feature": [],
             }
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                w, h, nf, feat = decode(bytes(payload), kind)
+                w, h, nf, feat = decoder(bytes(payload), kind)
                 out["media_id"].append(mid)
                 out["kind"].append(kind)
                 out["width"].append(w)
@@ -382,46 +82,11 @@ def extract_features(
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Real nearest-neighbor resize for uncompressed 24-bit BMP, 8-bit
-    PNG (stdlib-zlib codec above), and baseline JPEG (pure-numpy codec,
-    ext/jpeg.py): decode to pixels, index-map rows/cols, re-encode in
-    the same container. Other codecs honestly raise (inject a resizer
-    callable in production)."""
-    import numpy as np
-
-    if payload[:2] == b"BM":
-        w, rows, px = _bmp_pixels(payload)
-    elif payload[:8] == _PNG_SIG:
-        w, rows, _, px = _png_pixels(payload)
-    elif payload[:2] == b"\xff\xd8":
-        from gelly_streaming_spark.ext.jpeg import _jpeg_pixels
-
-        px = _jpeg_pixels(payload)
-        rows, w = px.shape[:2]
-    else:
-        raise NotImplementedError(
-            "resize implemented for uncompressed 24-bit BMP, 8-bit PNG, and "
-            "baseline JPEG only in this environment; inject a resizer "
-            "callable for other codecs"
-        )
-    yi = (np.arange(height) * rows // height).astype(np.int64)
-    xi = (np.arange(width) * w // width).astype(np.int64)
-    out = px[yi][:, xi]
-    if payload[:2] == b"BM":
-        return encode_bmp(out)
-    if payload[:8] == _PNG_SIG:
-        return encode_png(out)
-    from gelly_streaming_spark.ext.jpeg import encode_jpeg
-
-    return encode_jpeg(out.reshape(out.shape[0], out.shape[1], -1))
-
-
 def resize_media(
     media: DataFrame,
     width: int,
     height: int,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
+    resizer: Callable[[bytes, int, int], bytes],
 ) -> DataFrame:
     """Batch image resize via Arrow-batched mapInPandas: payloads are
     transformed in place (meta.bytes updated), never touching the driver
@@ -431,12 +96,11 @@ def resize_media(
     Only ``kind == 'image'`` rows are resized; audio/video rows (legal in
     MEDIA_SCHEMA's mixed table) pass through untouched instead of feeding
     the image resizer a non-image payload and failing the whole stage."""
-    do_resize = resizer or resize_image
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_payloads = [
-                do_resize(bytes(p), width, height) if kind == "image" else p
+                resizer(bytes(p), width, height) if kind == "image" else p
                 for kind, p in zip(pdf["kind"], pdf["payload"])
             ]
             pdf = pdf.assign(payload=new_payloads)
@@ -449,15 +113,17 @@ def resize_media(
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plan: explode sampled frame indices per video
-    (metadata-only — the per-frame decode is the stubbed kernel).
+def frame_sample(
+    media: DataFrame, decoder: Callable[[bytes, str], tuple], every_n: int = 10
+) -> DataFrame:
+    """Video frame-sampling plan: explode every ``every_n``-th frame index
+    of each video, with the frame count taken from ``decoder``.
 
     The kind filter runs BEFORE the decode stage: Spark cannot push a
     filter below mapInPandas, so filtering after extract_features paid
     full payload-decode cost for every non-video row of a mixed table."""
-    feats = extract_features(media.where(F.col("kind") == "video"))
-    return feats.where(F.col("kind") == "video").select(
+    feats = extract_features(media.where(F.col("kind") == "video"), decoder)
+    return feats.select(
         "media_id",
         F.explode(F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))).alias("frame_idx"),
     )

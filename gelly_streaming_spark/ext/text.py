@@ -28,14 +28,6 @@ def tokenize(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
-def bpe_ish_tokens(text: Column) -> Column:
-    """BPE-ish subword segmentation: split on word boundaries, digits, and
-    punctuation runs (a regex approximation of byte-pair pretokenizers)."""
-    return F.filter(
-        F.split(F.lower(text), r"(?=[^a-z0-9])|(?<=[^a-z0-9])"), lambda t: t != ""
-    )
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokenize(text))
 

@@ -1,6 +1,7 @@
 """Extension operator tests: MinHash-LSH recall vs exact, SimHash
-determinism/blocking, embedding LSH precision, multimodal plumbing,
-text profiling."""
+determinism/blocking, embedding LSH precision, text profiling, and the
+multimodal column plumbing with caller-injected codec doubles (the
+engine ships no codec)."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -13,9 +14,10 @@ from gelly_streaming_spark.ext.dedup import (
 )
 from gelly_streaming_spark.ext.embeddings import knn_bruteforce, knn_lsh
 from gelly_streaming_spark.ext.multimodal import (
+    MEDIA_SCHEMA,
     extract_features,
-    strict_decoder,
-    synthetic_media,
+    frame_sample,
+    resize_media,
 )
 from gelly_streaming_spark.ext.similarity import jaccard_pairs
 from gelly_streaming_spark.ext.text import text_profile
@@ -626,36 +628,72 @@ def test_residue_centroids_means_and_empty_class_guard(spark):
         residue_centroids(only_even, n_clusters=2)
 
 
-def test_multimodal_plumbing(docs):
-    media = synthetic_media(docs)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == docs.count()
-    r0 = {r.media_id: (r.width, r.height, tuple(r.feature)) for r in rows}
-    r1 = {r.media_id: (r.width, r.height, tuple(r.feature)) for r in extract_features(media).collect()}
-    assert r0 == r1  # deterministic fake decode
-    assert all(len(f) == 8 for _, _, f in r0.values())
-    with pytest.raises(NotImplementedError):
-        strict_decoder(b"xx", "image")
-
-
-def test_codec_injection_contract(docs):
-    """The documented production path — swapping an external codec
-    (libjpeg-turbo et al.) in through the ``decoder=`` / ``resizer=``
-    hooks — proven with test doubles (VERDICT r8 #6): the hook receives
-    exactly (payload, kind) / (payload, width, height), and its return
-    value re-enters the pipeline verbatim. The doubles encode their
-    received arguments into their outputs, so the assertion needs no
-    worker->driver side channel; the pure-Python defaults are untouched."""
-    from gelly_streaming_spark.ext.multimodal import (
-        extract_features,
-        resize_media,
-        synthetic_media,
+def _synthetic_media(docs):
+    """A deterministic mixed media table over the documents table: kind
+    cycles image/audio/video by doc_id, payload = utf-8 text bytes (the
+    plumbing never looks inside a payload)."""
+    kinds = F.array(F.lit("image"), F.lit("audio"), F.lit("video"))
+    return docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.element_at(kinds, (F.col("doc_id") % 3 + 1).cast("int")).alias("kind"),
+        F.col("text").cast("binary").alias("payload"),
+        F.struct(
+            F.col("source").alias("source"),
+            F.lit("application/x-fake").alias("mime"),
+            F.length(F.col("text").cast("binary")).cast("long").alias("bytes"),
+        ).alias("meta"),
     )
 
-    media = synthetic_media(docs).limit(20)
+
+def _mixed_media(spark):
+    """One image, one audio and one video row (legal per MEDIA_SCHEMA)."""
+    rows = [
+        (1, "image", b"IMG-payload"),
+        (2, "audio", b"RIFFxxxxWAVEfake-payload"),
+        (3, "video", b"\x00\x00\x00 ftypisom-fake-mp4"),
+    ]
+    return spark.createDataFrame(
+        [(mid, kind, bytearray(p), ("t", kind, len(p))) for mid, kind, p in rows],
+        MEDIA_SCHEMA,
+    )
+
+
+def test_multimodal_plumbing(docs):
+    """extract_features over the whole mixed media table: one feature row
+    per media row, identical across runs for a deterministic decoder."""
+    media = _synthetic_media(docs)
+
+    def fake_decoder(payload, kind):
+        # deterministic stand-in: (width, height, n_frames) and an 8-dim
+        # feature from payload byte statistics (nested so the workers
+        # receive it by value, not as an import of this test module)
+        n = len(payload)
+        w = 16 + (sum(payload[:16]) % 1024) if n else 0
+        h = 16 + (sum(payload[16:32]) % 1024) if n > 16 else 0
+        body = payload[:256]
+        return w, h, 1 + n % 64, [float(sum(body[i::8]) % 997) for i in range(8)]
+
+    def run():
+        return {
+            r.media_id: (r.kind, r.width, r.height, r.n_frames, tuple(r.feature))
+            for r in extract_features(media, decoder=fake_decoder).collect()
+        }
+
+    r0 = run()
+    assert len(r0) == docs.count()
+    assert r0 == run()
+    assert all(len(v[4]) == 8 for v in r0.values())
+
+
+def test_codec_injection_through_extract_features(docs):
+    """A caller's decoder injected through ``decoder=`` receives exactly
+    (payload, kind), and its return value re-enters the feature schema
+    verbatim, one output row per input row. The double encodes its
+    received arguments into its outputs, so the assertion needs no
+    worker->driver side channel."""
+    media = _synthetic_media(docs).limit(20)
     raw = {r.media_id: (bytes(r.payload), r.kind) for r in media.collect()}
-    assert raw and any(k == "image" for _, k in raw.values())
+    assert {k for _, k in raw.values()} == {"image", "audio", "video"}
 
     def probe_decoder(payload, kind):
         # width <- payload length, height <- kind length, feature carries
@@ -663,37 +701,80 @@ def test_codec_injection_contract(docs):
         return (
             len(payload),
             len(kind),
-            1,
+            3,
             [float(payload[0]), float(len(payload))],
         )
 
-    feats = {
-        r.media_id: r
-        for r in extract_features(media, decoder=probe_decoder).collect()
-    }
+    rows = extract_features(media, decoder=probe_decoder).collect()
+    assert len(rows) == len(raw), "one feature row per media row"
+    feats = {r.media_id: r for r in rows}
     assert set(feats) == set(raw)
     for mid, (payload, kind) in raw.items():
         r = feats[mid]
+        assert r.kind == kind
         assert r.width == len(payload), "decoder did not receive the payload"
         assert r.height == len(kind), "decoder did not receive the kind"
-        assert r.n_frames == 1
+        assert r.n_frames == 3
         assert r.feature == [float(payload[0]), float(len(payload))]
+
+
+def test_codec_injection_contract(docs):
+    """A caller's resizer injected through ``resizer=`` receives exactly
+    (payload, width, height) for image rows, and its return value
+    re-enters the media table verbatim with ``meta.bytes`` rewritten;
+    other kinds pass through. The decoder half of the contract is
+    test_codec_injection_through_extract_features."""
+    media = _synthetic_media(docs).limit(20)
+    raw = {r.media_id: (bytes(r.payload), r.kind) for r in media.collect()}
+    assert {k for _, k in raw.values()} == {"image", "audio", "video"}
 
     def probe_resizer(payload, width, height):
         return b"RSZ:%dx%d:" % (width, height) + payload[:4]
 
-    out = {
-        r.media_id: r
-        for r in resize_media(media, 7, 3, resizer=probe_resizer).collect()
-    }
-    for mid, (payload, kind) in raw.items():
-        r = out[mid]
+    rows = resize_media(media, 7, 3, resizer=probe_resizer).collect()
+    assert len(rows) == len(raw), "one media row out per media row in"
+    for r in rows:
+        payload, kind = raw[r.media_id]
         if kind == "image":
             want = b"RSZ:7x3:" + payload[:4]
             assert bytes(r.payload) == want  # resizer output re-entered
             assert r.meta["bytes"] == len(want)  # meta updated from it
         else:
             assert bytes(r.payload) == payload  # non-image passthrough
+
+
+def test_resize_media_passes_through_non_images(spark):
+    """A mixed image|audio|video media table must resize only the image
+    rows; audio/video payloads pass through byte-identical instead of
+    reaching the image resizer and crashing the mapInPandas stage."""
+
+    def image_resizer(payload, width, height):
+        assert payload.startswith(b"IMG"), "resizer got a non-image payload"
+        return b"IMG:%dx%d" % (width, height)
+
+    media = _mixed_media(spark)
+    before = {r.media_id: bytes(r.payload) for r in media.collect()}
+    rows = {r.media_id: r for r in resize_media(media, 4, 3, image_resizer).collect()}
+    assert bytes(rows[1].payload) == b"IMG:4x3"
+    assert bytes(rows[2].payload) == before[2]
+    assert bytes(rows[3].payload) == before[3]
+    for r in rows.values():
+        assert r.meta.bytes == len(bytes(r.payload))
+
+
+def test_frame_sample_uses_caller_decoder(spark):
+    """frame_sample takes each video's frame count from the caller's
+    decoder, and only video rows reach that decoder."""
+
+    def video_decoder(payload, kind):
+        assert kind == "video", "frame_sample decoded a non-video row"
+        return 0, 0, 25, []
+
+    got = sorted(
+        (r.media_id, r.frame_idx)
+        for r in frame_sample(_mixed_media(spark), video_decoder, every_n=10).collect()
+    )
+    assert got == [(3, 0), (3, 10), (3, 20)]
 
 
 def test_text_profile(docs):
@@ -739,285 +820,6 @@ def test_embedding_near_dup_lsh_recall(spark, emb):
     assert recall >= 0.6, f"multi-table LSH recall too low: {recall}"
 
 
-def _tiny_bmp(w, h, rgb):
-    """Build a real uncompressed 24-bit BMP, bottom-up, solid color."""
-    import struct
-
-    stride = (w * 3 + 3) // 4 * 4
-    pix = ((bytes(rgb[::-1]) * w).ljust(stride, b"\0")) * h
-    header = struct.pack(
-        "<2sIHHI" "IiiHHIIiiII",
-        b"BM", 54 + len(pix), 0, 0, 54,
-        40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0,
-    )
-    return header + pix
-
-
-def _tiny_wav(rate, channels, samples):
-    """Build a real 16-bit PCM WAV from an int16 sample list."""
-    import struct
-
-    data = b"".join(struct.pack("<h", s) for s in samples)
-    block = channels * 2
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block, block, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_multimodal_real_decode(spark):
-    """The BMP/WAV kernels decode REAL bytes through the full
-    mapInPandas plumbing with exact expected dimensions and features."""
-    import pytest
-
-    from gelly_streaming_spark.ext.multimodal import (
-        extract_features,
-        media_decoder,
-        strict_decoder,
-    )
-
-    bmp = _tiny_bmp(7, 5, (10, 200, 30))
-    wav = _tiny_wav(8000, 1, [0, 1000, -1000, 1000, -1000, 0, 500, -500])
-    rows = [(1, "image", bytearray(bmp), ("t", "image/bmp", len(bmp))),
-            (2, "audio", bytearray(wav), ("t", "audio/wav", len(wav)))]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-    got = {r.media_id: r for r in
-           extract_features(media, decoder=media_decoder).collect()}
-    img, aud = got[1], got[2]
-    assert (img.width, img.height, img.n_frames) == (7, 5, 1)
-    # solid color: per-channel std 0, means = (B,G,R) = (30, 200, 10)
-    assert [round(x) for x in img.feature[:3]] == [30, 200, 10]
-    assert all(abs(x) < 1e-9 for x in img.feature[3:6])
-    assert (aud.width, aud.height, aud.n_frames) == (8000, 1, 8)
-    assert aud.feature[2] == pytest.approx(1000 / 32768.0)
-    # non-media bytes stay honestly undecodable
-    with pytest.raises(NotImplementedError):
-        strict_decoder(b"\x00\x01", "image")
-    with pytest.raises(NotImplementedError):
-        media_decoder(b"not-a-container", "image")
-
-
-def test_png_codec_roundtrip_all_filters():
-    """The stdlib-zlib PNG kernel: a hand-built PNG whose scanlines use
-    every filter type (0=None 1=Sub 2=Up 3=Average 4=Paeth) must
-    un-filter back to the exact source pixels, and encode_png(decode)
-    must roundtrip. This is a genuinely COMPRESSED codec decoded with no
-    imaging library (VERDICT r7 'What's missing' #1)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from gelly_streaming_spark.ext.multimodal import (
-        _PNG_SIG,
-        _png_pixels,
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.RandomState(3)
-    h, w, c = 5, 11, 3
-    px = rng.randint(0, 256, (h, w, c), dtype=np.uint8)
-
-    def filt_row(row, prev, ftype):
-        row, prev = row.astype(int), prev.astype(int)
-        out = np.zeros_like(row)
-        for x in range(len(row)):
-            a = row[x - c] if x >= c else 0
-            b = prev[x]
-            cc = prev[x - c] if x >= c else 0
-            if ftype == 0:
-                pred = 0
-            elif ftype == 1:
-                pred = a
-            elif ftype == 2:
-                pred = b
-            elif ftype == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-            out[x] = (row[x] - pred) & 0xFF
-        return out.astype(np.uint8)
-
-    flat = px.reshape(h, w * c)
-    raw = b""
-    for y in range(h):
-        ftype = y % 5
-        prev = flat[y - 1] if y else np.zeros(w * c, np.uint8)
-        raw += bytes([ftype]) + filt_row(flat[y], prev, ftype).tobytes()
-
-    def chunk(cid, body):
-        return (struct.pack(">I", len(body)) + cid + body
-                + struct.pack(">I", zlib.crc32(cid + body) & 0xFFFFFFFF))
-
-    png = (
-        _PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    gw, gh, gc, got = _png_pixels(png)
-    assert (gw, gh, gc) == (w, h, c)
-    assert np.array_equal(got, px)
-    # encoder roundtrip (filter-0 path) and the feature contract
-    gw2, gh2, gc2, got2 = _png_pixels(encode_png(px))
-    assert np.array_equal(got2, px)
-    dw, dh, nf, feat = decode_png(png)
-    assert (dw, dh, nf, len(feat)) == (w, h, 1, 8)
-    ch = px.reshape(-1, 3).astype(float)
-    assert feat[:3] == [float(x) for x in ch.mean(axis=0)]
-
-
-def test_png_end_to_end_extract_and_resize(spark):
-    """A REAL compressed PNG flows through extract_features (dims +
-    per-channel means) and resize_media (payload re-encoded as PNG with
-    the requested dims) end-to-end through the Arrow plumbing."""
-    import numpy as np
-
-    from gelly_streaming_spark.ext.multimodal import (
-        _png_pixels,
-        encode_png,
-        extract_features,
-        media_decoder,
-        resize_media,
-    )
-
-    # 6x4 RGB: left half solid red, right half solid blue
-    px = np.zeros((4, 6, 3), np.uint8)
-    px[:, :3, 0] = 255
-    px[:, 3:, 2] = 255
-    png = encode_png(px)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png), ("t", "image/png", len(png)))],
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-    feat = extract_features(media, decoder=media_decoder).collect()[0]
-    assert (feat.width, feat.height, feat.n_frames) == (6, 4, 1)
-    assert [round(x, 1) for x in feat.feature[:3]] == [127.5, 0.0, 127.5]
-    out = resize_media(media, 2, 2).collect()[0]
-    w2, h2, c2, px2 = _png_pixels(bytes(out.payload))
-    assert (w2, h2, c2) == (2, 2, 3)
-    assert out.meta["bytes"] == len(bytes(out.payload))
-    # nearest-neighbor: one red pixel column, one blue
-    assert px2[0, 0].tolist() == [255, 0, 0]
-    assert px2[0, 1].tolist() == [0, 0, 255]
-
-
-def test_jpeg_codec_roundtrip():
-    """The pure-numpy baseline JPEG codec: analytic solid-color
-    roundtrip (DC-only blocks must reconstruct exactly), gradient PSNR,
-    grayscale, odd (non-multiple-of-8) dimensions, and the decoder
-    contract shared with BMP/PNG."""
-    import numpy as np
-    import pytest
-
-    from gelly_streaming_spark.ext.jpeg import (
-        _jpeg_pixels,
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    px = np.zeros((16, 24, 3), np.uint8)
-    px[:] = (200, 30, 90)
-    out = _jpeg_pixels(encode_jpeg(px, 95))
-    assert out.shape == (16, 24, 3)
-    assert int(np.abs(out.astype(int) - px.astype(int)).max()) <= 1
-
-    h, w = 41, 57  # odd dims exercise edge-replicate padding + crop
-    g = np.zeros((h, w, 3), np.uint8)
-    g[..., 0] = np.linspace(0, 255, w)[None, :]
-    g[..., 1] = np.linspace(0, 255, h)[:, None]
-    g[..., 2] = 128
-    out = _jpeg_pixels(encode_jpeg(g, 90))
-    assert out.shape == (h, w, 3)
-    mse = float(np.mean((out.astype(float) - g.astype(float)) ** 2))
-    assert 10 * np.log10(255**2 / max(mse, 1e-9)) > 35, mse
-
-    gr = np.linspace(0, 255, 33 * 20).reshape(33, 20).astype(np.uint8)
-    out = _jpeg_pixels(encode_jpeg(gr, 90))
-    assert out.shape == (33, 20, 1)
-    assert float(np.abs(out[:, :, 0].astype(float) - gr).mean()) < 2.0
-
-    dw, dh, nf, feat = decode_jpeg(encode_jpeg(px, 95))
-    assert (dw, dh, nf, len(feat)) == (24, 16, 1, 8)
-    assert [round(x) for x in feat[:3]] == [200, 30, 90]
-
-    with pytest.raises(ValueError):
-        _jpeg_pixels(b"not a jpeg")
-
-
-def test_jpeg_420_chroma_subsampling():
-    """4:2:0 — the dominant real-world JPEG layout: interleaved MCUs
-    with four Y blocks per chroma block, 2x2 chroma decimation on
-    encode, nearest upsample on decode. Solid color must roundtrip
-    near-exactly; a two-tone image must keep its luma edge while the
-    chroma is block-averaged."""
-    import numpy as np
-
-    from gelly_streaming_spark.ext.jpeg import _jpeg_pixels, encode_jpeg
-
-    solid = np.zeros((24, 40, 3), np.uint8)
-    solid[:] = (80, 160, 240)
-    j420 = encode_jpeg(solid, 95, subsampling="420")
-    j444 = encode_jpeg(solid, 95, subsampling="444")
-    assert len(j420) < len(j444)  # fewer chroma blocks actually encoded
-    out = _jpeg_pixels(j420)
-    assert out.shape == (24, 40, 3)
-    err = np.abs(out.astype(int) - np.array((80, 160, 240))[None, None, :])
-    assert int(err.max()) <= 2, err.max()
-
-    # gradient luma, constant chroma: 420's chroma decimation is
-    # lossless for constant chroma, so quality should match 444's
-    g = np.zeros((19, 26, 3), np.uint8)  # odd dims vs the 16px MCU grid
-    lum = np.linspace(30, 220, 26)[None, :] + np.linspace(0, 20, 19)[:, None]
-    for c in range(3):
-        g[..., c] = lum.astype(np.uint8)
-    out = _jpeg_pixels(encode_jpeg(g, 90, subsampling="420"))
-    assert out.shape == (19, 26, 3)
-    mse = float(np.mean((out.astype(float) - g.astype(float)) ** 2))
-    assert 10 * np.log10(255**2 / max(mse, 1e-9)) > 35, mse
-
-
-def test_jpeg_end_to_end_extract_and_resize(spark):
-    """A REAL compressed JPEG flows through extract_features and
-    resize_media end-to-end (decode -> nearest-neighbor -> re-encode
-    as JPEG), the same Arrow plumbing contract as BMP/PNG."""
-    import numpy as np
-
-    from gelly_streaming_spark.ext.jpeg import _jpeg_pixels, encode_jpeg
-    from gelly_streaming_spark.ext.multimodal import (
-        extract_features,
-        media_decoder,
-        resize_media,
-    )
-
-    px = np.zeros((8, 12, 3), np.uint8)
-    px[:] = (10, 200, 60)
-    jpg = encode_jpeg(px, 95)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(jpg), ("t", "image/jpeg", len(jpg)))],
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-    feat = extract_features(media, decoder=media_decoder).collect()[0]
-    assert (feat.width, feat.height, feat.n_frames) == (12, 8, 1)
-    assert [round(x) for x in feat.feature[:3]] == [10, 200, 60]
-    out = resize_media(media, 6, 4).collect()[0]
-    px2 = _jpeg_pixels(bytes(out.payload))
-    assert px2.shape == (4, 6, 3)
-    assert out.meta["bytes"] == len(bytes(out.payload))
-    assert int(np.abs(px2.astype(int) - px[0, 0][None, None, :]).max()) <= 2
-
-
 def test_exact_gemm_blocked_no_driver_collect(spark, emb):
     """The exact GEMM path must (a) stay correct when the corpus spans
     many blocks (every block-pair kernel covers each pair exactly once,
@@ -1039,39 +841,6 @@ def test_exact_gemm_blocked_no_driver_collect(spark, emb):
     a = sorted((r.a, r.b, r.sim) for r in one_block.collect())
     b = sorted((r.a, r.b, r.sim) for r in many_blocks.collect())
     assert a == b and len(a) > 0
-
-
-def test_codec_injection_through_extract_features(spark):
-    """The documented production contract: a caller-supplied decoder
-    callable (e.g. a real JPEG codec) flows through extract_features and
-    its outputs land in the feature schema unchanged."""
-    import pandas as pd
-
-    from gelly_streaming_spark.ext.multimodal import extract_features
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": [1, 2],
-                "kind": ["image", "image"],
-                "payload": [b"\xff\xd8fakejpeg", b"\xff\xd8other"],
-                "meta": [None, None],
-            }
-        ),
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-
-    def jpeg_stub(payload: bytes, kind: str):
-        # a real codec would parse the JFIF container; the stub proves
-        # the injection point, returning payload-derived values
-        assert payload[:2] == b"\xff\xd8", "decoder got wrong bytes"
-        return len(payload), 2 * len(payload), 3, [float(payload[2])] * 8
-
-    rows = {r.media_id: r for r in extract_features(media, decoder=jpeg_stub).collect()}
-    assert rows[1].width == 10 and rows[1].height == 20 and rows[1].n_frames == 3
-    assert rows[1].feature == [float(b"f"[0])] * 8
-    assert rows[2].width == 7 and rows[2].height == 14
 
 
 def test_near_dup_collapse_transitive_chain(spark):
@@ -1210,77 +979,6 @@ def test_vocabulary_matches_pandas(spark, docs):
     for r in got:
         assert r["df"] == df[r["token"]]
     assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
-
-
-def test_multimodal_resize_real_bmp(spark):
-    """resize_media transforms REAL BMP payloads in place through the
-    mapInPandas stage: exact nearest-neighbor pixel mapping, solid color
-    preserved, meta.bytes updated, compressed codecs honestly refused."""
-    import numpy as np
-
-    from gelly_streaming_spark.ext.multimodal import (
-        _bmp_pixels,
-        encode_bmp,
-        extract_features,
-        media_decoder,
-        resize_image,
-        resize_media,
-    )
-
-    # kernel-level exactness: 1x2 gradient -> 2x4 duplicates each pixel
-    px = np.array([[[1, 2, 3], [4, 5, 6]]], np.uint8)
-    out = resize_image(encode_bmp(px), 4, 2)
-    w2, rows2, px2 = _bmp_pixels(out)
-    assert (w2, rows2) == (4, 2)
-    assert (px2 == px[[0, 0]][:, [0, 0, 1, 1]]).all()
-
-    # end-to-end through Spark plumbing on a solid-color image
-    bmp = _tiny_bmp(8, 6, (10, 200, 30))
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(bmp), ("t", "image/bmp", len(bmp)))],
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-    resized = resize_media(media, 3, 9)
-    row = resized.collect()[0]
-    assert row.meta.bytes == len(bytes(row.payload))
-    img = extract_features(resized, decoder=media_decoder).collect()[0]
-    assert (img.width, img.height) == (3, 9)
-    assert [round(x) for x in img.feature[:3]] == [30, 200, 10]
-    assert all(abs(x) < 1e-9 for x in img.feature[3:6])
-
-    with pytest.raises(NotImplementedError):
-        resize_image(b"not-a-bmp", 2, 2)
-
-
-def test_resize_media_passes_through_non_images(spark):
-    """A mixed image|audio|video media table (legal per MEDIA_SCHEMA)
-    must resize only the image rows; audio/video payloads pass through
-    byte-identical instead of crashing the mapInPandas stage."""
-    from gelly_streaming_spark.ext.multimodal import (
-        _bmp_pixels,
-        resize_media,
-    )
-
-    bmp = _tiny_bmp(8, 6, (1, 2, 3))
-    wav = b"RIFFxxxxWAVEfake-payload"
-    vid = b"\x00\x00\x00 ftypisom-fake-mp4"
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(bmp), ("t", "image/bmp", len(bmp))),
-            (2, "audio", bytearray(wav), ("t", "audio/wav", len(wav))),
-            (3, "video", bytearray(vid), ("t", "video/mp4", len(vid))),
-        ],
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string,bytes:bigint>",
-    )
-    rows = {r.media_id: r for r in resize_media(media, 4, 3).collect()}
-    w, h, _ = _bmp_pixels(bytes(rows[1].payload))
-    assert (w, h) == (4, 3)
-    assert bytes(rows[2].payload) == wav
-    assert bytes(rows[3].payload) == vid
-    for r in rows.values():
-        assert r.meta.bytes == len(bytes(r.payload))
 
 
 def test_split_bucket_sign_safe_and_oracle_parity(spark):

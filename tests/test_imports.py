@@ -1,0 +1,80 @@
+"""Spark-free import guards: every package ``__init__`` exports exactly
+what it imports, and every engine name that a consumer script imports
+still exists. Deleting an engine module or function must fail here
+rather than in an example, benchmark or query at run time."""
+
+import ast
+import importlib
+import importlib.util
+import pathlib
+
+import pytest
+
+import gelly_streaming_spark
+
+PKG = pathlib.Path(gelly_streaming_spark.__file__).parent
+ROOT = PKG.parent
+INITS = sorted(PKG.rglob("__init__.py"))
+CONSUMERS = sorted(
+    [
+        *ROOT.glob("examples/*.py"),
+        ROOT / "bench" / "micro.py",
+        ROOT / "bench.py",
+        *ROOT.glob("perfbench/*.py"),
+        PKG / "queries.py",
+    ]
+)
+
+
+def _rel(p: pathlib.Path) -> str:
+    return p.relative_to(ROOT).as_posix().replace("/", ".")
+
+
+@pytest.mark.parametrize("init", INITS, ids=_rel)
+def test_package_all_matches_imports(init):
+    """``from package import *`` exports exactly the names the package
+    ``__init__`` re-exports; a package that imports nothing needs no
+    ``__all__``."""
+    tree = ast.parse(init.read_text())
+    imported, exported = set(), set()
+    for node in tree.body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            imported |= {a.asname or a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            exported = set(ast.literal_eval(node.value))
+    assert exported == imported, (
+        f"missing from __all__: {sorted(imported - exported)}, "
+        f"not imported: {sorted(exported - imported)}"
+    )
+
+
+def _resolves(module: str, name: str) -> bool:
+    mod = importlib.import_module(module)
+    return hasattr(mod, name) or importlib.util.find_spec(f"{module}.{name}") is not None
+
+
+@pytest.mark.parametrize("path", CONSUMERS, ids=_rel)
+def test_consumer_engine_imports_resolve(path):
+    """Every ``from gelly_streaming_spark... import name`` in a consumer
+    script resolves, including the lazy imports inside function bodies
+    that would otherwise only fail when that function runs."""
+    missing = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            "gelly_streaming_spark"
+        ):
+            missing += [
+                f"{node.lineno}: {node.module}.{a.name}"
+                for a in node.names
+                if not _resolves(node.module, a.name)
+            ]
+        elif isinstance(node, ast.Import):
+            missing += [
+                f"{node.lineno}: {a.name}"
+                for a in node.names
+                if a.name.startswith("gelly_streaming_spark")
+                and importlib.util.find_spec(a.name) is None
+            ]
+    assert not missing, missing
