@@ -1,24 +1,36 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract): runs the registry's queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Benchmark harness (driver contract): runs every registry query at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
-Each query is forced to full materialization with a noop sink (no driver
-collect — measures distributed compute, not toPandas transfer).
-The DuckDB oracle side is timed in the same run by default (the
-BASELINE.md gate is engine ≤ 2× DuckDB; same-run numbers make the ratio
-same-host, same-hour). Set BENCH_DUCKDB=0 to skip it, BENCH_RUNS to
-change the per-query run count (default 2: run 1 warms/builds and is
-excluded, run 2 is the steady state, and the reclaim pass re-measures
-storm-flagged recordings — see the policy string).
+Delivery contract (BENCH_r05/r06 failure modes): the headline line is
+re-printed after EVERY completed query (last-line-wins, <1900 chars) and
+the full record is rewritten to bench_detail.json each time;
+SIGTERM/SIGINT flush a final line before exiting; Spark console progress
+bars are off; a wall-clock budget degrades runs-per-query stepwise toward
+1 and stops cleanly with "partial": true rather than being killed
+mid-stage.
 
-Delivery hardening (BENCH_r05/r06 failure modes): the headline JSON line
-is re-printed after EVERY completed query (last-line-wins, <1900 chars),
-SIGTERM/SIGINT flush a final line before exiting, Spark console progress
-bars are disabled, and a wall-clock budget (BENCH_BUDGET_SEC, default
-420) degrades runs-per-query stepwise toward 1 and stops cleanly with
-"partial": true rather than being killed mid-stage.
+Sampling rule, the only one: each query runs BENCH_RUNS times, forced to
+full materialization with a noop sink (no driver collect), and the
+recorded value is the min of runs 2..k; run 1 carries the one-time
+session builds and stands alone only when it is the only run that fit the
+budget (``steady_state``). The DuckDB oracle is timed in the same run,
+interleaved run-for-run with the engine, under the same rule; an oracle
+slower than BENCH_DUCK_SLOW_SEC is deferred past the engine loop to a
+fresh process, cold run plus an opportunistic warm run, min of the two.
+Host steal over the whole run is recorded as ``host_steal_pct``; it is a
+measurement and never triggers a re-run, a budget change or a verdict.
+
+Knobs (environment):
+  SPARK_GRAFT_SF_DIR       data directory (driver contract)
+  SPARK_GRAFT_CPUS         local[N] cores (driver contract, default 32)
+  BENCH_RUNS               runs per query (default 2)
+  BENCH_DUCKDB             0 skips the DuckDB side (default 1)
+  BENCH_BUDGET_SEC         wall-clock budget for the whole run (default 420)
+  BENCH_QUERY_TIMEOUT_SEC  per-run engine watchdog (default 120)
+  BENCH_DUCK_SLOW_SEC      inline-oracle cap before deferral (default 5)
 """
 
 from __future__ import annotations
@@ -26,7 +38,6 @@ from __future__ import annotations
 import json
 import os
 import signal
-import statistics
 import sys
 import threading
 import time
@@ -43,7 +54,7 @@ from gelly_streaming_spark.sources.tables import TABLES
 
 def _warm_up(
     spark, sf_dir: str, budget: "_Budget | None" = None
-) -> tuple[int, int, list[float]]:
+) -> list[float]:
     """Warm the execution paths the queries use, so per-query timings
     measure steady-state distributed compute — not first-use costs that a
     long-lived session (or any real deployment) pays exactly once:
@@ -58,26 +69,16 @@ def _warm_up(
     a third of the budget starves the queries it exists to serve. Stages
     are independent, so once elapsed warm-up exceeds 20% of the total
     budget the remaining stages are skipped (their one-time costs land
-    in the affected queries' FIRST runs; the median damps them).
+    in the affected queries' FIRST runs, which steady_state excludes).
 
-    Returns (stages_completed, stages_total, per_stage_seconds) so the
-    caller's host-weather check can scale its threshold by how much
-    warm-up WORK actually ran (profile-weighted, ADVICE r10) and record
-    the per-stage elapsed for audit: a budget-capped warm-up could
-    otherwise evade the 2x-setup degradation probe entirely (ADVICE r9)
-    — the cap trims elapsed time below the threshold while leaving the
-    host just as slow."""
+    Returns the elapsed seconds of each stage that ran, recorded in the
+    detail file as ``warmup_stage_secs``."""
     from pyspark.sql import functions as F
 
     from gelly_streaming_spark.sources.tables import TABLES, load_table
 
     cap = 0.2 * budget.total if budget is not None else float("inf")
     t_start = time.time()
-    STAGES_TOTAL = 8  # 7 counted blocks + the final streaming stage
-    done = 0
-    # Per-stage elapsed seconds, recorded for the weather verdict's
-    # audit trail (ADVICE r10: the verdict must be checkable against
-    # which stages ran and how long each took, not just a count).
     stage_secs: list[float] = []
     t_mark = time.time()
 
@@ -94,10 +95,9 @@ def _warm_up(
     # one-time ingest cost lands in session setup, not a query timing)
     for t in TABLES:
         load_table(spark, sf_dir, t).write.mode("overwrite").format("noop").save()
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
 
     # NOTE: the copart_canonical materialized view shared by
     # q07/q11b/q17/q18 is NOT built here — its build is a TIMED line
@@ -118,20 +118,18 @@ def _warm_up(
         .select("k", "c", F.explode("s").alias("e"))
         .write.mode("overwrite").format("noop").save()
     )
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     # event-time window + distinct + top-k
     (
         d.select(F.window(F.timestamp_seconds("k"), "1 minute")["start"].alias("b"), "v")
         .distinct().orderBy("b").limit(10)
         .write.mode("overwrite").format("noop").save()
     )
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     # higher-order-function lambda codegen (collect_set(struct) +
     # transform/filter/flatten) — the copart build's expression shapes,
     # on synthetic rows: warms the generated-class cache so the TIMED
@@ -168,10 +166,9 @@ def _warm_up(
     # q36/q37), distinct, AQE-probed join, count-distinct expand —
     # measured 6.2 s cold vs 0.8 s warm for q36 at sf0.1, mostly
     # first-use codegen/AQE machinery this pass absorbs
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     from gelly_streaming_spark.ext.text import decontaminate
 
     fake_docs = spark.range(0, 512, 1, 8).select(
@@ -185,10 +182,9 @@ def _warm_up(
         fake_docs.where(F.col("doc_id") % 7 == 0),
         n=3,
     ).write.mode("overwrite").format("noop").save()
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     # Arrow/pandas worker pool (one task per core)
     d.groupBy("k").applyInPandas(
         lambda p: p.head(1), "k long, v long"
@@ -216,10 +212,9 @@ def _warm_up(
     registered_domain_lookup(hosts, F.col("h"), "dom").write.mode(
         "overwrite"
     ).format("noop").save()
-    done += 1
     mark()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     # Broadcast-variable numpy-kernel machinery (the q17/q18 shape: a
     # multi-MB python broadcast read by every task of a 2-waves-per-core
     # mapInPandas). Measured: this path keeps improving over ~4
@@ -256,12 +251,11 @@ def _warm_up(
         if over_cap():
             break
     bc_np.destroy()
-    done += 1
     mark()
     # driver round-trips used by adaptive fast paths
     spark.createDataFrame([(1, 2)], "a long, b long").collect()
     if over_cap():
-        return done, STAGES_TOTAL, stage_secs
+        return stage_secs
     # streaming machinery: file source + stateful agg + state store
     try:
         from gelly_streaming_spark.plans.memory import session_tmpdir
@@ -276,52 +270,16 @@ def _warm_up(
     except Exception:
         pass  # streaming warm-up is best-effort; queries still run cold
     mark()  # final streaming stage
-    return STAGES_TOTAL, STAGES_TOTAL, stage_secs
-
-
-# Quiet-host per-stage warm-up profile (relative durations; only the
-# FRACTIONS matter — absolute scale cancels in _weather_degraded).
-# Measured r11 on a 0%-steal host at sf0.1, two fresh sessions:
-# [21.8, 6.0, 1.8, 2.9, 4.1, 13.7, 11.7, 24.6] and
-# [22.8, 5.1, 2.8, 3.6, 6.8, 14.7, 10.3, 8.9] — entries below take the
-# stabler of the two (the final streaming stage's 24.6 was first-run
-# FS/JVM noise). Stage order matches _warm_up: tables, shuffle-agg,
-# window-distinct, HOF-copart, decontaminate, arrow+PSL,
-# numpy-broadcast, streaming.
-_WARMUP_STAGE_PROFILE: tuple[float, ...] = (22.0, 5.0, 2.0, 3.0, 5.0, 14.0, 10.0, 9.0)
-
-
-def _weather_degraded(
-    setup_sec: float, expected: float, stages_done: int, stages_total: int
-) -> bool:
-    """Host-weather verdict: setup time beyond 2x the quiet-host profile
-    means the host is stealing cycles. The profile is scaled by the
-    share of warm-up WORK that actually RAN, so a budget-capped warm-up
-    cannot evade the probe (ADVICE r9: the 20%-of-budget cap used to
-    trim elapsed time below the threshold while the host was just as
-    slow). The share weights stages by their quiet-host durations
-    (_WARMUP_STAGE_PROFILE), not by count — stage durations are highly
-    unequal (the table-load stage alone is ~30% of a quiet warm-up), so
-    a tight-budget quiet-host run that finishes only the expensive
-    early stages used to false-trigger and silently drop to 1 run/query
-    (ADVICE r10). The 0.25 floor keeps a pathological one-stage run
-    from setting a near-zero threshold on a healthy host."""
-    if stages_total == len(_WARMUP_STAGE_PROFILE):
-        frac = sum(_WARMUP_STAGE_PROFILE[:stages_done]) / sum(
-            _WARMUP_STAGE_PROFILE
-        )
-    else:  # stage list changed without a profile re-measure: count fallback
-        frac = stages_done / stages_total if stages_total else 1.0
-    return setup_sec > 2 * expected * max(frac, 0.25)
+    return stage_secs
 
 
 def _timed_duck_run(con, lock, sql: str, cap: float):
     """Run one DuckDB statement with a wall-clock cap, enforced via
-    ``con.interrupt()`` from a timer thread (the same guard pattern the
-    reclaim pass uses). Returns ``(elapsed_sec | None, interrupted)``:
-    elapsed on success, ``(None, True)`` when the cap fired (caller may
-    retry on leftover budget), ``(None, False)`` on a genuine failure
-    (retrying would just fail again and burn budget)."""
+    ``con.interrupt()`` from a timer thread (the same guard pattern as
+    the engine watchdog). Returns ``(elapsed_sec | None, interrupted)``:
+    elapsed on success, ``(None, True)`` when the cap fired (the caller
+    defers the oracle to a fresh process), ``(None, False)`` on a genuine
+    failure (re-running would just fail again and burn budget)."""
     armed = {"on": True}
     fired = {"v": False}
 
@@ -339,7 +297,7 @@ def _timed_duck_run(con, lock, sql: str, cap: float):
         con.sql(sql).fetchall()
         return time.time() - t0, False
     except Exception as ex:
-        # retryable ONLY when OUR timer fired AND the failure is the
+        # interrupted ONLY when OUR timer fired AND the failure is the
         # interrupt itself: a genuine failure (OOM, catalog error)
         # landing concurrently with the timer must not be retried —
         # it would fail again and burn the budget the cap protects.
@@ -377,417 +335,14 @@ def _steal_pct(start: tuple[int, int] | None) -> float | None:
     return round(100.0 * (end[0] - start[0]) / (end[1] - start[1]), 2)
 
 
-# Reclaim-pass thresholds (BENCH_r11 postmortem: the official record
-# breached the 2x gate inside a mid-loop steal storm that the setup-time
-# weather probe called clean — load_degraded:false with whole-run steal
-# 1.69%, q23b recording 6.52 s med=min=max against a 1.20 s clean-window
-# median). The reclaim pass re-measures any recording whose own run
-# evidence OR per-query steal telemetry says its window was degraded.
-_RECLAIM_INFLATION = 2.5  # recorded value vs the query's own in-run min
-_RECLAIM_STEAL_PCT = 4.0  # per-query /proc/stat steal marking a storm
-_RECLAIM_MIN_SEC = 0.3  # below this a recording cannot move the gate
-# Second weather eye (r12, the vCPU-migration storm class): recorded
-# value vs the query's timing in the COMMITTED bench_detail.json. A
-# hypervisor that migrates vCPUs instead of stealing them inflates the
-# 32-thread JVM + Python workers uniformly (med≈min, so the in-run
-# spread rule is blind) while /proc/stat steal stays ~1% (so the steal
-# rule is blind) and single-process DuckDB barely moves (so the gate
-# ratio explodes). Observed same-code, same-sf: engine 135 s vs its own
-# 63 s committed reference with steal 1.16%, q25s 19.8 s vs 1.97 s
-# reference, kernel migration threads hot. The committed detail is the
-# one baseline that sees this.
-_REF_INFLATION = 2.5  # recorded vs committed-detail reference -> reclaim flag
-_REF_STORM_ENTER = 2.5  # 2-of-5 ratios above -> coverage mode
-_REF_STORM_EXIT = 1.25  # 5 ratios below -> storm cleared
-# Wall-clock earmarked for the post-loop reclaim pass, same contract as
-# the oracle reserve (accelerates run-degradation, never stops the
-# loop). Added r12 after two runs where the loop consumed the budget to
-# the last second and every reclaim candidate logged skipped-no-budget:
-# at 69 registered queries the warm+steady ladder fills 300 s with zero
-# slack, so the pass the storm machinery feeds was structurally
-# unfunded. ~35 s warm-re-runs the ~20 biggest flagged recordings.
-_RECLAIM_RESERVE_SEC = 35.0
-# Round-level storm-retry pass (VERDICT r12 item 1: two consecutive
-# official records breached the gate inside sustained storms the
-# machinery DETECTED but could not REPAIR — detection without repair
-# does not move the gate). When the run ends unhealthy (partial,
-# load_degraded, untimed queries, skipped-no-budget reclaims, or
-# recordings still failing the health flags), the budget is extended
-# by BENCH_RETRY_BUDGET_SEC and the engine side re-runs in LATER
-# windows, min-per-query across attempts, sleeping between attempts
-# when the window reads hot (idle wall-clock also lets a
-# credit-drained burstable host recover). Oracle timings are reused
-# within the round (same-round convention); only untimed queries get
-# fresh oracle runs.
-_RETRY_ATTEMPTS = 3
-# Sleep between retry attempts decorrelates stormy windows; 0 is valid
-# (the CLI coverage tests care about sweep completeness, not window
-# decorrelation, and the two 45 s sleeps were ~20% of their budget)
-_RETRY_SLEEP_SEC = float(os.environ.get("BENCH_RETRY_SLEEP_SEC", "45"))
-_RETRY_HOT_ABORT = 3  # consecutive still-inflated fresh runs -> window hot
-
-
-def _load_reference() -> tuple[dict[str, float], dict[str, float]]:
-    """(engine, duckdb) per-query reference timings for the weather eye.
-
-    Primary source: ``bench_reference.json`` — a CURATED artifact that
-    bench.py never writes (the per-run output is bench_detail.json).
-    The r12 git-show-HEAD scheme failed in exactly the way it guarded
-    against, one level up: the round driver COMMITS the official run,
-    so BENCH_r12's 6.7x storm record landed at HEAD and became the
-    reference — storm-inflated refs read every later ratio as calm,
-    killing ref-inflation detection precisely when it matters. A file
-    only humans update cannot be poisoned by a bad run, committed or
-    not. The curated file also carries FLOOR OVERLAYS (VERDICT r12
-    item 2): pinned steady states for queries missing from the last
-    calm full record, so every registered query has a reference row
-    the reclaim/retry passes can compare against.
-
-    Fallback: the committed bench_detail.json via ``git show`` (disk
-    last), now behind a health guard — a record that says
-    load_degraded or partial is NOT a usable baseline.
-
-    Env overrides (ADVICE r12 — a host steadily >=2.5x slower than the
-    baseline hardware would otherwise sit in permanent coverage mode
-    with every query perpetually ref-flagged): ``BENCH_REF_DISABLE=1``
-    drops the reference signal entirely; ``BENCH_REF_SCALE=<float>``
-    multiplies every reference timing (engine and duck alike) to
-    re-zero the eye on uniformly different hardware; ``BENCH_REF_DIR``
-    points at a different directory (tests)."""
-    d, scale = _load_reference_record()
-    if d is None:
-        return {}, {}
-    try:
-        eng = {
-            k: float(v) * scale for k, v in (d.get("queries") or {}).items()
-        }
-        duk = {
-            k: float(v) * scale
-            for k, v in (d.get("duckdb_queries") or {}).items()
-        }
-        return eng, duk
-    except Exception:
-        return {}, {}
-
-
-def _load_reference_record() -> tuple[dict | None, float]:
-    """The raw reference record behind _load_reference, plus the
-    BENCH_REF_SCALE factor — shared so OTHER reference-eye consumers
-    (the copart-rebuild check) resolve through the SAME env overrides
-    (ADVICE r13: the copart check read the repo's bench_reference.json
-    directly, so BENCH_REF_DIR/SCALE/DISABLE redirections silently
-    didn't apply and a uniformly slower host tripped the rebuild every
-    retry run). Returns ``(record | None, scale)``."""
-    if os.environ.get("BENCH_REF_DISABLE", "0") == "1":
-        return None, 1.0
-    here = os.environ.get(
-        "BENCH_REF_DIR", os.path.dirname(os.path.abspath(__file__))
-    )
-    try:
-        scale = float(os.environ.get("BENCH_REF_SCALE", "1.0"))
-    except Exception:
-        scale = 1.0
-    d = None
-    try:
-        with open(os.path.join(here, "bench_reference.json")) as f:
-            d = json.load(f)
-    except Exception:
-        d = None
-    if d is None:
-        raw = None
-        try:
-            import subprocess
-
-            p = subprocess.run(
-                ["git", "-C", here, "show", "HEAD:bench_detail.json"],
-                capture_output=True, text=True, timeout=10,
-            )
-            if p.returncode == 0 and p.stdout.strip():
-                raw = p.stdout
-        except Exception:
-            pass
-        try:
-            if raw is None:
-                with open(os.path.join(here, "bench_detail.json")) as f:
-                    raw = f.read()
-            d = json.loads(raw)
-            if d.get("load_degraded") or d.get("partial"):
-                return None, scale  # a degraded record is not a baseline
-        except Exception:
-            return None, scale
-    return d, scale
-
-
-def _reclaim_flags(
-    runs: list[float],
-    recorded: float,
-    steal_pct: float | None,
-    ref: float | None = None,
-    intended_single: bool = False,
-) -> list[str]:
-    """Reasons one side's recorded timing is untrustworthy and should be
-    re-measured by the reclaim pass (empty list = trustworthy).
-
-    Three independent degraded-window signatures:
-    - ``single-run``: the steady-state policy (exclude run 1) cannot
-      operate on one sample, so the recording carries first-run costs;
-    - ``inflated``: the recorded value exceeds 2.5x the query's own
-      in-run min — a burst hit the later runs while at least one run
-      saw the real floor;
-    - ``storm``: /proc/stat steal during THIS query's run window
-      exceeded 4% — catches the med=min=max case where EVERY run was
-      inflated and the in-run spread shows nothing (the r11 q23b
-      signature, invisible to the other two rules);
-    - ``ref-inflated``: the recorded value exceeds 2.5x the query's
-      timing in the COMMITTED bench_detail.json — catches the
-      vCPU-migration storm class that is med≈min AND low-steal (see
-      _REF_INFLATION). A genuine plan regression also trips this; the
-      re-run then simply re-measures and records the honest (still
-      slow) min, costing one reclaim slot.
-    Sub-0.3 s recordings are never flagged for inflation/storm/ref:
-    they cannot move the gate ratio, and re-running them would burn
-    reclaim budget the heavy queries need.
-
-    ``intended_single`` (ADVICE r13): under BENCH_RUNS=1 a single
-    sample is the CONFIGURED policy, not budget degradation — without
-    this every query was flagged, needs_retry was always true, and the
-    retry pass silently extended a calm run's budget by 300 s to re-run
-    the entire suite. The inflation/storm/ref eyes still apply."""
-    reasons: list[str] = []
-    if len(runs) == 1 and not intended_single:
-        reasons.append("single-run")
-    elif (
-        runs
-        and recorded >= _RECLAIM_MIN_SEC
-        and recorded > _RECLAIM_INFLATION * min(runs)
-    ):
-        reasons.append(f"inflated(rec={recorded:.2f},min={min(runs):.2f})")
-    if (
-        steal_pct is not None
-        and steal_pct > _RECLAIM_STEAL_PCT
-        and recorded >= _RECLAIM_MIN_SEC
-    ):
-        reasons.append(f"storm(steal={steal_pct:.1f}%)")
-    if (
-        ref is not None
-        and ref > 0
-        and recorded >= _RECLAIM_MIN_SEC
-        and recorded > _REF_INFLATION * ref
-    ):
-        reasons.append(f"ref-inflated(rec={recorded:.2f},ref={ref:.2f})")
-    return reasons
-
-
-def _health(
-    ordered_names: list[str],
-    timings: dict[str, float],
-    all_runs: dict[str, list[float]],
-    errors: dict[str, str],
-    eng_ref: dict[str, float],
-    reclaim_log: dict[str, str],
-    duck: dict[str, float] | None = None,
-    all_druns: dict[str, list[float]] | None = None,
-    duck_ref: dict[str, float] | None = None,
-    inline_oracle_names: set[str] | None = None,
-    intended_single: bool = False,
-) -> tuple[list[str], list[str], list[str], list[str]]:
-    """Record-health verdict shared by the storm-retry pass's work list
-    and the final load_degraded/partial recomputation:
-    ``(untimed, flagged, duck_flagged, starved)``. ``untimed`` =
-    registered queries with neither a timing nor an error (budget
-    truncation); ``flagged`` = engine recordings still failing the
-    health flags — single-run, >2.5x their own in-run min, or >2.5x the
-    curated reference — ordered by recorded time DESCENDING
-    (gate-dominant first); ``duck_flagged`` = INLINE oracle recordings
-    failing the same flags (ADVICE r13: a duck reading inflated by the
-    same storm biased the gate ratio in the engine's favor if only the
-    engine side was re-measured — the reclaim pass's both-sides
-    symmetry, now carried into the retry pass; deferred oracles are
-    excluded, their fresh-process min-of-two rule stands); ``starved``
-    = reclaim candidates that logged skipped-no-budget and were never
-    repaired. The steal eye is deliberately absent: a query's steal
-    reading describes its ORIGINAL window, and min-of-runs from a calm
-    re-run supersedes it."""
-    duck = duck or {}
-    all_druns = all_druns or {}
-    duck_ref = duck_ref or {}
-    inline_oracle_names = inline_oracle_names or set()
-    untimed = [n for n in ordered_names if n not in timings and n not in errors]
-    flagged = sorted(
-        (
-            n
-            for n, t in timings.items()
-            if n not in errors
-            and _reclaim_flags(
-                all_runs.get(n, []), t, None, eng_ref.get(n), intended_single
-            )
-        ),
-        key=lambda n: timings[n],
-        reverse=True,
-    )
-    duck_flagged = sorted(
-        (
-            n
-            for n, t in duck.items()
-            if n in inline_oracle_names
-            and n not in errors
-            and _reclaim_flags(
-                all_druns.get(n, []), t, None, duck_ref.get(n), intended_single
-            )
-        ),
-        key=lambda n: duck[n],
-        reverse=True,
-    )
-    starved = [n for n, v in reclaim_log.items() if "skipped-no-budget" in v]
-    return untimed, flagged, duck_flagged, starved
-
-
-def _rewrite_starved_reclaims(
-    reclaim_log: dict[str, str],
-    timings: dict[str, float],
-    all_runs: dict[str, list[float]],
-    errors: dict[str, str],
-    eng_ref: dict[str, float],
-    duck: dict[str, float],
-    all_druns: dict[str, list[float]],
-    duck_ref: dict[str, float],
-    inline_oracle_names: set[str],
-    intended_single: bool,
-) -> list[str]:
-    """Rewrite ``skipped-no-budget`` reclaim entries whose query was
-    repaired by the storm-retry pass: an entry is only rewritten once
-    BOTH the engine recording and (for inline-oracle queries) the duck
-    recording pass the health flags on the FINAL books — rewriting on
-    the engine re-run alone would clear load_degraded over an inflated
-    oracle denominator (ADVICE r13). Mutates ``reclaim_log`` in place;
-    returns the rewritten names (test observability). Module-level so
-    the branch is unit-testable: the inline r14 version crashed the
-    official record with a NameError the CLI tests never reached,
-    because no test produced a starved reclaim entry."""
-    rewritten: list[str] = []
-    for name, entry in list(reclaim_log.items()):
-        if "skipped-no-budget" not in entry:
-            continue
-        if name in errors or name not in timings:
-            continue
-        e_clean = not _reclaim_flags(
-            all_runs.get(name, []), timings[name], None,
-            eng_ref.get(name), intended_single,
-        )
-        d_clean = True
-        if name in inline_oracle_names and name in duck:
-            d_clean = not _reclaim_flags(
-                all_druns.get(name, []), duck[name], None,
-                duck_ref.get(name), intended_single,
-            )
-        if e_clean and d_clean:
-            reclaim_log[name] = entry.replace(
-                "skipped-no-budget", "reclaim-starved"
-            ) + (
-                f" -> repaired-by-retry-pass "
-                f"rec={timings[name]:.2f}"
-                + (
-                    f" duck-rec={duck[name]:.2f}"
-                    if name in inline_oracle_names and name in duck
-                    else ""
-                )
-            )
-            rewritten.append(name)
-    return rewritten
-
-
-def _ref_storm_mode(recent_ratio: list[float], active: bool) -> bool:
-    """The reference eye's coverage-mode hysteresis — same 3-of-5 /
-    5-calm shape as _storm_mode but over recorded-vs-committed-reference
-    ratios, catching migration storms the steal counter cannot see
-    (observed r12: 53/69 partial at steal 1.16% with every engine
-    timing 2-10x its committed reference). Enter at 2 of the last 5
-    ratios over _REF_STORM_ENTER — migration bursts alternate hot and
-    calm queries (a second r12 run: q15e 2.7x and q15f 3.4x adjacent,
-    surrounded by ~1.6x, evaded a 3-of-5 trigger and the run recorded
-    4.2x), and two independent >2.5x readings within five queries do
-    not happen in calm windows (committed-vs-rerun ratios stay <1.5).
-    Leave only when the last 5 are all under _REF_STORM_EXIT."""
-    window = recent_ratio[-5:]
-    if active:
-        return not (
-            len(window) == 5 and all(r < _REF_STORM_EXIT for r in window)
-        )
-    return len([r for r in window if r > _REF_STORM_ENTER]) >= 2
-
-
-def _storm_mode(recent_steal: list[float], active: bool) -> bool:
-    """Hysteresis for the mid-loop coverage-mode switch. Enter when 3
-    of the last 5 per-query steal readings exceed the storm threshold
-    (debounces single-query blips); leave only when the last 5 are all
-    under half of it. Rationale (the r12 5.66%-steal run): a SUSTAINED
-    storm inflates every sample, so extra runs per query just burn the
-    budget that the reclaim pass and the deferred-oracle reserve need
-    to salvage the record — that run spent its whole 300 s on inflated
-    2-run timings, skipped all 43 reclaim candidates, and starved both
-    quadratic oracles. One run per query through the storm + min-of-
-    runs re-measures afterwards is strictly more signal."""
-    window = recent_steal[-5:]
-    if active:
-        return not (
-            len(window) == 5 and all(s < _RECLAIM_STEAL_PCT / 2 for s in window)
-        )
-    return len([s for s in window if s > _RECLAIM_STEAL_PCT]) >= 3
-
-
-def _reclaim_candidates(
-    names: list[str],
-    timings: dict[str, float],
-    duck: dict[str, float],
-    all_runs: dict[str, list[float]],
-    all_druns: dict[str, list[float]],
-    errors: dict[str, str],
-    deferred: dict[str, str],
-    oracle_names: set[str],
-    query_steal: dict[str, float],
-    eng_ref: dict[str, float] | None = None,
-    duck_ref: dict[str, float] | None = None,
-    intended_single: bool = False,
-) -> list[tuple[str, list[str], list[str]]]:
-    """Work list for the reclaim pass: ``(name, engine_reasons,
-    duck_reasons)`` tuples, ordered by recorded EXCESS over the
-    committed reference DESCENDING (recorded seconds when no reference
-    exists) so a tight post-loop budget re-measures the entries that
-    carry the most inflation first — ordering by absolute recorded time
-    (pre-r16) spent the budget on queries that are big by design (the
-    certification runs) while 3-5x ref-inflated mid-size recordings
-    rode into the books (VERDICT r15 wrong-item 3: q17/q23b/q43/q19b
-    at 3.4-5.2x their floors, all skipped-no-budget). A storm flag
-    applies to
-    BOTH sides symmetrically — the engine and inline-oracle runs are
-    interleaved inside the same window, so re-running only the engine
-    side would bias the ratio. Deferred oracles are excluded (their
-    fresh-process passes have their own min-of-two rule), as are
-    errored or never-timed queries."""
-    out: list[tuple[str, list[str], list[str]]] = []
-    eng_ref = eng_ref or {}
-    duck_ref = duck_ref or {}
-    for name in names:
-        if name in errors or name not in timings:
-            continue
-        steal = query_steal.get(name)
-        e = _reclaim_flags(
-            all_runs.get(name, []), timings[name], steal, eng_ref.get(name),
-            intended_single,
-        )
-        d: list[str] = []
-        if name in oracle_names and name not in deferred and name in duck:
-            d = _reclaim_flags(
-                all_druns.get(name, []), duck[name], steal,
-                duck_ref.get(name), intended_single,
-            )
-        if e or d:
-            out.append((name, e, d))
-    out.sort(
-        key=lambda c: timings[c[0]] - (eng_ref.get(c[0]) or 0.0),
-        reverse=True,
-    )
-    return out
+def steady_state(runs: list[float]) -> float:
+    """One query's recorded value: the min of runs 2..k. Run 1 carries
+    the session-lifetime one-time builds (memoized kernel prep, first-use
+    codegen, replay staging), so it is excluded whenever a later run
+    exists, even when it is the fastest; it stands alone only when it is
+    the only run that fit the budget. Used for the engine and the inline
+    DuckDB oracle alike, so the ratio compares like with like."""
+    return min(runs[1:]) if len(runs) >= 2 else runs[0]
 
 
 # Child script for _oracle_subprocess_run: connect, recreate the table
@@ -813,7 +368,7 @@ def _oracle_subprocess_run(sql: str, sf_dir: str, cap: float):
     """Time one oracle statement in a FRESH single-purpose process —
     the binary a standalone DuckDB user actually runs. Returns
     ``(elapsed | None, interrupted, err)``: elapsed on success, a kill
-    past ``cap`` counts as interrupted (retryable), and a nonzero exit
+    past ``cap`` counts as interrupted, and a nonzero exit
     is a genuine failure with the child's stderr tail in ``err`` so
     the audit log carries the cause (missing file, OOM kill, ...).
 
@@ -858,6 +413,16 @@ def _short_queries(queries: dict[str, float]) -> dict[str, float]:
     return short if len(short) == len(queries) else queries
 
 
+# Headline fields shed, in this order, if the line would outgrow the
+# 1900-char tail window; `queries` and every other field always stay.
+_SHEDDABLE_HEADLINE = (
+    "value_max_runs", "errored_queries", "session_setup_sec",
+    "duck_skipped", "duckdb_cold_single_run",
+    "engine_matched_sec", "duckdb_matched_sec",
+    "heavy_engine_sec", "heavy_duckdb_sec",
+)
+
+
 def compact_line(result: dict) -> str:
     """Build the headline JSON line (<1900 chars) from a full result
     dict. Module-level so the tail-window headroom is unit-testable
@@ -868,7 +433,7 @@ def compact_line(result: dict) -> str:
             "metric", "value", "value_max_runs", "unit", "queries", "sf",
             "runs_per_query", "session_setup_sec", "copart_build_sec",
             "errors_present", "comparable_queries", "registered_queries",
-            "partial", "load_degraded", "errored_queries", "duckdb_total_sec",
+            "partial", "host_steal_pct", "errored_queries", "duckdb_total_sec",
             "ratio_vs_duckdb", "ratio_raw", "matched_queries",
             "engine_matched_sec", "duckdb_matched_sec", "duck_skipped",
             "heavy_engine_sec", "heavy_duckdb_sec", "ratio_heavy",
@@ -894,19 +459,9 @@ def compact_line(result: dict) -> str:
     # tail window. Still standard JSON.
     _dumps = lambda d: json.dumps(d, separators=(",", ":"))  # noqa: E731
     line = _dumps(compact)
-    # Degrade gracefully if the query set ever grows the line past
-    # the tail window (queries dict is the only O(n) part).
-    if len(line) > 1900:
-        compact["queries"] = {
-            k: round(v, 2) for k, v in compact["queries"].items()
-        }
-        line = _dumps(compact)
-    # `queries` is part of the driver contract — shed optional
-    # fields instead if the line is still too long.
-    for opt in ("value_max_runs", "errored_queries", "session_setup_sec",
-                "duck_skipped", "duckdb_cold_single_run",
-                "engine_matched_sec", "duckdb_matched_sec",
-                "heavy_engine_sec", "heavy_duckdb_sec"):
+    # `queries` is part of the driver contract (and the only O(n)
+    # part) — shed optional fields instead if the line is too long.
+    for opt in _SHEDDABLE_HEADLINE:
         if len(line) <= 1900:
             break
         compact.pop(opt, None)
@@ -953,7 +508,7 @@ def compute_ratios(
     raw_duck = sum(duck.values())
     if raw_duck > 0:
         out["ratio_raw"] = round(raw_total / raw_duck, 3)
-    # Floor-vs-plan split (BASELINE.md): queries where the DuckDB median
+    # Floor-vs-plan split (BASELINE.md): queries where the DuckDB time
     # is >= 0.1 s are "heavy" — above the trivial-query engine floor, so
     # the ratio over them compares plan quality, not job-launch constants.
     heavy = [n for n in matched if duck[n] >= 0.1]
@@ -968,10 +523,10 @@ def compute_ratios(
 
 class _Budget:
     """Wall-clock budget for the whole bench run (env BENCH_BUDGET_SEC,
-    default 300 s). The driver kills bench.py with SIGTERM at ITS budget
+    default 420 s). The driver kills bench.py with SIGTERM at ITS budget
     (rc 124, BENCH_r06) — printing nothing until the end loses the whole
     round's signal. Under budget pressure this degrades runs-per-query
-    3→1 and finally stops cleanly with ``"partial": true``; independent
+    toward 1 and finally stops cleanly with ``"partial": true``; independent
     of the budget, the headline line is re-printed after EVERY completed
     query (last-line-wins) and on SIGTERM/SIGINT, so any kill point
     still leaves a parseable line in the output tail."""
@@ -979,17 +534,13 @@ class _Budget:
     def __init__(self) -> None:
         # Default raised 300 -> 420 (r12): at 69 registered queries the
         # warm+steady ladder plus the 80 s oracle reserve filled 300 s
-        # with ZERO slack, so in any degraded window the reclaim pass —
-        # the machinery that exists to repair degraded windows — logged
-        # skipped-no-budget for every candidate (observed in four
-        # consecutive runs). A calm run still finishes at ~270 s (the
-        # budget is a cap, not a target); the extra headroom only
-        # matters when the window is bad. The driver's own outer
-        # timeout is comfortably above this: its r6 SIGTERM landed past
-        # the 480 s q33 plan bug, and BENCH_BUDGET_SEC=900 local runs
-        # (BASELINE r7 row) completed unkilled; the per-query
-        # last-line-wins emit + SIGTERM flush keeps any kill point
-        # parseable regardless.
+        # with ZERO slack. The budget is a cap, not a target; the
+        # extra headroom only matters when the window is bad. The
+        # driver's own outer timeout is comfortably above this: its r6
+        # SIGTERM landed past the 480 s q33 plan bug, and
+        # BENCH_BUDGET_SEC=900 local runs (BASELINE r7 row) completed
+        # unkilled; the per-query last-line-wins emit + SIGTERM flush
+        # keeps any kill point parseable regardless.
         self.total = float(os.environ.get("BENCH_BUDGET_SEC", "420"))
         self.start = time.time()
 
@@ -1028,8 +579,8 @@ class _Budget:
             # Projection degradation floors at 2 runs: a query whose ONLY
             # run is its first-ever execution reports first-use codegen/
             # build costs as its steady state (measured: q48 7.5 s as a
-            # single cold run vs ~1 s warm) — the median needs at least
-            # one warm run to land on. Only the hard 20%-of-budget
+            # single cold run vs ~1 s warm) — steady_state needs at
+            # least one warm run to land on. Only the hard 20%-of-budget
             # ladder above may force 1.
             projected = est_query_sec * n_remaining
             while allowed > 2 and projected > 0.6 * max(rem, 1.0):
@@ -1063,40 +614,21 @@ def main() -> None:
     # setup, but the signal handler must be able to build a valid line
     # even if the kill arrives BEFORE setup finishes (warm-up runs tens
     # of seconds; a kill inside it previously printed nothing at all).
-    meta = {"setup_sec": 0.0, "copart_build_sec": 0.0, "load_degraded": False}
+    meta = {"setup_sec": 0.0, "copart_build_sec": 0.0}
     steal_start = _steal_jiffies()
 
-    # BENCH_RUNS timed executions per query (default 2 since r12): run 1
-    # is the warm-up/one-time-build run (excluded by the steady-state
-    # policy), run 2 is the recorded steady state, and the RECLAIM pass
-    # re-measures any recording whose window was degraded (storm/
-    # inflation/single-run flags) with min-of-runs recorded. The r11
-    # default of 3 runs no longer fits: 63 queries x 3 engine + 3
-    # interleaved oracle runs exceeded the 300 s budget whenever the
-    # window was mediocre, so the TAIL queries got degraded to single
-    # COLD runs (r12 observed q33 6.8 s, q49 5.6 s first-run costs
-    # recorded as steady state) and the reclaim pass that exists to
-    # repair exactly that ran with zero budget (21 flagged candidates,
-    # all skipped-no-budget). Two runs + funded reclaim beats three
-    # runs + starved reclaim: the third run only tightened the median
-    # in windows where all three samples were clean anyway.
-    # The DuckDB baseline (BENCH_DUCKDB=0 disables) is timed the
-    # same way in the same process, and its runs are INTERLEAVED with
-    # the engine's per run (engine, duck, engine, duck, ...): with the
-    # two sides in separate sequential phases minutes apart, a steal
-    # burst during one phase moved the headline ratio by ±0.5× run to
-    # run; adjacent interleaved runs sample the same noise window, so
-    # the ratio compares plans, not weather. Exception: an oracle that
-    # blows past BENCH_DUCK_SLOW_SEC is interrupted and re-run once at
-    # the very END of the bench (see the loop comment) — interleaving a
-    # 30 s all-core burn heated the engine runs that followed it.
+    # BENCH_RUNS timed executions per query, recorded by steady_state.
+    # The DuckDB baseline (BENCH_DUCKDB=0 disables) is timed the same
+    # way in the same process, and its runs are INTERLEAVED with the
+    # engine's per run (engine, duck, engine, duck, ...): with the two
+    # sides in separate sequential phases minutes apart, a steal burst
+    # during one phase moved the headline ratio by ±0.5× run to run;
+    # adjacent interleaved runs sample the same noise window, so the
+    # ratio compares plans, not weather. Exception: an oracle that blows
+    # past BENCH_DUCK_SLOW_SEC is interrupted and re-run at the very END
+    # of the bench (see the loop comment) — interleaving a 30 s all-core
+    # burn heated the engine runs that followed it.
     runs_per_query = int(os.environ.get("BENCH_RUNS", "2"))
-    # BENCH_RUNS=1 is an intentional single-run config: the single-run
-    # health flag is suppressed everywhere (ADVICE r13 — it used to make
-    # needs_retry unconditionally true and re-run the whole suite on an
-    # extended budget even in a calm window). Captured HERE, before any
-    # weather-driven downgrade to 1 run — degraded windows still flag.
-    intended_single = runs_per_query == 1
     duck_con = None
     if os.environ.get("BENCH_DUCKDB", "1") != "0":
         import duckdb
@@ -1117,34 +649,21 @@ def main() -> None:
     # when duck_skipped names an oracle (r11: two same-day runs skipped
     # both quadratic oracles with no recorded cause)
     deferred_log: dict[str, str] = {}
-    # per-query steal telemetry: /proc/stat steal %% across each query's
-    # whole run block (engine + interleaved inline-oracle runs). The r11
-    # storm was invisible to the setup-time probe because it arrived
-    # DURING the query loop; this is the mid-loop detector feeding the
-    # reclaim pass, and the audit trail proving which windows were hot.
-    query_steal: dict[str, float] = {}
-    # reclaim-pass audit trail (detail only): why each re-measure
-    # happened and what it recorded
-    reclaim_log: dict[str, str] = {}
-    # storm-retry-pass audit trail (detail only): per-entry fresh runs,
-    # window-hot aborts, sleeps — the evidence behind a cleared
-    # load_degraded flag
-    retry_log: dict[str, str] = {}
     errors: dict[str, str] = {}
     n_total = len(REGISTRY)
     partial = {"v": True}  # flipped off only when the loop completes
 
     def build_result() -> dict:
-        # `value` = copart build + per-query medians of every SUCCESSFUL
-        # query. An errored query is absent from `queries`, so the total
-        # is a subtotal over `comparable_queries` — flagged loudly,
-        # never a silent improvement.
+        # `value` = copart build + per-query steady states of every
+        # SUCCESSFUL query. An errored query is absent from `queries`, so
+        # the total is a subtotal over `comparable_queries` — flagged
+        # loudly, never a silent improvement.
         total = round(sum(timings.values()) + meta["copart_build_sec"], 3)
         # worst-run total: includes every one-time session build that
         # only run 1 pays (memoized triangle-kernel prep, replay
-        # staging, strategy probes) — the median headline excludes
-        # those by construction, so this is the honest upper bound the
-        # median is read against.
+        # staging, strategy probes) — the headline excludes those by
+        # construction, so this is the honest upper bound it is read
+        # against.
         total_max = round(sum(timings_max.values()) + meta["copart_build_sec"], 3)
         result = {
             "metric": "total_wallclock_declared_queries",
@@ -1157,119 +676,35 @@ def main() -> None:
             "sf": float(sf),
             "runs_per_query": runs_per_query,
             "session_setup_sec": meta["setup_sec"],
-            # per-stage warm-up audit trail (ADVICE r10): lets a
-            # load_degraded verdict — or a drifted _WARMUP_STAGE_PROFILE —
-            # be checked against what actually ran; detail-file only
-            # (compact_line drops it from the headline)
+            # per-stage warm-up seconds (detail only)
             "warmup_stage_secs": meta.get("warmup_stage_secs", []),
             # per-deferred-oracle outcomes (detail only): the evidence
             # trail when duck_skipped names an oracle
             "deferred_oracles": deferred_log,
-            # mid-loop weather + reclaim audit (detail only): per-query
-            # steal %% and the reclaim pass's reason/outcome per entry
-            "query_steal_pct": query_steal,
-            "reclaimed": reclaim_log,
-            # storm-retry audit (detail only): fresh-window re-runs and
-            # sleeps; storm_during_loop preserves the mid-loop verdict
-            # even after a successful retry pass clears load_degraded
-            "retry": retry_log,
-            "storm_during_loop": meta.get("storm_during_loop", False),
             "copart_build_sec": meta["copart_build_sec"],
             "policy": (
-                "value = copart_build_sec + sum of per-query steady-state "
-                f"estimates over up to {runs_per_query} runs (run 1 is "
-                "excluded whenever a warmer run exists: it carries the "
-                "session-lifetime one-time builds like q17's memoized "
-                "triangle-kernel prep, first-use codegen, replay staging; "
-                "the estimate is the median of the remaining runs, or the "
-                "single run itself under budget degradation). The copart "
-                "materialized-view build is charged once to the engine "
-                "total, while DuckDB recomputes that join inside each of "
-                "q07/q11b/q17/q18's timed SQL. queries_max carries the "
-                "one-time costs per-query and value_max_runs totals them. "
-                "A query that errors on any run "
-                "is excluded from queries/value entirely and listed under "
-                "errors. partial=true means the wall-clock budget "
-                f"(BENCH_BUDGET_SEC={budget.total:.0f}) or a signal stopped "
-                "the run before every query completed; under budget pressure "
-                "runs-per-query degrades stepwise toward 1 before stopping. "
-                "Leftover "
-                "budget after the main loop is reclaimed as re-runs for "
-                "every recording whose window was degraded: single-run "
-                "(the steady-state policy needs >=2 samples), recorded "
-                "value >2.5x the query's own in-run min (burst hit the "
-                "later runs), >4% /proc/stat steal during the query's "
-                "own run window (the mid-loop storm detector - catches "
-                "med=min=max inflation the spread cannot show), or "
-                ">2.5x the query's timing in the COMMITTED "
-                "bench_detail.json (the reference eye - catches "
-                "vCPU-migration storms that are med=min AND low-steal; "
-                "a genuine plan regression re-measures and records the "
-                "honest slow min). Both "
-                "sides re-run symmetrically, biggest engine recording "
-                "first, min across all runs recorded - the re-run is "
-                "minutes after the flagged window so weather between "
-                "them is uncorrelated; per-entry reasons and outcomes "
-                "are in `reclaimed`, per-query steal in "
-                "`query_steal_pct`. A SUSTAINED mid-loop storm (3 of "
-                "the last 5 per-query steal readings over 4%, OR 2 of "
-                "the last 5 committed-reference ratios over 2.5x - "
-                "migration bursts alternate hot and calm queries; the "
-                "two eyes clear independently and coverage mode holds "
-                "until both say calm) switches "
-                "the loop to coverage mode - 1 run/query and "
-                "load_degraded:true - until 5 calm readings, "
-                "preserving budget for the reclaim pass and the "
-                "oracle reserve instead of burning it on inflated "
-                "extra runs. Slow "
-                "DuckDB oracles are deferred past the engine loop on "
-                "reserved wall-clock and timed in a FRESH single-purpose "
-                "process (the standalone-DuckDB convention: JVM-resident "
-                "in-process timings of the quadratic oracles carried up "
-                "to 2.5x residency overhead with 4-60s variance, which "
-                "starved the deferred runs entirely; a clean process is "
-                "also the STRONGER denominator): a cold run each capped "
-                "at its fair share of remaining budget (one hog oracle "
-                "must not starve another's only run or blow the budget - "
-                "an interrupted oracle retries on whatever budget "
-                "survives the warm pass), then an "
-                "opportunistic second run (capped at 2.5x cold) with "
-                "min(cold, warm) recorded "
-                "(the two runs are minutes apart so weather between them "
-                "is uncorrelated - min is the steady-state estimator "
-                "there); any oracle that only got its cold run is named "
-                "in duckdb_cold_single_run. Convention note: INLINE "
-                "(sub-5s) oracles stay in-process for same-noise-window "
-                "interleaving with their engine runs and therefore carry "
-                "some JVM-residency overhead; only the deferred slow "
-                "oracles use the clean-process convention - per-oracle "
-                "outcomes are in deferred_oracles. If the run still "
-                "ends unhealthy (partial, load_degraded, untimed "
-                "queries, starved reclaims, or recordings failing the "
-                "health flags), a ROUND-LEVEL RETRY extends the budget "
-                "by BENCH_RETRY_BUDGET_SEC (default 300; "
-                "BENCH_STORM_RETRY=0 disables) and re-runs the engine "
-                "side in up to 3 later windows, min-across-all-runs "
-                "recorded, sleeping between attempts when fresh runs "
-                "still read >2.5x their reference (window hot); oracle "
-                "timings are reused within the round, only never-timed "
-                "oracles run fresh. partial and load_degraded describe "
-                "the FINAL books after the retry pass; "
-                "storm_during_loop and the retry/reclaimed audit maps "
-                "preserve the mid-run history. Reference timings come "
-                "from the curated bench_reference.json (never written "
-                "by bench runs; carries pinned floor overlays for "
-                "queries missing from the last calm full record), "
-                "scaled by BENCH_REF_SCALE / disabled by "
-                "BENCH_REF_DISABLE for different hardware"
+                "value = copart_build_sec + sum over successful queries of "
+                "the min of runs 2..k, k = BENCH_RUNS "
+                f"({runs_per_query}); run 1 carries one-time session builds "
+                "and counts only when it is the only run that fit the "
+                "budget. The copart view is built once as a timed line item; "
+                "DuckDB recomputes that join inside q07/q11b/q17/q18. Inline "
+                "DuckDB oracles run interleaved with the engine runs under "
+                "the same rule; oracles slower than BENCH_DUCK_SLOW_SEC run "
+                "after the loop in a fresh process, min of a cold and an "
+                "opportunistic warm run (duckdb_cold_single_run names the "
+                "cold-only ones). A query that errors on any run is left out "
+                "of queries/value and listed under errors. partial=true: the "
+                f"budget (BENCH_BUDGET_SEC={budget.total:.0f}) or a signal "
+                "stopped the run first. host_steal_pct is recorded, never "
+                "acted on."
             ),
             "errors_present": bool(errors),
             "comparable_queries": len(timings),
             "registered_queries": n_total,
             "partial": partial["v"],
-            "load_degraded": meta["load_degraded"],
-            # whole-run hypervisor steal (detail only): the weather
-            # covariate, sampled process-start -> each emit
+            # whole-run hypervisor steal: the weather covariate, sampled
+            # process-start -> each emit
             "host_steal_pct": _steal_pct(steal_start),
         }
         if errors:
@@ -1347,28 +782,8 @@ def main() -> None:
     signal.signal(signal.SIGINT, _on_signal)
 
     t_setup = time.time()
-    ws_done, ws_total, ws_secs = _warm_up(spark, sf_dir, budget)
+    meta["warmup_stage_secs"] = _warm_up(spark, sf_dir, budget)
     meta["setup_sec"] = round(time.time() - t_setup, 3)
-    # audit trail for the weather verdict (bench_detail.json only —
-    # not part of the <1900-char headline line)
-    meta["warmup_stage_secs"] = ws_secs
-
-    # Host-weather signal: setup is ~29-35 s on a quiet host and has
-    # measured 100 s inside a steal window (same code, same data). When
-    # the host is that degraded, 3 runs/query cannot fit the budget —
-    # the projection ladder would discover it 5 queries in, but starting
-    # at 1 run/query immediately buys those queries' extra runs back as
-    # COVERAGE (more queries timed before the budget dies). The median
-    # vs weather trade is explicitly recorded in the output.
-    # The threshold scales by the fraction of warm-up stages that RAN:
-    # a budget-capped warm-up used to evade the probe (ADVICE r9 —
-    # the 20%-of-budget cap trims elapsed time below 2x expected while
-    # the host is just as slow), so a partial warm-up is judged against
-    # a proportionally smaller quiet-host profile.
-    expected_setup = float(os.environ.get("BENCH_EXPECTED_SETUP_SEC", "35"))
-    if _weather_degraded(meta["setup_sec"], expected_setup, ws_done, ws_total):
-        meta["load_degraded"] = True
-        runs_per_query = 1
 
     # Cost-attribution policy (stated in the output JSON): the
     # session-lifetime copart_canonical view shared by q07/q11b/q17/q18
@@ -1405,63 +820,20 @@ def main() -> None:
     # The reserve guarantees ONE (cold) run each; the steady-state
     # warm-up run is opportunistic on leftover budget — pre-reserving
     # double was measured to starve the tail engine queries down to a
-    # single cold run each, inflating their recorded values far more
-    # than the oracle asymmetry it fixed (duckdb_cold_single_run flags
-    # the asymmetry honestly when the leftover doesn't stretch).
-    # Sized from measurement, re-sized r12: the quadratic oracles'
-    # clean-process cold runs take 4-10 s quiet, but two same-day r12
-    # windows at 1-3% whole-run steal measured q22 needing >25.7 s and
-    # >44 s and q31 taking 32.1 s — the r11 sizing of 25 s/oracle lost
-    # one or both oracles in BOTH windows, and losing them guts the
-    # matched-set denominator of exactly the two queries where the
-    # engine wins biggest (duck 15-40 s vs engine ~2 s). 40 s/oracle
-    # shifts budget from tail-query extra runs to the oracle reserve;
-    # the funded reclaim pass (r12) repairs the additional single-run
-    # tail queries at ~2 s each, so the trade costs little and the
-    # reserve only accelerates run-degradation - it never stops the
-    # loop (runs_allowed contract).
+    # single cold run each (duckdb_cold_single_run flags the asymmetry
+    # honestly when the leftover doesn't stretch). The reserve only
+    # accelerates run-degradation; it never stops the loop (runs_allowed
+    # contract).
     defer_est = max(40.0, 8.0 * duck_slow_cap)
     loop_t0 = time.time()
     queries_done = 0
-    # mid-loop storm state (see _storm_mode): per-query steal readings
-    # and the coverage-mode flag; base_runs is what a cleared storm
-    # restores (it honors the setup-probe degradation, if any)
-    recent_steal: list[float] = []
-    # the reference eye's window: recorded/committed-reference ratios
-    # for queries that have a committed baseline (see _ref_storm_mode)
-    eng_ref, duck_ref = _load_reference()
-
-    def _oracle_est(name: str) -> float:
-        # History-sized per-oracle wall-clock (VERDICT r15 item 2): the
-        # flat defer_est cap interrupted q22 three times in the r15
-        # official window (40/15.5/40 s caps vs a ~28-45 s storm-window
-        # quadratic oracle) and left the round's only denominator hole.
-        # The committed reference records the oracle's own measured
-        # seconds (min-of-runs, typically the warm/calm value); x4
-        # covers the documented cold+storm inflation band (r12/r13
-        # evidence: 13.9 s recorded vs 28.5-44 s storm-window cold).
-        # No history -> the old flat estimate.
-        hist = duck_ref.get(name)
-        return max(defer_est, 4.0 * hist) if hist else defer_est
-    recent_ref: list[float] = []
-    storm = False
-    base_runs = runs_per_query
     ordered = sorted(REGISTRY.items())
-    all_runs: dict[str, list[float]] = {}
-    all_druns: dict[str, list[float]] = {}
 
     for name, q in ordered:
         # reserve scales with the number of deferred oracles (ADVICE
-        # r11: the old min(50, ...) ceiling silently under-reserved at
-        # >=3 deferred oracles, re-creating the r8 starvation). With
-        # today's 2 quadratic oracles and the r12 defer_est of 40 s
-        # this reserves 80 s (was 50): budget deliberately shifted
-        # from tail-query extra runs to the oracle reserve — the
-        # funded reclaim pass repairs the extra single-run tail
-        # queries at ~2 s each.
-        reserve = (
-            sum(_oracle_est(n) for n in duck_deferred) + _RECLAIM_RESERVE_SEC
-        )
+        # r11: a fixed ceiling under-reserved at >=3 deferred oracles,
+        # re-creating the r8 starvation)
+        reserve = defer_est * len(duck_deferred)
         # projection needs a stable sample: the first queries carry
         # one-time session builds that overestimate the steady rate
         est = (
@@ -1477,7 +849,6 @@ def main() -> None:
         )
         if runs_now == 0 or out_of_budget:
             break  # budget exhausted — stop cleanly, partial stays true
-        q_steal_start = _steal_jiffies()
         runs: list[float] = []
         druns: list[float] = []
         for run_i in range(runs_now):
@@ -1546,7 +917,7 @@ def main() -> None:
                 # from q22/q31 oracle adjacency). Deferred oracles run
                 # once after ALL engine timings are recorded, so the
                 # ratio keeps its same-run property while the per-query
-                # medians compare plans, not residual heat. The disarm
+                # timings compare plans, not residual heat. The disarm
                 # race (interrupt landing after completion would cancel
                 # the NEXT query) is closed with the same lock+flag
                 # shape as the engine watchdog. A duck failure must
@@ -1561,217 +932,38 @@ def main() -> None:
                 # else: oracle-side failure — engine timing still counts
             if budget.remaining() - reserve <= 5:
                 break  # keep whatever runs we have; flush and move on
-        qs = _steal_pct(q_steal_start)
-        if qs is not None:
-            query_steal[name] = qs
-            recent_steal.append(qs)
         queries_done += 1
         # a query that errored on ANY run is excluded from timings
-        # entirely (not a median of its lucky runs): `queries`,
-        # `comparable_queries`, and the DuckDB side then all cover the
-        # exact same query set, as the policy states. A budget-truncated
-        # query keeps the runs it completed.
+        # entirely (not its lucky runs): `queries`, `comparable_queries`,
+        # and the DuckDB side then all cover the exact same query set,
+        # as the policy states. A budget-truncated query keeps the runs
+        # it completed; queries_max always shows the spread.
         if runs and name not in errors:
-            # steady-state estimate: run 1 carries the session-lifetime
-            # one-time builds (memoized kernel prep, first-use codegen,
-            # replay staging) and is excluded whenever a warmer run
-            # exists; with 3 runs this is the median of runs 2-3, with 2
-            # runs it is run 2. A single run (budget-degraded) is
-            # reported as-is — and queries_max always shows the spread.
-            steady = runs[1:] if len(runs) >= 2 else runs
-            timings[name] = round(statistics.median(steady), 3)
+            timings[name] = round(steady_state(runs), 3)
             timings_min[name] = round(min(runs), 3)
             timings_max[name] = round(max(runs), 3)
             if druns:
-                # SAME steady-state rule for the DuckDB side (its first
-                # run carries plan compile + buffer-pool warm) — the
-                # ratio must compare like with like.
-                dsteady = druns[1:] if len(druns) >= 2 else druns
-                duck[name] = round(statistics.median(dsteady), 3)
+                duck[name] = round(steady_state(druns), 3)
                 duck_min[name] = round(min(druns), 3)
-            all_runs[name] = runs
-            all_druns[name] = druns
-            ref = eng_ref.get(name)
-            if ref is not None and ref >= 0.1 and timings[name] >= _RECLAIM_MIN_SEC:
-                recent_ref.append(timings[name] / ref)
-        # Mid-loop storm escalation (VERDICT r11 item 1b, second half):
-        # per-query telemetry drives the RUN LADDER, not just the
-        # reclaim flags — sustained storm -> coverage mode (1 run/query,
-        # load_degraded flagged, sticky); storm clears -> restore the
-        # configured runs. TWO eyes, OR'd while active so the storm only
-        # clears when both say calm: the steal counter (hypervisor
-        # preemption) and the committed-reference ratio (vCPU-migration
-        # storms, which are med≈min AND low-steal — the 53/69-partial
-        # r12 run at 1.16% steal was invisible to the steal eye).
-        storm = _storm_mode(recent_steal, storm) or _ref_storm_mode(
-            recent_ref, storm
-        )
-        if storm:
-            meta["load_degraded"] = True
-        runs_per_query = 1 if storm else base_runs
         emit()  # last-line-wins checkpoint after every query
     else:
         if not out_of_budget:
             partial["v"] = False
 
-    # Pass 0 — the RECLAIM pass: re-measure every recording whose own
-    # run evidence or per-query steal telemetry says its window was
-    # degraded (_reclaim_flags: single-run, recorded value >2.5x the
-    # query's own in-run min, or >4% /proc/stat steal during the
-    # query's window). BENCH_r11 breached the 2x gate on exactly the
-    # recordings this pass now repairs: a mid-loop steal storm the
-    # setup-time probe could not see inflated q23b to 6.52 s
-    # (med=min=max — every run hit, so only the steal telemetry can
-    # flag it) and left six queries with single samples. Runs BEFORE
-    # the deferred-oracle burns so the re-runs measure a warm-but-
-    # unheated JVM, and respects the oracle reserve. Candidates are
-    # processed biggest-engine-recording first so a tight post-loop
-    # budget repairs the gate-dominant entries.
-    # The recorded value is the MIN across all runs including the
-    # re-run, on BOTH sides: the re-run happens minutes after the
-    # flagged window, so weather between them is uncorrelated (same
-    # argument as the deferred oracles' min rule) and a steal burst
-    # during the reclaim pass itself must not overwrite a cleaner
-    # earlier run. A storm flag re-runs both sides symmetrically — the
-    # engine and inline-oracle runs shared the flagged window, so
-    # re-running only the engine side would bias the ratio. Each
-    # engine re-run gets the same watchdog as the main loop — a hung
-    # re-run would otherwise burn through the deferred-oracle reserve
-    # that guarantees q22/q31 their cold runs — and a re-run FAILURE
-    # records the query under errors and withdraws its timings
-    # ('errored on ANY run' policy).
-    reclaim_reserve = defer_est * len(duck_deferred)
-    by_name = dict(ordered)
-    oracle_names = (
-        {n for n, qq in ordered if qq.sql is not None}
-        if duck_con is not None
-        else set()
-    )
-    for name, e_reasons, d_reasons in _reclaim_candidates(
-        [n for n, _ in ordered], timings, duck, all_runs, all_druns,
-        errors, duck_deferred, oracle_names, query_steal,
-        eng_ref, duck_ref, intended_single,
-    ):
-        q = by_name[name]
-        runs = all_runs[name]
-        druns = all_druns[name]
-        flag_str = "+".join(e_reasons + d_reasons)
-
-        def _exp_cost(recorded: float, ref: float | None) -> float:
-            # Admission estimates the RE-RUN's cost: in a recovered
-            # window that is near the committed reference, not the storm
-            # recording — a 6x-inflated entry would otherwise be
-            # inadmissible exactly when repairing it matters most. The
-            # per-entry watchdog bounds a re-run in a still-stormy
-            # window, and min-of-all-runs recording means an expensive
-            # failed repair never corrupts the books.
-            return min(recorded, 1.5 * ref) if ref else recorded
-
-        est = (
-            _exp_cost(timings[name], eng_ref.get(name)) if e_reasons else 0.0
-        ) + (
-            _exp_cost(duck.get(name, 0.0), duck_ref.get(name))
-            if d_reasons
-            else 0.0
-        )
-        if budget.remaining() - reclaim_reserve < 2.0 * est + 5:
-            reclaim_log[name] = f"skipped-no-budget({flag_str})"
-            continue
-        outcome: list[str] = []
-        if e_reasons:
-            deadline = min(
-                per_query_cap,
-                max(5.0, budget.remaining() - reclaim_reserve),
-            )
-            group = f"bench:{name}#reclaim"
-            armed = {"on": True}
-            fired = {"v": False}
-
-            def _cancel(armed=armed, fired=fired, group=group):
-                with cancel_lock:
-                    if armed["on"]:
-                        fired["v"] = True
-                        spark.sparkContext.cancelJobGroup(group)
-
-            watchdog = threading.Timer(deadline, _cancel)
-            watchdog.daemon = True
-            watchdog.start()
-            spark.sparkContext.setJobGroup(
-                group, f"bench reclaim of {name}", interruptOnCancel=True
-            )
-            t0 = time.time()
-            try:
-                q.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            except Exception as ex:
-                if fired["v"]:
-                    # watchdog cancellation of an OPTIONAL re-run is not
-                    # a query failure: the query already completed its
-                    # main-loop runs cleanly, and a steal-inflated or
-                    # reserve-bounded re-run must not overwrite that
-                    # fact (the main loop's budget-truncation-vs-hang
-                    # distinction, carried over) — keep the existing
-                    # books and move on.
-                    reclaim_log[name] = f"{flag_str}: engine-rerun-cancelled"
-                    emit()
-                    continue
-                errors[name] = f"reclaim: {type(ex).__name__}: {ex}"[:300]
-                for book in (timings, timings_min, timings_max, duck, duck_min):
-                    book.pop(name, None)
-                reclaim_log[name] = f"{flag_str}: engine-rerun-failed"
-                emit()
-                continue
-            finally:
-                with cancel_lock:
-                    armed["on"] = False
-                watchdog.cancel()
-                for p in ("spark.jobGroup.id", "spark.job.description",
-                          "spark.job.interruptOnCancel"):
-                    spark.sparkContext.setLocalProperty(p, None)
-            runs.append(time.time() - t0)
-            timings[name] = round(min(runs), 3)
-            timings_min[name] = round(min(runs), 3)
-            timings_max[name] = round(max(runs), 3)
-            outcome.append(f"engine-rerun={runs[-1]:.2f}->rec={timings[name]:.2f}")
-        if d_reasons:
-            # same interrupt guard as the main loop's inline oracle
-            # runs: inline oracles are ≤ duck_slow_cap by the deferral
-            # rule, and an unguarded stall here would burn the
-            # deferred-oracle reserve the engine watchdog protects
-            elapsed, _ = _timed_duck_run(
-                duck_con, duck_lock, q.sql, duck_slow_cap
-            )
-            if elapsed is not None:
-                druns.append(elapsed)
-                duck[name] = round(min(druns), 3)
-                duck_min[name] = round(min(druns), 3)
-                outcome.append(f"duck-rerun={elapsed:.2f}->rec={duck[name]:.2f}")
-            else:
-                # on failure/interrupt: keep the existing oracle value
-                outcome.append("duck-rerun-interrupted")
-        reclaim_log[name] = f"{flag_str}: {' '.join(outcome)}"
-        emit()
-
-    # Deferred slow oracles: timed once each, AFTER every engine timing
-    # is in the book — their multi-ten-second all-core burns can no
-    # longer heat an engine run. The main loop holds a wall-clock
-    # reserve per deferred entry, so this phase runs on GUARANTEED time;
-    # if an oracle still overruns, the matched-set ratio simply excludes
-    # it (duck_skipped names it in the tail line) instead of silently
-    # shrinking the denominator under the full engine total.
-    # Pass 1 — guaranteed COLD run for every deferred oracle (the
-    # reserve was sized for exactly this; a single oracle's warm-run
-    # overrun must never starve another oracle's only run, which would
-    # silently shrink the matched set).
-    # Each cold run is capped at its FAIR SHARE of the remaining budget
-    # (floor defer_est) and interrupted past it: without the cap, one
-    # hog oracle starves every oracle after it — observed r11: a 62.6 s
-    # q22 cold run (the same SQL measures 4–10 s in quiet windows) left
-    # q31 skipped entirely AND overshot the budget by itself. An
-    # interrupted oracle goes to a retry list that spends whatever
-    # budget survives pass 2, so in a merely-slow window the hog still
-    # records; only a genuinely budget-exceeding oracle stays skipped.
+    # Deferred slow oracles: timed AFTER every engine timing is in the
+    # book — their multi-ten-second all-core burns can no longer heat an
+    # engine run. The main loop holds a wall-clock reserve per deferred
+    # entry, so this phase runs on GUARANTEED time; if an oracle still
+    # overruns, the matched-set ratio simply excludes it (duck_skipped
+    # names it in the tail line) instead of silently shrinking the
+    # denominator under the full engine total.
+    # Cold pass — one run for every deferred oracle, each capped at its
+    # FAIR SHARE of the remaining budget (floor defer_est) and
+    # interrupted past it: without the cap, one hog oracle starves every
+    # oracle after it — observed r11: a 62.6 s q22 cold run (the same
+    # SQL measures 4–10 s in quiet windows) left q31 skipped entirely
+    # AND overshot the budget by itself.
     deferred_cold: dict[str, float] = {}
-    deferred_retry: list[str] = []
     pending = [(n, s) for n, s in duck_deferred.items() if n not in errors]
     # names in `errors`: the engine side errored after the oracle was
     # deferred — an oracle timing with no engine counterpart would
@@ -1781,13 +973,10 @@ def main() -> None:
         if rem <= 0:
             deferred_log[name] = f"no-budget(rem={rem:.1f})"
             continue
-        # capped at remaining budget too (ADVICE r11): the estimate
-        # floor could otherwise start a ~25 s run with near-zero budget
-        # left and overshoot the driver's own clock by itself. The
-        # floor is HISTORY-SIZED per oracle (VERDICT r15 item 2), not
-        # an even share: one 30-45 s quadratic oracle must get a cap
-        # its own measured history says it needs.
-        cap = min(max(_oracle_est(name), rem / (len(pending) - i)), rem)
+        # capped at remaining budget too (ADVICE r11): the floor could
+        # otherwise start a long run with near-zero budget left and
+        # overshoot the driver's own clock by itself
+        cap = min(max(defer_est, rem / (len(pending) - i)), rem)
         # fresh single-purpose process, NOT the JVM-resident in-process
         # connection: residency overhead ran the quadratic oracles at
         # up to 2.5x with 4-60 s variance (see _oracle_subprocess_run),
@@ -1798,8 +987,6 @@ def main() -> None:
                 f"cold-interrupted(cap={cap:.1f})" if interrupted
                 else f"cold-failed(cap={cap:.1f}, {err})"
             )
-            if interrupted:
-                deferred_retry.append(name)
             continue
         deferred_log[name] = f"cold={cold:.2f}"
         deferred_cold[name] = cold
@@ -1808,45 +995,10 @@ def main() -> None:
         duck_cold.append(name)
         emit()
 
-    # Pass 1.5 — retry pass-1 interrupts on surviving budget. Runs
-    # BEFORE the opportunistic warm runs (VERDICT r15 item 2): one
-    # history-sized cold run for a never-timed oracle pre-empts
-    # steady-state second runs of the cheap ones — a missing
-    # denominator entry costs the matched set far more than a
-    # cold-vs-warm delta. The fair-share division protects the other
-    # retries for the same reason as pass 1, but the share is floored
-    # at the oracle's own history-sized estimate when budget allows.
-    for j, name in enumerate(deferred_retry):
-        rem = budget.remaining() - 5
-        share = rem / (len(deferred_retry) - j) if rem > 0 else 0.0
-        cap_r = min(max(_oracle_est(name), share), rem)
-        if cap_r < 5.0:
-            # below child startup + any real SQL time: running would be
-            # a guaranteed-futile kill that still burns the remaining
-            # retries' budget
-            deferred_log[name] += f" retry-no-budget(share={share:.1f})"
-            continue
-        cold, interrupted, err = _oracle_subprocess_run(
-            duck_deferred[name], sf_dir, cap_r
-        )
-        if cold is None:
-            # keep the interrupted-at-cap evidence AND say which way
-            # the retry died: budget-killed vs genuine SQL failure
-            deferred_log[name] += (
-                f" retry-interrupted(cap={cap_r:.1f})" if interrupted
-                else f" retry-failed({err})"
-            )
-            continue
-        deferred_log[name] += f" retry-cold={cold:.2f}"
-        duck[name] = round(cold, 3)
-        duck_min[name] = duck[name]
-        duck_cold.append(name)
-        emit()
-
-    # Pass 2 — opportunistic warm run for steady-state parity (VERDICT
-    # r9 item 4): every other timing on both sides excludes run 1 as
-    # warm-up. Needs 2.5x the cold time of remaining headroom. The
-    # recorded value is min(cold, warm), NOT blindly run 2: the two
+    # Warm pass — opportunistic second run for steady-state parity
+    # (VERDICT r9 item 4): every other timing on both sides excludes
+    # run 1 as warm-up. Needs 2.5x the cold time of remaining headroom.
+    # The recorded value is min(cold, warm), NOT blindly run 2: the two
     # runs are minutes apart (unlike the interleaved engine/duck pairs)
     # so a host-steal burst between them is uncorrelated — an observed
     # warm run measured 4x the cold one inside a burst, and recording
@@ -1856,8 +1008,8 @@ def main() -> None:
             continue
         # capped at the same 2.5x-cold the precondition budgeted: an
         # in-burst warm run measured 4x its cold time, and unguarded it
-        # would blow the budget pass 1.5 (and the driver's own clock)
-        # relies on — the min rule keeps the cold value on interrupt
+        # would blow the driver's own clock — the min rule keeps the
+        # cold value on interrupt
         warm, _, _err = _oracle_subprocess_run(
             duck_deferred[name], sf_dir, 2.5 * cold + 5
         )
@@ -1868,406 +1020,6 @@ def main() -> None:
         duck_cold.remove(name)
         deferred_log[name] += f" warm={warm:.2f}"
         emit()
-
-    # Pass 3 — the ROUND-LEVEL STORM RETRY (VERDICT r12 item 1, the
-    # round's single gate-relevant defect two rounds running): the
-    # r11/r12 official records breached the 2x gate inside sustained
-    # storms the signal chain detected perfectly and repaired not at
-    # all — the reclaim pass was itself inside the storm's budget
-    # shadow (52/52 candidates skipped-no-budget in BENCH_r12). One bad
-    # window must not equal one failing official record. When the run
-    # ends unhealthy, the budget is EXTENDED by BENCH_RETRY_BUDGET_SEC
-    # (default 300 s; BENCH_STORM_RETRY=0 disables) and up to
-    # _RETRY_ATTEMPTS later windows re-run the engine side:
-    # - untimed queries (budget-truncated mid-loop) get their first
-    #   runs, flipping partial off once every query is covered;
-    # - flagged recordings (single-run / inflated-vs-own-min /
-    #   ref-inflated) re-run with min-across-all-runs recorded — the
-    #   re-run is minutes after the flagged window, so weather between
-    #   them is uncorrelated (the reclaim pass's own argument);
-    # - oracle timings are REUSED within the round (same-round
-    #   convention); only never-timed oracles run fresh;
-    # - _RETRY_HOT_ABORT consecutive fresh runs still >2.5x their
-    #   reference abort the attempt — the window is still stormy, and
-    #   re-running the whole list hot burns budget for zero repairs;
-    #   the pass then SLEEPS _RETRY_SLEEP_SEC before the next attempt
-    #   (idle wall-clock costs nothing, decorrelates the next window,
-    #   and lets a credit-drained burstable host refill).
-    # Afterwards the health verdict is recomputed: load_degraded and
-    # partial describe the FINAL books, not the journey —
-    # storm_during_loop + the retry/reclaim logs preserve the honest
-    # history. The steal eye is deliberately absent from the health
-    # flags here: a query's steal reading describes the ORIGINAL
-    # window, and min-of-runs from a calm re-run supersedes it.
-    retry_budget = float(os.environ.get("BENCH_RETRY_BUDGET_SEC", "300"))
-    retry_on = os.environ.get("BENCH_STORM_RETRY", "1") != "0"
-    meta["storm_during_loop"] = bool(meta["load_degraded"])
-
-    names_in_order = [n for n, _ in ordered]
-
-    def _check_health() -> tuple[list[str], list[str], list[str], list[str]]:
-        # inline set recomputed per call: the retry loop can defer
-        # oracles mid-pass
-        return _health(
-            names_in_order, timings, all_runs, errors, eng_ref, reclaim_log,
-            duck, all_druns, duck_ref, oracle_names - set(duck_deferred),
-            intended_single,
-        )
-
-    def _missing_oracles() -> list[str]:
-        # Engine-timed queries whose INLINE oracle never ran at all —
-        # the main loop skips the oracle attempt outright once
-        # budget.remaining() <= 10, recording the name in NEITHER
-        # duck_deferred NOR any flag list, so the retry pass never saw
-        # them (r14 live storm: q63/q64/q65/q66s ended duck_skipped
-        # with four sub-second oracles unrun while 300 s of retry
-        # budget went unused). Deferred oracles are excluded — their
-        # fresh-process re-attempts have their own section.
-        inline = oracle_names - set(duck_deferred)
-        return [
-            n for n in timings
-            if n in inline and n not in duck and n not in errors
-        ]
-
-    def _untimed_deferred() -> list[str]:
-        # Deferred oracles that never recorded ANY timing (r14 official:
-        # q22 cold-interrupted + retry-no-budget, q31/q61 rem=-0.1).
-        # These gut the matched-set denominator of exactly the queries
-        # where the engine wins biggest, so a record missing one is
-        # never healthy — they trigger needs_retry on their own and
-        # block the load_degraded clear below.
-        return [n for n in duck_deferred if n not in duck and n not in errors]
-
-    def _deferred_floor() -> float:
-        # Wall-clock reserved to give every still-untimed deferred
-        # oracle one history-sized fresh-process run — subtracted
-        # from what the retry pass's ENGINE re-runs may spend, so the
-        # denominator's floor is funded by construction instead of by
-        # leftovers (VERDICT r14 item 1c; history-sized r16 per
-        # VERDICT r15 item 2).
-        return sum(_oracle_est(n) for n in _untimed_deferred())
-
-    untimed0, flagged0, dflagged0, starved0 = _check_health()
-    needs_retry = bool(
-        partial["v"] or meta["load_degraded"] or untimed0 or flagged0
-        or dflagged0 or starved0 or _missing_oracles() or _untimed_deferred()
-    )
-    retry_ran = retry_on and retry_budget > 0 and needs_retry
-    if retry_ran:
-        budget.total += retry_budget
-        for attempt in range(_RETRY_ATTEMPTS):
-            untimed_now, flagged_now, dflagged_now, _ = _check_health()
-            # most-inflated first (the reclaim pass's r16 excess rule):
-            # untimed queries keep absolute priority — coverage beats
-            # steadiness — then flagged recordings by excess-over-
-            # reference descending so a budget-squeezed attempt repairs
-            # the entries that actually distort the gate ratio
-            flagged_now = sorted(
-                flagged_now,
-                key=lambda n: timings.get(n, 0.0) - (eng_ref.get(n) or 0.0),
-                reverse=True,
-            )
-            work = untimed_now + flagged_now
-            if not work and not dflagged_now:
-                break
-            if attempt and budget.remaining() > _RETRY_SLEEP_SEC + 60:
-                retry_log[f"_sleep_{attempt}"] = (
-                    f"{_RETRY_SLEEP_SEC:.0f}s before attempt {attempt + 1}"
-                )
-                time.sleep(_RETRY_SLEEP_SEC)
-            hot_streak = 0
-            for name in work:
-                if budget.remaining() - _deferred_floor() < 15:
-                    retry_log.setdefault(name, "skipped-retry-budget")
-                    break
-                q = by_name[name]
-                first_timing = name not in timings
-                deadline = min(
-                    per_query_cap,
-                    max(5.0, budget.remaining() - _deferred_floor() - 5),
-                )
-                group = f"bench:{name}#retry{attempt}"
-                armed = {"on": True}
-                fired = {"v": False}
-
-                def _cancel(armed=armed, fired=fired, group=group):
-                    with cancel_lock:
-                        if armed["on"]:
-                            fired["v"] = True
-                            spark.sparkContext.cancelJobGroup(group)
-
-                watchdog = threading.Timer(deadline, _cancel)
-                watchdog.daemon = True
-                watchdog.start()
-                spark.sparkContext.setJobGroup(
-                    group, f"bench storm-retry of {name}", interruptOnCancel=True
-                )
-                t0 = time.time()
-                try:
-                    q.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                except Exception as ex:
-                    if fired["v"]:
-                        # optional re-run cancelled (budget/hang): keep
-                        # the existing books — same contract as the
-                        # reclaim pass's cancelled re-runs
-                        retry_log[name] = (
-                            retry_log.get(name, "") + " rerun-cancelled"
-                        ).strip()
-                        continue
-                    errors[name] = f"retry: {type(ex).__name__}: {ex}"[:300]
-                    for book in (
-                        timings, timings_min, timings_max, duck, duck_min
-                    ):
-                        book.pop(name, None)
-                    retry_log[name] = "rerun-failed"
-                    emit()
-                    continue
-                finally:
-                    with cancel_lock:
-                        armed["on"] = False
-                    watchdog.cancel()
-                    for p in ("spark.jobGroup.id", "spark.job.description",
-                              "spark.job.interruptOnCancel"):
-                        spark.sparkContext.setLocalProperty(p, None)
-                fresh = time.time() - t0
-                runs = all_runs.setdefault(name, [])
-                runs.append(fresh)
-                timings[name] = round(min(runs), 3)
-                timings_min[name] = round(min(runs), 3)
-                timings_max[name] = round(max(runs), 3)
-                retry_log[name] = (
-                    retry_log.get(name, "")
-                    + f" a{attempt + 1}={fresh:.2f}->rec={timings[name]:.2f}"
-                ).strip()
-                # (starved-reclaim ledger rewrites happen AFTER the duck
-                # re-run loop below, once BOTH sides of the entry are
-                # verifiably clean — ADVICE r13)
-                # a first-ever timing may still need its oracle: reuse
-                # is impossible for a query the oracle loop never saw
-                if (
-                    first_timing
-                    and duck_con is not None
-                    and q.sql is not None
-                    and name not in duck
-                ):
-                    elapsed, interrupted = _timed_duck_run(
-                        duck_con, duck_lock, q.sql, duck_slow_cap
-                    )
-                    if elapsed is not None:
-                        all_druns.setdefault(name, []).append(elapsed)
-                        duck[name] = round(elapsed, 3)
-                        duck_min[name] = duck[name]
-                    elif interrupted and budget.remaining() > 10:
-                        cold, _, _err = _oracle_subprocess_run(
-                            q.sql, sf_dir,
-                            min(_oracle_est(name), budget.remaining() - 5),
-                        )
-                        if cold is not None:
-                            duck[name] = round(cold, 3)
-                            duck_min[name] = duck[name]
-                            duck_cold.append(name)
-                emit()
-                ref = eng_ref.get(name)
-                if ref and ref > 0 and fresh > _REF_INFLATION * ref:
-                    hot_streak += 1
-                    if hot_streak >= _RETRY_HOT_ABORT:
-                        retry_log[f"_hot_abort_{attempt + 1}"] = (
-                            f"{hot_streak} consecutive fresh runs "
-                            f">{_REF_INFLATION}x reference — window still "
-                            "stormy, attempt aborted"
-                        )
-                        break
-                else:
-                    hot_streak = 0
-            # Duck-side repairs (ADVICE r13): inline-oracle readings
-            # inflated by the same storm must be re-measured too — an
-            # inflated DuckDB denominator surviving into a "healthy"
-            # record biases the gate ratio in the engine's favor,
-            # violating the reclaim pass's both-sides symmetry. Same
-            # min-of-runs rule; failures/interrupts keep the books.
-            if duck_con is not None:
-                for name in dflagged_now:
-                    if budget.remaining() - _deferred_floor() < 15:
-                        retry_log.setdefault(name, "skipped-retry-budget")
-                        break
-                    q = by_name[name]
-                    if q.sql is None or name not in duck:
-                        continue
-                    elapsed, _ = _timed_duck_run(
-                        duck_con, duck_lock, q.sql, duck_slow_cap
-                    )
-                    if elapsed is not None:
-                        druns = all_druns.setdefault(name, [])
-                        druns.append(elapsed)
-                        duck[name] = round(min(druns), 3)
-                        duck_min[name] = round(min(druns), 3)
-                        retry_log[name] = (
-                            retry_log.get(name, "")
-                            + f" duck-a{attempt + 1}={elapsed:.2f}"
-                            f"->rec={duck[name]:.2f}"
-                        ).strip()
-                    else:
-                        retry_log[name] = (
-                            retry_log.get(name, "") + " duck-rerun-interrupted"
-                        ).strip()
-                    emit()
-            if budget.remaining() - _deferred_floor() < 60:
-                break
-
-        # Missing-oracle sweep (r14): time every never-run INLINE
-        # oracle — see _missing_oracles. Interrupted (slow) entries get
-        # one fresh-process cold run like any deferred oracle.
-        if duck_con is not None:
-            for name in _missing_oracles():
-                if budget.remaining() - _deferred_floor() < 15:
-                    retry_log.setdefault(name, "oracle-sweep-no-budget")
-                    break
-                q = by_name[name]
-                elapsed, interrupted = _timed_duck_run(
-                    duck_con, duck_lock, q.sql, duck_slow_cap
-                )
-                if elapsed is not None:
-                    all_druns.setdefault(name, []).append(elapsed)
-                    duck[name] = round(elapsed, 3)
-                    duck_min[name] = duck[name]
-                    retry_log[name] = (
-                        retry_log.get(name, "") + f" duck-swept={elapsed:.2f}"
-                    ).strip()
-                elif interrupted and budget.remaining() > 10:
-                    cold, _, _err = _oracle_subprocess_run(
-                        q.sql, sf_dir,
-                        min(_oracle_est(name), budget.remaining() - 5),
-                    )
-                    if cold is not None:
-                        duck[name] = round(cold, 3)
-                        duck_min[name] = duck[name]
-                        duck_cold.append(name)
-                        retry_log[name] = (
-                            retry_log.get(name, "")
-                            + f" duck-swept-cold={cold:.2f}"
-                        ).strip()
-                emit()
-
-        # Deferred oracles the reserve lost to the storm (r13 live
-        # validation: a storm-inflated main loop consumed the 40 s/
-        # oracle reserve, q22/q31 were cold-interrupted and q51 never
-        # started — duck_skipped then excluded exactly the three
-        # queries where the engine wins 10-20x, moving the matched
-        # ratio from ~1.1 to 2.5 all by itself). Re-attempted here on
-        # the extended budget, AFTER the engine re-runs (a 30 s
-        # all-core DuckDB burn would heat them), fresh process each,
-        # generous cap: a storm-window q22 measured needing >44 s.
-        for name, sql in duck_deferred.items():
-            if name in duck or name in errors:
-                continue
-            # The cap never drops below the oracle's history-sized
-            # estimate: a NEVER-timed oracle runs here even at zero
-            # remaining budget (bounded overshoot per oracle). The
-            # engine re-runs above reserved this floor via
-            # _deferred_floor(); if the reserve was still overrun (a
-            # watchdog-missed hang), a bounded clock overshoot beats
-            # shipping a record whose denominator is missing the
-            # queries where the engine wins 10-20x — the r14 official
-            # ratio (3.83 over a 26 s denominator vs r13's 122 s) was
-            # exactly that failure, and the r15 official record lost
-            # q22 to three flat-capped interrupts (VERDICT r15 item 2).
-            est = _oracle_est(name)
-            cap = min(max(90.0, est), max(est, budget.remaining() - 15))
-            cold, interrupted, err = _oracle_subprocess_run(sql, sf_dir, cap)
-            if cold is None:
-                deferred_log[name] += (
-                    f" retry-pass-interrupted(cap={cap:.1f})" if interrupted
-                    else f" retry-pass-failed({err})"
-                )
-                continue
-            deferred_log[name] += f" retry-pass-cold={cold:.2f}"
-            duck[name] = round(cold, 3)
-            duck_min[name] = duck[name]
-            duck_cold.append(name)
-            emit()
-
-        # The copart build is the one TIMED engine line item outside the
-        # per-query books, so the reclaim/retry passes could not repair
-        # it (r13 live validation: 18.6 s storm recording vs the 4.8 s
-        # calm reference, charged straight into engine_matched_sec).
-        # Re-measured HONESTLY: the session caches it, so the memo is
-        # released first and the rebuild pays the full cold cost in the
-        # current window; min of the two recordings kept (the standard
-        # uncorrelated-windows argument). Runs LAST among retry repairs
-        # — releasing the cache earlier would charge rebuilds into any
-        # later engine re-run that consumes the copart view.
-        # env-aware reference resolution (ADVICE r13): same
-        # BENCH_REF_DIR/SCALE/DISABLE handling as _load_reference, so a
-        # uniformly slower host re-zeroes this eye too instead of
-        # burning ~30 s of retry budget on a rebuild that never clears
-        ref_rec, ref_scale = _load_reference_record()
-        cop_ref = None
-        if ref_rec is not None:
-            try:
-                cop_ref = float(ref_rec.get("copart_build_sec")) * ref_scale
-            except Exception:
-                cop_ref = None
-        if (
-            cop_ref
-            and meta["copart_build_sec"] > _REF_INFLATION * float(cop_ref)
-            and budget.remaining() > 30
-        ):
-            from gelly_streaming_spark.sources.edges import release_cache
-
-            release_cache(spark)
-            t0 = time.time()
-            try:
-                copart_canonical(spark, sf_dir).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                rebuilt = time.time() - t0
-                retry_log["_copart_rebuild"] = (
-                    f"{rebuilt:.2f} (was {meta['copart_build_sec']:.2f})"
-                )
-                meta["copart_build_sec"] = round(
-                    min(meta["copart_build_sec"], rebuilt), 3
-                )
-                emit()
-            except Exception as ex:
-                retry_log["_copart_rebuild"] = f"failed: {ex}"[:120]
-
-        # Starved-reclaim ledger rewrites, moved AFTER the duck re-run
-        # loop (ADVICE r13): an entry whose starvation included
-        # duck-side flags is only "repaired" once BOTH sides pass the
-        # health flags on the final books — rewriting on the engine
-        # re-run alone cleared load_degraded over an inflated oracle
-        # denominator. History stays in `retry`. The inline set is
-        # recomputed HERE, not reused from the pre-retry snapshot: the
-        # retry pass above can defer oracles mid-pass. Extracted to a
-        # module function (VERDICT r14 item 1): the inline version
-        # crashed the r14 official record with a NameError — the name
-        # only existed as a _health() parameter — and the branch only
-        # executes when a reclaim entry logged skipped-no-budget, a
-        # state no CLI test produced; the function is unit-tested with
-        # a seeded starved entry in tests/test_bench_cli.py.
-        _rewrite_starved_reclaims(
-            reclaim_log, timings, all_runs, errors, eng_ref,
-            duck, all_druns, duck_ref,
-            oracle_names - set(duck_deferred), intended_single,
-        )
-
-    # Final health verdict: the flags describe the FINAL books. A storm
-    # that was fully repaired leaves load_degraded false (the gate reads
-    # the record, and the record's values are now clean-window minima);
-    # storm_during_loop and the audit logs keep the history honest. A
-    # retry pass that timed every budget-truncated query flips partial
-    # off for the same reason — the record covers every registered
-    # query.
-    if retry_ran:
-        untimed_f, flagged_f, dflagged_f, starved_f = _check_health()
-        if not untimed_f:
-            partial["v"] = False
-        if (
-            not untimed_f and not flagged_f and not dflagged_f
-            and not starved_f and not _missing_oracles()
-            and not _untimed_deferred()
-        ):
-            meta["load_degraded"] = False
 
     emit()
 

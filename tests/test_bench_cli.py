@@ -10,8 +10,6 @@ import os
 import subprocess
 import sys
 
-import pytest
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -25,44 +23,59 @@ def _tail_line(stdout: str) -> dict:
 
 
 def test_headline_headroom_at_60_queries():
-    """The compact headline must stay well inside the driver's 2000-char
-    tail window even if the query set grows to 60 (the r7 line sat at
-    ~1860 chars for 48 full-name queries — two more would have truncated
-    the round's only bench signal). Keys are abbreviated headline-only;
-    full names stay in bench_detail.json."""
+    """The compact headline must stay inside the driver's 2000-char tail
+    window as the query set grows (the r7 line sat at ~1860 chars for 48
+    full-name queries — two more would have truncated the round's only
+    bench signal). Keys are abbreviated headline-only; full names stay
+    in bench_detail.json. Past the window, optional fields are shed and
+    `queries` keeps every entry."""
     sys.path.insert(0, REPO)
-    from bench import compact_line
+    from bench import _SHEDDABLE_HEADLINE, compact_line
 
     from gelly_streaming_spark.queries import REGISTRY
 
-    # real registry names first (uniqueness of the abbreviation matters);
-    # hypothetical ids start WELL past the real registry's range so they
-    # can never collide with a newly added real qNN
+    # the whole real registry (uniqueness of the abbreviation matters)
+    # plus 30 hypothetical ids WELL past the real registry's range, so
+    # they can never collide with a newly added real qNN
     names = sorted(REGISTRY) + [
-        f"q{50 + i}_hypothetical_future_query_name_{i}" for i in range(60)
+        f"q{100 + i}_hypothetical_future_query_name_{i}" for i in range(30)
     ]
-    names = names[:60]
-    queries = {n: 12.345 for n in names}
     result = {
         "metric": "total_wallclock_declared_queries",
         "value": 123.456, "value_max_runs": 234.567, "unit": "sec",
-        "queries": queries, "sf": 0.1, "runs_per_query": 3,
+        "queries": {n: 12.345 for n in names}, "sf": 0.1,
+        "runs_per_query": 3,
         "session_setup_sec": 25.485, "copart_build_sec": 3.007,
-        "errors_present": False, "comparable_queries": 60,
-        "registered_queries": 60, "partial": False,
+        "errors_present": True, "comparable_queries": len(names),
+        "registered_queries": len(names), "partial": False,
+        "host_steal_pct": 1.23, "errored_queries": [names[3]],
         "duckdb_total_sec": 49.155, "ratio_vs_duckdb": 0.757,
-        "ratio_raw": 0.761, "matched_queries": 58,
+        "ratio_raw": 0.761, "matched_queries": len(names) - 2,
         "engine_matched_sec": 100.123, "duckdb_matched_sec": 48.111,
         "duck_skipped": [names[0], names[1]],
+        "duckdb_cold_single_run": [names[2]],
         "heavy_engine_sec": 24.548, "heavy_duckdb_sec": 47.967,
         "ratio_heavy": 0.512,
     }
     line = compact_line(result)
     d = json.loads(line)
-    assert len(d["queries"]) == 60  # abbreviation must not collide
-    assert len(line) <= 1800, len(line)
-    # and the real registry shape has the VERDICT-mandated headroom
-    real = dict(result, queries={n: 12.345 for n in sorted(REGISTRY)})
+    assert len(line) <= 1900, len(line)
+    assert len(d["queries"]) == len(names)  # abbreviation must not collide
+    # the same record with a tiny query set keeps every field; the
+    # difference is what the long line shed, and it must be optional
+    full = set(json.loads(compact_line(dict(result, queries={"q01": 1.0}))))
+    shed = full - set(d)
+    assert shed, "the long line should exercise the shedding path"
+    assert shed <= set(_SHEDDABLE_HEADLINE), shed
+    # and the real registry shape of a clean run (no errors, every
+    # oracle warm) has the VERDICT-mandated headroom
+    real = dict(
+        result,
+        queries={n: 12.345 for n in sorted(REGISTRY)},
+        errors_present=False,
+    )
+    for key in ("errored_queries", "duckdb_cold_single_run"):
+        real.pop(key)
     real_line = compact_line(real)
     assert len(real_line) <= 1700, len(real_line)
     assert len(json.loads(real_line)["queries"]) == len(REGISTRY)
@@ -104,7 +117,7 @@ def test_matched_set_ratio_excludes_skipped_oracles():
     assert "duck_skipped" not in r3
 
 
-def test_budget_ladder_reserve_and_projection():
+def test_budget_ladder_reserve_and_projection(monkeypatch):
     """The deferred-oracle reserve accelerates run-degradation but can
     never stop the loop (a stop leaves queries untimed — strictly worse
     than 1-run timings), and the projection ladder degrades runs as soon
@@ -112,7 +125,7 @@ def test_budget_ladder_reserve_and_projection():
     import time
 
     sys.path.insert(0, REPO)
-    os.environ["BENCH_BUDGET_SEC"] = "300"
+    monkeypatch.setenv("BENCH_BUDGET_SEC", "300")
     from bench import _Budget
 
     b = _Budget()
@@ -132,45 +145,6 @@ def test_budget_ladder_reserve_and_projection():
     assert b.runs_allowed(3, reserve=50.0) == 0
     b.start = time.time() - 200  # 100 left, huge reserve: degrade, not stop
     assert b.runs_allowed(3, reserve=95.0) == 1
-
-
-def test_bench_load_probe_degrades_runs(sf_dir):
-    """When measured session setup exceeds 2x the expected quiet-host
-    cost (the host-weather probe), the run must start at 1 run/query and
-    flag load_degraded in the tail line. Forced here by setting the
-    expected cost to 1 s — any real setup trips the probe."""
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_CPUS="8",
-        BENCH_BUDGET_SEC="90",
-        BENCH_RUNS="3",
-        BENCH_DUCKDB="0",
-        BENCH_EXPECTED_SETUP_SEC="1",
-        # this test asserts the PROBE path's verdict; the storm-retry
-        # pass would otherwise extend the budget, repair the books, and
-        # honestly clear load_degraded (its own test covers that)
-        BENCH_STORM_RETRY="0",
-    )
-    detail_path = os.path.join(REPO, "bench_detail.json")
-    saved = None
-    if os.path.exists(detail_path):
-        with open(detail_path) as fh:
-            saved = fh.read()
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            capture_output=True, text=True, env=env, timeout=300, cwd=REPO,
-        )
-        assert proc.returncode == 0, proc.stderr[-500:]
-        d = _tail_line(proc.stdout)
-        assert d["load_degraded"] is True
-        assert d["runs_per_query"] == 1
-        assert d["comparable_queries"] >= 1
-    finally:
-        if saved is not None:
-            with open(detail_path, "w") as fh:
-                fh.write(saved)
 
 
 def test_bench_budget_stop_emits_parseable_tail(sf_dir):
@@ -193,9 +167,6 @@ def test_bench_budget_stop_emits_parseable_tail(sf_dir):
             BENCH_BUDGET_SEC=budget_sec,
             BENCH_RUNS="1",
             BENCH_DUCKDB="0",
-            # budget-truncation contract under test; the storm-retry
-            # pass would extend the budget and time the rest
-            BENCH_STORM_RETRY="0",
         )
         return subprocess.run(
             [sys.executable, os.path.join(REPO, "bench.py")],
@@ -225,12 +196,12 @@ def test_bench_budget_stop_emits_parseable_tail(sf_dir):
 
         # Real run: enough budget for setup (as measured on THIS host
         # under THIS load) plus margin for copart, the 20%-of-budget
-        # warm-up cap, the 35 s reclaim reserve AND at least one query.
-        # The r15/r16 flake: setup*1.5+45 left the first query's
-        # runs_allowed at 0 whenever run-2 setup drifted past the probe
-        # (warm-up + reclaim reserve alone consume ~60 s of a 120 s
-        # budget) — the margin must clear the harness's own fixed
-        # reserves, not just copart.
+        # warm-up cap AND at least one query. The r15/r16 flake:
+        # setup*1.5+45 left the first query's runs_allowed at 0 whenever
+        # run-2 setup drifted past the probe — the margin must clear the
+        # harness's own setup costs, not just copart. With no DuckDB
+        # side there is no deferred-oracle reserve, so the margin now
+        # holds with room to spare.
         budget = setup_sec * 2 + 90
         proc = run_bench(str(int(budget)))
         assert proc.returncode == 0, proc.stderr[-500:]
@@ -251,37 +222,6 @@ def test_bench_budget_stop_emits_parseable_tail(sf_dir):
         if saved is not None:
             with open(detail_path, "w") as fh:
                 fh.write(saved)
-
-
-def test_weather_degraded_scales_with_completed_stages():
-    """The host-weather probe must not be evadable by its own warm-up
-    cap (ADVICE r9): a budget-capped warm-up that only ran 2 of 8
-    stages in 60 s is degraded even though 60 s < 2x the full-profile
-    expectation; a quiet host that was merely budget-capped is not.
-    Stages are weighted by their quiet-host durations, not counted
-    uniformly (ADVICE r10): the table-load stage alone is ~31% of a
-    quiet warm-up, so finishing only it in 20 s is NOT degradation."""
-    sys.path.insert(0, REPO)
-    from bench import _WARMUP_STAGE_PROFILE, _weather_degraded
-
-    assert len(_WARMUP_STAGE_PROFILE) == 8
-    # stolen host, warm-up capped early: 60 s for the first 2 stages
-    # (profile share 27/70 -> threshold 27 s)
-    assert _weather_degraded(60.0, 35.0, 2, 8) is True
-    # quiet host, small budget: 24 s for 5/8 stages is proportionate
-    assert _weather_degraded(24.0, 35.0, 5, 8) is False
-    # full warm-up, classic threshold at 2x expected
-    assert _weather_degraded(100.0, 35.0, 8, 8) is True
-    assert _weather_degraded(33.0, 35.0, 8, 8) is False
-    # the ADVICE r10 false-trigger: only the EXPENSIVE first stage ran
-    # (22/70 of quiet-host work); 20 s for it is healthy, not steal
-    assert _weather_degraded(20.0, 35.0, 1, 8) is False
-    assert _weather_degraded(25.0, 35.0, 1, 8) is True  # > 2*35*(22/70)
-    assert _weather_degraded(10.0, 35.0, 1, 8) is False
-    # zero-stage floor still can't zero the threshold
-    assert _weather_degraded(18.0, 35.0, 0, 8) is True  # > 2*35*0.25
-    # stage-count drift without a profile re-measure: count fallback
-    assert _weather_degraded(60.0, 35.0, 2, 9) is True
 
 
 def test_timed_duck_run_cap_and_failure_semantics():
@@ -351,7 +291,7 @@ def test_headline_carries_cold_oracle_names():
         "value": 1.0, "unit": "sec", "queries": {"q22_jaccard_pairs": 1.0},
         "sf": 0.1, "runs_per_query": 3, "partial": False,
         "errors_present": False, "comparable_queries": 1,
-        "registered_queries": 1, "load_degraded": False,
+        "registered_queries": 1, "host_steal_pct": 0.5,
         "session_setup_sec": 1.0, "copart_build_sec": 0.1,
         "duckdb_total_sec": 2.0,
         "duckdb_cold_single_run": ["q22_jaccard_pairs"],
@@ -360,412 +300,60 @@ def test_headline_carries_cold_oracle_names():
     assert d["duckdb_cold_single_run"] == ["q22"]
 
 
-def test_reclaim_flags_inflated_storm_and_single_run():
-    """VERDICT r11 item 1: BENCH_r11 breached the 2x gate inside a
-    mid-loop steal storm the setup-time probe called clean. The reclaim
-    pass must flag (a) single-sample recordings, (b) medians >2.5x the
-    query's own in-run min, and (c) the med=min=max signature where
-    every run was hit and ONLY the per-query steal telemetry shows the
-    storm (r11's q23b: 6.52 s recorded vs a 1.20 s clean median)."""
+def test_steady_state_is_min_of_runs_after_the_first():
+    """The one sampling rule: the min of runs 2..k, run 1 alone only
+    when it is the only run. Run 1 carries the one-time session builds,
+    so it is excluded even when it is the fastest."""
     sys.path.insert(0, REPO)
-    from bench import _reclaim_candidates, _reclaim_flags
+    from bench import steady_state
 
-    assert _reclaim_flags([2.0], 2.0, None) == ["single-run"]
-    fl = _reclaim_flags([0.5, 2.0, 2.1], 2.05, 0.0)
-    assert fl and fl[0].startswith("inflated")
-    # med=min=max: the in-run spread shows nothing -> only steal flags it
-    assert _reclaim_flags([6.5, 6.5, 6.5], 6.5, 0.1) == []
-    fl = _reclaim_flags([6.5, 6.5, 6.5], 6.5, 8.0)
-    assert fl and fl[0].startswith("storm")
-    # clean 3-run recording on a quiet host is untouched
-    assert _reclaim_flags([1.0, 0.95, 1.05], 1.0, 0.5) == []
-    # sub-0.3 s recordings never flagged for inflation/storm (cannot
-    # move the gate; re-running them burns budget the heavy ones need)
-    assert _reclaim_flags([0.02, 0.1, 0.11], 0.105, 9.0) == []
+    assert steady_state([5.0]) == 5.0
+    assert steady_state([9.0, 2.0, 3.0]) == 2.0
+    assert steady_state([1.0, 2.0]) == 2.0
 
 
-def test_reclaim_candidates_order_symmetry_and_exclusions():
-    """Candidate assembly: most-inflated first (excess over committed
-    reference when one exists, recorded seconds otherwise — r16), a
-    storm flags BOTH sides symmetrically (engine and inline oracle
-    shared the flagged window), and errored / clean / deferred /
-    oracle-less entries stay out."""
-    sys.path.insert(0, REPO)
-    from bench import _reclaim_candidates
+def test_env_knobs_match_module_docstring():
+    """Every environment variable bench.py reads is listed in its module
+    docstring, and every name listed there is read: a knob cannot come
+    back without being documented, and a deleted one cannot linger in
+    the docs. AST scan of os.environ.get / os.environ[...]; the names
+    must be literals so the scan can see them."""
+    import ast
+    import re
 
-    timings = {"qa": 6.5, "qb": 1.2, "qc": 0.9, "qd": 3.0, "qe": 2.0}
-    duck = {"qa": 1.0, "qb": 0.4, "qc": 0.9}
-    all_runs = {
-        "qa": [6.5, 6.5, 6.5],   # storm window (steal 8%)
-        "qb": [1.2],             # budget-degraded single run
-        "qc": [0.9, 0.9, 0.95],  # clean
-        "qd": [3.0, 3.1, 2.9],   # errored -> excluded
-        "qe": [2.0, 2.0, 2.0],   # clean, no oracle
-    }
-    all_druns = {"qa": [1.0, 1.0, 1.0], "qb": [0.4], "qc": [0.9, 0.9, 0.9]}
-    cands = _reclaim_candidates(
-        ["qa", "qb", "qc", "qd", "qe"], timings, duck, all_runs,
-        all_druns, {"qd": "boom"}, {}, {"qa", "qb", "qc"},
-        {"qa": 8.0, "qb": 0.2, "qc": 0.3},
-    )
-    assert [c[0] for c in cands] == ["qa", "qb"]
-    name, e_reasons, d_reasons = cands[0]
-    assert e_reasons[0].startswith("storm")
-    assert d_reasons[0].startswith("storm")  # symmetric re-run
-    name, e_reasons, d_reasons = cands[1]
-    assert e_reasons == ["single-run"] and d_reasons == ["single-run"]
-    # r16 excess rule: with a committed reference, a mid-size recording
-    # 5x its reference outranks a big recording near its reference —
-    # the designed-shape certification queries stop eating the budget
-    cands_ref = _reclaim_candidates(
-        ["qa", "qb", "qc", "qd", "qe"], timings, duck, all_runs,
-        all_druns, {"qd": "boom"}, {}, {"qa", "qb", "qc"},
-        {"qa": 8.0, "qb": 0.2, "qc": 0.3},
-        eng_ref={"qa": 6.4, "qb": 0.25},  # qa excess 0.1, qb excess 0.95
-        duck_ref={},
-    )
-    assert [c[0] for c in cands_ref] == ["qb", "qa"]
+    with open(os.path.join(REPO, "bench.py")) as fh:
+        tree = ast.parse(fh.read())
 
-
-def test_storm_mode_hysteresis():
-    """Mid-loop coverage-mode switch: enters on 3-of-last-5 readings
-    over the storm threshold, leaves only when the last 5 are ALL
-    under half of it (the r12 5.66%-steal run spent its whole budget
-    on inflated 2-run timings and starved both deferred oracles; one
-    run per query through a sustained storm is strictly more signal)."""
-    sys.path.insert(0, REPO)
-    from bench import _storm_mode
-
-    # quiet host: never enters
-    assert _storm_mode([0.1, 0.3, 0.0, 0.2, 0.1], False) is False
-    # single blip: debounced
-    assert _storm_mode([0.1, 9.0, 0.2, 0.1, 0.3], False) is False
-    # sustained storm: enters
-    assert _storm_mode([0.2, 6.0, 5.1, 0.3, 8.2], False) is True
-    assert _storm_mode([6.0, 5.1, 8.2], False) is True  # early-loop storm
-    # active mode is sticky while any recent reading is warm
-    assert _storm_mode([5.0, 0.1, 0.1, 0.1, 3.0], True) is True
-    assert _storm_mode([0.1, 0.2], True) is True  # needs 5 calm readings
-    # 5 consecutive calm readings clear it
-    assert _storm_mode([0.3, 0.1, 0.2, 0.4, 0.0], True) is False
-
-
-def test_reclaim_flags_reference_eye():
-    """The committed-reference rule: recorded >2.5x the committed
-    bench_detail timing flags a reclaim even when the in-run spread is
-    flat and steal is low (the vCPU-migration storm signature); no
-    reference or a sub-0.3s recording stays unflagged."""
-    sys.path.insert(0, REPO)
-    from bench import _reclaim_flags
-
-    # med=min, steal 1% — the old rules see nothing; the reference does
-    fl = _reclaim_flags([6.5, 6.5], 6.5, 1.0, ref=1.9)
-    assert any(r.startswith("ref-inflated") for r in fl), fl
-    # within 2.5x of reference: clean
-    assert _reclaim_flags([4.0, 4.0], 4.0, 1.0, ref=1.9) == []
-    # no reference (new query): no signal
-    assert _reclaim_flags([6.5, 6.5], 6.5, 1.0, ref=None) == []
-    # sub-0.3s recordings never flag
-    assert _reclaim_flags([0.25, 0.25], 0.25, 1.0, ref=0.05) == []
-
-
-def test_ref_storm_mode_hysteresis():
-    """The reference eye's coverage-mode switch mirrors the steal eye's
-    hysteresis shape but enters at 2-of-5 ratios over 2.5x (migration
-    bursts alternate hot and calm queries — see _ref_storm_mode),
-    leaves only on 5 ratios under 1.25x — and a migration storm (calm
-    steal, inflated ratios) must keep coverage mode on through the OR
-    of the two eyes."""
-    sys.path.insert(0, REPO)
-    from bench import _ref_storm_mode, _storm_mode
-
-    assert _ref_storm_mode([1.0, 1.1, 0.9, 1.2, 1.0], False) is False
-    assert _ref_storm_mode([1.0, 9.0, 1.0, 1.1, 0.9], False) is False  # blip
-    assert _ref_storm_mode([3.0, 4.1, 1.0, 2.6, 1.1], False) is True
-    # 2-of-5 enters: migration bursts alternate hot/calm queries (the
-    # r12 run where q15e/q15f sat hot inside a ~1.6x window evaded a
-    # 3-of-5 trigger and the record landed at 4.2x)
-    assert _ref_storm_mode([1.6, 2.7, 3.4, 1.5, 1.8], False) is True
-    assert _ref_storm_mode([3.0, 2.9, 5.0], False) is True  # early-loop
-    # sticky while any recent ratio is warm
-    assert _ref_storm_mode([2.0, 1.1, 1.0, 1.1, 1.3], True) is True
-    assert _ref_storm_mode([1.1, 1.2, 1.0, 1.15, 1.24], True) is False
-    # migration storm: steal eye calm, ref eye hot -> OR keeps storm on
-    steal_calm = [0.5, 1.0, 0.8, 1.2, 0.9]
-    ratios_hot = [4.0, 3.5, 5.1, 2.8, 6.0]
-    active = True
-    assert (_storm_mode(steal_calm, active)
-            or _ref_storm_mode(ratios_hot, active)) is True
-
-
-def test_load_reference_curated_file_with_floor_overlays(tmp_path, monkeypatch):
-    """The weather eye reads the CURATED bench_reference.json — a file
-    bench.py never writes — not the last committed bench_detail.json
-    (the r12 failure: the round driver commits the official run, so a
-    storm record landed at HEAD and became the baseline, blinding
-    ref-inflation detection). The curated file carries floor overlays,
-    so EVERY registered query has a reference row (VERDICT r12 item 2)."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    # the real curated artifact: full coverage, floors included
-    eng, duk = bench._load_reference()
-    from gelly_streaming_spark.queries import REGISTRY
-
-    assert set(REGISTRY) <= set(eng), sorted(set(REGISTRY) - set(eng))
-    assert eng["q57_bfs_khop"] > 0 and duk["q57_bfs_khop"] > 0
-    assert eng["q56_pagerank"] > 0 and duk["q56_pagerank"] > 0
-
-    # a curated file in an alternate dir wins over any committed detail
-    ref = {"queries": {"qx": 1.5}, "duckdb_queries": {"qx": 0.5}}
-    (tmp_path / "bench_reference.json").write_text(json.dumps(ref))
-    monkeypatch.setenv("BENCH_REF_DIR", str(tmp_path))
-    assert bench._load_reference() == ({"qx": 1.5}, {"qx": 0.5})
-
-    # env overrides (ADVICE r12: a uniformly slower host must be able
-    # to re-zero or drop the eye instead of sitting in permanent
-    # coverage mode)
-    monkeypatch.setenv("BENCH_REF_SCALE", "2.0")
-    eng2, duk2 = bench._load_reference()
-    assert eng2["qx"] == 3.0 and duk2["qx"] == 1.0
-    monkeypatch.setenv("BENCH_REF_DISABLE", "1")
-    assert bench._load_reference() == ({}, {})
-
-
-def test_load_reference_degraded_fallback_guard(tmp_path, monkeypatch):
-    """Without a curated file, the committed-detail fallback refuses a
-    record that says load_degraded or partial — a degraded record is
-    not a baseline (reading BENCH_r12's 6.7x storm record as the
-    reference would make every later storm ratio read calm)."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    monkeypatch.setenv("BENCH_REF_DIR", str(tmp_path))
-    # no curated file, no git repo at tmp_path: disk-fallback detail
-    bad = {
-        "queries": {"qy": 9.0},
-        "duckdb_queries": {"qy": 1.0},
-        "load_degraded": True,
-        "partial": False,
-    }
-    (tmp_path / "bench_detail.json").write_text(json.dumps(bad))
-    assert bench._load_reference() == ({}, {})
-    good = dict(bad, load_degraded=False)
-    (tmp_path / "bench_detail.json").write_text(json.dumps(good))
-    assert bench._load_reference() == ({"qy": 9.0}, {"qy": 1.0})
-    good["partial"] = True
-    (tmp_path / "bench_detail.json").write_text(json.dumps(good))
-    assert bench._load_reference() == ({}, {})
-
-
-def test_health_verdict_components():
-    """_health feeds the storm-retry work list and the final
-    partial/load_degraded recomputation: untimed (budget truncation),
-    flagged (single-run / inflated-vs-own-min / ref-inflated, recorded
-    time descending), starved (skipped-no-budget reclaims)."""
-    sys.path.insert(0, REPO)
-    from bench import _health
-
-    names = ["q1", "q2", "q3", "q4", "q5", "q6"]
-    timings = {"q1": 0.5, "q2": 6.0, "q3": 2.0, "q5": 1.0}
-    all_runs = {
-        "q1": [0.6, 0.5],        # healthy
-        "q2": [6.0],             # single-run
-        "q3": [0.5, 2.0],        # recorded 2.0 > 2.5x own min 0.5
-        "q5": [1.0, 1.0],        # ref-inflated (ref 0.2)
-    }
-    errors = {"q4": "boom"}      # errored: neither untimed nor flagged
-    ref = {"q1": 0.5, "q2": 5.0, "q5": 0.2}
-    reclaim_log = {"q2": "skipped-no-budget(single-run)", "q3": "x: done"}
-    untimed, flagged, dflagged, starved = _health(
-        names, timings, all_runs, errors, ref, reclaim_log
-    )
-    assert untimed == ["q6"]
-    assert flagged == ["q2", "q3", "q5"]  # 6.0 > 2.0 > 1.0
-    assert dflagged == []  # no duck books passed
-    assert starved == ["q2"]
-
-    # healthy books: all four empty (the load_degraded-clearing case)
-    untimed2, flagged2, dflagged2, starved2 = _health(
-        ["q1"], {"q1": 0.5}, {"q1": [0.6, 0.5]}, {}, ref, {"q1": "x: ok"}
-    )
-    assert (untimed2, flagged2, dflagged2, starved2) == ([], [], [], [])
-
-    # duck-side eye (ADVICE r13): an inline-oracle reading failing the
-    # same flags lands in dflagged even when the engine side is clean;
-    # deferred oracles (not in inline_oracle_names) are exempt
-    untimed3, flagged3, dflagged3, _ = _health(
-        ["q1", "q2"],
-        {"q1": 0.5, "q2": 0.5},
-        {"q1": [0.6, 0.5], "q2": [0.6, 0.5]},
-        {},
-        {},
-        {},
-        duck={"q1": 2.0, "q2": 2.0},
-        all_druns={"q1": [0.5, 2.0], "q2": [0.5, 2.0]},  # rec > 2.5x own min
-        duck_ref={},
-        inline_oracle_names={"q1"},
-    )
-    assert (untimed3, flagged3) == ([], [])
-    assert dflagged3 == ["q1"]  # q2 deferred -> exempt
-
-    # intended_single (BENCH_RUNS=1): single-sample books are the
-    # configured policy, not degradation — nothing flags
-    untimed4, flagged4, dflagged4, _ = _health(
-        ["q1"], {"q1": 2.0}, {"q1": [2.0]}, {}, {}, {},
-        duck={"q1": 1.0}, all_druns={"q1": [1.0]},
-        inline_oracle_names={"q1"}, intended_single=True,
-    )
-    assert (untimed4, flagged4, dflagged4) == ([], [], [])
-
-
-def test_rewrite_starved_reclaims_executes_with_seeded_entry():
-    """VERDICT r14 item 1: the starved-ledger rewrite branch crashed the
-    official record with a NameError, while the CLI suite passed —
-    because no test ever produced a 'skipped-no-budget' reclaim entry,
-    the only state in which the branch executes. The branch is now a
-    module function, driven here with seeded starved entries covering
-    every leg: both-sides clean (rewritten, with and without an inline
-    oracle), engine-dirty (kept), duck-dirty (kept), errored (kept),
-    untimed (kept), non-starved (untouched)."""
-    sys.path.insert(0, REPO)
-    from bench import _rewrite_starved_reclaims
-
-    reclaim_log = {
-        # repaired: 2 clean engine runs, clean inline-oracle reading
-        "q_ok": "skipped-no-budget(single-run)",
-        # repaired: clean engine runs, NO oracle (non-SQL query)
-        "q_nosql": "skipped-no-budget(single-run)",
-        # NOT repaired: engine recording still >2.5x its own min
-        "q_eng_dirty": "skipped-no-budget(inflated)",
-        # NOT repaired: engine clean but inline oracle still single-run
-        "q_duck_dirty": "skipped-no-budget(single-run)",
-        # NOT repaired: errored after starvation
-        "q_err": "skipped-no-budget(single-run)",
-        # NOT repaired: never got a timing at all
-        "q_untimed": "skipped-no-budget(single-run)",
-        # untouched: not a starved entry
-        "q_done": "single-run: engine-rerun=1.00->rec=1.00",
-    }
-    timings = {
-        "q_ok": 1.0, "q_nosql": 1.0, "q_eng_dirty": 6.0,
-        "q_duck_dirty": 1.0, "q_err": 1.0, "q_done": 1.0,
-    }
-    all_runs = {
-        "q_ok": [1.2, 1.0], "q_nosql": [1.2, 1.0],
-        "q_eng_dirty": [2.0, 6.0, 6.5],  # rec 6.0 > 2.5x min 2.0
-        "q_duck_dirty": [1.2, 1.0], "q_err": [1.0], "q_done": [1.1, 1.0],
-    }
-    duck = {"q_ok": 0.5, "q_duck_dirty": 2.0}
-    all_druns = {"q_ok": [0.6, 0.5], "q_duck_dirty": [2.0]}  # single-run
-    inline = {"q_ok", "q_duck_dirty"}
-
-    rewritten = _rewrite_starved_reclaims(
-        reclaim_log, timings, all_runs, errors={"q_err": "boom"},
-        eng_ref={}, duck=duck, all_druns=all_druns, duck_ref={},
-        inline_oracle_names=inline, intended_single=False,
-    )
-    assert sorted(rewritten) == ["q_nosql", "q_ok"]
-    assert "reclaim-starved" in reclaim_log["q_ok"]
-    assert "repaired-by-retry-pass" in reclaim_log["q_ok"]
-    assert "duck-rec=0.50" in reclaim_log["q_ok"]
-    assert "duck-rec" not in reclaim_log["q_nosql"]  # no oracle leg
-    for kept in ("q_eng_dirty", "q_duck_dirty", "q_err", "q_untimed"):
-        assert "skipped-no-budget" in reclaim_log[kept], kept
-    assert reclaim_log["q_done"] == "single-run: engine-rerun=1.00->rec=1.00"
-
-    # _health's starved list agrees: repaired entries no longer starve
-    from bench import _health
-
-    _, _, _, starved = _health(
-        list(timings), timings, all_runs, {"q_err": "boom"}, {}, reclaim_log
-    )
-    assert set(starved) == {"q_eng_dirty", "q_duck_dirty", "q_err", "q_untimed"}
-
-
-def test_retry_pass_sweeps_missing_inline_oracles(sf_dir):
-    """r14 live-storm gap: the main loop skips a query's inline oracle
-    outright once the budget is nearly gone, recording it in NEITHER
-    duck_deferred nor any flag list — four sub-second oracles ended
-    duck_skipped while 300 s of retry budget went unused. With the
-    storm-retry pass ON, a budget-truncated run must end with every
-    engine-timed query's oracle timed: duck_skipped empty and the
-    matched set covering the full comparable set."""
-    def run_bench(
-        budget_sec: str, retry: str, retry_budget_sec: str = "420",
-        timeout_sec: int = 900,
-    ) -> subprocess.CompletedProcess:
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_SF_DIR=sf_dir,
-            SPARK_GRAFT_CPUS="8",
-            BENCH_BUDGET_SEC=budget_sec,
-            BENCH_RUNS="1",
-            BENCH_DUCKDB="1",
-            BENCH_STORM_RETRY=retry,
-            BENCH_RETRY_BUDGET_SEC=retry_budget_sec,
-            # coverage test: spend the whole budget sweeping, not on
-            # inter-attempt window-decorrelation sleeps
-            BENCH_RETRY_SLEEP_SEC="0",
-        )
-        return subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            capture_output=True, text=True, env=env,
-            timeout=timeout_sec, cwd=REPO,
+    def is_environ(node):
+        return (
+            isinstance(node, ast.Attribute) and node.attr == "environ"
+            and isinstance(node.value, ast.Name) and node.value.id == "os"
         )
 
-    detail_path = os.path.join(REPO, "bench_detail.json")
-    saved = None
-    if os.path.exists(detail_path):
-        with open(detail_path) as fh:
-            saved = fh.read()
-    try:
-        # probe this host's setup cost (zero-query flush contract)
-        probe = run_bench("1", "0")
-        assert probe.returncode == 0, probe.stderr[-500:]
-        setup = _tail_line(probe.stdout)["session_setup_sec"]
-        # enough budget to time SOME engines, not enough for the rest —
-        # guarantees missing inline oracles going into the retry pass.
-        # De-flake (VERDICT r15 item 3 — the fixed 420 s died mid-retry
-        # on hot hosts, 2-of-3 failures): (1) the retry budget scales
-        # with the probed setup cost and carries a 600 s floor (a solo
-        # quiet sweep measures ~350 s of real work; in-suite residual
-        # load runs ~2x); (2) the inter-attempt decorrelation sleeps
-        # are disabled — this test asserts sweep COVERAGE, not window
-        # decorrelation, and 2x45 s sleeps were ~20% of the budget;
-        # (3) if the sweep still ends partial AND the detail file
-        # proves the retry pass ran out of its (generous) budget, the
-        # host demonstrably lacked the cycles — skip with the measured
-        # reason instead of encoding a host-speed race.
-        retry_budget = max(600, int(setup * 30))
-        proc = run_bench(
-            str(int(setup + 12)), "1",
-            retry_budget_sec=str(retry_budget),
-            timeout_sec=int(setup * 6) + retry_budget + 300,
-        )
-        assert proc.returncode == 0, proc.stderr[-500:]
-        d = _tail_line(proc.stdout)
-        if d["partial"] is True:
-            with open(detail_path) as fh:
-                det = json.load(fh)
-            evid = json.dumps(
-                {**det.get("retry", {}), **det.get("deferred_oracles", {})}
-            )
-            if (
-                "skipped-retry-budget" in evid
-                or "no-budget" in evid
-                or "_hot_abort" in evid
-            ):
-                pytest.skip(
-                    f"retry pass exhausted its {retry_budget}s budget on "
-                    f"this host/load (probe setup {setup:.1f}s) — coverage "
-                    "machinery verified up to host speed; evidence: "
-                    + evid[:300]
-                )
-        assert d["partial"] is False, d  # retry timed the rest
-        assert d.get("duck_skipped", []) == [], d
-        assert d["matched_queries"] == d["comparable_queries"], d
-    finally:
-        if saved is not None:
-            with open(detail_path, "w") as fh:
-                fh.write(saved)
+    read = set()
+    for node in ast.walk(tree):
+        key = None
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "get"
+            and is_environ(node.func.value)
+        ):
+            key = node.args[0]
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and is_environ(node.value)
+        ):
+            key = node.slice
+        if key is not None:
+            assert isinstance(key, ast.Constant), ast.dump(key)
+            read.add(key.value)
+    documented = set(
+        re.findall(r"\b(?:BENCH|SPARK_GRAFT)_[A-Z0-9_]+", ast.get_docstring(tree))
+    )
+    assert read, "scan found no environment reads"
+    assert read == documented, (
+        f"read, undocumented: {sorted(read - documented)}; "
+        f"documented, never read: {sorted(documented - read)}"
+    )
