@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import track_persist
+from gelly_streaming_spark.plans.memory import session_memo, track_persist
 from gelly_streaming_spark.plans.probe import bounded_take
 
 
@@ -105,6 +105,17 @@ def _oriented_triangles(
     return per_edge
 
 
+def _destroy_broadcast(entry: tuple) -> None:
+    """Release action for the prep memo's (frame, nrows, broadcast)
+    entries: destroy the ~15 MB kernel broadcast (None on a memoized
+    joins decision)."""
+    if entry[2] is not None:
+        try:
+            entry[2].destroy()
+        except Exception:
+            pass
+
+
 def triangle_count(
     stream: GraphStream,
     *,
@@ -137,22 +148,20 @@ def triangle_count(
     e = stream.edges if canonical else _canonical(stream.edges)
     tbl = None
     spark = stream.edges.sparkSession
-    # Probe + prepped-broadcast memo per (session, frame identity) — the
-    # same immutable-input materialized-view doctrine as the copart edge
-    # cache and the windowed strategy memo: a repeated count over an
-    # unchanged session-lifetime edge set must not re-collect the
-    # build side (the probe toArrow of ~1.2M rows was the dominant
-    # repeat cost) nor re-derive the oriented/sorted build. The held
-    # frame reference keeps id() stable for the session. ONLY frames the
-    # CALLER declared materialized (genuine session-lifetime views, e.g.
-    # the copart cache) are memoized: a call-local frame persisted just
-    # below has a transient id(), so a memo entry for it could never hit
-    # again — it would only pin the frame and its ~15 MB broadcast until
-    # session end. release_persisted() drains this memo.
-    memo = getattr(spark, "_gss_tri_prep", None)
-    if memo is None:
-        memo = {}
-        spark._gss_tri_prep = memo  # noqa: SLF001 — session memo
+    # Probe + prepped-broadcast memo per (SparkContext, frame identity)
+    # — shared by every session and every foreachBatch batch on the
+    # context; the same immutable-input materialized-view doctrine as
+    # the copart edge cache and the windowed strategy memo: a repeated
+    # count over an unchanged session-lifetime edge set must not
+    # re-collect the build side (the probe toArrow of ~1.2M rows was the
+    # dominant repeat cost) nor re-derive the oriented/sorted build. The
+    # held frame reference keeps id() stable while the entry lives. ONLY
+    # frames the CALLER declared materialized (genuine session-lifetime
+    # views, e.g. the copart cache) are memoized: a call-local frame
+    # persisted just below has a transient id(), so a memo entry for it
+    # could never hit again — it would only pin the frame and its ~15 MB
+    # broadcast until the memo is released.
+    memo = session_memo(spark, "tri_prep", _destroy_broadcast)
     mkey = id(e) if materialized else None
     cached = memo.get(mkey) if mkey is not None else None
     if strategy == "auto":
@@ -166,9 +175,7 @@ def triangle_count(
             # broadcast_limit+1 rows — if the limit spills over, fall to
             # the joins plan having transferred a bounded amount, else
             # the arrow table is already in hand (no separate count job)
-            tbl = bounded_take(
-                e.select("src", "dst"), broadcast_limit, as_arrow=True
-            )
+            tbl = bounded_take(e.select("src", "dst"), broadcast_limit)
             nrows = tbl.num_rows
             if mkey is not None and nrows > broadcast_limit:
                 # memoize the joins decision too: the next call must not
@@ -182,9 +189,7 @@ def triangle_count(
         else:
             if tbl is None:
                 # a caller-forced strategy gets the same bound as the probe
-                tbl = bounded_take(
-                    e.select("src", "dst"), broadcast_limit, as_arrow=True
-                )
+                tbl = bounded_take(e.select("src", "dst"), broadcast_limit)
                 if tbl.num_rows > broadcast_limit:
                     raise ValueError(
                         f"triangle_count: strategy='broadcast_kernel' needs at "
@@ -400,18 +405,15 @@ def triangle_count_windowed(
         if not materialized:
             e = track_persist(e)
             materialized = True
-        # The probe is memoized per (session, frame identity) ONLY for
-        # caller-materialized session-lifetime views (the shared copart
-        # frame): a repeated call over one re-derives identical stats, so
-        # the probe job would be pure repeat cost, and the caller's held
-        # reference keeps id() stable. A call-local frame's id() can
-        # never hit again — memoizing it would only pin the frame until
-        # session end. release_persisted() drains this memo.
-        spark = e.sparkSession
-        memo = getattr(spark, "_gss_tri_window_stats", None)
-        if memo is None:
-            memo = {}
-            spark._gss_tri_window_stats = memo  # noqa: SLF001 — session memo
+        # The probe is memoized per (SparkContext, frame identity) —
+        # shared by every session and every foreachBatch batch on the
+        # context — ONLY for caller-materialized session-lifetime views
+        # (the shared copart frame): a repeated call over one re-derives
+        # identical stats, so the probe job would be pure repeat cost,
+        # and the caller's held reference keeps id() stable. A call-local
+        # frame's id() can never hit again — memoizing it would only pin
+        # the frame until the memo is released.
+        memo = session_memo(e.sparkSession, "tri_window_stats")
         key = id(e) if caller_materialized else None
         if key is None or key not in memo:
             mx = (

@@ -1158,14 +1158,14 @@ def knn_pq(
     # comfortably driver-side; batch the probe set above that.
     from gelly_streaming_spark.plans.probe import bounded_take
 
-    qrows = bounded_take(
+    qtbl = bounded_take(
         queries.select(
             F.col(id_col).alias("qid"),
             F.col(vec_col).cast("array<double>").alias("qv"),
         ),
         max_query_rows,
     )
-    if len(qrows) > max_query_rows:
+    if qtbl.num_rows > max_query_rows:
         raise ValueError(
             f"knn_pq: query side exceeds the {max_query_rows}-row "
             "probe-batch bound; split the probe set into batches (the "
@@ -1173,13 +1173,15 @@ def knn_pq(
             "corpus-sized frame to the driver"
         )
     spark = corpus.sparkSession
-    if not qrows:
+    if not qtbl.num_rows:
         return spark.createDataFrame(
             [],
             "qid long, vec_id long, sim double" if rerank else "qid long, vec_id long, adist double",
         )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in qrows])
+    qids = qtbl["qid"].to_numpy().astype(np.int64)
+    qmat = np.stack(
+        [np.asarray(v, dtype=np.float64) for v in qtbl["qv"].to_pylist()]
+    )
     if qmat.shape[1] != n_sub * ds:
         raise ValueError(f"knn_pq: query length {qmat.shape[1]} != codebook dim {n_sub * ds}")
     lut = ((qmat.reshape(len(qids), n_sub, 1, ds) - cb[None]) ** 2).sum(axis=3)

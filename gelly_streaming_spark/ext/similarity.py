@@ -276,12 +276,12 @@ def jaccard_rep_pairs(
     if strategy in ("auto", "bitset"):
         from gelly_streaming_spark.plans.probe import bounded_take
 
-        vocab_rows = bounded_take(
+        vocab_tbl = bounded_take(
             reps.select(F.explode("toks").alias("token")).distinct(),
             _BITSET_VOCAB_LIMIT,
         )
-        if len(vocab_rows) <= _BITSET_VOCAB_LIMIT:
-            vocab = sorted(r["token"] for r in vocab_rows)
+        if vocab_tbl.num_rows <= _BITSET_VOCAB_LIMIT:
+            vocab = sorted(vocab_tbl["token"].to_pylist())
     if strategy == "auto":
         strategy = (
             "bitset"

@@ -1081,7 +1081,7 @@ def _try_small_bpe(
     ).collect()[0]
     if probe["t"] > 2_000_000:
         return None
-    tbl = bounded_take(tok_plan.select("l"), small_input_rows, as_arrow=True)
+    tbl = bounded_take(tok_plan.select("l"), small_input_rows)
     if tbl.num_rows > small_input_rows:
         return None
     docs = tbl.column("l").to_pylist()

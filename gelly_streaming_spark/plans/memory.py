@@ -1,4 +1,4 @@
-"""Explicit lifecycle for lineage-cut checkpoints.
+"""Explicit lifecycle for lineage-cut checkpoints and session state.
 
 The iterative algorithms (Pregel-style CC, parity propagation, streaming
 refinement) call ``localCheckpoint()`` every round to stop plan growth.
@@ -12,6 +12,13 @@ minutes, far too slow when a 100 TB job checkpoints per iteration.
 ``free_checkpoint`` walks the analyzed plan and unpersists the RDD behind
 every ``LogicalRDD`` scan it finds (verified: the entry leaves
 ``SparkContext.getPersistentRDDs`` immediately).
+
+``session_memo`` is the one registry of the engine's session-lifetime
+state (the persist ledger, materialized edge views, triangle builds,
+staged dirs, table, plan and index memos). It lives on the SparkContext,
+so every session on the context — ``foreachBatch`` batches included —
+shares it. Each memo registers how to release one entry, so
+``release_persisted`` drains every memo without naming any.
 """
 
 from __future__ import annotations
@@ -20,11 +27,12 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
 
-_SESSION_TMPDIRS: list[str] = []
+_SESSION_TMPDIRS: set[str] = set()
 
 
 def _staging_base(expected_bytes: int = 0) -> str | None:
@@ -67,26 +75,34 @@ def _staging_base(expected_bytes: int = 0) -> str | None:
 
 
 def session_tmpdir(prefix: str, expected_bytes: int = 0) -> str:
-    """``mkdtemp`` + ``atexit`` rmtree: every session-lifetime staging
-    dir (replay chunks, restaged tables, bench warm-up) is removed at
-    interpreter exit even when ``release_persisted`` is never called
-    (pytest sessions, ad-hoc shells) — no orphan ``gss_*`` dirs left
-    behind. Lives on RAM-backed tmpfs when available (_staging_base);
-    pass ``expected_bytes`` for known-large artifacts so the tmpfs
-    headroom check accounts for them (falls back to disk otherwise)."""
+    """``mkdtemp`` for a session-lifetime staging dir (replay chunks,
+    restaged tables, bench warm-up), removed at interpreter exit even
+    when ``release_persisted`` is never called (pytest sessions, ad-hoc
+    shells) — no orphan ``gss_*`` dirs left behind. Lives on RAM-backed
+    tmpfs when available (_staging_base); pass ``expected_bytes`` for
+    known-large artifacts so the tmpfs headroom check accounts for them
+    (falls back to disk otherwise)."""
     d = tempfile.mkdtemp(prefix=prefix, dir=_staging_base(expected_bytes))
-    _SESSION_TMPDIRS.append(d)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    _SESSION_TMPDIRS.add(d)
     return d
 
 
+@atexit.register
 def purge_session_tmpdirs() -> None:
-    """Remove every session_tmpdir-created dir NOW. For exit paths that
-    bypass atexit — bench.py's SIGTERM handler must ``os._exit`` (a
-    normal shutdown can hang in the JVM teardown), which skips the
-    registered cleanups."""
+    """Remove every live session_tmpdir-created dir NOW. Runs at exit;
+    call it directly on exit paths that bypass atexit — bench.py's
+    SIGTERM handler must ``os._exit`` (a normal shutdown can hang in the
+    JVM teardown), which skips the registered cleanups."""
     while _SESSION_TMPDIRS:
         shutil.rmtree(_SESSION_TMPDIRS.pop(), ignore_errors=True)
+
+
+def remove_dir(d: str | None) -> None:
+    """Release action for memos of staged dirs: delete ``d`` (None is
+    the "nothing staged" entry) and stop tracking it for exit."""
+    if d is not None:
+        shutil.rmtree(d, ignore_errors=True)
+        _SESSION_TMPDIRS.discard(d)
 
 
 def _collect_logical_rdds(plan, out: list) -> None:
@@ -98,85 +114,59 @@ def _collect_logical_rdds(plan, out: list) -> None:
         _collect_logical_rdds(children.apply(i), out)
 
 
+def session_memo(spark, name: str, release: Callable | None = None) -> dict:
+    """The engine's session-lifetime memo ``name``: one dict per
+    SparkContext, shared by every session on it (``newSession()`` and
+    each ``foreachBatch`` batch's session included) — the scope at which
+    Spark keeps the cached plans, persisted blocks and broadcasts the
+    memos pin. ``release(entry)`` is how ``release_persisted`` frees one
+    entry before it empties the dict (default: just drop it); it may
+    return the number of frames it unpersisted."""
+    reg = vars(spark.sparkContext).setdefault("_gss_memos", {})
+    entry = reg.setdefault(name, [{}, None])  # atomic: threads share it
+    if release is not None:
+        entry[1] = release
+    return entry[0]
+
+
+def unpersist(df: DataFrame) -> int:
+    """Release action for memos of persisted frames; 1 if freed."""
+    try:
+        df.unpersist()
+        return 1
+    except Exception:
+        return 0
+
+
 def track_persist(df: DataFrame) -> DataFrame:
-    """``persist()`` plus registration in a session-scoped ledger, so a
-    long-lived multi-tenant session can bulk-release every cache the
-    engine created (``release_persisted``). The blocks are evictable
+    """``persist()`` plus registration in a ledger kept per
+    SparkContext — shared by every session and every ``foreachBatch``
+    batch on it — so a long-lived multi-tenant session can bulk-release
+    every cache the engine created (``release_persisted``), including
+    those made inside a streaming batch. The blocks are evictable
     MEMORY_AND_DISK either way — the ledger turns "pressure-safe but
     accumulating" into an explicit lifecycle."""
     df.persist()
-    reg = getattr(df.sparkSession, "_gss_persisted", None)
-    if reg is None:
-        reg = []
-        df.sparkSession._gss_persisted = reg  # noqa: SLF001 — session ledger
-    reg.append(df)
+    session_memo(df.sparkSession, "persisted", unpersist)[id(df)] = df
     return df
 
 
 def release_persisted(spark) -> int:
-    """Unpersist every frame registered via ``track_persist`` (plus the
-    edge-view memo via its own ``release_cache``), drain the triangle
-    strategy/prep memos (destroying their kernel broadcasts), and remove
-    the replay-staging chunk directories. Returns frames freed.
-    Safe to call mid-session: persisted frames recompute from lineage on
-    next use — unlike checkpoints, nothing is lost, only re-derived."""
-    from gelly_streaming_spark.sources.edges import release_cache
-
-    freed = release_cache(spark)
-    reg = getattr(spark, "_gss_persisted", None) or []
-    for df in reg:
-        try:
-            df.unpersist()
-            freed += 1
-        except Exception:
-            pass
-    reg.clear()
-    # Triangle memos hold (frame, nrows, broadcast) / (frame, stats)
-    # tuples for session-lifetime views; the frames were unpersisted via
-    # the ledger/edge cache above, but the entries pin the Python refs
-    # and the ~15 MB kernel broadcasts until explicitly dropped.
-    for attr in ("_gss_tri_prep", "_gss_tri_window_stats"):
-        memo = getattr(spark, attr, None) or {}
-        for entry in memo.values():
-            bc = entry[2] if len(entry) > 2 else None
-            if bc is not None:
-                try:
-                    bc.destroy()
-                except Exception:
-                    pass
+    """Release every ``session_memo`` entry of ``spark``'s SparkContext
+    with its memo's release action — unpersisting ledger and edge-view
+    frames, destroying kernel broadcasts, deleting staged dirs — and
+    empty every memo, returning the session to a cold state. Returns
+    frames unpersisted. Safe to call mid-session: persisted frames
+    recompute from lineage and memos rebuild on next use — unlike
+    checkpoints, nothing is lost, only re-derived."""
+    freed = 0
+    # snapshots: another thread may add a memo or an entry meanwhile
+    memos = list(vars(spark.sparkContext).get("_gss_memos", {}).values())
+    for memo, release in memos:
+        if release is not None:
+            for entry in list(memo.values()):
+                freed += release(entry) or 0
         memo.clear()
-    # IVF index memo: entries are (labels, centroids ndarray, lists
-    # frame) — the frame was unpersisted via the ledger above; clearing
-    # drops the Python refs so nothing pins the plan or the array.
-    # The PQ index memo is drained for the same reason AND one more
-    # (ADVICE r12): its codes frame's lineage can reference restaged
-    # table dirs that this release deletes below — a surviving memo
-    # entry would hand a later q54 call a frame whose scan fails
-    # instead of rebuilding from cold.
-    for attr in ("_gss_ivf_index", "_gss_pq_index"):
-        (getattr(spark, attr, None) or {}).clear()
-    # Replay staging: remove the session's staged chunk dirs from disk.
-    stage = getattr(spark, "_gss_replay_stage", None) or {}
-    for d in stage.values():
-        shutil.rmtree(d, ignore_errors=True)
-    stage.clear()
-    # Restaged-table copies: remove the dirs AND the memo together (an
-    # entry surviving its dir would point later scans at deleted files);
-    # the next load_table simply restages cold.
-    tstage = getattr(spark, "_gss_table_stage", None) or {}
-    for d in tstage.values():
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
-    tstage.clear()
-    # Table-plan and query-plan memos: plain logical plans (no storage),
-    # but the entries pin restaged-scan refs — drop them with the rest
-    # of the session caches so a release really returns the session to
-    # a cold state (a surviving query-plan entry could hand a later
-    # call a frame whose restaged scan was deleted above).
-    for attr in ("_gss_table_df", "_gss_query_plan"):
-        memo = getattr(spark, attr, None)
-        if memo is not None:
-            memo.clear()
     return freed
 
 

@@ -1,26 +1,17 @@
-"""Bounded driver probes with a size-adapted execution shape, and the one
-small-input fast-path contract of the graph loops in ``algos/``.
+"""Bounded driver probes, and the one small-input fast-path contract of
+the graph loops in ``algos/``.
 
 Several adaptive fast paths take ``limit(N+1)`` and collect: if the
 input fits the bound, solve driver-local; else fall back to the
 distributed plan (the graph loops, the triangle kernel's broadcast
-build side, the Jaccard bitset vocab probe). Spark executes
-CollectLimit INCREMENTALLY — 1 partition first, then
-``spark.sql.limit.scaleUpFactor``× more per round — which is exactly
-right when the bound overflows early on a big input (one task, bail
-out), but makes a small input pay a sequential driver round-trip PER
-ROUND: measured 3–4 jobs to drain a 13-row fixture union, ~1 s of pure
-scheduling at the bench's per-job floor.
-
-``bounded_take`` picks the shape from Catalyst's optimized-plan size
-estimate — the same stats-driven decision AQE makes for join strategy:
-
-- small estimate → run every partition in ONE job
-  (``spark.sql.limit.initialNumPartitions`` = max): the probe expects
-  to take the whole input anyway;
-- large or unknown estimate → keep the incremental default: a 100 TB
-  input must never get a full-width job for a probe its first partition
-  already satisfies.
+build side, the Jaccard bitset vocab probe, the PQ query batch).
+``bounded_take`` collects as Arrow, which runs the whole limited plan
+in ONE job in which every partition stops at n+1 rows — there is no
+incremental 1→4→16-partition CollectLimit path (only a Row
+``collect()`` takes that one, paying a driver round-trip per round) —
+and the driver keeps the first n+1 rows. A small input therefore costs
+one job; an input far over the bound costs one full-width job whose
+tasks each stop after n+1 rows.
 
 ``driver_fast_path`` is the contract every graph loop in ``algos/``
 (CC, bipartiteness' parity closure, BFS, LPA, k-core, HITS, PageRank)
@@ -42,14 +33,10 @@ from __future__ import annotations
 from typing import Callable, Iterable, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
-
-# Inputs estimated under this are drained in one job. Matches the order
-# of a broadcast-join build side: comfortably driver-collectable.
-_ONE_PASS_BYTES = 64 << 20
-_CONF = "spark.sql.limit.initialNumPartitions"
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -58,27 +45,13 @@ def _estimated_bytes(df: DataFrame) -> int:
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
         )
     except Exception:
-        return 1 << 62  # unknown — treat as large, keep incremental
+        return 1 << 62  # unknown — treat as large
 
 
-def bounded_take(df: DataFrame, n: int, as_arrow: bool = False):
+def bounded_take(df: DataFrame, n: int) -> pa.Table:
     """Collect at most ``n + 1`` rows of ``df`` (the ``+1`` is the
-    caller's overflow sentinel) as a list of Rows, or a
-    ``pyarrow.Table`` with ``as_arrow=True``."""
-    spark = df.sparkSession
-    limited = df.limit(n + 1)
-    one_pass = _estimated_bytes(df) <= _ONE_PASS_BYTES
-    old = spark.conf.get(_CONF, None) if one_pass else None
-    if one_pass:
-        spark.conf.set(_CONF, str(1 << 30))
-    try:
-        return limited.toArrow() if as_arrow else limited.collect()
-    finally:
-        if one_pass:
-            if old is None:
-                spark.conf.unset(_CONF)
-            else:
-                spark.conf.set(_CONF, old)
+    caller's overflow sentinel) as a ``pyarrow.Table``."""
+    return df.limit(n + 1).toArrow()
 
 
 def driver_fast_path(
@@ -104,7 +77,7 @@ def driver_fast_path(
     fixed."""
     if small_input_rows <= 0:
         return None
-    tbl = bounded_take(edges, small_input_rows, as_arrow=True)
+    tbl = bounded_take(edges, small_input_rows)
     if tbl.num_rows > small_input_rows:
         return None
     # one Arrow batch -> Python tuples: Row-by-row collect() boxing
@@ -114,7 +87,6 @@ def driver_fast_path(
         stbl = bounded_take(
             sources.select(sources.columns[0]).distinct(),
             small_input_rows,
-            as_arrow=True,
         )
         if stbl.num_rows > small_input_rows:
             return None

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.plans.memory import session_memo, unpersist
 from gelly_streaming_spark.sources.tables import load_table
 
 ORDER_OFFSET = 1_000_000
@@ -66,22 +67,15 @@ def edges_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _session_cache(spark: SparkSession) -> dict:
-    cache = getattr(spark, "_gss_edge_cache", None)
-    if cache is None:
-        cache = {}
-        spark._gss_edge_cache = cache  # noqa: SLF001 — session-scoped memo
-    return cache
-
-
 def copart_canonical(
     spark: SparkSession, sf_dir: str, bucket_size: str | None = None
 ) -> DataFrame:
     """DISTINCT canonical co-purchase edges (``src < dst`` by construction),
     optionally keyed by a tumbling event-time bucket — materialized ONCE per
-    (session, sf_dir, bucket) and shared by every consumer (q07 / q11b /
-    q17 / q18 all canonicalize the same projection; rebuilding the
-    self-join per query was 22 s of the 49 s round-1 batch bench).
+    (SparkContext, sf_dir, bucket) and shared by every consumer (q07 /
+    q11b / q17 / q18 all canonicalize the same projection; rebuilding
+    the self-join per query was 22 s of the 49 s round-1 batch bench)
+    and by every session and ``foreachBatch`` batch on the context.
 
     Scale design (the part that survives a 100× scale-up):
     - **dedup BEFORE the self-join.** The raw join is O(k²) per order in
@@ -94,9 +88,9 @@ def copart_canonical(
       spillable storage blocks — and unlike a localCheckpoint, a plain
       ``unpersist()`` frees it); size is O(distinct co-purchase pairs),
       ~1% of the wedge volume the join would otherwise re-shuffle per
-      query. Lifetime is the session — a deliberate materialized view.
+      query. Lifetime is the SparkContext — a deliberate materialized view.
     """
-    cache = _session_cache(spark)
+    cache = session_memo(spark, "copart", unpersist)
     # Single base materialization: the DAY-bucketed distinct set.
     # l_shipdate is a DATE, so day granularity is lossless — the flat set
     # and any coarser tumbling bucketing derive from it without touching
@@ -154,22 +148,6 @@ def copart_canonical(
             ).distinct()
         cache[key] = out.persist()
     return cache[key]
-
-
-def release_cache(spark: SparkSession) -> int:
-    """Unpersist and forget every memoized edge view (the copart
-    materialized views). Returns the number of frames released; the next
-    consumer rebuilds them from the parquet sources."""
-    cache = _session_cache(spark)
-    freed = 0
-    for df in cache.values():
-        try:
-            df.unpersist()
-            freed += 1
-        except Exception:
-            pass
-    cache.clear()
-    return freed
 
 
 def edges_events(spark: SparkSession, sf_dir: str) -> DataFrame:

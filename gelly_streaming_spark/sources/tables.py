@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.plans.memory import remove_dir, session_memo, session_tmpdir
 from gelly_streaming_spark.session import prepare_session
 
 TABLES = (
@@ -58,7 +59,7 @@ _STAGE_KEYS = {
 
 def _maybe_restage(spark: SparkSession, path: str, df: DataFrame, name: str):
     """Rewrite a single-row-group parquet file into a range-partitioned
-    multi-file copy, once per session.
+    multi-file copy, once per SparkContext.
 
     Why: a parquet file with ONE row group is an indivisible Spark split —
     every scan (and the map-side half of every aggregation above it) runs
@@ -69,14 +70,12 @@ def _maybe_restage(spark: SparkSession, path: str, df: DataFrame, name: str):
     lazily: pay one single-threaded read, then every later scan is
     parallel AND file-prunable on the primary key.
 
-    The staged copy lives in a session-scoped temp dir; correctness is
-    unaffected (same rows, same schema — the events ts normalization is
-    baked in before staging so the copy is already canonical).
+    The staged copy lives in a SparkContext-lifetime temp dir;
+    correctness is unaffected (same rows, same schema — the events ts
+    normalization is baked in before staging so the copy is already
+    canonical).
     """
-    cache = getattr(spark, "_gss_table_stage", None)
-    if cache is None:
-        cache = {}
-        spark._gss_table_stage = cache  # noqa: SLF001 — session memo
+    cache = session_memo(spark, "table_stage", remove_dir)
     if path not in cache:
         staged = None
         try:
@@ -87,8 +86,6 @@ def _maybe_restage(spark: SparkSession, path: str, df: DataFrame, name: str):
             if md.num_rows >= _STAGE_MIN_ROWS and md.num_row_groups < max(
                 4, par // 4
             ):
-                from gelly_streaming_spark.plans.memory import session_tmpdir
-
                 # size hint: the restaged copy is the same data
                 # re-compressed (~1x the source file, 1.5x for slack) —
                 # lets the tmpfs headroom check reject up-front instead
@@ -116,21 +113,18 @@ def _maybe_restage(spark: SparkSession, path: str, df: DataFrame, name: str):
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalizes the events timestamp column.
 
-    The constructed DataFrame is memoized per (session, path): logical
-    plans are immutable, and every fresh ``spark.read.parquet`` fires a
-    driver-side footer/schema-inference job (plus a second one for the
-    restaged copy) — pure repeat cost that showed up as 2-4 one-task
-    jobs at the head of EVERY query execution. The memo returns the
-    same plan object; consumers compose lazily on top, so pruning and
-    pushdown are unaffected. ``plans.memory.release_persisted`` drops
-    the memo with the other session caches.
+    The constructed DataFrame is memoized per (SparkContext, path), so
+    every session and every ``foreachBatch`` batch on the context shares
+    it: logical plans are immutable, and every fresh
+    ``spark.read.parquet`` fires a driver-side footer/schema-inference
+    job (plus a second one for the restaged copy) — pure repeat cost
+    that showed up as 2-4 one-task jobs at the head of EVERY query
+    execution. The memo returns the same plan object; consumers compose
+    lazily on top, so pruning and pushdown are unaffected.
     """
     prepare_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    dfcache = getattr(spark, "_gss_table_df", None)
-    if dfcache is None:
-        dfcache = {}
-        spark._gss_table_df = dfcache  # noqa: SLF001 — session memo
+    dfcache = session_memo(spark, "table_df")
     if path in dfcache:
         return dfcache[path]
     df = spark.read.parquet(path)

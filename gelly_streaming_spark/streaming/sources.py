@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.plans.memory import remove_dir, session_memo, session_tmpdir
+
 
 def replay(
     df: DataFrame,
@@ -59,17 +61,18 @@ def replay(
     production streams point ``readStream`` at Kafka / a drop directory
     and never pass through here.
 
-    ``cache_key`` memoizes the STAGED CHUNKS per session (the same
+    ``cache_key`` memoizes the STAGED CHUNKS per SparkContext, shared by
+    every session and every ``foreachBatch`` batch on it (the same
     immutable-fixture doctrine as the table restage in load_table): a
     repeated replay of the same bounded source re-collects and re-writes
     identical files, which is harness scaffolding, not engine work — the
     streaming query itself still executes fully every call. Only pass a
-    key for sources that are immutable for the session's lifetime.
+    key for sources that are immutable for the SparkContext's lifetime.
 
     ``stage_dir=None`` creates a fresh temp dir — and only AFTER the memo
     lookup misses, so memo-hit replays allocate nothing on disk. Staged
-    dirs live for the session (that is the point of the memo) and are
-    removed by ``plans.memory.release_persisted``.
+    dirs live for the SparkContext (that is the point of the memo) and
+    are removed by ``plans.memory.release_persisted``.
     """
     import os
     import time
@@ -83,10 +86,7 @@ def replay(
         # silently reuse mismatched chunks (an out-of-order replay fed
         # to a watermarked query would drop rows with no error)
         cache_key = (cache_key, num_batches, files_per_trigger, order_by)
-        memo = getattr(df.sparkSession, "_gss_replay_stage", None)
-        if memo is None:
-            memo = {}
-            df.sparkSession._gss_replay_stage = memo  # noqa: SLF001 — session memo
+        memo = session_memo(df.sparkSession, "replay_stage", remove_dir)
         staged = memo.get(cache_key)
         if staged is not None:
             return (
@@ -96,8 +96,6 @@ def replay(
             )
 
     if stage_dir is None:
-        from gelly_streaming_spark.plans.memory import session_tmpdir
-
         stage_dir = session_tmpdir("gss_replay_")
     os.makedirs(stage_dir, exist_ok=True)
     # A reused stage dir must not replay a previous call's chunks: the

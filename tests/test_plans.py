@@ -16,7 +16,7 @@ from gelly_streaming_spark.sources.edges import edges_cust_order
 
 def _fresh(name, spark, sf_dir):
     """Build a FRESH plan for explain assertions, bypassing the
-    per-session plan memo (r14): a memoized frame another test already
+    query-plan memo (r14): a memoized frame another test already
     executed explains the AQE FINAL plan, whose print duplicates the
     exchange subtree (initial + isFinalPlan sections) and breaks
     exchange-count asserts — the logical plan under test is the one a
@@ -180,7 +180,11 @@ def test_release_hooks_empty_session_caches(spark, sf_dir):
     explicit release. After release_persisted, the edge-view memo is
     empty, the track_persist ledger is empty, and the frames report no
     storage level."""
-    from gelly_streaming_spark.plans.memory import release_persisted, track_persist
+    from gelly_streaming_spark.plans.memory import (
+        release_persisted,
+        session_memo,
+        track_persist,
+    )
     from gelly_streaming_spark.sources import edges as E
 
     base = E.copart_canonical(spark, sf_dir)
@@ -191,8 +195,8 @@ def test_release_hooks_empty_session_caches(spark, sf_dir):
 
     freed = release_persisted(spark)
     assert freed >= 2, freed
-    assert E._session_cache(spark) == {}
-    assert getattr(spark, "_gss_persisted") == []
+    assert session_memo(spark, "copart") == {}
+    assert session_memo(spark, "persisted") == {}
     assert not (base.storageLevel.useMemory or base.storageLevel.useDisk)
     assert not (extra.storageLevel.useMemory or extra.storageLevel.useDisk)
     # the view rebuilds transparently on next use
@@ -208,7 +212,7 @@ def test_release_persisted_drains_all_session_state(spark, sf_dir):
 
     from gelly_streaming_spark.algos.triangles import triangle_count
     from gelly_streaming_spark.operators.graphstream import GraphStream
-    from gelly_streaming_spark.plans.memory import release_persisted
+    from gelly_streaming_spark.plans.memory import release_persisted, session_memo
     from gelly_streaming_spark.sources import edges as E
     from gelly_streaming_spark.streaming.sources import replay
 
@@ -231,29 +235,32 @@ def test_release_persisted_drains_all_session_state(spark, sf_dir):
         spark.range(8).selectExpr("id as src", "id+1 as dst"),
         None, 2, cache_key="release-test",
     )
-    staged_dirs = list(getattr(spark, "_gss_replay_stage", {}).values())
+    staged_dirs = list(session_memo(spark, "replay_stage").values())
     assert staged_dirs, "replay staging memo should be populated"
-    tri_memo = dict(getattr(spark, "_gss_tri_prep", {}) or {})
+    tri_memo = dict(session_memo(spark, "tri_prep"))
+    # the engine filled these memos above, so the names checked below
+    # are the engine's own
+    for name in ("copart", "tri_prep", "table_stage", "table_df"):
+        assert session_memo(spark, name), f"{name} memo should be populated"
     # ANN index memos (ADVICE r12: release used to drain the IVF memo
     # but not the PQ one, handing a later q54 call a stale codes frame
     # whose lineage referenced the restaged dirs release deletes).
     # Sentinel entries suffice: the contract under test is "release
     # drains the memo", not the index build itself (covered by q48/q54).
-    spark._gss_ivf_index = {("sf", 8): object()}  # noqa: SLF001
-    spark._gss_pq_index = {("sf", 8, 5): object()}  # noqa: SLF001
+    session_memo(spark, "ivf_index")[("sf", 8)] = object()
+    session_memo(spark, "pq_index")[("sf", 8, 5)] = object()
     # query-plan memo (r14): entries pin restaged-scan refs like the
     # table-plan memo — a sentinel proves release drains it
-    spark._gss_query_plan = {("q99", "sf"): object()}  # noqa: SLF001
+    session_memo(spark, "query_plan")[("q99", "sf")] = object()
 
     release_persisted(spark)
 
-    assert getattr(spark, "_gss_tri_prep", {}) == {}
-    assert getattr(spark, "_gss_tri_window_stats", {}) == {}
-    assert getattr(spark, "_gss_replay_stage", {}) == {}
-    assert getattr(spark, "_gss_table_df", {}) == {}
-    assert getattr(spark, "_gss_ivf_index", {}) == {}
-    assert getattr(spark, "_gss_pq_index", {}) == {}
-    assert getattr(spark, "_gss_query_plan", {}) == {}
+    for name in (
+        "persisted", "copart", "tri_prep", "tri_window_stats",
+        "replay_stage", "table_stage", "table_df", "query_plan",
+        "ivf_index", "pq_index",
+    ):
+        assert session_memo(spark, name) == {}, name
     for d in staged_dirs:
         assert not os.path.exists(d), f"staged dir leaked: {d}"
     # kernel broadcasts destroyed: destroyed broadcasts raise on .value
@@ -307,28 +314,67 @@ def test_query_plan_memo_identity_and_scope(spark, sf_dir):
     assert hasattr(q.fn, "__wrapped__")
 
 
-def test_bounded_take_one_pass_and_conf_restore(spark):
-    """Small estimated inputs drain in one job (the incremental
-    CollectLimit scale-up would cost a driver round-trip per 1→4→16
-    partition round); the session conf must be restored afterwards —
-    including when the probed plan throws mid-collect."""
+def test_session_state_lives_only_in_session_memo():
+    """Every session-lifetime memo goes through ``plans.memory``'s one
+    registry (``session_memo``), so ``release_persisted`` drains memos
+    it never names: no other engine module patches ``_gss_*`` state onto
+    a session."""
+    import pathlib
+
+    import gelly_streaming_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = [
+        f"{p.relative_to(root)}:{i}: {line.strip()}"
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "plans" / "memory.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "_gss_" in line
+    ]
+    assert not found, found
+
+
+def test_staging_dir_leaves_exit_list_once_removed():
+    """A staged dir stays on the exit hook's list until its memo's
+    release removes it; then it is gone from disk and from the list."""
+    import os
+
+    from gelly_streaming_spark.plans import memory
+
+    d = memory.session_tmpdir("gss_test_")
+    assert d in memory._SESSION_TMPDIRS  # noqa: SLF001
+    memory.remove_dir(d)
+    memory.remove_dir(None)  # the "nothing staged" entry
+    assert not os.path.exists(d)
+    assert d not in memory._SESSION_TMPDIRS  # noqa: SLF001
+
+
+def test_bounded_take_is_one_arrow_job(spark):
+    """The probe collects as Arrow in ONE job — no incremental
+    1→4→16-partition CollectLimit rounds — returns the ``+1`` overflow
+    sentinel past the bound, and surfaces a failure inside the plan."""
+    import uuid
+
     import pyspark.sql.functions as F
     import pytest
 
-    from gelly_streaming_spark.plans.probe import _CONF, bounded_take
+    from gelly_streaming_spark.plans.probe import bounded_take
 
-    before = spark.conf.get(_CONF, None)
     d = spark.range(0, 100, 1, 8).select(F.col("id").alias("v"))
-    rows = bounded_take(d, 1000)
-    assert len(rows) == 100
-    assert spark.conf.get(_CONF, None) == before
+    sc = spark.sparkContext
+    group = f"bounded-take-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bounded_take job count")
+    try:
+        tbl = bounded_take(d, 1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tbl.num_rows == 100
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     # overflow sentinel: n+1 rows come back when the bound is exceeded
-    assert len(bounded_take(d, 10)) == 11
-    # conf restored even when execution fails inside the probe
+    assert bounded_take(d, 10).num_rows == 11
     bad = d.select(F.expr("assert_true(v < 50)"), "v")
     with pytest.raises(Exception):
         bounded_take(bad, 1000)
-    assert spark.conf.get(_CONF, None) == before
 
 
 def test_loop_shuffle_width_sizes_and_restores_on_error(spark):

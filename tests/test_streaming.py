@@ -226,6 +226,30 @@ def test_incremental_triangles_powerlaw(spark, tmp_path):
     assert got == want
 
 
+def test_release_persisted_frees_foreach_batch_persists(spark, tmp_path):
+    """Persists made inside ``foreachBatch`` are released from the
+    caller's session: each batch runs on its own session object over the
+    caller's SparkContext, and the engine's memos live on that context.
+    K8 (56 triangles) replayed in 3 micro-batches."""
+    from itertools import combinations
+
+    from gelly_streaming_spark.plans.memory import release_persisted
+    from gelly_streaming_spark.streaming import IncrementalTriangleCount
+
+    cache = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+    release_persisted(spark)
+    before = cache.numCachedEntries()
+    k8 = spark.createDataFrame(
+        list(combinations(range(1, 9), 2)), "src long, dst long"
+    )
+    inc = IncrementalTriangleCount()
+    assert inc.run(replay(k8, str(tmp_path / "k8"), num_batches=3)) == 56
+    assert inc.history == [3, 22, 56]
+    assert cache.numCachedEntries() > before  # the batches persisted frames
+    assert release_persisted(spark) >= 1
+    assert cache.numCachedEntries() <= before
+
+
 def test_incremental_bipartiteness(spark, tmp_path):
     """G2 (bipartite) stays true; G3 (odd cycle) flips to false and the
     failure is absorbing across later batches."""
