@@ -21,7 +21,7 @@ Spark-native formulations:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField
 
@@ -98,13 +98,19 @@ def odd_vertex_reach(
     if small is not None:
         return small
     eu = _symmetrize(tagged_edges).localCheckpoint()
-    walk = (
+
+    def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+        # the walk only grows (union + distinct), so an unchanged row
+        # count is the fixpoint; it is observed on the checkpoint job
+        obs = Observation()
+        ckpt = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        return ckpt, obs.get["n"]
+
+    walk, prev = _checkpoint_counted(
         eu.select("graph", F.col("src").alias("root"))
         .distinct()
         .select("graph", "root", F.col("root").alias("id"), F.lit(0).alias("parity"))
-        .localCheckpoint()
     )
-    prev = walk.count()
     ckpt = walk  # the live checkpoint backing `walk`
     converged = False
     for _ in range(max_iter):
@@ -119,12 +125,11 @@ def odd_vertex_reach(
                 )
             )
             walk = walk.unionByName(nxt).distinct()
-        walk = walk.localCheckpoint()
+        walk, cur = _checkpoint_counted(walk)
         # free the superseded checkpoint (leaked blocks = storage-memory
         # pressure on every later query; an OOM at 100 TB)
         free_checkpoint(ckpt)
         ckpt = walk
-        cur = walk.count()
         if cur == prev:
             converged = True
             break
@@ -190,8 +195,6 @@ def bipartiteness_check(
     # equality ⟺ fixpoint. Replaces the old changed-rows join +
     # limit(1).count(), which cost one extra driver-synchronized job per
     # round on top of the checkpoint job that runs anyway.
-    from pyspark.sql import Observation
-
     def _sig_cols():
         return (
             F.count(F.lit(1)).alias("n"),

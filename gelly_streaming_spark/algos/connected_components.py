@@ -25,15 +25,15 @@ Two Spark-native implementations:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gelly_streaming_spark.operators.aggregation import SummaryAggregation
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import free_checkpoint, track_persist
-from gelly_streaming_spark.plans.probe import _estimated_bytes, driver_fast_path
-from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
+from gelly_streaming_spark.plans.memory import free_checkpoint
+from gelly_streaming_spark.plans.probe import driver_fast_path
+from gelly_streaming_spark.plans.shuffle import _estimated_bytes, loop_width_from_plan
 
 # Measured edge count above which the alternating-CC star operations
 # switch to their skew-safe (partial-agg + AQE-splittable join) form.
@@ -80,15 +80,18 @@ def connected_components(
     )
     if small is not None:
         return small
-    # Symmetrize once; reuse across every iteration.
-    eu = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-
-    # the width count over the just-materialized checkpoint is a cache read
-    with loop_shuffle_width(
-        stream.edges.sparkSession, eu.count(), aqe_off_when_tiny=True
-    ):
+    with loop_width_from_plan(e, aqe_off_when_tiny=True) as resize:
+        # Symmetrize once; reuse across every iteration. Its row count,
+        # observed on the checkpoint job, re-sizes the loop's width.
+        obs_e = Observation()
+        eu = (
+            e.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            .observe(obs_e, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        resize(obs_e.get["n"])
         # Convergence via an OBSERVED (count, exact label sum) signature
         # on each block's checkpoint job: per-vertex labels are
         # monotonically non-increasing under min-label steps, so the sum
@@ -97,8 +100,6 @@ def connected_components(
         # aggregation of the job that runs anyway instead of a separate
         # join + count job per block. decimal(38,0) keeps the sum exact
         # at any vertex count (a double would risk false convergence).
-        from pyspark.sql import Observation
-
         _SIG = lambda: (  # noqa: E731
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
@@ -215,13 +216,6 @@ def connected_components_alternating(
         if stats is not None:
             stats["rounds"] = 0
         return small
-    # track_persist, not bare persist: a mid-loop failure unwinds past
-    # the unpersist below, and an untracked frame would be invisible to
-    # release_persisted for the rest of the session.
-    e = track_persist(e)
-    e0 = e  # the persisted base edge set (read again by the final verts)
-
-    from pyspark.sql import Window
 
     # Every helper references its CHECKPOINTED input exactly once on the
     # window path: symmetrization is an explode (not a union of two
@@ -279,23 +273,22 @@ def connected_components_alternating(
 
     rounds = 0
     converged = False
-    # The first width comes BEFORE any job runs, from Catalyst's
-    # optimized-plan size estimate (parquet footer sizes — available
-    # without running a job, one partition per 64 MB); once round 1's
-    # observation returns the MEASURED contracted edge count, the loop
-    # re-sizes from that at 250k edges per partition.
-    est_bytes = _estimated_bytes(e)  # unknown → huge
+    # The first width comes from the plan estimate, before any job runs;
+    # once round 1's observation returns the MEASURED contracted edge
+    # count, the loop re-sizes from that at 250k edges per partition.
     if skew_safe is None:
         # auto: ~16 bytes/canonical edge — flip to the skew-safe star
         # ops when the estimate clears the threshold; re-decided per
         # round below once measured counts exist
-        skew["safe"] = est_bytes > _SKEW_SAFE_EDGES * 16
-    with loop_shuffle_width(
-        stream.edges.sparkSession, est_bytes, 64 << 20, aqe_off_when_tiny=True
-    ) as resize:
-        # No up-front checksum job: round 1 both materializes the
-        # persist and records the first (count, set-hash) signature via
-        # its observe(), so convergence tracking starts one round in.
+        skew["safe"] = _estimated_bytes(e) > _SKEW_SAFE_EDGES * 16
+    with loop_width_from_plan(e, aqe_off_when_tiny=True) as resize:
+        # The input is not persisted: only round 1 reads it, and that
+        # round's plan scans it once on both star-op forms (the
+        # skew-safe self joins reuse the distinct's exchange).
+        e0 = e
+        # No up-front checksum job: round 1 both reads the input and
+        # records the first (count, set-hash) signature via its
+        # observe(), so convergence tracking starts one round in.
         # The only input that loses a round to this is one that is
         # ALREADY a star forest (detected after 2 rounds instead of 1);
         # every other input saves a whole driver-synchronized job.
@@ -311,8 +304,6 @@ def connected_components_alternating(
         # per-round test (set unchanged by large∘small) is exactly the
         # round-function fixpoint the block-wise comparison tested, and
         # a fixpoint of the round function is a star forest.
-        from pyspark.sql import Observation
-
         while rounds < max_iter:
             obs = Observation()
             new_e = (
@@ -354,8 +345,8 @@ def connected_components_alternating(
         if not converged:
             # a partially-contracted forest is WRONG components, not a
             # slower answer — never return it silently
-            e0.unpersist()
-            free_checkpoint(e)
+            if e is not e0:
+                free_checkpoint(e)
             raise RuntimeError(
                 f"alternating CC did not reach the checksum fixpoint within "
                 f"max_iter={max_iter} rounds (O(log n) expected — raise max_iter)"
@@ -380,7 +371,6 @@ def connected_components_alternating(
             e.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()
         )
         out = labels.localCheckpoint()
-    e0.unpersist()
     free_checkpoint(e)
     return out
 

@@ -17,26 +17,37 @@ sum to < 1 on graphs with dangling mass, which is fine for the
 relative-ordering uses PageRank serves in curation (domain authority
 scoring over a link graph).
 
-100 TB shape: the loop-invariant (src, dst, outdeg) edge table is
-materialized ONCE (one agg + one co-keyed join, then localCheckpoint);
-each iteration is one src-keyed join against the |V|-row rank table,
-one dst-keyed partial/final sum, and one left join back to the vertex
-set — three keyed shuffles over monotonically |V|-bounded data, with
-the rank table checkpointed per round so the plan depth stays O(1)
-however many iterations run, at the width ``plans.shuffle`` sets from
-the measured edge count.
+100 TB shape: the whole distributed branch runs inside the loop's
+shuffle-width scope (``plans.shuffle``), sized from the edge plan's size
+estimate before the first job and re-sized from the observed edge count.
+The loop-invariant (src, dst, outdeg) edge table is materialized ONCE,
+in one job: the distinct edges, the out-degree as a window count over
+the src partition, and the edge count as an observation of the same
+checkpoint. The vertex table is a second checkpoint, built from that
+one, with the vertex count (and, when personalized, the number of
+sources) observed on it; the driver runs no count job. Each iteration is
+one src-keyed join against the |V|-row rank table, one dst-keyed
+partial/final sum, and one left join back to the vertex set — three
+keyed shuffles over monotonically |V|-bounded data, with the rank table
+checkpointed every ``checkpoint_every`` rounds and after the last, so
+the plan depth stays O(1) however many iterations run. A forced
+3-iteration run on the q56d graph (sf0.1, ``local[4]``) is 7 jobs,
+the caller's collect included: the two invariant checkpoints, the
+final rank checkpoint, the broadcasts of three small in-loop tables and
+the collect. Built outside the width scope and counted by separate
+``count()`` jobs, the same run took 14.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField
 
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
 from gelly_streaming_spark.plans.probe import driver_fast_path
-from gelly_streaming_spark.plans.shuffle import loop_shuffle_width
+from gelly_streaming_spark.plans.shuffle import loop_width_from_plan
 
 
 def _round_pr_exact(fr) -> float:
@@ -174,62 +185,67 @@ def pagerank(
         stats["fast_path"] = small is not None
     if small is not None:
         return small
-    e = e_plan.localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = verts.count()
-    if n == 0:
-        # Empty edge stream: 1/n and (1-d)/n are undefined. Return the
-        # empty (id, pr) frame, typed as the non-empty answer, instead of
-        # an opaque ZeroDivisionError (ADVICE r12) — the checkpoints just
-        # created are freed since nothing downstream will reference them.
-        free_checkpoint(e)
-        free_checkpoint(verts)
-        return verts.select(
-            F.col("id"), F.lit(None).cast("double").alias("pr")
-        ).where(F.lit(False))
     eo = None
-    ranks = None
-    vt = verts
+    verts = None
     try:
-        with loop_shuffle_width(
-            stream.edges.sparkSession, e.count(), aqe_off_when_tiny=True
-        ):
-            od = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-            eo = e.join(od, "src").localCheckpoint()  # loop-invariant
-            if sources is not None:
-                s = (
-                    sources.select(F.col(sources.columns[0]).alias("id"))
-                    .distinct()
-                    .join(verts, "id", "left_semi")
+        with loop_width_from_plan(e_plan, aqe_off_when_tiny=True) as resize:
+            # loop-invariant (src, dst, outdeg) table and its edge count:
+            # one job — the out-degree is a window over the src partition
+            # the distinct's output is shuffled into
+            obs_e = Observation()
+            eo = (
+                e_plan.withColumn(
+                    "deg",
+                    F.count(F.lit(1)).over(Window.partitionBy("src")).cast("double"),
                 )
-                ns = s.count()
+                .observe(obs_e, F.count(F.lit(1)).alias("m"))
+                .localCheckpoint()
+            )
+            ids = (
+                eo.select(F.col("src").alias("id"))
+                .unionByName(eo.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+            sig = [F.count(F.lit(1)).alias("n")]
+            if sources is not None:
+                # the source flag rides the vertex checkpoint, and |S ∩ V|
+                # is observed on the same job
+                s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+                ids = ids.join(s.withColumn("_s", F.lit(True)), "id", "left")
+                sig.append(F.count_if(F.col("_s")).alias("ns"))
+            obs_v = Observation()
+            verts = ids.observe(obs_v, *sig).localCheckpoint()
+            counts = obs_v.get
+            n = counts["n"]
+            if n == 0:
+                # Empty edge stream: 1/n and (1-d)/n are undefined. Return
+                # the empty (id, pr) frame, typed as the non-empty answer,
+                # instead of an opaque ZeroDivisionError (ADVICE r12); the
+                # plan reads no checkpoint the finally below frees.
+                return verts.select(
+                    F.col("id"), F.lit(None).cast("double").alias("pr")
+                ).where(F.lit(False))
+            resize(obs_e.get["m"])
+            if sources is None:
+                vt = verts
+                ranks = verts.withColumn("r", F.lit(1.0 / n))
+            else:
+                ns = counts["ns"]
                 if ns == 0:
                     raise ValueError(
                         "pagerank: sources is empty (or disjoint from the graph) "
                         "— personalized teleport mass is undefined"
                     )
-                # teleport column rides the checkpointed vertex table; the
-                # per-round left join below reads vt either way, so the
+                # the per-round left join below reads vt either way, so the
                 # personalized loop costs no extra shuffle
-                vt = verts.join(
-                    s.withColumn("_s", F.lit(True)), "id", "left"
-                ).select(
+                vt = verts.select(
                     "id",
                     F.when(F.col("_s"), F.lit(1.0 / ns))
                     .otherwise(F.lit(0.0))
                     .alias("tele"),
-                ).localCheckpoint()
+                )
+                ranks = vt.select("id", F.col("tele").alias("r"))
             base = (1.0 - damping) / n
-            ranks = (
-                verts.withColumn("r", F.lit(1.0 / n))
-                if sources is None
-                else vt.select("id", F.col("tele").alias("r"))
-            )
             prev_ckpt = None  # the superseded rank checkpoint, freed after its successor lands
             for i in range(iters):
                 contribs = eo.join(ranks, eo["src"] == ranks["id"]).select(
@@ -256,18 +272,12 @@ def pagerank(
                     prev_ckpt = new
                 ranks = new
     finally:
-        free_checkpoint(e)
-        if eo is not None:
-            free_checkpoint(eo)
-        # verts (and the personalized teleport table) stay referenced by
-        # nothing downstream; the returned plan reads only the final
-        # ranks checkpoint. Inside finally (ADVICE r14): an exception
-        # mid-loop otherwise leaks both |V|-row checkpoints until GC.
-        # vt is verts until the personalized table lands, so the guard
-        # also covers an exception before that checkpoint exists.
-        free_checkpoint(verts)
-        if vt is not verts:
-            free_checkpoint(vt)
+        # The returned plan reads only the final ranks checkpoint. Inside
+        # finally (ADVICE r14): an exception mid-loop otherwise leaks the
+        # loop-invariant checkpoints until GC.
+        for ckpt in (eo, verts):
+            if ckpt is not None:
+                free_checkpoint(ckpt)
     # Double-round (9dp then 6dp), matched verbatim in the oracles: a
     # concentrated teleport produces near-dyadic ranks landing EXACTLY
     # on 6dp boundaries (0.0053125 at q68/sf0.001), where a ~1-ulp

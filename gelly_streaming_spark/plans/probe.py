@@ -39,15 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
-        )
-    except Exception:
-        return 1 << 62  # unknown — treat as large
-
-
 def bounded_take(df: DataFrame, n: int) -> pa.Table:
     """Collect at most ``n + 1`` rows of ``df`` (the ``+1`` is the
     caller's overflow sentinel) as a ``pyarrow.Table``."""

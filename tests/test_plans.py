@@ -409,6 +409,27 @@ def test_loop_shuffle_width_sizes_and_restores_on_error(spark):
         spark.conf.set(aqe, before[1])
 
 
+def test_loop_width_from_plan_sizes_by_bytes_then_by_rows(spark):
+    """A loop's first width comes from its plan estimate (64 MB per
+    partition, before any job runs); ``resize`` then takes a measured ROW
+    count at 500k rows per partition, not bytes."""
+    from gelly_streaming_spark.plans.shuffle import loop_width_from_plan
+
+    parts, aqe = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before = (spark.conf.get(parts), spark.conf.get(aqe))
+    small = spark.sql("SELECT * FROM VALUES (1, 2), (2, 3) AS t(src, dst)")
+    try:
+        spark.conf.set(parts, "8")
+        spark.conf.set(aqe, "true")
+        with loop_width_from_plan(small, aqe_off_when_tiny=True) as resize:
+            assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("1", "false")
+            assert resize(3_000_000) == 7
+        assert (spark.conf.get(parts), spark.conf.get(aqe)) == ("8", "true")
+    finally:
+        spark.conf.set(parts, before[0])
+        spark.conf.set(aqe, before[1])
+
+
 def test_fixture_graphs_are_local_relations(spark):
     """Fixtures must stay driver-local data: a parallelized
     createDataFrame puts ≤9 rows in defaultParallelism RDD slices, so
