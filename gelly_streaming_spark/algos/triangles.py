@@ -31,6 +31,13 @@ from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import session_memo, track_persist
 from gelly_streaming_spark.plans.probe import bounded_take
 
+# Canonical edges the global count collects and broadcasts to the numpy
+# kernel (≈ 16 B/edge, a broadcast hash join's build-side scale); past
+# it the degree-ordered join plan runs.
+_BROADCAST_LIMIT = 5_000_000
+# Largest window (canonical edges) the windowed count solves in one task.
+_PER_WINDOW_LIMIT = 500_000
+
 
 def _canonical(edges: DataFrame, extra_keys: list[str] | None = None) -> DataFrame:
     keys = extra_keys or []
@@ -65,7 +72,7 @@ def _oriented_triangles(
         .agg(F.count(F.lit(1)).alias("d"))
     )
     # NO static broadcast hints here: this path is selected precisely
-    # when the edge set exceeds broadcast_limit, so the adjacency table
+    # when the edge set exceeds _BROADCAST_LIMIT, so the adjacency table
     # (whose arrays carry the WHOLE oriented edge list) and the O(V) deg
     # table can both exceed the broadcast hard limit at scale — a forced
     # hint would drive the 100 TB path into a driver OOM. AQE's runtime
@@ -121,8 +128,6 @@ def triangle_count(
     *,
     canonical: bool = False,
     materialized: bool = False,
-    strategy: str = "auto",
-    broadcast_limit: int = 5_000_000,
 ) -> DataFrame:
     """Exact global triangle count: one row (n_triangles).
 
@@ -130,23 +135,22 @@ def triangle_count(
     e.g. the shared copart materialization — skipping a redundant dedup
     shuffle; ``materialized=True`` additionally skips the persist.
 
-    Physical strategies (the global analog of the windowed auto-pick):
+    One selection rule, from the edge count: a bounded collect of at
+    most ``_BROADCAST_LIMIT + 1`` canonical edges is both the size probe
+    and the build side.
 
-    - ``"broadcast_kernel"``: build the canonical edge arrays driver-side
-      (exactly a broadcast hash join's build: bounded by
-      ``broadcast_limit`` edges ≈ 16 B/edge), broadcast them, and run the
-      vectorized numpy kernel in parallel slices — task *i* generates the
-      wedges of pivot vertices with ``u % P == i`` and probes the shared
-      membership array. Replaces 3 shuffles + 4 broadcast builds with one
-      broadcast + one P-task stage (measured 4.2 s → ~1 s at sf0.1,
-      m=1.2 M, 41 M wedges).
-    - ``"joins"``: the degree-ordered broadcast-join plan — the scale
-      path when the edge set itself is too large to broadcast.
-    - ``"auto"``: pick by edge count (one cheap count on the — usually
-      already materialized — canonical set).
+    - At most ``_BROADCAST_LIMIT`` edges: the broadcast kernel — build
+      the canonical edge arrays driver-side (exactly a broadcast hash
+      join's build, ≈ 16 B/edge), broadcast them, and run the
+      vectorized numpy kernel in parallel slices — task *i* generates
+      the wedges of pivot vertices with ``u % P == i`` and probes the
+      shared membership array. Replaces 3 shuffles + 4 broadcast builds
+      with one broadcast + one P-task stage (measured 4.2 s → ~1 s at
+      sf0.1, m=1.2 M, 41 M wedges).
+    - More: the degree-ordered join plan — the scale path when the edge
+      set itself is too large to broadcast.
     """
     e = stream.edges if canonical else _canonical(stream.edges)
-    tbl = None
     spark = stream.edges.sparkSession
     # Probe + prepped-broadcast memo per (SparkContext, frame identity)
     # — shared by every session and every foreachBatch batch on the
@@ -164,46 +168,24 @@ def triangle_count(
     memo = session_memo(spark, "tri_prep", _destroy_broadcast)
     mkey = id(e) if materialized else None
     cached = memo.get(mkey) if mkey is not None else None
-    if strategy == "auto":
-        if not materialized:
-            e = track_persist(e)
-            materialized = True
-        if cached is not None:
-            nrows = cached[1]
-        else:
-            # the size probe IS the build-side collect: grab at most
-            # broadcast_limit+1 rows — if the limit spills over, fall to
-            # the joins plan having transferred a bounded amount, else
-            # the arrow table is already in hand (no separate count job)
-            tbl = bounded_take(e.select("src", "dst"), broadcast_limit)
-            nrows = tbl.num_rows
-            if mkey is not None and nrows > broadcast_limit:
-                # memoize the joins decision too: the next call must not
-                # re-collect broadcast_limit rows just to re-learn it
-                memo[mkey] = (e, nrows, None)
-        strategy = "broadcast_kernel" if nrows <= broadcast_limit else "joins"
-
-    if strategy == "broadcast_kernel":
-        if cached is not None and cached[2] is not None:
-            nrows, bc = cached[1], cached[2]
-        else:
-            if tbl is None:
-                # a caller-forced strategy gets the same bound as the probe
-                tbl = bounded_take(e.select("src", "dst"), broadcast_limit)
-                if tbl.num_rows > broadcast_limit:
-                    raise ValueError(
-                        f"triangle_count: strategy='broadcast_kernel' needs at "
-                        f"most broadcast_limit={broadcast_limit} canonical "
-                        f"edges; this input has more — use strategy='joins' "
-                        f"or 'auto'"
-                    )
-            nrows = tbl.num_rows
+    if not materialized:
+        e = track_persist(e)
+    if cached is not None:
+        nrows, bc = cached[1], cached[2]
+    else:
+        # the size probe IS the build-side collect: grab at most
+        # _BROADCAST_LIMIT+1 rows — if the limit spills over, fall to
+        # the joins plan having transferred a bounded amount, else
+        # the arrow table is already in hand (no separate count job)
+        tbl = bounded_take(e.select("src", "dst"), _BROADCAST_LIMIT)
+        nrows, bc = tbl.num_rows, None
+        if nrows <= _BROADCAST_LIMIT:
             if nrows < 3:
                 prep = None
             else:
                 # Driver-side vectorized prep over the ALREADY-collected
-                # Arrow table (the strategy probe's bounded_take IS the
-                # build-side collect, capped at broadcast_limit edges).
+                # Arrow table (the size probe's bounded_take IS the
+                # build-side collect, capped at _BROADCAST_LIMIT edges).
                 # The r16 _tri_prep_spark variant ran the degree/orient/
                 # sort work as two distributed sort jobs + two MORE full
                 # Arrow collects of the same m rows — measured r17 on the
@@ -219,8 +201,12 @@ def triangle_count(
                     tbl["dst"].to_numpy().astype(np.int64),
                 )
             bc = spark.sparkContext.broadcast(prep)
-            if mkey is not None:
-                memo[mkey] = (e, nrows, bc)
+        if mkey is not None:
+            # memoize the joins decision too (bc None): the next call
+            # must not re-collect _BROADCAST_LIMIT rows just to re-learn it
+            memo[mkey] = (e, nrows, bc)
+
+    if bc is not None:
         # 2 slices per core for stragglers: slice work is skew-prone
         # (pivot degree varies); each local python worker deserializes
         # the broadcast once (~15 MB), negligible vs the wedge work
@@ -248,7 +234,7 @@ def triangle_count(
             F.coalesce(F.sum("tri"), F.lit(0)).alias("n_triangles")
         )
 
-    per_edge = _oriented_triangles(e, keys=[], materialized=materialized)
+    per_edge = _oriented_triangles(e, keys=[], materialized=True)
     return per_edge.groupBy().agg(
         F.coalesce(F.sum("tri"), F.lit(0)).alias("n_triangles")
     )
@@ -361,23 +347,22 @@ def _count_triangles_numpy(src, dst) -> int:
 def triangle_count_windowed(
     stream: GraphStream | None = None,
     size: str = "1 day",
-    strategy: str = "auto",
-    per_window_limit: int = 500_000,
     canonical_bucketed: DataFrame | None = None,
 ) -> DataFrame:
     """Triangles whose three edges share one tumbling window:
     rows (bucket, n_triangles).
 
-    Windows are independent subproblems, so two physical strategies:
+    Windows are independent subproblems. One selection rule, from one
+    cheap max-window-size aggregation (the AQE move: choose the
+    physical plan from data stats):
 
-    - ``"partitioned"``: one shuffle on the window key, count each
-      window in-task (vectorized numpy degree-oriented intersection over
-      Arrow batches). Optimal while every window fits a task.
-    - ``"joins"``: the degree-ordered broadcast-join plan (shared with
-      the global count) — windows larger than a task's memory stay
-      distributed. The scale-safe default for unbounded window sizes.
-    - ``"auto"``: one cheap max-window-size aggregation picks between
-      them (the AQE move: choose the physical plan from data stats).
+    - Largest window at most ``_PER_WINDOW_LIMIT`` edges: partitioned —
+      one shuffle on the window key, count each window in-task
+      (vectorized numpy degree-oriented intersection over Arrow
+      batches).
+    - Larger: the degree-ordered broadcast-join plan (shared with the
+      global count) — windows larger than a task's memory stay
+      distributed.
 
     ``canonical_bucketed`` short-circuits edge preparation with an
     already-(bucket, src<dst, distinct) materialized frame (the shared
@@ -385,49 +370,44 @@ def triangle_count_windowed(
     unused and may be omitted (building a raw edge plan just to fill the
     parameter would cost a full Catalyst analysis per call for nothing).
     """
+    # The stats probe is memoized per (SparkContext, frame identity) —
+    # shared by every session and every foreachBatch batch on the
+    # context — ONLY for caller-materialized session-lifetime views
+    # (the shared copart frame): a repeated call over one re-derives
+    # identical stats, so the probe job would be pure repeat cost,
+    # and the caller's held reference keeps id() stable. A call-local
+    # frame's id() can never hit again — memoizing it would only pin
+    # the frame until the memo is released.
     if canonical_bucketed is not None:
-        e, materialized = canonical_bucketed, True
+        e, key = canonical_bucketed, id(canonical_bucketed)
     else:
         if stream is None:
             raise ValueError(
                 "triangle_count_windowed needs `stream` when no "
                 "canonical_bucketed frame is supplied"
             )
-        e = _canonical(
-            stream.edges.withColumn("bucket", F.window("ts", size).start),
-            extra_keys=["bucket"],
-        )
-        materialized = False
-    if strategy == "auto":
-        # materialize once: the stats probe and the chosen strategy both
+        # materialize once: the stats probe and the chosen plan both
         # consume the canonicalized edges (else the dedup runs twice)
-        caller_materialized = materialized
-        if not materialized:
-            e = track_persist(e)
-            materialized = True
-        # The probe is memoized per (SparkContext, frame identity) —
-        # shared by every session and every foreachBatch batch on the
-        # context — ONLY for caller-materialized session-lifetime views
-        # (the shared copart frame): a repeated call over one re-derives
-        # identical stats, so the probe job would be pure repeat cost,
-        # and the caller's held reference keeps id() stable. A call-local
-        # frame's id() can never hit again — memoizing it would only pin
-        # the frame until the memo is released.
-        memo = session_memo(e.sparkSession, "tri_window_stats")
-        key = id(e) if caller_materialized else None
-        if key is None or key not in memo:
-            mx = (
-                e.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
-                .agg(F.max("c").alias("m"))
-                .collect()[0]["m"]
+        e = track_persist(
+            _canonical(
+                stream.edges.withColumn("bucket", F.window("ts", size).start),
+                extra_keys=["bucket"],
             )
-            if key is not None:
-                memo[key] = (e, mx)
-        else:
-            mx = memo[key][1]
-        strategy = "partitioned" if (mx or 0) <= per_window_limit else "joins"
+        )
+        key = None
+    memo = session_memo(e.sparkSession, "tri_window_stats")
+    if key is None or key not in memo:
+        mx = (
+            e.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
+            .agg(F.max("c").alias("m"))
+            .collect()[0]["m"]
+        )
+        if key is not None:
+            memo[key] = (e, mx)
+    else:
+        mx = memo[key][1]
 
-    if strategy == "partitioned":
+    if (mx or 0) <= _PER_WINDOW_LIMIT:
         import pandas as pd
 
         def count_tri(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -442,7 +422,7 @@ def triangle_count_windowed(
             count_tri, "bucket timestamp, n_triangles long"
         )
     else:
-        per_edge = _oriented_triangles(e, keys=["bucket"], materialized=materialized)
+        per_edge = _oriented_triangles(e, keys=["bucket"], materialized=True)
         out = per_edge.groupBy("bucket").agg(F.sum("tri").alias("n_triangles"))
     return out.where(F.col("n_triangles") > 0)
 

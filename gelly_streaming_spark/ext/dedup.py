@@ -171,7 +171,6 @@ def near_dup_collapse(
     text_col: str = "text",
     threshold: float = 0.95,
     tokens: Column | None = None,
-    method: str = "exact",
     small_input_rows: int = 1_000_000,
 ) -> DataFrame:
     """Collapse near-duplicate clusters to one kept representative each:
@@ -198,10 +197,10 @@ def near_dup_collapse(
     sum of member group sizes. The rep id is its group's minimum doc id,
     so the component minimum over reps IS the cluster's minimum doc id.
 
-    ``method="exact"`` scores rep pairs with the exact ppjoin/bitset
-    path (oracle-checkable — q31); ``"minhash"`` uses the MinHash-LSH
-    candidate path (the 100 TB default, identical collapse semantics,
-    property-tested recall).
+    Rep pairs are scored exactly (oracle-checkable — q31) by
+    ``jaccard_rep_pairs``, which picks the bitset kernel or the ppjoin
+    join from the measured vocabulary size (the rule ``jaccard_pairs``
+    states).
 
     ``small_input_rows`` caps the driver union-find fast path over the
     rep pair graph (default 1 M edges — see the inline measurement);
@@ -211,7 +210,7 @@ def near_dup_collapse(
     from gelly_streaming_spark.algos.connected_components import connected_components
     from gelly_streaming_spark.operators.graphstream import GraphStream
     from gelly_streaming_spark.ext.similarity import jaccard_rep_pairs
-    from gelly_streaming_spark.plans.memory import free_checkpoint, track_persist
+    from gelly_streaming_spark.plans.memory import free_checkpoint
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(
@@ -223,58 +222,42 @@ def near_dup_collapse(
     # on a corpus with irregular whitespace (a single-space split kept
     # empty tokens and scored 'a b' vs 'a  b' at 2/3 instead of 1).
     toks = tokens if tokens is not None else tokenize(F.col(text_col))
-    if method == "exact":
-        # Rep-level collapse: jaccard_rep_pairs already groups docs
-        # with IDENTICAL token sets (a superset of identical-text
-        # groups — identical text always tokenizes identically) and
-        # scores one min-id representative per cluster. CC needs only
-        # the rep graph: a non-rep member's edges mirror its rep's
-        # edges exactly (Jaccard is a function of the token set), so
-        # components over the expanded member graph restricted to reps
-        # EQUAL components over the rep graph — and since each rep is
-        # its cluster's minimum id, the component-min over reps IS the
-        # cluster's minimum doc id. Skipping the member expansion cuts
-        # the CC input 93× at sf0.1 (2,049 rep pairs vs 190,910
-        # expanded pairs) and removes the old pre-pass md5 collapse
-        # (one full-corpus agg + semi-join) entirely.
-        grp, rep_pairs = jaccard_rep_pairs(docs, id_col, toks, threshold)
-        mem = grp.select(
-            F.element_at("ids", 1).alias("_rep"),
-            F.size("ids").cast("long").alias("_grp_n"),
-        )
-        # Token-LESS docs (null / empty / whitespace-only text) never
-        # enter the inverted index — explode of an empty token array
-        # emits no rows — but they are still corpus rows the collapse
-        # must account for. They can never merge with anything (a merge
-        # needs a shared token), so they cluster by IDENTICAL TEXT (md5,
-        # the same grouping the oracle's first CTE applies; note "" and
-        # " " both tokenize to [] but are DIFFERENT texts → different
-        # singleton clusters, exactly as a pairwise-Jaccard oracle that
-        # computes intersections from shared-token rows decides).
-        no_tok = docs.where(
-            F.coalesce(F.size(toks), F.lit(0)) <= 0
-        )
-        extra = no_tok.groupBy(
-            F.md5(F.col(text_col).cast("binary")).alias("_h")
-        ).agg(
-            F.min(id_col).alias("_rep"),
-            F.count(F.lit(1)).cast("long").alias("_grp_n"),
-        )
-        mem = mem.unionByName(extra.select("_rep", "_grp_n"))
-        pairs = rep_pairs
-    elif method == "minhash":
-        grp = track_persist(
-            docs.groupBy(F.md5(F.col(text_col).cast("binary")).alias("_h")).agg(
-                F.min(id_col).alias("_rep"), F.count(F.lit(1)).alias("_grp_n")
-            )
-        )
-        reps = docs.join(
-            grp.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
-        )
-        mem = grp.select("_rep", "_grp_n")
-        pairs = minhash_lsh_pairs(reps, id_col, toks, threshold)
-    else:
-        raise ValueError(f"unknown method {method!r} (exact|minhash)")
+    # Rep-level collapse: jaccard_rep_pairs already groups docs
+    # with IDENTICAL token sets (a superset of identical-text
+    # groups — identical text always tokenizes identically) and
+    # scores one min-id representative per cluster. CC needs only
+    # the rep graph: a non-rep member's edges mirror its rep's
+    # edges exactly (Jaccard is a function of the token set), so
+    # components over the expanded member graph restricted to reps
+    # EQUAL components over the rep graph — and since each rep is
+    # its cluster's minimum id, the component-min over reps IS the
+    # cluster's minimum doc id. Skipping the member expansion cuts
+    # the CC input 93× at sf0.1 (2,049 rep pairs vs 190,910
+    # expanded pairs).
+    grp, rep_pairs = jaccard_rep_pairs(docs, id_col, toks, threshold)
+    mem = grp.select(
+        F.element_at("ids", 1).alias("_rep"),
+        F.size("ids").cast("long").alias("_grp_n"),
+    )
+    # Token-LESS docs (null / empty / whitespace-only text) never
+    # enter the inverted index — explode of an empty token array
+    # emits no rows — but they are still corpus rows the collapse
+    # must account for. They can never merge with anything (a merge
+    # needs a shared token), so they cluster by IDENTICAL TEXT (md5,
+    # the same grouping the oracle's first CTE applies; note "" and
+    # " " both tokenize to [] but are DIFFERENT texts → different
+    # singleton clusters, exactly as a pairwise-Jaccard oracle that
+    # computes intersections from shared-token rows decides).
+    no_tok = docs.where(
+        F.coalesce(F.size(toks), F.lit(0)) <= 0
+    )
+    extra = no_tok.groupBy(
+        F.md5(F.col(text_col).cast("binary")).alias("_h")
+    ).agg(
+        F.min(id_col).alias("_rep"),
+        F.count(F.lit(1)).cast("long").alias("_grp_n"),
+    )
+    mem = mem.unionByName(extra.select("_rep", "_grp_n"))
     # Materialize the rep pair graph ONCE: CC's adaptive probe and (on
     # the distributed path) its symmetrization both read the input, and
     # the pair pipeline behind it is the query's expensive half —
@@ -284,7 +267,7 @@ def near_dup_collapse(
     # distributed path its own label checkpoint), so the blocks are
     # freed immediately after.
     pair_edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        rep_pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .localCheckpoint()
     )
     try:

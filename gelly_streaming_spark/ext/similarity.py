@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.plans.memory import track_persist
+from gelly_streaming_spark.plans.probe import bounded_take
 
 
 def token_sets(docs: DataFrame, id_col: str, tokens: Column) -> DataFrame:
@@ -172,9 +173,6 @@ def jaccard_pairs(
     id_col: str,
     tokens: Column,
     threshold: float,
-    prefix_filter: bool = True,
-    prefix_order: str = "df",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact all-pairs Jaccard ≥ threshold: rows (a, b, jaccard), a < b.
     Thin wrapper over ``jaccard_rep_pairs`` that expands representative
@@ -184,17 +182,14 @@ def jaccard_pairs(
     output directly and skip the clique expansion entirely.
 
     jaccard is computed from exact integer set sizes ⇒ bit-identical
-    across engines (int ratio in IEEE double). ``prefix_filter=False``
-    falls back to the naive full inverted-index join (testing aid).
+    across engines (int ratio in IEEE double).
 
-    ``prefix_order`` picks the global token order behind the prefix
-    filter — ANY total order is exact; the choice trades candidate count
-    against ordering cost:
-    - ``"df"``: rare-first (document frequency) — fewest candidates, but
-      pays a token-frequency aggregation + join over the full index;
-    - ``"hash"``: xxhash64 order — pseudo-random, zero extra passes;
-      right when prefixes are short (high thresholds) so candidate
-      inflation is bounded anyway.
+    One selection rule, from the measured input: when the distinct
+    vocabulary has at most ``_BITSET_VOCAB_LIMIT`` tokens, the ids are
+    integral and there are at most ``_BITSET_SETS_LIMIT`` distinct token
+    sets, pairs come from the exact bitset all-pairs kernel; otherwise
+    from the ppjoin prefix-filter join, whose global token order is
+    rare-first (document frequency) — the fewest candidates.
 
     Exact-duplicate collapse (the standard first pass of any dedup
     pipeline, and the part that survives a duplicate-heavy 100 TB
@@ -208,9 +203,7 @@ def jaccard_pairs(
     Jaccard exactly 1, cross-cluster pairs inherit their representatives'
     value (Jaccard is a function of the token sets alone).
     """
-    grp, rep_pairs = jaccard_rep_pairs(
-        docs, id_col, tokens, threshold, prefix_filter, prefix_order, strategy
-    )
+    grp, rep_pairs = jaccard_rep_pairs(docs, id_col, tokens, threshold)
     return _expand_rep_pairs(grp, rep_pairs, threshold)
 
 
@@ -219,9 +212,6 @@ def jaccard_rep_pairs(
     id_col: str,
     tokens: Column,
     threshold: float,
-    prefix_filter: bool = True,
-    prefix_order: str = "df",
-    strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Cluster-level core of ``jaccard_pairs``: returns
     ``(grp, rep_pairs)`` where ``grp`` is the identical-token-set
@@ -234,11 +224,9 @@ def jaccard_rep_pairs(
     carry no information beyond the cluster row itself. Consumers that
     reduce over cluster structure (near_dup_collapse's connected
     components) stay at rep level — measured at sf0.1/θ=0.95: 2,049
-    rep pairs vs 190,910 expanded pairs, a 93× smaller CC input."""
-    if strategy not in ("auto", "ppjoin", "bitset"):
-        raise ValueError(
-            f"unknown strategy {strategy!r} (auto|ppjoin|bitset)"
-        )
+    rep pairs vs 190,910 expanded pairs, a 93× smaller CC input.
+    Picks the bitset kernel or the ppjoin join by the rule
+    ``jaccard_pairs`` states."""
     # Per-doc sorted distinct token arrays ROW-LOCALLY:
     # array_sort(array_distinct(...)) needs no shuffle at all, where the
     # old explode → distinct → groupBy/collect_list chain moved the full
@@ -272,122 +260,77 @@ def jaccard_rep_pairs(
     id_integral = reps.schema["id"].dataType.typeName() in (
         "long", "integer", "short", "byte"
     )
-    vocab = None
-    if strategy in ("auto", "bitset"):
-        from gelly_streaming_spark.plans.probe import bounded_take
-
-        vocab_tbl = bounded_take(
-            reps.select(F.explode("toks").alias("token")).distinct(),
-            _BITSET_VOCAB_LIMIT,
-        )
-        if vocab_tbl.num_rows <= _BITSET_VOCAB_LIMIT:
-            vocab = sorted(vocab_tbl["token"].to_pylist())
-    if strategy == "auto":
-        strategy = (
-            "bitset"
-            if vocab is not None and id_integral
-            and grp.count() <= _BITSET_SETS_LIMIT
-            else "ppjoin"
-        )
-    if strategy == "bitset":
-        # forced bitset keeps the SAME bounds the auto path enforces:
-        # reps.toArrow() below is a driver collect, legal only under the
-        # documented set/vocab limits.
-        if vocab is None:
-            raise ValueError(
-                f"bitset strategy requires ≤{_BITSET_VOCAB_LIMIT} distinct tokens"
-            )
-        if not id_integral:
-            raise ValueError(
-                "bitset strategy requires an integral id column "
-                f"(got {reps.schema['id'].dataType.simpleString()})"
-            )
-        if grp.count() > _BITSET_SETS_LIMIT:
-            raise ValueError(
-                f"bitset strategy bounded at {_BITSET_SETS_LIMIT} distinct "
-                "token sets (driver-collected mask matrix) — use "
-                "strategy='ppjoin' past that"
-            )
+    vocab_tbl = bounded_take(
+        reps.select(F.explode("toks").alias("token")).distinct(),
+        _BITSET_VOCAB_LIMIT,
+    )
+    # reps.toArrow() in the bitset kernel is a driver collect, legal
+    # only under the set/vocab limits checked here
+    if (
+        vocab_tbl.num_rows <= _BITSET_VOCAB_LIMIT
+        and id_integral
+        and grp.count() <= _BITSET_SETS_LIMIT
+    ):
+        vocab = sorted(vocab_tbl["token"].to_pylist())
         return grp, _bitset_rep_pairs(docs.sparkSession, reps, threshold, vocab)
 
     tok = track_persist(reps.select("id", F.explode("toks").alias("token")))
-    sizes = reps.select("id", F.size("toks").alias("n"))
-
-    if prefix_filter:
-        # Per-doc position by the chosen global order; keep the first
-        # n - ceil(t*n) + 1 tokens.
-        if prefix_order == "df":
-            tdf = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-            ranked = tok.join(tdf, "token")
-            pos_w = Window.partitionBy("id").orderBy("df", "token")
-        else:
-            ranked = tok.withColumn("_h", F.xxhash64("token"))
-            pos_w = Window.partitionBy("id").orderBy("_h", "token")
-        n_w = Window.partitionBy("id")
-        # checkpoint: both sides of the candidate self-join scan the
-        # prefix — without the cut, the double-window subtree runs twice
-        pref = (
-            ranked
-            .withColumn("pos", F.row_number().over(pos_w))
-            .withColumn("n", F.count(F.lit(1)).over(n_w))
-            .where(
-                F.col("pos")
-                <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-            )
-            .select("id", "token", "pos", "n")
+    # Per-doc position by rare-first global order; keep the first
+    # n - ceil(t*n) + 1 tokens.
+    tdf = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    ranked = tok.join(tdf, "token")
+    pos_w = Window.partitionBy("id").orderBy("df", "token")
+    n_w = Window.partitionBy("id")
+    # checkpoint: both sides of the candidate self-join scan the
+    # prefix — without the cut, the double-window subtree runs twice
+    pref = (
+        ranked
+        .withColumn("pos", F.row_number().over(pos_w))
+        .withColumn("n", F.count(F.lit(1)).over(n_w))
+        .where(
+            F.col("pos")
+            <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
         )
-        pref = track_persist(pref)
-        pa = pref.select(
-            F.col("id").alias("a"), "token",
-            F.col("pos").alias("pa"), F.col("n").alias("na"),
-        )
-        pb = pref.select(
-            F.col("id").alias("b"), "token",
-            F.col("pos").alias("pb"), F.col("n").alias("nb"),
-        )
-        # overlap lower bound α = ceil(t/(1+t)·(na+nb)); the positional
-        # (ppjoin) filter drops a shared prefix token that cannot be the
-        # start of α common tokens given what remains after each position
-        alpha = F.ceil(
-            F.lit(threshold) / F.lit(1.0 + threshold) * (F.col("na") + F.col("nb"))
-        )
-        cand = (
-            pa.join(pb, "token")
-            .where(
-                (F.col("a") < F.col("b"))
-                & (F.col("nb") >= F.ceil(F.lit(threshold) * F.col("na")))
-                & (F.col("nb") <= F.floor(F.col("na") / F.lit(threshold)))
-                & (
-                    F.least(
-                        F.col("na") - F.col("pa"), F.col("nb") - F.col("pb")
-                    )
-                    + 1
-                    >= alpha
+        .select("id", "token", "pos", "n")
+    )
+    pref = track_persist(pref)
+    pa = pref.select(
+        F.col("id").alias("a"), "token",
+        F.col("pos").alias("pa"), F.col("n").alias("na"),
+    )
+    pb = pref.select(
+        F.col("id").alias("b"), "token",
+        F.col("pos").alias("pb"), F.col("n").alias("nb"),
+    )
+    # overlap lower bound α = ceil(t/(1+t)·(na+nb)); the positional
+    # (ppjoin) filter drops a shared prefix token that cannot be the
+    # start of α common tokens given what remains after each position
+    alpha = F.ceil(
+        F.lit(threshold) / F.lit(1.0 + threshold) * (F.col("na") + F.col("nb"))
+    )
+    cand = (
+        pa.join(pb, "token")
+        .where(
+            (F.col("a") < F.col("b"))
+            & (F.col("nb") >= F.ceil(F.lit(threshold) * F.col("na")))
+            & (F.col("nb") <= F.floor(F.col("na") / F.lit(threshold)))
+            & (
+                F.least(
+                    F.col("na") - F.col("pa"), F.col("nb") - F.col("pb")
                 )
+                + 1
+                >= alpha
             )
-            .select("a", "b")
-            .distinct()
         )
-        # reps already holds the sorted (id, toks) arrays — reuse them
-        # instead of letting the verify step re-aggregate the index
-        inter = _verify_intersections(tok, cand, arrs=reps.select("id", "toks"))
-    else:
-        ta = tok.select(F.col("id").alias("a"), "token")
-        tb = tok.select(F.col("id").alias("b"), "token")
-        sa = sizes.select(F.col("id").alias("a"), F.col("n").alias("na"))
-        sb = sizes.select(F.col("id").alias("b"), F.col("n").alias("nb"))
-        inter = (
-            ta.join(tb, "token")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("i"))
-            .join(sa, "a")
-            .join(sb, "b")
-        )
+        .select("a", "b")
+        .distinct()
+    )
+    # reps already holds the sorted (id, toks) arrays — reuse them
+    # instead of letting the verify step re-aggregate the index
+    inter = _verify_intersections(tok, cand, arrs=reps.select("id", "toks"))
 
-    # the verify branch's na/nb ride out of _verify_intersections (array
-    # sizes of the same distinct token sets `sizes` counts) — no extra
-    # size joins there
+    # na/nb ride out of _verify_intersections (array sizes of the
+    # distinct token sets) — no extra size joins
     jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     rep_pairs = (
         inter.where(jac >= threshold)

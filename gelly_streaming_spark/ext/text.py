@@ -189,7 +189,6 @@ def tfidf_keywords(
     text_col: str = "text",
     doc_id_col: str = "doc_id",
     k: int = 3,
-    broadcast_df: bool | None = None,
 ) -> DataFrame:
     """Top-``k`` keywords per document by TF-IDF
     (``occ * ln(N / df)``, rounded to 6 decimals BEFORE ranking so the
@@ -201,18 +200,15 @@ def tfidf_keywords(
     plan (one (doc_id, token) partial-agg shuffle, full codegen);
     document frequency is ONE further token-keyed partial-agg shuffle
     over that already-distinct table; the df table is vocabulary-sized,
-    so it usually broadcast-joins back to the pairs; the per-doc top-k
+    so AQE's runtime join-strategy switching broadcasts it back to the
+    pairs when the materialized table is small and falls back to a
+    shuffle join when a 100 TB corpus's full vocabulary exceeds the
+    broadcast limit; the per-doc top-k
     is a WindowGroupLimit (map-side trim to k before the doc_id
     exchange). N (the corpus size) is computed INSIDE the plan as a
     1-row aggregate cross-joined in (broadcast nested loop over one
     row) — not a separate ``docs.count()`` action, which cost an extra
-    driver-synchronized job per call and made the function eager.
-
-    ``broadcast_df``: None (default) sets no hint — AQE's runtime
-    join-strategy switching converts to broadcast when the materialized
-    df table is actually small, and falls back to a shuffle join when a
-    100 TB corpus's full vocabulary exceeds the broadcast limit. True
-    forces the broadcast hint (caller knows the vocabulary is bounded)."""
+    driver-synchronized job per call and made the function eager."""
     n_docs = docs.select(
         F.count(F.lit(1)).cast("double").alias("_n_docs")
     )
@@ -229,8 +225,6 @@ def tfidf_keywords(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    if broadcast_df:
-        df_t = F.broadcast(df_t)
     scored = pairs.join(df_t, "token").crossJoin(n_docs).select(
         "doc_id",
         "token",
@@ -672,7 +666,6 @@ def classifier_score(
     token_col: str = "token",
     weight_col: str = "weight",
     bias: float = 0.0,
-    broadcast_weights: bool | None = None,
 ) -> DataFrame:
     """Linear text-classifier INFERENCE, fastText-style (Joulin et al.
     2016, public method): rows ``(doc_id, score)`` with
@@ -703,11 +696,10 @@ def classifier_score(
       row (NULL token for empty docs), so the per-doc aggregate needs
       no join back against the document base — the r13 A/B measured
       the base-join variant at 2 doc-keyed exchanges vs 1 here;
-    - the weight table joins LEFT against the exploded stream;
-      ``broadcast_weights=None`` (default) sets no hint — AQE converts
-      to broadcast when the materialized table is small and falls back
-      to a keyed join for a vocabulary that outgrows the broadcast
-      limit (the tfidf_keywords convention). True forces the hint.
+    - the weight table joins LEFT against the exploded stream with no
+      hint — AQE converts to broadcast when the materialized table is
+      small and falls back to a keyed join for a vocabulary that
+      outgrows the broadcast limit (the tfidf_keywords convention).
 
     Float contract: the sum is exact when the weight values are binary
     rationals (the q58 fixture uses k/4096, so summation order cannot
@@ -725,8 +717,6 @@ def classifier_score(
     w = weights.select(
         F.col(token_col), F.col(weight_col).cast("double").alias("_w")
     )
-    if broadcast_weights:
-        w = F.broadcast(w)
     per = toks.join(w, token_col, "left").groupBy("doc_id").agg(
         F.max("n").alias("n"),
         F.sum(F.coalesce(F.col("_w"), F.lit(0.0))).alias("s"),
@@ -969,7 +959,7 @@ def _merge_adjacent(arr: Column, a: str, b: str) -> Column:
     The fold starts from an EMPTY accumulator so ``arr`` appears exactly
     ONCE in the expression (r15): the previous first-element-init form
     referenced ``arr`` five times (guard + both slices + fallthrough),
-    so K composed folds — bpe_encode's apply path — inlined the base
+    so K composed folds — bpe_merges' per-round apply — inlined the base
     5^K times and a 6-rule table OOM'd Catalyst before execution.
     Same output by construction: the pair sequence both forms examine
     is (l[i], l[i+1]) for i = 1.. — only the bookkeeping of where l[1]
@@ -1242,8 +1232,6 @@ def bpe_encode(
     merges: list,
     text_col: str = "text",
     doc_id_col: str = "doc_id",
-    checkpoint_every: int = 8,
-    impl: str = "arrow",
     with_raw_count: bool = False,
 ) -> DataFrame:
     """Apply-side BPE tokenization (VERDICT r14 item 4): encode the
@@ -1258,44 +1246,26 @@ def bpe_encode(
     (standard BPE apply semantics). Returns ``(doc_id, toks)`` with the
     encoded symbol array.
 
-    100 TB shape: ZERO shuffles either way — the encode is one narrow
-    per-row pass over the document scan, with the rule table a
-    broadcast-size plan constant. ``impl`` picks the kernel, both
-    certified against the same DuckDB list_reduce oracle (q75):
-
-    - ``"arrow"`` (default): ONE ``mapInPandas`` pass applying the
-      whole table per row in Python via a PAIR-INDEXED heap walk (r16):
-      the rule table is indexed by pair once per task and each doc
-      visits only rules whose pair is actually adjacent, in table
-      order — equivalent to the sequential per-rule fold by
-      construction (randomized-equivalence pinned), but the cost is
-      O(tokens + applicable rules x tokens) instead of
-      O(table size x tokens). Measured on the sf0.1 corpus: the
-      per-rule kernel ran 15k tok/s at a 1k-rule table; the indexed
-      kernel runs 3.7M/1.3M/770k tok/s at 1k/8k/32k rules
-      (single-thread — the Arrow pass parallelizes it per task), so
-      production 30k-100k-rule tables are practical. Spark's
-      higher-order functions are interpreted (never codegen'd), paying
-      ~0.6 s/rule at the 6-rule bench shape, which is why this is the
-      default over "fold".
-    - ``"fold"``: pure-JVM composed ``_merge_adjacent`` array folds
-      (no Python workers in the plan). Each row executes once
-      regardless of rule count; ``checkpoint_every`` cuts the composed
-      expression every N rules purely to bound expression-tree depth —
-      each cut materializes the corpus (localCheckpoint), so production
-      tables should raise the interval or use reliable checkpoints.
+    100 TB shape: ZERO shuffles — the encode is ONE narrow
+    ``mapInPandas`` pass over the document scan, with the rule table a
+    broadcast-size plan constant, certified against the DuckDB
+    list_reduce oracle (q75). Each row applies the whole table in
+    Python via a PAIR-INDEXED heap walk (r16): the rule table is
+    indexed by pair once per task and each doc visits only rules whose
+    pair is actually adjacent, in table order — equivalent to the
+    sequential per-rule fold by construction (randomized-equivalence
+    pinned), but the cost is O(tokens + applicable rules x tokens)
+    instead of O(table size x tokens). Measured on the sf0.1 corpus:
+    the per-rule kernel ran 15k tok/s at a 1k-rule table; the indexed
+    kernel runs 3.7M/1.3M/770k tok/s at 1k/8k/32k rules (single-thread
+    — the Arrow pass parallelizes it per task), so production
+    30k-100k-rule tables are practical. Spark's higher-order functions
+    are interpreted (never codegen'd): composed ``_merge_adjacent``
+    folds paid ~0.6 s/rule at the 6-rule bench shape.
 
     ``with_raw_count`` adds an ``n_raw`` column (the PRE-merge token
     count) at zero extra passes — the tokenizer-evaluation stat every
     vocabulary run needs (tokens-per-doc before/after, q76)."""
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"bpe_encode: checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if impl not in ("arrow", "fold"):
-        raise ValueError(f"bpe_encode: unknown impl {impl!r}")
-    from gelly_streaming_spark.plans.memory import free_checkpoint
-
     rules: list[tuple[str, str]] = []
     for m in merges:
         if isinstance(m, str):
@@ -1317,129 +1287,103 @@ def bpe_encode(
         else:
             rules.append((m[0], m[1]))
 
-    if impl == "arrow":
-        import re as _re
+    import re as _re
 
-        import pandas as _pd
+    import pandas as _pd
 
-        src = docs.select(
-            F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        id_type = src.schema["doc_id"].dataType.simpleString()
-        frozen = list(rules)
-        raw = with_raw_count
-
-        def _encode_batches(batches):
-            # re.ASCII pins \s to the same ASCII class Java regex and
-            # RE2 use — str.split() would split Unicode whitespace the
-            # JVM/DuckDB tokenizers keep inside tokens
-            import collections as _collections
-            import heapq as _heapq
-
-            ws = _re.compile(r"\s+", _re.ASCII)
-            # Pair-indexed apply (r16, VERDICT r15 item 4): the naive
-            # kernel scanned every doc once PER RULE (rules x tokens —
-            # 15k tok/s at a 1k-rule table, extrapolating to ~10 min/task
-            # at a production 32k-rule table). Instead, index the rule
-            # table by pair once per task and, per doc, visit only the
-            # rules whose pair is actually adjacent, in ascending table
-            # order via a heap; applying rule i can only newly enable
-            # rules AFTER it (a rule before i already had its pass —
-            # exactly the sequential fold-per-rule semantics), so new
-            # adjacencies push only indices > i. Each visited rule runs
-            # the identical greedy left-to-right fold, so the output is
-            # equivalent BY CONSTRUCTION to the per-rule loop (pinned by
-            # a 4000-trial randomized equivalence test incl. recursive
-            # and duplicate rules); measured 768k-3.7M tok/s at 32k-1k
-            # rules, rule-count cost now O(applicable), not O(table).
-            rank: dict = _collections.defaultdict(list)
-            for _idx, _p in enumerate(frozen):
-                rank[_p].append(_idx)
-            rank = dict(rank)
-
-            def _enc(d):
-                if len(d) < 2:
-                    return d
-                heap: list[int] = []
-                pushed = set()
-                for p in set(zip(d, d[1:])):
-                    for idx in rank.get(p, ()):
-                        pushed.add(idx)
-                        heap.append(idx)
-                _heapq.heapify(heap)
-                while heap:
-                    i = _heapq.heappop(heap)
-                    a, b = frozen[i]
-                    ab = a + " " + b
-                    acc: list[str] = []
-                    changed = False
-                    for x in d:
-                        if acc and acc[-1] == a and x == b:
-                            acc[-1] = ab
-                            changed = True
-                        else:
-                            acc.append(x)
-                    if not changed:
-                        continue
-                    d = acc
-                    last = len(d) - 1
-                    for p_i, x in enumerate(d):
-                        if x != ab:
-                            continue
-                        if p_i:
-                            for idx in rank.get((d[p_i - 1], ab), ()):
-                                if idx > i and idx not in pushed:
-                                    pushed.add(idx)
-                                    _heapq.heappush(heap, idx)
-                        if p_i < last:
-                            for idx in rank.get((ab, d[p_i + 1]), ()):
-                                if idx > i and idx not in pushed:
-                                    pushed.add(idx)
-                                    _heapq.heappush(heap, idx)
-                return d
-
-            for pdf in batches:
-                out = []
-                nraw = []
-                for s in pdf["text"]:
-                    d = [
-                        t
-                        for t in ws.split(s if s is not None else "")
-                        if t and "\x1f" not in t
-                    ]
-                    nraw.append(len(d))
-                    out.append(_enc(d))
-                cols = {"doc_id": pdf["doc_id"], "toks": out}
-                if raw:
-                    cols["n_raw"] = nraw
-                yield _pd.DataFrame(cols)
-
-        schema = f"doc_id {id_type}, toks array<string>"
-        if raw:
-            schema += ", n_raw long"
-        return src.mapInPandas(_encode_batches, schema)
-
-    cur = docs.select(
-        F.col(doc_id_col).alias("doc_id"),
-        _bpe_tokenize(F.col(text_col)).alias("toks"),
+    src = docs.select(
+        F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    carry = ["doc_id"]
-    if with_raw_count:
-        cur = cur.withColumn("n_raw", F.size("toks").cast("long"))
-        carry = ["doc_id", "n_raw"]
-    prev_ckpt = None
-    for i in range(0, len(rules), checkpoint_every):
-        folded = F.col("toks")
-        for a, b in rules[i : i + checkpoint_every]:
-            folded = _merge_adjacent(folded, a, b)
-        cur = cur.select(*carry, folded.alias("toks"))
-        if i + checkpoint_every < len(rules):
-            cur = cur.localCheckpoint()
-            if prev_ckpt is not None:
-                # the fresh checkpoint no longer reads the old one
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = cur
-    if with_raw_count:
-        # column order parity with the arrow kernel (doc_id, toks, n_raw)
-        cur = cur.select("doc_id", "toks", "n_raw")
-    return cur
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    frozen = list(rules)
+    raw = with_raw_count
+
+    def _encode_batches(batches):
+        # re.ASCII pins \s to the same ASCII class Java regex and
+        # RE2 use — str.split() would split Unicode whitespace the
+        # JVM/DuckDB tokenizers keep inside tokens
+        import collections as _collections
+        import heapq as _heapq
+
+        ws = _re.compile(r"\s+", _re.ASCII)
+        # Pair-indexed apply (r16, VERDICT r15 item 4): the naive
+        # kernel scanned every doc once PER RULE (rules x tokens —
+        # 15k tok/s at a 1k-rule table, extrapolating to ~10 min/task
+        # at a production 32k-rule table). Instead, index the rule
+        # table by pair once per task and, per doc, visit only the
+        # rules whose pair is actually adjacent, in ascending table
+        # order via a heap; applying rule i can only newly enable
+        # rules AFTER it (a rule before i already had its pass —
+        # exactly the sequential fold-per-rule semantics), so new
+        # adjacencies push only indices > i. Each visited rule runs
+        # the identical greedy left-to-right fold, so the output is
+        # equivalent BY CONSTRUCTION to the per-rule loop (pinned by
+        # a 4000-trial randomized equivalence test incl. recursive
+        # and duplicate rules); measured 768k-3.7M tok/s at 32k-1k
+        # rules, rule-count cost now O(applicable), not O(table).
+        rank: dict = _collections.defaultdict(list)
+        for _idx, _p in enumerate(frozen):
+            rank[_p].append(_idx)
+        rank = dict(rank)
+
+        def _enc(d):
+            if len(d) < 2:
+                return d
+            heap: list[int] = []
+            pushed = set()
+            for p in set(zip(d, d[1:])):
+                for idx in rank.get(p, ()):
+                    pushed.add(idx)
+                    heap.append(idx)
+            _heapq.heapify(heap)
+            while heap:
+                i = _heapq.heappop(heap)
+                a, b = frozen[i]
+                ab = a + " " + b
+                acc: list[str] = []
+                changed = False
+                for x in d:
+                    if acc and acc[-1] == a and x == b:
+                        acc[-1] = ab
+                        changed = True
+                    else:
+                        acc.append(x)
+                if not changed:
+                    continue
+                d = acc
+                last = len(d) - 1
+                for p_i, x in enumerate(d):
+                    if x != ab:
+                        continue
+                    if p_i:
+                        for idx in rank.get((d[p_i - 1], ab), ()):
+                            if idx > i and idx not in pushed:
+                                pushed.add(idx)
+                                _heapq.heappush(heap, idx)
+                    if p_i < last:
+                        for idx in rank.get((ab, d[p_i + 1]), ()):
+                            if idx > i and idx not in pushed:
+                                pushed.add(idx)
+                                _heapq.heappush(heap, idx)
+            return d
+
+        for pdf in batches:
+            out = []
+            nraw = []
+            for s in pdf["text"]:
+                d = [
+                    t
+                    for t in ws.split(s if s is not None else "")
+                    if t and "\x1f" not in t
+                ]
+                nraw.append(len(d))
+                out.append(_enc(d))
+            cols = {"doc_id": pdf["doc_id"], "toks": out}
+            if raw:
+                cols["n_raw"] = nraw
+            yield _pd.DataFrame(cols)
+
+    schema = f"doc_id {id_type}, toks array<string>"
+    if raw:
+        schema += ", n_raw long"
+    return src.mapInPandas(_encode_batches, schema)

@@ -642,7 +642,6 @@ def domain_filter(
     blocklist: DataFrame,
     url_col: str = "url",
     rules: tuple[str, ...] = PSL_RULES,
-    pin_derived: bool = False,
 ) -> DataFrame:
     """Append ``url_canon``, ``domain``, and ``blocked`` to ``docs``.
 
@@ -653,22 +652,10 @@ def domain_filter(
     probes per row — not the O(|PSL|) regex alternation); the blocklist
     (small by nature — even industry lists are ~10⁵ rows) joins as an
     AQE broadcast LEFT SEMI probe marked via a left join on the derived
-    domain. The corpus never shuffles.
-
-    ``pin_derived=True`` barriers the derived columns with a lazy
-    localCheckpoint BEFORE the blocklist join. Default off — at corpus
-    scale the fused one-pass projection is the right shape and a
-    checkpoint would materialize the corpus. It exists for BOUNDED
-    certification/test runs: without the barrier Catalyst inlines the
-    full canonicalization regex trees (plus whatever expression built
-    ``url_col``) into the join key and every output column, and the
-    one-time janino compile of that stage measured ~4–10 s — 10x the
-    query's actual work at small scale."""
+    domain. The corpus never shuffles."""
     u = canonicalize_url(F.col(url_col))
     out = docs.withColumn("url_canon", u)
     out = registered_domain_lookup(out, url_host(F.col(url_col)), "domain", rules)
-    if pin_derived:
-        out = out.localCheckpoint(eager=False)
     # distinct() before the probe: real-world blocklists carry repeats,
     # and a duplicated domain row would silently MULTIPLY matching corpus
     # rows through the left join (ADVICE r8). The distinct runs on the

@@ -122,33 +122,22 @@ class GraphStream:
             self.edges.select(*common).unionByName(other.edges.select(*common))
         )
 
-    def intersect(
-        self, other: "GraphStream", assume_distinct: bool = False
-    ) -> "GraphStream":
+    def intersect(self, other: "GraphStream") -> "GraphStream":
         """Set intersection on (src, dst) — extension, the reference has
         union only. Distributed as a SEMI-JOIN, the scalable form of
         INTERSECT: right-side duplicates are irrelevant to a semi-join,
-        so only the left needs set semantics — pass
-        ``assume_distinct=True`` when the left is already a set (e.g. a
-        distinct materialized view) and the dedup shuffle disappears,
-        leaving one scan + a (broadcast-eligible) join. Edge keys are
-        non-null by the engine's schema contract; NULL keys would drop
-        here where SQL INTERSECT keeps them."""
-        left = self.edges.select("src", "dst")
-        if not assume_distinct:
-            left = left.dropDuplicates(["src", "dst"])
+        so only the left is deduplicated. Edge keys are non-null by the
+        engine's schema contract; NULL keys would drop here where SQL
+        INTERSECT keeps them."""
+        left = self.edges.select("src", "dst").dropDuplicates(["src", "dst"])
         return GraphStream(
             left.join(other.edges.select("src", "dst"), ["src", "dst"], "left_semi")
         )
 
-    def difference(
-        self, other: "GraphStream", assume_distinct: bool = False
-    ) -> "GraphStream":
+    def difference(self, other: "GraphStream") -> "GraphStream":
         """Set difference on (src, dst) (extension) — anti-join form; same
         distinctness/null contract as :meth:`intersect`."""
-        left = self.edges.select("src", "dst")
-        if not assume_distinct:
-            left = left.dropDuplicates(["src", "dst"])
+        left = self.edges.select("src", "dst").dropDuplicates(["src", "dst"])
         return GraphStream(
             left.join(other.edges.select("src", "dst"), ["src", "dst"], "left_anti")
         )
@@ -218,17 +207,21 @@ class GraphStream:
         """A3 numberOfEdges (REF:.../GraphStream.java:~80 [M])."""
         return self.edges.groupBy().agg(F.count(F.lit(1)).alias("m"))
 
-    def number_of_vertices(self, approx: bool = False) -> DataFrame:
+    def number_of_vertices(self) -> DataFrame:
         """A4 numberOfVertices (REF:.../SimpleEdgeStream.java:~130 [M]).
 
-        ``approx=True`` uses HyperLogLog (approx_count_distinct) — the
-        100 TB path and the only option in pure streaming mode; exact is
-        the batch/oracle default."""
+        Batch input counts exactly (``count_distinct``, the oracle
+        contract). Structured Streaming rejects distinct aggregations, so
+        a streaming source counts with HyperLogLog
+        (``approx_count_distinct``, 5% relative standard deviation) —
+        chosen from ``edges.isStreaming``."""
         ids = self.edges.select(F.col("src").alias("id")).unionByName(
             self.edges.select(F.col("dst").alias("id"))
         )
         agg = (
-            F.approx_count_distinct("id") if approx else F.count_distinct(F.col("id"))
+            F.approx_count_distinct("id")
+            if self.edges.isStreaming
+            else F.count_distinct(F.col("id"))
         ).alias("n")
         return ids.groupBy().agg(agg)
 

@@ -37,7 +37,7 @@ def intersect_difference(
     the shuffles when the join is too big to broadcast.
 
     Same null contract as ``GraphStream.intersect``. Unlike its
-    ``assume_distinct`` (which concerns the left side only), a LEFT join
+    semi-join, which deduplicates the left side only, a LEFT join
     multiplies rows on right-side duplicates, so both sides are
     deduplicated unless ``assume_both_distinct`` declares both sides
     sets already."""

@@ -19,7 +19,6 @@ materializes rows, matching the engine's no-driver-funnel doctrine.
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -83,7 +82,6 @@ def _start(writer, spark, no_data: bool):
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "complete",
-    name: Optional[str] = None,
     timeout_sec: int = 300,
 ) -> DataFrame:
     """Execute a streaming DataFrame with an available-now trigger and
@@ -105,7 +103,6 @@ def run_to_memory(
             f"got {output_mode!r} (update-mode unions keep superseded rows "
             "— use run_update_merge, or run_foreach_batch with a keyed merge)"
         )
-    del name  # kept for API compat with the old memory-sink signature
     batches: list[DataFrame] = []
 
     def _capture(bdf: DataFrame, _epoch: int) -> None:

@@ -236,30 +236,52 @@ def test_odd_vertex_reach_paths_agree(spark):
     assert fast == dist
 
 
-def test_windowed_triangle_strategies_agree(spark):
-    """The per-window in-task strategy and the distributed join plan must
-    count identically (G1 in one window: 3 triangles)."""
+def _spy(monkeypatch, module, name):
+    """Replace ``module.name`` with a wrapper that records each call."""
+    calls = []
+    fn = getattr(module, name)
+
+    def wrapper(*args, **kwargs):
+        calls.append(1)
+        return fn(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, wrapper)
+    return calls
+
+
+def test_windowed_triangle_strategies_agree(spark, monkeypatch):
+    """The per-window in-task kernel (G1's one window is under
+    ``_PER_WINDOW_LIMIT``) and the distributed join plan (forced by a
+    zero limit) must count identically (G1 in one window: 3 triangles)."""
+    from gelly_streaming_spark.algos import triangles
+
     gs = GraphStream(fixture_graph(spark, "g1"))
-    for strategy in ("joins", "partitioned"):
-        rows = triangle_count_windowed(gs, "1 day", strategy=strategy).collect()
-        assert [(r.n_triangles) for r in rows] == [3], strategy
+    joins = _spy(monkeypatch, triangles, "_oriented_triangles")
+    for limit in (triangles._PER_WINDOW_LIMIT, 0):
+        monkeypatch.setattr(triangles, "_PER_WINDOW_LIMIT", limit)
+        rows = triangle_count_windowed(gs, "1 day").collect()
+        assert [(r.n_triangles) for r in rows] == [3], limit
+        assert len(joins) == (limit == 0), limit
 
 
-def test_global_triangle_strategies_agree(spark, sf_dir):
-    """The broadcast-sliced numpy kernel and the degree-ordered join plan
-    must agree on the GLOBAL count (copart graph, multiple kernel slices
-    summed across tasks)."""
+def test_global_triangle_strategies_agree(spark, sf_dir, monkeypatch):
+    """The broadcast-sliced numpy kernel (the copart edge count is under
+    ``_BROADCAST_LIMIT``) and the degree-ordered join plan (forced by a
+    zero limit) must agree on the GLOBAL count (copart graph, multiple
+    kernel slices summed across tasks). Neither call declares the view
+    materialized, so neither reads a memoized plan decision."""
+    from gelly_streaming_spark.algos import triangles
     from gelly_streaming_spark.sources.edges import copart_canonical
 
     gs = GraphStream(copart_canonical(spark, sf_dir))
-    counts = {
-        s: triangle_count(
-            gs, canonical=True, materialized=True, strategy=s
-        ).collect()[0].n_triangles
-        for s in ("joins", "broadcast_kernel")
-    }
-    assert counts["joins"] == counts["broadcast_kernel"]
-    assert counts["joins"] > 0
+    joins = _spy(monkeypatch, triangles, "_oriented_triangles")
+    counts = {}
+    for limit in (triangles._BROADCAST_LIMIT, 0):
+        monkeypatch.setattr(triangles, "_BROADCAST_LIMIT", limit)
+        counts[limit] = triangle_count(gs, canonical=True).collect()[0].n_triangles
+        assert len(joins) == (limit == 0), limit
+    assert len(set(counts.values())) == 1, counts
+    assert counts[0] > 0
 
 
 # ---------------------------------------------------------------------------
@@ -689,12 +711,3 @@ def test_forced_loops_run_only_the_jobs_their_answer_needs(spark):
         assert jobs <= bound, (name, jobs)
         assert forced == sorted(map(tuple, run().collect())), name
 
-
-def test_forced_broadcast_kernel_is_bounded(spark):
-    """A caller-forced ``strategy="broadcast_kernel"`` collects under
-    ``broadcast_limit`` like the auto probe does, and refuses an input
-    over it instead of pulling it all to the driver."""
-    gs = GraphStream(fixture_graph(spark, "g1"))
-    assert triangle_count(gs, strategy="broadcast_kernel").collect()[0].n_triangles == 3
-    with pytest.raises(ValueError, match="broadcast_limit=2"):
-        triangle_count(gs, strategy="broadcast_kernel", broadcast_limit=2)

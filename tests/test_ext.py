@@ -419,8 +419,7 @@ def test_bpe_batched_disjoint_selection(spark):
 def test_bpe_encode_apply_semantics(spark):
     """Apply-side BPE: ordered rule table, later rules see earlier
     merges (recursion), greedy non-overlapping self-pairs, tuple rules
-    for symbols containing spaces, malformed string rules rejected,
-    and the >checkpoint_every chunked path yields the same encoding."""
+    for symbols containing spaces, malformed string rules rejected."""
     import pytest as _pytest
 
     from gelly_streaming_spark.ext.text import bpe_encode
@@ -434,15 +433,6 @@ def test_bpe_encode_apply_semantics(spark):
     assert out[1] == ["t h e", "t h e"]  # recursion through rule 2
     assert out[2] == ["a a", "a"]  # greedy non-overlapping
     assert out[3] == ["x"]
-    # the pure-JVM fold impl is semantically identical to the default
-    # arrow kernel
-    fold_out = {
-        r.doc_id: r.toks
-        for r in bpe_encode(docs, rules, impl="fold").collect()
-    }
-    assert fold_out == out
-    with _pytest.raises(ValueError, match="unknown impl"):
-        bpe_encode(docs, rules, impl="rdd")
     # string rules parse 'a b' (space-free symbols only)
     s_out = {
         r.doc_id: r.toks
@@ -456,17 +446,6 @@ def test_bpe_encode_apply_semantics(spark):
     # never a silent left-split parse
     with _pytest.raises(ValueError, match="ambiguous string rule"):
         bpe_encode(docs, ["t h e"])
-    with _pytest.raises(ValueError, match="checkpoint_every"):
-        bpe_encode(docs, rules, checkpoint_every=0)
-    # fold impl: the chunked path (checkpoint_every < len(rules)) is
-    # semantically identical to the single-chunk plan
-    chunked = {
-        r.doc_id: r.toks
-        for r in bpe_encode(
-            docs, rules, checkpoint_every=1, impl="fold"
-        ).collect()
-    }
-    assert chunked == out
 
 
 def test_bpe_encode_indexed_kernel_large_table(spark):
@@ -514,20 +493,17 @@ def test_bpe_encode_indexed_kernel_large_table(spark):
 
 def test_bpe_encode_with_raw_count(spark):
     """with_raw_count rides the encode pass: n_raw = pre-merge token
-    count, identical across both kernels, zero extra passes."""
+    count, zero extra passes."""
     from gelly_streaming_spark.ext.text import bpe_encode
 
     docs = spark.createDataFrame(
         [(1, "a b a b c"), (2, ""), (3, "x")], "doc_id long, text string"
     )
-    for impl in ("arrow", "fold"):
-        rows = {
-            r.doc_id: (r.n_raw, len(r.toks))
-            for r in bpe_encode(
-                docs, [("a", "b")], impl=impl, with_raw_count=True
-            ).collect()
-        }
-        assert rows == {1: (5, 3), 2: (0, 0), 3: (1, 1)}, (impl, rows)
+    rows = {
+        r.doc_id: (r.n_raw, len(r.toks))
+        for r in bpe_encode(docs, [("a", "b")], with_raw_count=True).collect()
+    }
+    assert rows == {1: (5, 3), 2: (0, 0), 3: (1, 1)}, rows
 
 
 def test_quality_fraction_filter(spark):
@@ -863,23 +839,6 @@ def test_near_dup_collapse_transitive_chain(spark):
     }
     # jaccard(1,2)=9/11≈0.818, jaccard(2,3)=9/11, jaccard(1,3)=8/12<0.8
     assert got == {(1, 3), (10, 1)}
-
-
-def test_near_dup_collapse_minhash_matches_exact(spark, docs):
-    """The MinHash-LSH collapse (100 TB path) must agree with the exact
-    collapse on the documents fixture — same clusters, same keepers
-    (LSH candidates are exact-verified, so only recall could differ)."""
-    from gelly_streaming_spark.ext.dedup import near_dup_collapse
-
-    exact = {
-        (r["keep_id"], r["cluster_size"])
-        for r in near_dup_collapse(docs, threshold=0.95).collect()
-    }
-    mh = {
-        (r["keep_id"], r["cluster_size"])
-        for r in near_dup_collapse(docs, threshold=0.95, method="minhash").collect()
-    }
-    assert mh == exact
 
 
 # ---------------------------------------------------------------------------
@@ -1311,12 +1270,13 @@ def test_simhash_blocking_recall_complete_at_high_hamming(spark):
         simhash_near_pairs(sigs, max_hamming=64)
 
 
-def test_jaccard_strategies_agree_on_rounding_ties(spark):
+def test_jaccard_strategies_agree_on_rounding_ties(spark, monkeypatch):
     """The bitset kernel and the ppjoin path must emit bit-identical
     jaccard values — including exact dyadic ties like 125/128 =
     0.9765625, which np.round (half-to-even) rounded DOWN while F.round
-    and DuckDB ROUND round up. Also: unknown strategies must raise."""
-    from gelly_streaming_spark.ext.similarity import jaccard_pairs
+    and DuckDB ROUND round up. The small vocabulary selects the bitset
+    kernel; a zero vocabulary limit forces ppjoin."""
+    from gelly_streaming_spark.ext import similarity
 
     shared = [f"t{i}" for i in range(125)]
     rows = [
@@ -1326,18 +1286,28 @@ def test_jaccard_strategies_agree_on_rounding_ties(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     toks = F.split(F.col("text"), " ")
-    res = {}
-    for strat in ("ppjoin", "bitset"):
-        res[strat] = {
+    kernel_calls = []
+    bitset = similarity._bitset_rep_pairs
+
+    def spy(*args):
+        kernel_calls.append(1)
+        return bitset(*args)
+
+    monkeypatch.setattr(similarity, "_bitset_rep_pairs", spy)
+
+    def pairs():
+        return {
             (r["a"], r["b"]): r["jaccard"]
-            for r in jaccard_pairs(
-                docs, "doc_id", toks, 0.9, strategy=strat
-            ).collect()
+            for r in similarity.jaccard_pairs(docs, "doc_id", toks, 0.9).collect()
         }
-    assert res["ppjoin"] == res["bitset"]
-    assert res["ppjoin"][(1, 2)] == 0.976563  # HALF_UP of 0.9765625
-    with pytest.raises(ValueError):
-        jaccard_pairs(docs, "doc_id", toks, 0.9, strategy="bitmask")
+
+    by_bitset = pairs()
+    assert kernel_calls == [1]
+    monkeypatch.setattr(similarity, "_BITSET_VOCAB_LIMIT", 0)
+    by_ppjoin = pairs()
+    assert kernel_calls == [1]
+    assert by_ppjoin == by_bitset
+    assert by_ppjoin[(1, 2)] == 0.976563  # HALF_UP of 0.9765625
 
 
 def test_lsh_signature_rejects_dim_mismatch(spark):
@@ -1889,12 +1859,6 @@ def test_classifier_score_hand_fixture(spark):
         for r in classifier_score(docs, weights, bias=1.0).collect()
     }
     assert got_b[3] == sig(1.0)
-    # forced-broadcast variant is value-identical
-    got_bc = {
-        r.doc_id: r.score
-        for r in classifier_score(docs, weights, broadcast_weights=True).collect()
-    }
-    assert got_bc == got
 
 
 def test_classifier_score_plan_has_single_split(spark):

@@ -78,3 +78,45 @@ def test_consumer_engine_imports_resolve(path):
                 and importlib.util.find_spec(a.name) is None
             ]
     assert not missing, missing
+
+
+# Keyword options that chose a kernel, a join hint or an alternative
+# algorithm while no query, example or benchmark set them. Each call now
+# has one path, or picks it from what it measures (vocabulary size, edge
+# count, largest window, ``isStreaming``).
+REMOVED_OPTIONS = [
+    ("ext.text", "bpe_encode", "impl"),
+    ("ext.text", "bpe_encode", "checkpoint_every"),
+    ("ext.text", "tfidf_keywords", "broadcast_df"),
+    ("ext.text", "classifier_score", "broadcast_weights"),
+    ("ext.similarity", "jaccard_pairs", "prefix_filter"),
+    ("ext.similarity", "jaccard_pairs", "prefix_order"),
+    ("ext.similarity", "jaccard_pairs", "strategy"),
+    ("ext.similarity", "jaccard_rep_pairs", "prefix_filter"),
+    ("ext.similarity", "jaccard_rep_pairs", "prefix_order"),
+    ("ext.similarity", "jaccard_rep_pairs", "strategy"),
+    ("ext.dedup", "near_dup_collapse", "method"),
+    ("ext.web", "domain_filter", "pin_derived"),
+    ("algos.triangles", "triangle_count", "strategy"),
+    ("algos.triangles", "triangle_count", "broadcast_limit"),
+    ("algos.triangles", "triangle_count_windowed", "strategy"),
+    ("algos.triangles", "triangle_count_windowed", "per_window_limit"),
+    ("operators.graphstream", "GraphStream.intersect", "assume_distinct"),
+    ("operators.graphstream", "GraphStream.difference", "assume_distinct"),
+    ("operators.graphstream", "GraphStream.number_of_vertices", "approx"),
+    ("streaming.runner", "run_to_memory", "name"),
+]
+
+
+def test_removed_plan_selection_options_stay_gone():
+    """None of the removed plan-selection options is a parameter again."""
+    import inspect
+
+    back = []
+    for mod, qual, param in REMOVED_OPTIONS:
+        obj = importlib.import_module(f"gelly_streaming_spark.{mod}")
+        for part in qual.split("."):
+            obj = getattr(obj, part)
+        if param in inspect.signature(obj).parameters:
+            back.append(f"{mod}.{qual}({param}=)")
+    assert not back, back

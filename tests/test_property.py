@@ -743,15 +743,11 @@ def test_bpe_batched_matches_python(spark, texts, rounds, batch_k, small):
         max_size=5,
     ),
     rule_ids=st.lists(st.integers(0, 5), min_size=1, max_size=4),
-    chunk=st.integers(1, 3),
-    impl=st.sampled_from(["arrow", "fold"]),
 )
 @settings(**_SETTINGS)
-def test_bpe_encode_matches_python(spark, texts, rule_ids, chunk, impl):
+def test_bpe_encode_matches_python(spark, texts, rule_ids):
     """Apply-side encode vs the pure-Python sequential fold for
-    arbitrary (possibly repeating, possibly recursive) rule tables,
-    over BOTH kernels (arrow mapInPandas and pure-JVM fold at every
-    checkpoint interval)."""
+    arbitrary (possibly repeating, possibly recursive) rule tables."""
     from gelly_streaming_spark.ext.text import bpe_encode
 
     table = [
@@ -762,12 +758,7 @@ def test_bpe_encode_matches_python(spark, texts, rule_ids, chunk, impl):
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    got = {
-        r.doc_id: r.toks
-        for r in bpe_encode(
-            df, rules, checkpoint_every=chunk, impl=impl
-        ).collect()
-    }
+    got = {r.doc_id: r.toks for r in bpe_encode(df, rules).collect()}
     for i, s in enumerate(texts):
         d = [t for t in s.split() if t]
         for a, b in rules:

@@ -44,6 +44,16 @@ def test_streaming_counts(spark, edge_replay):
     assert got.collect()[0]["m"] == batch.count()
 
 
+def test_streaming_number_of_vertices(spark, tmp_path):
+    """A4 on a streaming source: Structured Streaming rejects the batch
+    path's distinct aggregation, so the method counts with a sketch,
+    exact on G1's 5 vertices."""
+    g1 = fixture_graph(spark, "g1")
+    stream = replay(g1, str(tmp_path / "g1"), num_batches=2)
+    got = run_to_memory(GraphStream(stream).number_of_vertices(), "complete")
+    assert got.collect()[0]["n"] == 5
+
+
 def test_streaming_slice_reduce(spark, edge_replay):
     """W1/W2: tumbling per-vertex window agg, streaming vs batch."""
     batch, stream = edge_replay
