@@ -90,12 +90,13 @@ def _popcount(a):
     return lut[a.view(np.uint8)].reshape(*a.shape, 8).sum(-1, dtype=np.int64)
 
 
-def _bitset_rep_pairs(spark, reps: DataFrame, threshold: float, vocab) -> DataFrame:
+def _bitset_rep_pairs(spark, tbl, threshold: float, vocab) -> DataFrame:
     """Exact all-pairs Jaccard over DISTINCT token sets, small-vocabulary
-    strategy: each set becomes a |vocab|-bit mask; intersections are
-    bitwise-AND popcounts. The mask matrix is built driver-side (bounded
-    by _BITSET_SETS_LIMIT × _BITSET_VOCAB_LIMIT/8 bytes — broadcast-join
-    build-side territory) and broadcast; tasks score disjoint row slices
+    strategy: each set of the collected (id, toks) Arrow table ``tbl``
+    becomes a |vocab|-bit mask; intersections are bitwise-AND popcounts.
+    The mask matrix is built driver-side (bounded by _BITSET_SETS_LIMIT ×
+    _BITSET_VOCAB_LIMIT/8 bytes — broadcast-join build-side territory)
+    and broadcast; tasks score disjoint row slices
     against the full matrix, so the O(S²) pair space never materializes
     as rows anywhere. Picked over the prefix-filter index join when a
     vocabulary probe shows prefix tokens cannot be selective (a corpus
@@ -104,7 +105,6 @@ def _bitset_rep_pairs(spark, reps: DataFrame, threshold: float, vocab) -> DataFr
     import numpy as np
     import pandas as pd
 
-    tbl = reps.select("id", "toks").toArrow()
     ids = np.asarray(tbl["id"].to_pylist(), dtype=np.int64)
     toks = tbl["toks"].to_pylist()
     s_count = len(ids)
@@ -264,15 +264,15 @@ def jaccard_rep_pairs(
         reps.select(F.explode("toks").alias("token")).distinct(),
         _BITSET_VOCAB_LIMIT,
     )
-    # reps.toArrow() in the bitset kernel is a driver collect, legal
-    # only under the set/vocab limits checked here
-    if (
-        vocab_tbl.num_rows <= _BITSET_VOCAB_LIMIT
-        and id_integral
-        and grp.count() <= _BITSET_SETS_LIMIT
-    ):
-        vocab = sorted(vocab_tbl["token"].to_pylist())
-        return grp, _bitset_rep_pairs(docs.sparkSession, reps, threshold, vocab)
+    if vocab_tbl.num_rows <= _BITSET_VOCAB_LIMIT and id_integral:
+        # one bounded collect both counts the sets and hands the kernel
+        # its input: a set count over the limit falls through to ppjoin
+        reps_tbl = bounded_take(reps.select("id", "toks"), _BITSET_SETS_LIMIT)
+        if reps_tbl.num_rows <= _BITSET_SETS_LIMIT:
+            vocab = sorted(vocab_tbl["token"].to_pylist())
+            return grp, _bitset_rep_pairs(
+                docs.sparkSession, reps_tbl, threshold, vocab
+            )
 
     tok = track_persist(reps.select("id", F.explode("toks").alias("token")))
     # Per-doc position by rare-first global order; keep the first

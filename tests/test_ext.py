@@ -1310,6 +1310,43 @@ def test_jaccard_strategies_agree_on_rounding_ties(spark, monkeypatch):
     assert by_ppjoin[(1, 2)] == 0.976563  # HALF_UP of 0.9765625
 
 
+def test_jaccard_bitset_choice_collects_the_sets_once(spark):
+    """The bitset kernel's set-count check and its input are one bounded
+    collect: a warm call runs the vocabulary probe and that collect
+    before the caller's action (3 jobs under AQE; a separate set count
+    plus an unbounded collect made it 5), and its pairs are the exact
+    ones."""
+    import itertools
+    import uuid
+
+    from gelly_streaming_spark.ext import similarity
+
+    sets = {i: {f"t{j}" for j in range(i % 7, i % 7 + 20)} for i in range(60)}
+    docs = spark.createDataFrame(
+        [(i, " ".join(sorted(ts))) for i, ts in sets.items()],
+        "doc_id long, text string",
+    )
+    toks = F.split(F.col("text"), " ")
+    similarity.jaccard_rep_pairs(docs, "doc_id", toks, 0.8)  # caches the clusters
+    sc = spark.sparkContext
+    group = f"jaccard-choice-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jaccard_rep_pairs job count")
+    try:
+        _, rep_pairs = similarity.jaccard_rep_pairs(docs, "doc_id", toks, 0.8)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs <= 3, jobs
+    reps = {min(i for i in sets if sets[i] == ts) for ts in sets.values()}
+    want = set()
+    for a, b in itertools.combinations(sorted(reps), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.8:
+            want.add((a, b, round(j, 6)))
+    got = {(r["a"], r["b"], r["jaccard"]) for r in rep_pairs.collect()}
+    assert got == want and want
+
+
 def test_lsh_signature_rejects_dim_mismatch(spark):
     """A vector length different from the planes' dim must raise, not
     silently collapse every vector into bucket 0 (zip_with null-pads,

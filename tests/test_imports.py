@@ -120,3 +120,32 @@ def test_removed_plan_selection_options_stay_gone():
         if param in inspect.signature(obj).parameters:
             back.append(f"{mod}.{qual}({param}=)")
     assert not back, back
+
+
+def test_session_conf_classes_exist_in_spark_sql_jar():
+    """Every Spark SQL class a session conf names is in the installed
+    ``spark-sql`` jar: a Spark upgrade that moves one (Spark 3's
+    checkpoint file managers now sit in a ``checkpointing`` subpackage)
+    would otherwise fail every streaming start, not an import."""
+    import glob
+    import os
+    import zipfile
+
+    import pyspark
+
+    from gelly_streaming_spark.session import RUNTIME_CONFS, STREAMING_SCALE_CONFS
+
+    jars = glob.glob(
+        os.path.join(os.path.dirname(pyspark.__file__), "jars", "spark-sql_*.jar")
+    )
+    assert len(jars) == 1, jars
+    with zipfile.ZipFile(jars[0]) as z:
+        present = set(z.namelist())
+    named = [
+        v
+        for v in {**RUNTIME_CONFS, **STREAMING_SCALE_CONFS}.values()
+        if v.startswith("org.apache.spark.sql.")
+    ]
+    assert named
+    missing = [v for v in named if v.replace(".", "/") + ".class" not in present]
+    assert not missing, missing

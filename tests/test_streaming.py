@@ -590,6 +590,113 @@ def test_parity_confs_restored_and_ckpt_removed_on_failure(spark):
         assert not os.path.exists(leaked_dir), leaked_dir
 
 
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """Class name of the checkpoint file manager a query started now on
+    ``path`` would use."""
+    jvm = spark._jvm  # noqa: SLF001
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = pkg.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf)
+    return mgr.getClass().getSimpleName()
+
+
+def test_prepare_session_selects_filesystem_checkpoint_manager(spark, tmp_path):
+    """A session built without the engine's confs gets the FileSystem
+    checkpoint manager once ``prepare_session`` runs on it."""
+    from gelly_streaming_spark.session import prepare_session
+
+    spark.conf.unset(_CKPT_MANAGER_CONF)
+    try:
+        assert _checkpoint_manager(spark, str(tmp_path)) == (
+            "FileContextBasedCheckpointFileManager"
+        )
+    finally:
+        prepare_session(spark)
+    assert _checkpoint_manager(spark, str(tmp_path)) == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+@pytest.fixture(scope="module")
+def restarted_checkpoint(spark, tmp_path_factory):
+    """A stateful available-now count run twice on one checkpoint, with
+    a second file arriving in between, and once over both files on a
+    fresh checkpoint: (restarted answer, one-run answer, checkpoint)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gelly_streaming_spark.queries import _parity_stream_confs
+
+    base = tmp_path_factory.mktemp("restart")
+    src = base / "src"
+    src.mkdir()
+    schema = "src long, dst long"
+
+    def count_by_src(ckpt) -> dict:
+        final: dict = {}
+
+        def keep_last(bdf, _bid):
+            final.clear()
+            final.update({r["src"]: r["count"] for r in bdf.collect()})
+
+        q = (
+            spark.readStream.schema(schema).parquet(str(src))
+            .groupBy("src").count()
+            .writeStream.outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .foreachBatch(keep_last)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(300)
+        finally:
+            q.stop()
+        return final
+
+    with _parity_stream_confs(spark):
+        pq.write_table(
+            pa.table({"src": [1, 2, 2, 3], "dst": [5, 6, 7, 8]}), src / "a.parquet"
+        )
+        first = count_by_src(base / "ckpt")
+        assert first == {1: 1, 2: 2, 3: 1}
+        pq.write_table(pa.table({"src": [2, 3, 4], "dst": [1, 1, 1]}), src / "b.parquet")
+        restarted = count_by_src(base / "ckpt")
+        one_run = count_by_src(base / "ckpt_one_run")
+    return restarted, one_run, base / "ckpt"
+
+
+def test_stateful_query_restarts_on_its_checkpoint(restarted_checkpoint):
+    """The restart reads the first run's state back through the
+    checkpoint manager and folds in only the new file."""
+    restarted, one_run, _ = restarted_checkpoint
+    assert restarted == one_run == {1: 1, 2: 3, 3: 2, 4: 1}
+
+
+def test_checkpoint_keeps_its_checksum_files(restarted_checkpoint):
+    """Hadoop's ``.<name>.crc`` sits beside every offset, commit and
+    state file, and Spark's ``N.delta.crc`` beside every state delta."""
+    *_, ckpt = restarted_checkpoint
+    files = {p.relative_to(ckpt).as_posix() for p in ckpt.rglob("*") if p.is_file()}
+    logs = [
+        f for f in files
+        if f.split("/")[0] in ("offsets", "commits") and f[-1].isdigit()
+    ]
+    deltas = [f for f in files if f.endswith(".delta")]
+    assert len(logs) == 4 and len(deltas) >= 2, sorted(files)
+
+    def hadoop_crc(f):
+        head, _, name = f.rpartition("/")
+        return f"{head}/.{name}.crc"
+
+    missing = [hadoop_crc(f) for f in logs + deltas if hadoop_crc(f) not in files]
+    missing += [f + ".crc" for f in deltas if f + ".crc" not in files]
+    assert not missing, missing
+
+
 def test_rocksdb_state_store_certifies_scale_confs(spark, sf_dir, tmp_path):
     """STREAMING_SCALE_CONFS (the 100 TB streaming configuration —
     RocksDB state store + changelog checkpointing) must actually run on
