@@ -590,16 +590,15 @@ def test_parity_confs_restored_and_ckpt_removed_on_failure(spark):
         assert not os.path.exists(leaked_dir), leaked_dir
 
 
-_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-
-
 def _checkpoint_manager(spark, path) -> str:
     """Class name of the checkpoint file manager a query started now on
     ``path`` would use."""
     jvm = spark._jvm  # noqa: SLF001
     hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()  # noqa: SLF001
     pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
-    mgr = pkg.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf)
+    mgr = pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), hadoop_conf
+    )
     return mgr.getClass().getSimpleName()
 
 
@@ -608,7 +607,7 @@ def test_prepare_session_selects_filesystem_checkpoint_manager(spark, tmp_path):
     checkpoint manager once ``prepare_session`` runs on it."""
     from gelly_streaming_spark.session import prepare_session
 
-    spark.conf.unset(_CKPT_MANAGER_CONF)
+    spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
     try:
         assert _checkpoint_manager(spark, str(tmp_path)) == (
             "FileContextBasedCheckpointFileManager"
