@@ -39,6 +39,11 @@ from gelly_streaming_spark.plans.shuffle import _estimated_bytes, loop_width_fro
 # switch to their skew-safe (partial-agg + AQE-splittable join) form.
 _SKEW_SAFE_EDGES = 50_000_000
 
+# Min-label rounds run between convergence checks — each check is a
+# driver action, so batching rounds roughly halves wall-clock on
+# short-diameter graphs at the cost of ≤1 wasted round after the fixpoint.
+_CHECK_EVERY = 2
+
 
 def _union_find_labels(edges: list[tuple]) -> list[tuple]:
     """Driver kernel of both CC entry points: union-find needs no
@@ -53,7 +58,6 @@ def _union_find_labels(edges: list[tuple]) -> list[tuple]:
 def connected_components(
     stream: GraphStream,
     max_iter: int = 100,
-    check_every: int = 2,
     small_input_rows: int = 100_000,
 ) -> DataFrame:
     """Per-vertex minimum-reachable-id labels: rows (id, component).
@@ -61,15 +65,11 @@ def connected_components(
     A graph of at most ``small_input_rows`` canonical edges is solved by
     a driver-local union-find (``plans.probe.driver_fast_path``).
 
-    ``check_every`` label-propagation rounds run between convergence
-    checks — each check is a driver action, so batching rounds roughly
-    halves wall-clock on short-diameter graphs at the cost of ≤1 wasted
-    round after the fixpoint. Raises if ``max_iter`` rounds pass without
+    ``_CHECK_EVERY`` label-propagation rounds run between convergence
+    checks. Raises if ``max_iter`` rounds pass without
     the fixpoint (a partially-propagated labeling is WRONG components,
     never returned silently — min-label needs O(diameter) rounds, so a
     long-path graph should use ``connected_components_alternating``)."""
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
     e = (
         stream.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -127,7 +127,7 @@ def connected_components(
         converged = False
         while rounds < max_iter:
             new_labels = labels
-            for _ in range(min(check_every, max_iter - rounds)):
+            for _ in range(min(_CHECK_EVERY, max_iter - rounds)):
                 new_labels = step(new_labels)
                 rounds += 1
             obs = Observation()

@@ -29,7 +29,7 @@ sources) observed on it; the driver runs no count job. Each iteration is
 one src-keyed join against the |V|-row rank table, one dst-keyed
 partial/final sum, and one left join back to the vertex set — three
 keyed shuffles over monotonically |V|-bounded data, with the rank table
-checkpointed every ``checkpoint_every`` rounds and after the last, so
+checkpointed every ``_CHECKPOINT_EVERY`` rounds and after the last, so
 the plan depth stays O(1) however many iterations run. A forced
 3-iteration run on the q56d graph (sf0.1, ``local[4]``) is 7 jobs,
 the caller's collect included: the two invariant checkpoints, the
@@ -48,6 +48,15 @@ from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
 from gelly_streaming_spark.plans.probe import driver_fast_path
 from gelly_streaming_spark.plans.shuffle import loop_width_from_plan
+
+# Lineage-cut cadence of the distributed loop: each uncheckpointed round
+# deepens the plan by two joins and one aggregate, which Catalyst absorbs
+# comfortably for a handful of rounds, while every localCheckpoint is an
+# eager materialization job. At 4 a 3-iteration run pays ZERO mid-loop
+# materializations (the r12 bench decomposition: per-round checkpoints
+# made job-floor overhead ~60% of q56's cold cost at local[32]); a
+# 100-round run still cuts every 4th round so plan depth stays bounded.
+_CHECKPOINT_EVERY = 4
 
 
 def _round_pr_exact(fr) -> float:
@@ -129,7 +138,6 @@ def pagerank(
     stream: GraphStream,
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
     sources: DataFrame | None = None,
     small_input_rows: int = 100_000,
     stats: dict | None = None,
@@ -139,16 +147,9 @@ def pagerank(
     certified cross-engine contract; margins measured in the q56
     docstring).
 
-    ``checkpoint_every`` is the lineage-cut cadence: each uncheckpointed
-    round deepens the plan by two joins and one aggregate, which
-    Catalyst absorbs comfortably for a handful of rounds, while every
-    localCheckpoint is an eager materialization job — at the default
-    cadence a 3-iteration run pays ZERO mid-loop materializations (the
-    r12 bench decomposition: per-round checkpoints made job-floor
-    overhead ~60% of q56's cold cost at local[32]); a 100-round run
-    still cuts every 4th round so plan depth stays bounded. The final
-    rank table is always checkpointed — the returned plan must not
-    reference the loop-invariant checkpoints the ``finally`` releases.
+    The rank table is checkpointed every ``_CHECKPOINT_EVERY`` rounds
+    and after the last — the returned plan must not reference the
+    loop-invariant checkpoints the ``finally`` releases.
 
     ``sources`` (r14, VERDICT r13 item 7): PERSONALIZED PageRank — the
     teleport mass concentrates uniformly on the given source vertex set
@@ -167,8 +168,6 @@ def pagerank(
     bit-safe rounding by construction)."""
     if iters < 1:
         raise ValueError(f"pagerank: iters must be >= 1, got {iters}")
-    if checkpoint_every < 1:
-        raise ValueError(f"pagerank: checkpoint_every must be >= 1, got {checkpoint_every}")
     e_plan = stream.edges.select("src", "dst").distinct()
     small = driver_fast_path(
         e_plan,
@@ -264,7 +263,7 @@ def pagerank(
                         + propagated
                     ).alias("r"),
                 )
-                if (i + 1) % checkpoint_every == 0 or i == iters - 1:
+                if (i + 1) % _CHECKPOINT_EVERY == 0 or i == iters - 1:
                     new = new.localCheckpoint()
                     if prev_ckpt is not None:
                         # the fresh checkpoint no longer reads the old one

@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.joins import top_k_per_group
 
+# Vectors per block of the blocked-GEMM pair scans: per-task work is
+# bounded at _ROWS_PER_BLOCK² similarity scores.
+_ROWS_PER_BLOCK = 8192
+
 
 def _dot(a, b) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -255,7 +259,7 @@ def _exact_pairs_gemm(
     threshold: float,
     id_col: str,
     vec_col: str,
-    rows_per_block: int = 8192,
+    rows_per_block: int = _ROWS_PER_BLOCK,
 ) -> DataFrame:
     """All-pairs cosine >= threshold via DISTRIBUTED blocked matrix multiply.
 
@@ -384,7 +388,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     label_col: str = "label",
     centroids: DataFrame | None = None,
-    rows_per_block: int = 8192,
     corpus_lists: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (cluster-bounded embedding
@@ -403,9 +406,9 @@ def semantic_dedup(
        centroid table broadcasts, ONE map pass scores the corpus —
        clustering exists precisely to bound the quadratic;
     2. vectors are re-keyed by (cluster, block) with a PER-CLUSTER
-       block count ceil(cluster_size / rows_per_block) from one tiny
+       block count ceil(cluster_size / _ROWS_PER_BLOCK) from one tiny
        (cluster, count) aggregate broadcast back — per-task work is
-       bounded at rows_per_block² regardless of cluster skew (a giant
+       bounded at _ROWS_PER_BLOCK² regardless of cluster skew (a giant
        cluster becomes MORE block-pair tasks, never a bigger task);
     3. every within-cluster block pair {i <= j} runs the SAME
        blocked-GEMM kernel the global exact scan certifies via q23b
@@ -447,7 +450,7 @@ def semantic_dedup(
         "cluster",
         F.pmod(
             F.xxhash64("vec_id"),
-            F.ceil(F.col("_n") / F.lit(rows_per_block)).cast("long"),
+            F.ceil(F.col("_n") / F.lit(_ROWS_PER_BLOCK)).cast("long"),
         ).alias("blk"),
         F.struct(F.col("vec_id").alias("id"), "v").alias("row"),
     )

@@ -35,54 +35,32 @@ from pyspark.sql import DataFrame
 _SESSION_TMPDIRS: set[str] = set()
 
 
-def _staging_base(expected_bytes: int = 0) -> str | None:
-    """Directory for session staging (replay chunks, restaged tables,
-    streaming checkpoints). Prefers a RAM-backed tmpfs: streaming state
-    checkpoints are many small fsync'd files, and moving them off the
-    block device measured +25-30% on the watermarked-dedup micro
-    (23k -> 30k edges/s warm). Guarded: tmpfs must be present, writable,
-    and have >16 GiB free (staged sf0.1 artifacts are ~10^2 MB; anything
-    bigger belongs on disk anyway). ``GSS_TMPDIR`` overrides (created if
-    missing, ignored with a warning if uncreatable/unwritable — a typo'd
-    override must not crash a run at the first mkdtemp, ADVICE r9);
-    returning None falls back to tempfile's default (/tmp)."""
-    override = os.environ.get("GSS_TMPDIR")
-    if override:
-        try:
-            os.makedirs(override, exist_ok=True)
-            if os.access(override, os.W_OK):
-                return override
-        except OSError:
-            pass
-        import warnings
-
-        warnings.warn(
-            f"GSS_TMPDIR={override!r} is not a writable directory; "
-            "falling back to the tmpfs/default staging selection",
-            stacklevel=2,
-        )
-    shm = "/dev/shm"
-    try:
-        if os.path.isdir(shm) and os.access(shm, os.W_OK):
-            # headroom check re-runs at every dir creation; callers
-            # staging a known-large artifact raise the bar by its size
-            # so tmpfs is skipped up front instead of filling mid-run
-            if shutil.disk_usage(shm).free > 16 * (1 << 30) + expected_bytes:
-                return shm
-    except OSError:
-        pass
-    return None
-
-
-def session_tmpdir(prefix: str, expected_bytes: int = 0) -> str:
+def session_tmpdir(prefix: str) -> str:
     """``mkdtemp`` for a session-lifetime staging dir (replay chunks,
-    restaged tables, bench warm-up), removed at interpreter exit even
-    when ``release_persisted`` is never called (pytest sessions, ad-hoc
-    shells) — no orphan ``gss_*`` dirs left behind. Lives on RAM-backed
-    tmpfs when available (_staging_base); pass ``expected_bytes`` for
-    known-large artifacts so the tmpfs headroom check accounts for them
-    (falls back to disk otherwise)."""
-    d = tempfile.mkdtemp(prefix=prefix, dir=_staging_base(expected_bytes))
+    restaged tables, streaming checkpoints, bench warm-up), removed at
+    interpreter exit even when ``release_persisted`` is never called
+    (pytest sessions, ad-hoc shells) — no orphan ``gss_*`` dirs left
+    behind. The dir lives under ``GSS_TMPDIR`` when set (created if
+    missing, ignored with a warning if uncreatable/unwritable — a typo'd
+    override must not crash a run at the first mkdtemp, ADVICE r9), else
+    under tempfile's default (/tmp)."""
+    base = os.environ.get("GSS_TMPDIR") or None
+    if base is not None:
+        try:
+            os.makedirs(base, exist_ok=True)
+            writable = os.access(base, os.W_OK)
+        except OSError:
+            writable = False
+        if not writable:
+            import warnings
+
+            warnings.warn(
+                f"GSS_TMPDIR={base!r} is not a writable directory; "
+                "falling back to the default temp directory",
+                stacklevel=2,
+            )
+            base = None
+    d = tempfile.mkdtemp(prefix=prefix, dir=base)
     _SESSION_TMPDIRS.add(d)
     return d
 

@@ -86,14 +86,7 @@ def _maybe_restage(spark: SparkSession, path: str, df: DataFrame, name: str):
             if md.num_rows >= _STAGE_MIN_ROWS and md.num_row_groups < max(
                 4, par // 4
             ):
-                # size hint: the restaged copy is the same data
-                # re-compressed (~1x the source file, 1.5x for slack) —
-                # lets the tmpfs headroom check reject up-front instead
-                # of filling RAM mid-write at larger-than-sf0.1 scale
-                out = session_tmpdir(
-                    f"gss_stage_{name}_",
-                    expected_bytes=int(os.path.getsize(path) * 1.5),
-                )
+                out = session_tmpdir(f"gss_stage_{name}_")
                 n = int(min(par, max(8, md.num_rows // 50_000)))
                 key = _STAGE_KEYS.get(name)
                 part = (

@@ -38,6 +38,10 @@ def _await(q, timeout_sec: int) -> None:
 
 _NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
+# Batches ``run_update_merge`` chains lazily before collapsing its state
+# to one checkpoint.
+_COLLAPSE_EVERY = 8
+
 
 def _needs_no_data_batch(sdf: DataFrame, output_mode: str) -> bool:
     """Does this sink's FINAL emission depend on a trailing no-data
@@ -135,7 +139,6 @@ def run_update_merge(
     sdf: DataFrame,
     key_cols: list[str],
     timeout_sec: int = 300,
-    collapse_every: int = 8,
 ) -> DataFrame:
     """Execute an UPDATE-mode streaming aggregation with an available-now
     trigger and return the final upserted state.
@@ -152,8 +155,8 @@ def run_update_merge(
     Scale: state stays a distributed DataFrame keyed by ``key_cols``;
     per batch one anti-join + union composed LAZILY over per-batch
     checkpoints, collapsed (checkpoint + free superseded blocks) every
-    ``collapse_every`` batches — never a driver materialization, never
-    more than O(collapse_every) pinned batches.
+    ``_COLLAPSE_EVERY`` batches — never a driver materialization, never
+    more than O(_COLLAPSE_EVERY) pinned batches.
     """
     from gelly_streaming_spark.plans.memory import free_checkpoint
 
@@ -166,9 +169,9 @@ def run_update_merge(
         # the upsert itself stays a LAZY plan over those checkpoints —
         # merging eagerly re-checkpointed every round (one extra job per
         # batch) for state the caller reads only after the last trigger.
-        # Every ``collapse_every`` batches the chain is collapsed to one
+        # Every ``_COLLAPSE_EVERY`` batches the chain is collapsed to one
         # checkpoint and the superseded blocks freed, so an unbounded
-        # stream pins O(collapse_every) batches, not its whole history.
+        # stream pins O(_COLLAPSE_EVERY) batches, not its whole history.
         ckpt = bdf.localCheckpoint()
         pinned.append(ckpt)
         if state:
@@ -176,7 +179,7 @@ def run_update_merge(
             state.append(ckpt.unionByName(prev.join(ckpt, key_cols, "left_anti")))
         else:
             state.append(ckpt)
-        if len(pinned) >= collapse_every:
+        if len(pinned) >= _COLLAPSE_EVERY:
             merged = state.pop().localCheckpoint()
             while pinned:
                 free_checkpoint(pinned.pop())

@@ -1647,20 +1647,22 @@ def test_semantic_dedup_cluster_bounded_semantics(spark):
     assert out[20][0] == out[21][0] == out[22][0]
 
 
-def test_semantic_dedup_block_invariance(emb):
+def test_semantic_dedup_block_invariance(emb, monkeypatch):
     """The per-cluster block decomposition is an implementation detail:
-    forcing many blocks per cluster (rows_per_block=16 over ~50-vector
+    forcing many blocks per cluster (_ROWS_PER_BLOCK=16 over ~50-vector
     clusters) must yield exactly the verdict of the single-block run —
     each unordered pair is scored exactly once either way."""
+    from gelly_streaming_spark.ext import embeddings
     from gelly_streaming_spark.ext.embeddings import semantic_dedup
 
     one = sorted(
         (r.vec_id, r.cluster, r.kept)
         for r in semantic_dedup(emb, threshold=0.38).collect()
     )
+    monkeypatch.setattr(embeddings, "_ROWS_PER_BLOCK", 16)
     many = sorted(
         (r.vec_id, r.cluster, r.kept)
-        for r in semantic_dedup(emb, threshold=0.38, rows_per_block=16).collect()
+        for r in semantic_dedup(emb, threshold=0.38).collect()
     )
     assert one == many
     assert any(not k for (_, _, k) in one)  # the threshold actually bites

@@ -18,7 +18,6 @@ INITS = sorted(PKG.rglob("__init__.py"))
 CONSUMERS = sorted(
     [
         *ROOT.glob("examples/*.py"),
-        ROOT / "bench" / "micro.py",
         ROOT / "bench.py",
         *ROOT.glob("perfbench/*.py"),
         PKG / "queries.py",
@@ -83,7 +82,8 @@ def test_consumer_engine_imports_resolve(path):
 # Keyword options that chose a kernel, a join hint or an alternative
 # algorithm while no query, example or benchmark set them. Each call now
 # has one path, or picks it from what it measures (vocabulary size, edge
-# count, largest window, ``isStreaming``).
+# count, largest window, ``isStreaming``). The cadence and block-size
+# options at the end are module constants now.
 REMOVED_OPTIONS = [
     ("ext.text", "bpe_encode", "impl"),
     ("ext.text", "bpe_encode", "checkpoint_every"),
@@ -105,6 +105,10 @@ REMOVED_OPTIONS = [
     ("operators.graphstream", "GraphStream.difference", "assume_distinct"),
     ("operators.graphstream", "GraphStream.number_of_vertices", "approx"),
     ("streaming.runner", "run_to_memory", "name"),
+    ("algos.pagerank", "pagerank", "checkpoint_every"),
+    ("algos.connected_components", "connected_components", "check_every"),
+    ("streaming.runner", "run_update_merge", "collapse_every"),
+    ("ext.embeddings", "semantic_dedup", "rows_per_block"),
 ]
 
 
