@@ -121,9 +121,9 @@ def _bucket_array_udf(tables: list[np.ndarray]):
             try:
                 # fast path: one bulk conversion (a per-row python null
                 # scan here measured 2x on the whole kernel: 277k ->
-                # 137k vec/s in bench/micro.py). Arrow folds null
-                # ELEMENTS to NaN in the pandas view, so the null check
-                # is a vectorized isnan over the converted matrix.
+                # 137k vec/s). Arrow folds null ELEMENTS to NaN in the
+                # pandas view, so the null check is a vectorized isnan
+                # over the converted matrix.
                 x = np.asarray(rows, dtype=np.float64)
             except (TypeError, ValueError):
                 # object-array delivery (list rows with None): drop the
@@ -259,17 +259,16 @@ def _exact_pairs_gemm(
     threshold: float,
     id_col: str,
     vec_col: str,
-    rows_per_block: int = _ROWS_PER_BLOCK,
 ) -> DataFrame:
     """All-pairs cosine >= threshold via DISTRIBUTED blocked matrix multiply.
 
-    The corpus is hash-partitioned into B = ceil(n / rows_per_block)
+    The corpus is hash-partitioned into B = ceil(n / _ROWS_PER_BLOCK)
     blocks; every unordered block pair {i, j} (i <= j) becomes one task
     that multiplies two bounded chunks with BLAS (numpy) — ~100x faster
     than a pair-at-a-time JVM array fold (the crossJoin + F.aggregate
     plan took 18 s on 500x500 at sf0.1). No driver materialization and no
     full-corpus broadcast anywhere: per-task memory is two chunks of
-    ``rows_per_block`` vectors, shuffle volume O(n·B) rows. Each distinct
+    ``_ROWS_PER_BLOCK`` vectors, shuffle volume O(n·B) rows. Each distinct
     pair is scored exactly once — pair (a, b) appears only in the block
     pair {blk(a), blk(b)}, and the kernel canonicalizes to id_a < id_b
     (the diagonal block dedups the symmetric hit).
@@ -285,7 +284,7 @@ def _exact_pairs_gemm(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     n = rows.count()
-    n_blocks = max(1, -(-n // rows_per_block))
+    n_blocks = max(1, -(-n // _ROWS_PER_BLOCK))
     # One collect_list of (id, vec) structs: id/vector alignment is
     # structural, not an implicit coupling of two buffers' row order.
     chunks = (
@@ -304,8 +303,8 @@ def _exact_pairs_gemm(
         # burst to multiply — the q23b blowout class, BASELINE r8 row).
         # The kernel row is IDENTICAL in shape (i, j, rows_l, rows_r),
         # runs the same _gemm_pairs_fn, and the multi-block enumeration
-        # stays the only path for n > rows_per_block (forced in tests
-        # with a small rows_per_block).
+        # stays the only path for n > _ROWS_PER_BLOCK (forced in tests
+        # with a small _ROWS_PER_BLOCK).
         paired = chunks.select(
             F.col("blk").alias("i"),
             F.col("blk").alias("j"),

@@ -47,9 +47,11 @@ The DEFAULT rule set is the FULL vendored ICANN section of the Public
 Suffix List (``public_suffix_list.dat`` alongside this module —
 publicsuffix.org data via the distro's ``publicsuffix`` package,
 MPL-2.0, license header preserved; 7,380 rules, 18 wildcards, 8
-exceptions, max depth 4). A newer file drops in via
-:func:`load_psl_file`; the parser accepts the raw publicsuffix.org
-format, including wildcard/exception syntax.
+exceptions, max depth 4). It ships as package data and is read at
+import, so an install without it fails there instead of answering from
+a different rule set. A newer file drops in via :func:`load_psl_file`;
+the parser accepts the raw publicsuffix.org format, including
+wildcard/exception syntax.
 """
 
 from __future__ import annotations
@@ -61,172 +63,15 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Multi-part public suffixes — a vendored excerpt of the ICANN section
-# of the Public Suffix List (publicsuffix.org, public data; ~300 of the
-# most-trafficked ccTLD second-level registries). Production passes the
-# full PSL through the same parameter; the operator only builds a bigger
-# alternation, the plan shape (one regexp per row, no join) is unchanged.
-MULTI_SUFFIXES: tuple[str, ...] = (
-    # United Kingdom
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "net.uk", "sch.uk", "nhs.uk",
-    "police.uk", "plc.uk", "ltd.uk", "me.uk",
-    # Australia (state education registries are 3-label)
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au", "id.au",
-    "act.edu.au", "nsw.edu.au", "nt.edu.au", "qld.edu.au", "sa.edu.au",
-    "tas.edu.au", "vic.edu.au", "wa.edu.au",
-    # Japan
-    "co.jp", "or.jp", "ne.jp", "ac.jp", "ad.jp", "ed.jp", "go.jp",
-    "gr.jp", "lg.jp",
-    # New Zealand
-    "co.nz", "net.nz", "org.nz", "ac.nz", "govt.nz", "school.nz",
-    "geek.nz", "gen.nz", "kiwi.nz", "maori.nz", "iwi.nz", "mil.nz",
-    # Brazil
-    "com.br", "net.br", "org.br", "gov.br", "edu.br", "art.br", "adv.br",
-    "blog.br", "eco.br", "mil.br", "wiki.br", "ind.br", "inf.br",
-    # China
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn", "mil.cn",
-    # Turkey
-    "com.tr", "net.tr", "org.tr", "gov.tr", "edu.tr", "av.tr", "bbs.tr",
-    "bel.tr", "biz.tr", "dr.tr", "gen.tr", "info.tr", "k12.tr",
-    "name.tr", "tel.tr", "web.tr", "tv.tr", "pol.tr", "mil.tr",
-    # Argentina
-    "com.ar", "net.ar", "org.ar", "gob.ar", "edu.ar", "int.ar", "mil.ar",
-    "tur.ar", "musica.ar",
-    # Mexico
-    "com.mx", "net.mx", "org.mx", "gob.mx", "edu.mx",
-    # India
-    "co.in", "net.in", "org.in", "firm.in", "gen.in", "ind.in", "ac.in",
-    "edu.in", "res.in", "gov.in", "mil.in", "nic.in",
-    # South Korea
-    "co.kr", "ne.kr", "or.kr", "re.kr", "pe.kr", "go.kr", "mil.kr",
-    "ac.kr", "hs.kr", "ms.kr", "es.kr", "sc.kr", "kg.kr", "seoul.kr",
-    "busan.kr",
-    # South Africa
-    "co.za", "net.za", "org.za", "gov.za", "edu.za", "ac.za", "web.za",
-    "mil.za", "nom.za",
-    # Indonesia
-    "co.id", "or.id", "ac.id", "go.id", "mil.id", "net.id", "web.id",
-    "sch.id", "biz.id", "my.id", "desa.id",
-    # Israel
-    "co.il", "org.il", "net.il", "ac.il", "gov.il", "muni.il", "k12.il",
-    "idf.il",
-    # Thailand
-    "co.th", "or.th", "ac.th", "go.th", "in.th", "mi.th", "net.th",
-    # Singapore
-    "com.sg", "net.sg", "org.sg", "gov.sg", "edu.sg", "per.sg",
-    # Malaysia
-    "com.my", "net.my", "org.my", "gov.my", "edu.my", "mil.my", "name.my",
-    # Philippines
-    "com.ph", "net.ph", "org.ph", "gov.ph", "edu.ph", "ngo.ph", "mil.ph",
-    "i.ph",
-    # Vietnam
-    "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn", "int.vn", "ac.vn",
-    "biz.vn", "info.vn", "name.vn", "pro.vn", "health.vn",
-    # Taiwan
-    "com.tw", "net.tw", "org.tw", "edu.tw", "gov.tw", "mil.tw", "idv.tw",
-    "game.tw", "ebiz.tw", "club.tw",
-    # Hong Kong
-    "com.hk", "net.hk", "org.hk", "gov.hk", "edu.hk", "idv.hk",
-    # Pakistan
-    "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk", "fam.pk", "biz.pk",
-    "web.pk", "gob.pk", "gok.pk", "gon.pk", "gop.pk", "gos.pk",
-    # Bangladesh / Sri Lanka / Nepal
-    "com.bd", "net.bd", "org.bd", "edu.bd", "gov.bd", "ac.bd", "mil.bd",
-    "com.lk", "net.lk", "org.lk", "edu.lk", "gov.lk", "sch.lk", "ngo.lk",
-    "int.lk", "soc.lk", "web.lk", "ltd.lk", "grp.lk", "hotel.lk",
-    "com.np", "net.np", "org.np", "edu.np", "gov.np", "mil.np",
-    # Poland
-    "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "info.pl",
-    "waw.pl", "biz.pl", "mil.pl",
-    # Russia / Ukraine
-    "com.ru", "net.ru", "org.ru", "edu.ru", "gov.ru", "int.ru", "mil.ru",
-    "ac.ru", "msk.ru", "spb.ru",
-    "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua", "co.ua",
-    "biz.ua", "kiev.ua", "lviv.ua", "kharkiv.ua", "odessa.ua",
-    # Greece / Portugal / Romania / Hungary / Spain / Italy / France
-    "com.gr", "net.gr", "org.gr", "edu.gr", "gov.gr",
-    "com.pt", "net.pt", "org.pt", "edu.pt", "gov.pt", "int.pt", "publ.pt",
-    "nome.pt",
-    "com.ro", "org.ro", "tm.ro", "nt.ro", "nom.ro", "info.ro", "rec.ro",
-    "arts.ro", "firm.ro", "store.ro", "www.ro",
-    "co.hu", "org.hu", "info.hu", "priv.hu", "sport.hu", "tm.hu",
-    "com.es", "nom.es", "org.es", "gob.es", "edu.es",
-    "gov.it", "edu.it",
-    "gouv.fr", "asso.fr", "com.fr", "nom.fr", "prd.fr", "tm.fr",
-    "avocat.fr", "port.fr",
-    # Austria
-    "co.at", "or.at", "ac.at", "gv.at", "priv.at",
-    # Latin America
-    "com.co", "net.co", "org.co", "edu.co", "gov.co", "mil.co", "nom.co",
-    "arts.co", "firm.co", "info.co", "int.co", "rec.co", "web.co",
-    "com.pe", "net.pe", "org.pe", "edu.pe", "gob.pe", "mil.pe", "nom.pe",
-    "gob.cl", "gov.cl", "mil.cl", "co.cl",
-    "com.ve", "net.ve", "org.ve", "co.ve", "edu.ve", "gob.ve", "info.ve",
-    "mil.ve", "web.ve",
-    "com.ec", "net.ec", "org.ec", "edu.ec", "gob.ec", "gov.ec",
-    "info.ec", "fin.ec", "k12.ec", "med.ec", "mil.ec", "pro.ec",
-    "com.uy", "net.uy", "org.uy", "edu.uy", "gub.uy", "mil.uy",
-    "com.py", "net.py", "org.py", "edu.py", "gov.py", "mil.py", "coop.py",
-    "com.bo", "net.bo", "org.bo", "edu.bo", "gob.bo", "int.bo", "mil.bo",
-    "tv.bo", "web.bo",
-    "co.cr", "ac.cr", "ed.cr", "fi.cr", "go.cr", "or.cr", "sa.cr",
-    "com.do", "net.do", "org.do", "edu.do", "gob.do", "gov.do", "mil.do",
-    "sld.do", "art.do", "web.do",
-    "com.gt", "net.gt", "org.gt", "edu.gt", "gob.gt", "ind.gt", "mil.gt",
-    "gc.ca",
-    # Middle East / Africa
-    "com.eg", "net.eg", "org.eg", "edu.eg", "gov.eg", "eun.eg", "mil.eg",
-    "name.eg", "sci.eg",
-    "co.ma", "net.ma", "org.ma", "gov.ma", "ac.ma", "press.ma",
-    "com.ng", "net.ng", "org.ng", "edu.ng", "gov.ng", "name.ng",
-    "sch.ng", "mobi.ng", "mil.ng", "i.ng",
-    "co.ke", "or.ke", "ne.ke", "go.ke", "ac.ke", "sc.ke", "me.ke",
-    "mobi.ke", "info.ke",
-    "co.tz", "ac.tz", "go.tz", "or.tz", "ne.tz", "sc.tz", "mil.tz",
-    "tv.tz", "info.tz", "me.tz", "mobi.tz",
-    "co.ug", "or.ug", "ac.ug", "sc.ug", "go.ug", "ne.ug", "com.ug",
-    "org.ug",
-    "com.gh", "edu.gh", "gov.gh", "org.gh", "mil.gh",
-    "com.sa", "net.sa", "org.sa", "gov.sa", "med.sa", "pub.sa", "edu.sa",
-    "sch.sa",
-    "co.ae", "net.ae", "org.ae", "sch.ae", "ac.ae", "gov.ae", "mil.ae",
-    "ac.ir", "co.ir", "gov.ir", "id.ir", "net.ir", "org.ir", "sch.ir",
-    "com.kw", "edu.kw", "emb.kw", "gov.kw", "ind.kw", "net.kw", "org.kw",
-    "com.qa", "edu.qa", "gov.qa", "mil.qa", "name.qa", "net.qa", "org.qa",
-    "sch.qa",
-    "co.om", "com.om", "edu.om", "gov.om", "med.om", "net.om", "org.om",
-    "pro.om",
-    "com.jo", "org.jo", "net.jo", "edu.jo", "sch.jo", "gov.jo", "mil.jo",
-    "name.jo",
-    "com.lb", "edu.lb", "gov.lb", "net.lb", "org.lb",
-)
-
-# Wildcard and exception rules from the ICANN section, in raw PSL
-# syntax. ``*.ck`` makes every <label>.ck a public suffix; ``!www.ck``
-# carves www.ck back out (it is a registrable domain). The seven
-# Japanese city registries follow the same pattern.
-WILDCARD_RULES: tuple[str, ...] = (
-    "*.ck", "!www.ck",
-    "*.kawasaki.jp", "!city.kawasaki.jp",
-    "*.kitakyushu.jp", "!city.kitakyushu.jp",
-    "*.kobe.jp", "!city.kobe.jp",
-    "*.nagoya.jp", "!city.nagoya.jp",
-    "*.sapporo.jp", "!city.sapporo.jp",
-    "*.sendai.jp", "!city.sendai.jp",
-    "*.yokohama.jp", "!city.yokohama.jp",
-    "*.bd", "*.er", "*.fk", "*.mm", "*.pg",
-)
-
 # PSL_RULES — the package default — is assigned right after
 # load_psl_file's definition below: the FULL vendored ICANN section of
 # the Public Suffix List (publicsuffix.org — public data, MPL-2.0,
 # license header preserved in the vendored file; 7,380 rules incl. 18
-# wildcards and 8 exceptions, max depth 4), falling back to the
-# hand-written excerpt if the data file is ever stripped from the
-# install. IDN boundary: the PSL carries IDN rules in Unicode form
-# (公司.cn, …) — they match hosts presented in the same Unicode form;
-# punycode (xn--) hosts need IDNA normalization upstream of the lookup,
-# as the PSL algorithm specifies.
+# wildcards and 8 exceptions, max depth 4). The file ships as package
+# data; an install without it fails at import. IDN boundary: the PSL
+# carries IDN rules in Unicode form (公司.cn, …) — they match hosts
+# presented in the same Unicode form; punycode (xn--) hosts need IDNA
+# normalization upstream of the lookup, as the PSL algorithm specifies.
 _PSL_DATA = Path(__file__).parent / "public_suffix_list.dat"
 
 
@@ -246,12 +91,7 @@ def load_psl_file(path: str) -> tuple[str, ...]:
     return tuple(rules)
 
 
-PSL_RULES: tuple[str, ...] = (
-    load_psl_file(str(_PSL_DATA)) if _PSL_DATA.is_file()
-    else MULTI_SUFFIXES + WILDCARD_RULES
-)
-
-
+PSL_RULES: tuple[str, ...] = load_psl_file(str(_PSL_DATA))
 
 
 @dataclass(frozen=True)

@@ -47,13 +47,6 @@ _PARTIAL_SCHEMA = T.StructType(
     ]
 )
 
-_BOUNDED_SCHEMA = T.StructType(
-    [
-        T.StructField("pkey", T.IntegerType(), True),
-        T.StructField("summary", T.BinaryType(), True),
-    ]
-)
-
 
 @dataclass
 class SummaryAggregation:
@@ -115,60 +108,29 @@ class SummaryAggregation:
         return partials
 
     # ------------------------------------------------------------------
-    def fold_bounded(self, edges: DataFrame) -> Any:
-        """Distributed bucket-fold of a bounded edge DataFrame into ONE
-        merged summary (no windowing) — the per-micro-batch primitive the
-        streaming runner uses (streaming/summary.py). Edges fold in ts
-        order within each bucket when a ts column exists (order-sensitive
-        summaries: spanner)."""
+    def _merged_by_bucket(self, edges: DataFrame, window: Optional[str]) -> dict:
+        """Bucket-fold ``edges`` (distributed) and merge the partials on
+        the driver: one merged summary per tumbling ``window`` start, or
+        under the single key None when ``window`` is None. The driver
+        handles O(num_buckets) pickled summaries per window, never
+        edges."""
         cols = [F.col("src"), F.col("dst")]
         cols.append(
             F.col("val") if "val" in edges.columns else F.lit(None).alias("val")
         )
         if self.order_sensitive and "ts" in edges.columns:
-            cols.append(F.col("ts"))
-        df = edges.select(
-            F.pmod(F.xxhash64("src"), F.lit(self.num_buckets)).alias("pkey"), *cols
-        )
-        init, fold = self.initial, self.fold_pdf
-
-        def fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            if "ts" in pdf.columns:
-                pdf = pdf.sort_values("ts")
-            return pd.DataFrame(
-                {
-                    "pkey": [int(pdf["pkey"].iloc[0])],
-                    "summary": [pickle.dumps(fold(init(), pdf))],
-                }
-            )
-
-        partials_df = df.groupBy("pkey").applyInPandas(
-            fold_group, schema=_BOUNDED_SCHEMA
-        )
-        partials = self._tree_merge(partials_df, ["pkey"]).collect()
-        self.last_driver_partials = len(partials)
-        out = init()
-        for row in partials:
-            out = self.combine_fn(out, pickle.loads(bytes(row["summary"])))
-        return out
-
-    def run(self, stream: GraphStream) -> DataFrame:
-        """Batch execution: bucket-fold (distributed) → merge (driver,
-        O(num_buckets) pickled summaries) → transform."""
-        e = stream.edges
-        cols = [F.col("src"), F.col("dst")]
-        cols.append(F.col("val") if "val" in e.columns else F.lit(None).alias("val"))
-        if self.order_sensitive and "ts" in e.columns:
             # order-sensitive summaries (spanner's greedy offers) fold in
             # event-time order within each (bucket, pkey) group — without
             # selecting ts here, fold_group's sort was silently a no-op
             # and the fold order was arbitrary Arrow-batch order
             cols.append(F.col("ts"))
-        if self.window is not None:
-            bucket = F.window(F.col("ts"), self.window).start.alias("bucket")
+        if window is not None:
+            bucket = F.window(F.col("ts"), window).start.alias("bucket")
         else:
             bucket = F.lit(None).cast("timestamp").alias("bucket")
-        df = e.select(bucket, F.pmod(F.xxhash64("src"), F.lit(self.num_buckets)).alias("pkey"), *cols)
+        df = edges.select(
+            bucket, F.pmod(F.xxhash64("src"), F.lit(self.num_buckets)).alias("pkey"), *cols
+        )
 
         init, fold = self.initial, self.fold_pdf
 
@@ -190,7 +152,6 @@ class SummaryAggregation:
         partials = self._tree_merge(partials_df, ["bucket", "pkey"]).collect()
         self.last_driver_partials = len(partials)
 
-        # Merge per window bucket; ≤ num_buckets partials each.
         by_bucket: dict[Any, Any] = {}
         for row in partials:
             s = pickle.loads(bytes(row["summary"]))
@@ -199,6 +160,19 @@ class SummaryAggregation:
                 by_bucket[key] = self.combine_fn(by_bucket[key], s)
             else:
                 by_bucket[key] = s
+        return by_bucket
+
+    def fold_bounded(self, edges: DataFrame) -> Any:
+        """Distributed bucket-fold of a bounded edge DataFrame into ONE
+        merged summary (no windowing; ``initial()`` on empty input) — the
+        per-micro-batch primitive the streaming runner uses
+        (streaming/summary.py)."""
+        return self._merged_by_bucket(edges, None).get(None, self.initial())
+
+    def run(self, stream: GraphStream) -> DataFrame:
+        """Batch execution: bucket-fold (distributed) → merge (driver,
+        O(num_buckets) pickled summaries) → transform."""
+        by_bucket = self._merged_by_bucket(stream.edges, self.window)
 
         out_rows: list[tuple] = []
         carry = None

@@ -20,6 +20,7 @@ Determinism rules applied on BOTH sides:
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
@@ -579,19 +580,19 @@ def q15f(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.algos.connected_components import (
         cc_summary_aggregation,
     )
+    from gelly_streaming_spark.streaming.sources import replay
     from gelly_streaming_spark.streaming.summary import (
         StreamingSummaryAggregation,
     )
 
     edges = _q15_edges(spark, sf_dir).edges
-    with _parity_stream_confs(spark):
-        stream = _replay_tmp(
-            edges.withColumn("ts", F.lit(None).cast("timestamp")),
-            num_batches=2,
-            key=f"q15f:{sf_dir}",
-        )
-        runner = StreamingSummaryAggregation(cc_summary_aggregation(num_buckets=8))
-        out = runner.run(stream)
+    stream = replay(
+        edges.withColumn("ts", F.lit(None).cast("timestamp")),
+        num_batches=2,
+        cache_key=f"q15f:{sf_dir}",
+    )
+    runner = StreamingSummaryAggregation(cc_summary_aggregation(num_buckets=8))
+    out = runner.run(stream)
     if runner.batches < 2:
         raise RuntimeError(
             f"A8 bulk certification needs >=2 merged batches, got {runner.batches}"
@@ -942,26 +943,12 @@ def q23b(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the FINAL state, which must hash-match the same DuckDB oracle. This
 # pins semantic delta D1 (per-micro-batch emission, same fixpoint).
 # ---------------------------------------------------------------------------
-def _replay_tmp(
-    df: DataFrame,
-    num_batches: int = 2,
-    order_by: Optional[str] = None,
-    key: Optional[str] = None,
-) -> DataFrame:
-    from gelly_streaming_spark.streaming.sources import replay
-
-    # replay() owns parameter folding: its memo key already includes
-    # (num_batches, files_per_trigger, order_by) — re-encoding them here
-    # would just be a second hand-maintained copy that could drift.
-    # stage_dir is left to replay(): it allocates the temp dir only on a
-    # memo miss, so memoized reruns create no orphan /tmp dirs.
-    return replay(df, None, num_batches, order_by=order_by, cache_key=key)
-
-
-class _parity_stream_confs:
-    """Bounded-parity-replay tuning: stateful streaming operators fix
-    their state partition count at query start from
-    ``spark.sql.shuffle.partitions`` (AQE never re-plans it), and a
+@contextmanager
+def _parity_stream_confs(spark: SparkSession):
+    """Narrow ``spark.sql.shuffle.partitions`` to 4 for a bounded parity
+    replay through a stateful streaming operator, restoring the session
+    value on exit. Such an operator fixes its state partition count at
+    query start from this conf (AQE never re-plans it), and a
     2-micro-batch replay of a small fixture does not amortize 32 state
     stores per operator — measured 13.6 s → 7.6 s across the four
     streaming parity queries at 8, a further ~0.5 s/query at 4. Going
@@ -970,62 +957,16 @@ class _parity_stream_confs:
     also serializes the replay's DATA work (q27s's 190 k-row windowed
     agg ran 1.3–1.5 s at width 1 vs 0.85–0.95 s at 4; q28s 0.68 vs
     0.57). 4 is the measured basin for both regimes; the residual is
-    the query start/stop floor (~0.5 s on this host). Production
-    streams size this per deployment.
-
-    The offset/commit/state checkpoint goes to a throwaway
-    ``session_tmpdir``: a parity replay is a bounded re-run whose
-    results are lineage-severed before return, so durability buys
-    nothing. Where that dir lives does not make these queries fast.
-    Re-measured on q25s–q28s (sf0.01, local[4], median of 5): a tmpfs
-    and a disk checkpoint time the same under either checkpoint manager
-    (within 0.09 s). The per-query cost once blamed on fsync was
-    Hadoop's FileContext manager forking ``readlink`` twice per
-    checkpoint-file rename: 32–192 forks per query, about 3 ms each.
-    The FileSystem manager (session.py) forks none: q25s 0.83 → 0.51 s,
-    q27s 1.27 → 0.82 s, q28s 0.85 → 0.46 s on disk. Production streams
-    size partitions per deployment and set an explicit durable
-    checkpointLocation; batch queries are unaffected (confs restored
-    and the checkpoint dir removed on exit)."""
-
-    _CKPT_CONF = "spark.sql.streaming.checkpointLocation"
-
-    def __init__(self, spark: SparkSession, n: int = 4):
-        self.spark, self.n = spark, n
-        self.ckpt_dir: str | None = None
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        # anything fallible after the conf mutation must restore it:
-        # Python does not call __exit__ when __enter__ raises, and a
-        # leaked partitions=4 would silently serialize every later
-        # batch query in the session
-        try:
-            self.prev_ckpt = self.spark.conf.get(self._CKPT_CONF, None)
-            if self.prev_ckpt is None:
-                # session_tmpdir, not a raw mkdtemp: it honours
-                # GSS_TMPDIR and registers the dir, so bench.py's
-                # SIGTERM purge and atexit remove it — a driver kill
-                # mid-query must not leak checkpoint state (observed:
-                # gss_ckpt_* surviving a SIGTERM'd bench run). __exit__
-                # still removes it eagerly on the normal path.
-                from gelly_streaming_spark.plans.memory import session_tmpdir
-
-                self.ckpt_dir = session_tmpdir("gss_ckpt_")
-                self.spark.conf.set(self._CKPT_CONF, self.ckpt_dir)
-        except BaseException:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-            raise
-
-    def __exit__(self, *exc):
-        import shutil
-
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        if self.ckpt_dir is not None:
-            self.spark.conf.unset(self._CKPT_CONF)
-            shutil.rmtree(self.ckpt_dir, ignore_errors=True)
-        return False
+    the query start/stop floor (~0.5 s on a 4-core host). Queries
+    without a state store (q15f, q26s: ``foreachBatch`` folds) time the
+    same at either width and do not enter it. Production streams size
+    this per deployment."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @_q("q25s_streaming_degrees",
@@ -1037,14 +978,15 @@ class _parity_stream_confs:
     "state ≡ batch degrees ≡ Q08 oracle")
 def q25s(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.streaming.runner import run_to_memory
+    from gelly_streaming_spark.streaming.sources import replay
 
     with _parity_stream_confs(spark):
         # single batch: complete-mode final state is batch-count-invariant
         # (cross-batch state accumulation is pinned by q26s/q28s and
         # test_streaming's multi-batch cases), so the parity signal is
         # identical and the second state-store commit round is saved
-        stream = _replay_tmp(
-            E.edges_cust_order(spark, sf_dir), num_batches=1, key=f"q25s:{sf_dir}"
+        stream = replay(
+            E.edges_cust_order(spark, sf_dir), num_batches=1, cache_key=f"q25s:{sf_dir}"
         )
         return run_to_memory(GraphStream(stream).degrees(), "complete")
 
@@ -1054,21 +996,21 @@ def q25s(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(foreachBatch contraction) — final mapping ≡ batch CC ≡ Q15 oracle")
 def q26s(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.streaming.cc import IncrementalConnectedComponents
+    from gelly_streaming_spark.streaming.sources import replay
 
     edges = _q15_edges(spark, sf_dir).edges
-    with _parity_stream_confs(spark):
-        # single batch: the per-batch contraction (state ∪ new edges →
-        # CC fixpoint) is what this query certifies against the oracle;
-        # the cross-batch refinement invariant (batch-2 edges merging
-        # components discovered in batch 1) is pinned by
-        # test_streaming's test_incremental_cc_refines_across_batches,
-        # and q29s remains the registry's multi-batch representative
-        stream = _replay_tmp(
-            edges.withColumn("ts", F.lit(None).cast("timestamp")),
-            num_batches=1,
-            key=f"q26s:{sf_dir}",
-        )
-        return IncrementalConnectedComponents().run(stream)
+    # single batch: the per-batch contraction (state ∪ new edges → CC
+    # fixpoint) is what this query certifies against the oracle; the
+    # cross-batch refinement invariant (batch-2 edges merging components
+    # discovered in batch 1) is pinned by test_streaming's
+    # test_incremental_cc_refines_across_batches, and q29s remains the
+    # registry's multi-batch representative
+    stream = replay(
+        edges.withColumn("ts", F.lit(None).cast("timestamp")),
+        num_batches=1,
+        cache_key=f"q26s:{sf_dir}",
+    )
+    return IncrementalConnectedComponents().run(stream)
 
 
 # Watermarked APPEND-mode windowed aggregation: with an in-order replay
@@ -1089,6 +1031,7 @@ _Q27S_SQL = _with(
     "exactly those closed by the final watermark (last open window withheld)")
 def q27s(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.streaming.runner import run_to_memory
+    from gelly_streaming_spark.streaming.sources import replay
 
     with _parity_stream_confs(spark):
         # single data batch (+ the trailing no-data batch that advances
@@ -1097,11 +1040,11 @@ def q27s(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and cross-batch watermark progression is pinned by
         # test_streaming's 3-batch ordered replays; the second
         # state-store commit round is saved
-        stream = _replay_tmp(
+        stream = replay(
             E.edges_events(spark, sf_dir).select("src", "dst", "val", "ts"),
             num_batches=1,
             order_by="ts",
-            key=f"q27s:{sf_dir}",
+            cache_key=f"q27s:{sf_dir}",
         )
         agg = (
             GraphStream(stream)
@@ -1118,6 +1061,7 @@ def q27s(spark: SparkSession, sf_dir: str) -> DataFrame:
     "than the replayed range, so the final state equals batch DISTINCT")
 def q28s(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.streaming.runner import run_to_memory
+    from gelly_streaming_spark.streaming.sources import replay
     from gelly_streaming_spark.streaming.stateful import streaming_distinct
 
     edges = E.edges_cust_order(spark, sf_dir).select(
@@ -1129,8 +1073,8 @@ def q28s(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cross-batch dedup state (a batch-2 duplicate of a batch-1 row
         # must be dropped) is pinned by test_streaming's 2-batch
         # doubled-edges case
-        stream = _replay_tmp(
-            edges, num_batches=1, order_by="ts", key=f"q28s:{sf_dir}"
+        stream = replay(
+            edges, num_batches=1, order_by="ts", cache_key=f"q28s:{sf_dir}"
         )
         out = run_to_memory(streaming_distinct(stream, "3650 days"), "append")
     return out.select("src", "dst")
@@ -1146,12 +1090,13 @@ def q28s(spark: SparkSession, sf_dir: str) -> DataFrame:
     "trigger) keyed-upserted by run_update_merge; final state ≡ Q08 oracle")
 def q29s(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.streaming.runner import run_update_merge
+    from gelly_streaming_spark.streaming.sources import replay
 
     with _parity_stream_confs(spark):
         # 2 batches so cross-batch UPSERTS happen: batch-2 re-emits every
         # key whose degree grew, and those rows must override batch-1's
-        stream = _replay_tmp(
-            E.edges_cust_order(spark, sf_dir), num_batches=2, key=f"q29s:{sf_dir}"
+        stream = replay(
+            E.edges_cust_order(spark, sf_dir), num_batches=2, cache_key=f"q29s:{sf_dir}"
         )
         return run_update_merge(GraphStream(stream).degrees(), ["id"])
 
@@ -3081,6 +3026,8 @@ def _late_replay(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
     """3-batch out-of-order feed: on-time rows stream in event-time
     order, rows before the cutoff arrive LAST (their +1e12 arrival key
     sorts them after every on-time row)."""
+    from gelly_streaming_spark.streaming.sources import replay
+
     # vertex set bounded (src < 120, pushed into the scan) — the q15e
     # convention: the late-drop semantics are user-count-invariant, and
     # the unbounded fixture made the 3-batch stateful replay pay for
@@ -3097,8 +3044,8 @@ def _late_replay(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
         .otherwise(F.unix_timestamp("ts"))
         .cast("long"),
     )
-    stream = _replay_tmp(
-        feed, num_batches=3, order_by="arrival", key=f"{key}:{sf_dir}"
+    stream = replay(
+        feed, num_batches=3, order_by="arrival", cache_key=f"{key}:{sf_dir}"
     )
     return stream.select("src", "dst", "val", "ts")
 

@@ -659,6 +659,40 @@ def test_algos_leave_session_conf_and_fast_paths_to_plans():
     assert not found, found
 
 
+def test_streaming_and_operators_leave_session_conf_to_the_runner():
+    """``streaming/`` and ``operators/`` write no session configuration
+    except the no-data pin inside ``run_foreach_batch``, the one place
+    a streaming writer is built."""
+    import ast
+    import pathlib
+    import re
+
+    import gelly_streaming_spark.operators as operators
+    import gelly_streaming_spark.streaming as streaming
+    from gelly_streaming_spark.streaming import runner
+
+    runner_src = pathlib.Path(runner.__file__)
+    fn = next(
+        n for n in ast.parse(runner_src.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "run_foreach_batch"
+    )
+
+    def in_runner(p, i):
+        return p == runner_src and fn.lineno <= i <= fn.end_lineno
+
+    banned = re.compile(r'conf\.set\(|conf\.unset\(|"spark\.sql\.')
+    found, writers = [], []
+    for pkg in (streaming, operators):
+        for p in sorted(pathlib.Path(pkg.__file__).parent.glob("*.py")):
+            for i, line in enumerate(p.read_text().splitlines(), 1):
+                if banned.search(line) and not in_runner(p, i):
+                    found.append(f"{p.name}:{i}: {line.strip()}")
+                if "writeStream" in line and pkg is streaming:
+                    writers.append((p, i))
+    assert not found, found
+    assert len(writers) == 1 and in_runner(*writers[0]), writers
+
+
 def test_algos_read_counts_from_observations():
     """A count a loop needs rides the checkpoint job it already runs, as
     an ``Observation``: no non-comment line in ``algos/`` calls

@@ -796,7 +796,7 @@ def test_embedding_near_dup_lsh_recall(spark, emb):
     assert recall >= 0.6, f"multi-table LSH recall too low: {recall}"
 
 
-def test_exact_gemm_blocked_no_driver_collect(spark, emb):
+def test_exact_gemm_blocked_no_driver_collect(spark, emb, monkeypatch):
     """The exact GEMM path must (a) stay correct when the corpus spans
     many blocks (every block-pair kernel covers each pair exactly once,
     diagonal dedup included) and (b) never materialize the corpus on the
@@ -811,10 +811,9 @@ def test_exact_gemm_blocked_no_driver_collect(spark, emb):
 
     df = emb.limit(120).select("vec_id", "embedding")
     one_block = X._exact_pairs_gemm(df, 0.3, "vec_id", "embedding")
-    many_blocks = X._exact_pairs_gemm(
-        df, 0.3, "vec_id", "embedding", rows_per_block=16
-    )
     a = sorted((r.a, r.b, r.sim) for r in one_block.collect())
+    monkeypatch.setattr(X, "_ROWS_PER_BLOCK", 16)
+    many_blocks = X._exact_pairs_gemm(df, 0.3, "vec_id", "embedding")
     b = sorted((r.a, r.b, r.sim) for r in many_blocks.collect())
     assert a == b and len(a) > 0
 

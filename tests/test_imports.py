@@ -109,6 +109,7 @@ REMOVED_OPTIONS = [
     ("algos.connected_components", "connected_components", "check_every"),
     ("streaming.runner", "run_update_merge", "collapse_every"),
     ("ext.embeddings", "semantic_dedup", "rows_per_block"),
+    ("ext.embeddings", "_exact_pairs_gemm", "rows_per_block"),
 ]
 
 

@@ -221,7 +221,7 @@ def test_paths_agree_on_random_hosts(spark):
 
 def test_vendored_full_psl_loaded():
     """The package default is the FULL vendored ICANN section (7,380
-    rules), not the hand-written excerpt: every rule class present."""
+    rules) read from the packaged data file: every rule class present."""
     assert len(PSL_RULES) > 7000
     t = parse_psl()
     assert t.entries["www.ck"] == (1, True)              # exception
@@ -242,7 +242,7 @@ def test_full_psl_lookup_differential_sampled(spark):
     """Lookup ≡ reference over hosts synthesized from REAL full-file
     rules of every depth and class (normal/wildcard/exception), with
     0–2 extra labels each — exercises the depth-4 table and the
-    broadcast join tiers the excerpt never reached."""
+    broadcast join tiers a small rule excerpt never reaches."""
     t = parse_psl()
     keys = sorted(t.entries)
     sample = []

@@ -563,31 +563,79 @@ def test_run_to_memory_rejects_update_mode(spark, tmp_path):
         run_to_memory(s.groupBy("src").count(), "update")
 
 
-def test_parity_confs_restored_and_ckpt_removed_on_failure(spark):
+def test_parity_confs_restored_on_failure(spark):
     """VERDICT r5 #5: a streaming parity query that THROWS inside the
-    conf context must still restore the session confs and remove the
-    throwaway checkpoint dir — a failed query cannot leak either."""
-    import os
-
-    import pytest as _pytest
-
+    conf context must still restore the session's shuffle width."""
     from gelly_streaming_spark.queries import _parity_stream_confs
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ckpt = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
-    ctx = _parity_stream_confs(spark)
-    with _pytest.raises(RuntimeError, match="boom"):
-        with ctx:
-            leaked_dir = ctx.ckpt_dir
+    with pytest.raises(RuntimeError, match="boom"):
+        with _parity_stream_confs(spark):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
-    assert (
-        spark.conf.get("spark.sql.streaming.checkpointLocation", None)
-        == prev_ckpt
+
+
+def test_needs_no_data_batch_only_for_watermark_gated_append(spark, tmp_path):
+    """Plan-only (no query starts): the trailing no-data batch is kept
+    only for an append sink whose emission waits on the watermark."""
+    import pyspark.sql.functions as F
+
+    from gelly_streaming_spark.streaming.runner import _needs_no_data_batch
+
+    stream = spark.readStream.schema(
+        "src long, dst long, val double, ts timestamp"
+    ).parquet(str(tmp_path))
+    window_agg = (  # q27s
+        GraphStream(stream)
+        .with_watermark("0 seconds")
+        .slice("1 hour", "out")
+        .reduce_on_edges(F.count(F.lit(1)).alias("cnt"))
     )
-    # None only when the session already had a checkpointLocation
-    if leaked_dir is not None:
-        assert not os.path.exists(leaked_dir), leaked_dir
+    cases = {
+        "complete aggregate": (stream.groupBy("src").count(), "complete", False),
+        "update": (stream.groupBy("src").count(), "update", False),
+        "append, no watermark": (stream.where("src > 0"), "append", False),
+        "append, watermark, dedup (q28s)": (
+            streaming_distinct(stream, "3650 days"), "append", False,
+        ),
+        "append, watermark, window aggregate (q27s)": (window_agg, "append", True),
+    }
+    got = {k: _needs_no_data_batch(sdf, mode) for k, (sdf, mode, _) in cases.items()}
+    assert got == {k: want for k, (*_, want) in cases.items()}
+
+
+def test_failed_run_removes_its_checkpoint_and_restores_no_data_conf(
+    spark, tmp_path, monkeypatch
+):
+    """A ``foreachBatch`` callback that raises still leaves no
+    ``gss_ckpt_*`` directory behind and the session's no-data conf as
+    it was."""
+    from pyspark.errors import StreamingQueryException
+
+    base = tmp_path / "gss"
+    monkeypatch.setenv("GSS_TMPDIR", str(base))
+    stream = replay(fixture_graph(spark, "g1"), str(tmp_path / "g1"), num_batches=2)
+    seen = []
+
+    def boom(bdf, _bid):
+        seen.extend(base.glob("gss_ckpt_*"))
+        raise RuntimeError("boom")
+
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(StreamingQueryException, match="boom"):
+            run_foreach_batch(stream.groupBy("src").count(), boom, "complete")
+        assert spark.conf.get(conf) == "true"
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+    assert len(seen) == 1, seen
+    assert not list(base.glob("gss_ckpt_*"))
 
 
 def _checkpoint_manager(spark, path) -> str:
