@@ -102,15 +102,19 @@ def _memo_plan(name: str, fn):
     Catalyst analysis on EVERY run; q44's 64-conditional-sum tree
     measured 5.6 s of the two combined at sf0.1 against 0.84 s of
     actual execution). The memo returns the same DataFrame object, so
-    repeat invocations skip construction and analysis while every
-    action still executes the full plan — scan, shuffles, write.
+    repeat invocations skip construction and analysis. Actions still
+    run jobs, but not always the full plan: a repeat action on the
+    memoized frame may reuse the previous action's shuffle output
+    (47 memoized queries, sf0.1, repeat ``collect()``: 144 → 47 jobs),
+    while a repeat noop write re-runs every job.
 
     OPT-IN, and only for PURELY DECLARATIVE builders: a memoized fn
     must not run driver-side loops, collects, or checkpoints, because
     re-executing the returned frame would then skip the measured work
-    (the iterative algos, the lazy-checkpoint pipelines q40/q41/q42,
-    and the ANN index builders all stay unmemoized). The memo is a
-    plain plan cache — no storage blocks."""
+    (the iterative algos, the lazy-checkpoint pipelines q40/q41, and
+    the ANN index builders all stay unmemoized; q42's builder is purely
+    declarative and memoized). The memo is a plain plan cache — no
+    storage blocks."""
     import functools
 
     @functools.wraps(fn)
@@ -425,12 +429,61 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q15–Q18: library algorithms (reference L1–L5)
 # ---------------------------------------------------------------------------
-_Q15_SQL = """
+# The loop graph every CC/PageRank/BFS/LPA/k-core/HITS entry runs over:
+# customer→order and order→part edges of the orders with key < k. It is
+# defined twice, once per engine — as the oracle's edge block and as the
+# engine's edge frame — and nowhere else.
+def _q15_edges_sql(k: int = 200, weighted: bool = False) -> str:
+    """The loop graph's ``orders UNION ALL lineitem`` edge block for an
+    oracle CTE (two-space indent, no trailing newline); ``weighted``
+    adds each edge's price as a DECIMAL(18,2) ``w``."""
+    ow = lw = ""
+    if weighted:
+        ow = ",\n         CAST(o_totalprice AS DECIMAL(18,2)) AS w\n "
+        lw = ",\n         CAST(l_extendedprice AS DECIMAL(18,2))\n "
+    return (
+        f"  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst{ow}"
+        f" FROM orders WHERE o_orderkey < {k}\n"
+        "  UNION ALL\n"
+        f"  SELECT 1000000 + l_orderkey, 2000000 + l_partkey{lw}"
+        f" FROM lineitem WHERE l_orderkey < {k}"
+    )
+
+
+def _q15_edges(
+    spark: SparkSession, sf_dir: str, k: int = 200, weighted: bool = False
+) -> GraphStream:
+    """The loop graph as a GraphStream: the edges of
+    ``_q15_edges_sql(k, weighted)``, the weight (if any) as ``val``."""
+    # filter on the RAW key, not the offset edge column: `1000000 +
+    # o_orderkey < 1000000 + k` is not a rewrite Catalyst pushes into the
+    # parquet scan (ANSI arithmetic), `o_orderkey < k` is — the
+    # difference between reading ~k rows and the whole table
+    a = (
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderkey") < k)
+        .select(
+            F.col("o_custkey").alias("src"),
+            (F.lit(E.ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
+            *([F.col("o_totalprice").alias("val")] if weighted else []),
+        )
+    )
+    b = (
+        load_table(spark, sf_dir, "lineitem")
+        .where(F.col("l_orderkey") < k)
+        .select(
+            (F.lit(E.ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
+            (F.lit(E.PART_OFFSET) + F.col("l_partkey")).alias("dst"),
+            *([F.col("l_extendedprice").alias("val")] if weighted else []),
+        )
+    )
+    return GraphStream(a.unionByName(b))
+
+
+_Q15_SQL = f"""
 WITH RECURSIVE
 sub AS (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200
+{_q15_edges_sql()}
 ),
 eu AS (SELECT src AS u, dst AS v FROM sub UNION ALL SELECT dst, src FROM sub),
 verts AS (SELECT DISTINCT u AS id FROM eu),
@@ -449,30 +502,6 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.algos.connected_components import connected_components
 
     return connected_components(_q15_edges(spark, sf_dir))
-
-
-def _q15_edges(spark: SparkSession, sf_dir: str) -> GraphStream:
-    # filter on the RAW key, not the offset edge column: `1000000 +
-    # o_orderkey < 1000200` is not a rewrite Catalyst pushes into the
-    # parquet scan (ANSI arithmetic), `o_orderkey < 200` is — the
-    # difference between reading ~200 rows and the whole table
-    a = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") < 200)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(E.ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
-        )
-    )
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") < 200)
-        .select(
-            (F.lit(E.ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
-            (F.lit(E.PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-        )
-    )
-    return GraphStream(a.unionByName(b))
 
 
 @_q("q15b_cc_summary", _Q15_SQL,
@@ -2383,12 +2412,10 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at degree-pattern-discrete values, so the measured min distance to a
 # 0.5e-6 rounding boundary is 4.4e-9 raw (sf0.01; 5.0e-9 / 3.3e-8 at
 # sf0.001/0.1) — 4+ orders above drift.
-_Q56_SQL = """
+_Q56_SQL = f"""
 WITH
 sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200)),
+{_q15_edges_sql()})),
 verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM sub UNION ALL SELECT dst FROM sub)),
 n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
 od AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM sub GROUP BY src),
@@ -2449,12 +2476,10 @@ def q56d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d < 6 caps the recursion) and takes MIN(d) per vertex — exactly the
 # bounded-horizon BFS distance. All-integer arithmetic: no float
 # margins exist for this hash, unlike the cosine/PageRank families.
-_Q57_SQL = """
+_Q57_SQL = f"""
 WITH RECURSIVE
 sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200)
+{_q15_edges_sql()})
   WHERE src <> dst),
 eu AS (SELECT DISTINCT u, v FROM (
   SELECT src AS u, dst AS v FROM sub UNION ALL SELECT dst, src FROM sub)),
@@ -2602,12 +2627,10 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic is integer — no float margins exist for this hash, like
 # q57. The deterministic min-label tie-break is what makes the classic
 # randomized algorithm certifiable cross-engine.
-_Q60_SQL = """
+_Q60_SQL = f"""
 WITH
 sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200)
+{_q15_edges_sql()})
   WHERE src <> dst),
 eu AS (SELECT DISTINCT u, v FROM (
   SELECT src AS u, dst AS v FROM sub UNION ALL SELECT dst, src FROM sub)),
@@ -2659,12 +2682,10 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
 # accumulates every component label — the q15e lesson), so the hub fan
 # is c_custkey % 10 (1.5k vertices at sf0.1, ~2.6M walk pairs), not the
 # full customer table.
-_Q61_SQL = """
+_Q61_SQL = f"""
 WITH RECURSIVE
 sub AS (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200
+{_q15_edges_sql()}
   UNION ALL
   SELECT 0, c_custkey FROM customer WHERE c_custkey % 10 = 0
 ),
@@ -3127,12 +3148,10 @@ def q67s(spark: SparkSession, sf_dir: str) -> DataFrame:
 # halves, which both engines round HALF-UP on identical inputs —
 # cannot diverge. Post-9dp 6dp margins for non-boundary rows:
 # 0.125/0.136 (1e-6 units) at sf0.01/0.1.
-_Q68_SQL = """
+_Q68_SQL = f"""
 WITH
 sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200)),
+{_q15_edges_sql()})),
 verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM sub UNION ALL SELECT dst FROM sub)),
 s AS (SELECT id FROM verts WHERE id % 100 = 1),
 ns AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM s),
@@ -3182,16 +3201,10 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so every score is exact and the hash needs no float margins (the q60
 # integer-exactness property preserved under weighting). Parallel edges
 # and both directions of a pair SUM into one symmetric weight first.
-_Q69_SQL = """
+_Q69_SQL = f"""
 WITH
 sub AS (SELECT src, dst, w FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst,
-         CAST(o_totalprice AS DECIMAL(18,2)) AS w
-  FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey,
-         CAST(l_extendedprice AS DECIMAL(18,2))
-  FROM lineitem WHERE l_orderkey < 200)
+{_q15_edges_sql(weighted=True)})
   WHERE src <> dst),
 eu AS (SELECT u, v, SUM(w) AS w FROM (
   SELECT src AS u, dst AS v, w FROM sub UNION ALL SELECT dst, src, w FROM sub)
@@ -3224,25 +3237,7 @@ SELECT id, lbl FROM l3
 def q69(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.algos.lpa import weighted_label_propagation
 
-    a = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") < 200)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(E.ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
-            F.col("o_totalprice").alias("val"),
-        )
-    )
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") < 200)
-        .select(
-            (F.lit(E.ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
-            (F.lit(E.PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-            F.col("l_extendedprice").alias("val"),
-        )
-    )
-    gs = GraphStream(a.unionByName(b))
+    gs = _q15_edges(spark, sf_dir, weighted=True)
     return weighted_label_propagation(gs, iters=3).select("id", "lbl")
 
 
@@ -3349,18 +3344,16 @@ def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The oracle unrolls 3 synchronous 2-core peel steps over the enlarged
-# (o_orderkey < 2000) fixture: per step a degree count, a keep set
+# The oracle unrolls 3 synchronous 2-core peel steps over the loop graph
+# enlarged to order-key cut-off 2000: per step a degree count, a keep set
 # (degree >= k), and an endpoint restriction — then the surviving
 # degrees. All-integer; the engine's early exit is idempotence-safe
 # (fixed-round convention shared with q56/q60). Fixture measured at
 # sf0.01: 5040 -> 4339 -> 4289 -> 4286 vertices across the 3 peels —
 # every step does real work, none converges early.
-_Q72_SQL = """
+_Q72_SQL = f"""
 WITH sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 2000
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 2000)
+{_q15_edges_sql(2000)})
   WHERE src <> dst),
 eu0 AS (SELECT u, v FROM (SELECT src AS u, dst AS v FROM sub UNION ALL SELECT dst, src FROM sub)),
 d0 AS (SELECT u, COUNT(*) AS c FROM eu0 GROUP BY u),
@@ -3390,37 +3383,19 @@ SELECT u AS id, COUNT(*) AS degree FROM e3 GROUP BY u
 def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gelly_streaming_spark.algos.kcore import k_core
 
-    a = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") < 2000)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(E.ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
-        )
+    return k_core(_q15_edges(spark, sf_dir, k=2000), k=2, rounds=3).select(
+        "id", "degree"
     )
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") < 2000)
-        .select(
-            (F.lit(E.ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
-            (F.lit(E.PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-        )
-    )
-    return k_core(
-        GraphStream(a.unionByName(b)), k=2, rounds=3
-    ).select("id", "degree")
 
 
 # The oracle unrolls 2 unnormalized HITS rounds over the q15 fixture:
 # auth_t = in-sum of hub_{t-1}, hub_t = out-sum of auth_t, hub_0 = 1.
 # All-integer (the unnormalized contract exists exactly so this hash
 # needs no float margins — see algos/hits.py).
-_Q73_SQL = """
+_Q73_SQL = f"""
 WITH
 sub AS (SELECT DISTINCT src, dst FROM (
-  SELECT o_custkey AS src, 1000000 + o_orderkey AS dst FROM orders WHERE o_orderkey < 200
-  UNION ALL
-  SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem WHERE l_orderkey < 200)
+{_q15_edges_sql()})
   WHERE src <> dst),
 verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM sub UNION ALL SELECT dst FROM sub)),
 a1 AS (SELECT v.id, COALESCE(x.a, 0) AS a FROM verts v LEFT JOIN

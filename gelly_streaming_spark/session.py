@@ -85,7 +85,6 @@ STREAMING_SCALE_CONFS: dict[str, str] = {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    "spark.sql.streaming.noDataMicroBatches.enabled": "true",
 }
 
 

@@ -62,19 +62,33 @@ def _needs_no_data_batch(sdf: DataFrame, output_mode: str) -> bool:
     if output_mode != "append":
         return False
     try:
-        plan = sdf._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+        nodes = _plan_node_names(sdf._jdf.queryExecution().analyzed())  # noqa: SLF001
     except Exception:
         return True  # can't inspect — keep Spark's safe default
-    if "EventTimeWatermark" not in plan:
+    # Node class names, never the plan text: a column named `Joined` or
+    # `isAggregate` must not read as an operator.
+    if "EventTimeWatermark" not in nodes:
         return False
     # Err toward Spark's safe default: any watermarked append plan keeps
     # the trailing batch UNLESS every stateful operator is known to emit
     # immediately (dedup evicts on watermark but emits on arrival).
-    # "FlatMapGroups" matches both the Scala FlatMapGroupsWithState and
-    # the Python FlatMapGroupsInPandasWithState (applyInPandasWithState)
-    # nodes; "Join" covers watermark-gated outer stream-stream joins.
+    # Prefixes: "FlatMapGroups" covers the Scala FlatMapGroupsWithState
+    # and the Python FlatMapGroupsInPandasWithState (applyInPandasWithState)
+    # nodes, "TransformWithState" its Scala and Python variants; "Join"
+    # covers watermark-gated outer stream-stream joins.
     gated = ("Aggregate", "FlatMapGroups", "TransformWithState", "Join")
-    return any(g in plan for g in gated)
+    return any(n.startswith(gated) for n in nodes)
+
+
+def _plan_node_names(plan) -> set[str]:
+    """Class simple names of every node in a JVM logical plan tree."""
+    names, todo = set(), [plan]
+    while todo:
+        node = todo.pop()
+        names.add(node.getClass().getSimpleName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
 
 
 def run_to_memory(

@@ -43,3 +43,54 @@ def test_certification_window_order():
     }
     window_ids = {n.split("_", 1)[0] for n in names[:50]}
     assert s2_ids <= window_ids, sorted(s2_ids - window_ids)
+
+
+@pytest.mark.parametrize(
+    "k,weighted", [(50, False), (200, False), (200, True), (2000, False)]
+)
+def test_loop_graph_frame_matches_edge_sql(k, weighted, spark, duck, sf_dir):
+    """The loop graph's two definitions, the engine's edge frame and the
+    oracle's edge SQL, give the same rows at cut-offs the registry does
+    not use as well as at the ones it does."""
+    from gelly_streaming_spark.queries import _q15_edges, _q15_edges_sql
+
+    rel = duck.sql(_q15_edges_sql(k, weighted))
+    if weighted:
+        rel = rel.project("src, dst, w AS val")
+    assert rel.count("*").fetchone()[0] > 0
+    assert_frames_match(
+        _q15_edges(spark, sf_dir, k, weighted).edges, rel, label=f"k={k}"
+    )
+
+
+def test_loop_graph_cutoff_lives_only_in_its_two_definitions():
+    """Every order-key cut-off in the engine sits inside the loop graph's
+    edge SQL or its edge-frame builder, so no query or oracle carries a
+    copy of the graph of its own."""
+    import ast
+    import pathlib
+    import re
+
+    import gelly_streaming_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    defs = {
+        f.name: f
+        for f in ast.parse((root / "queries.py").read_text()).body
+        if isinstance(f, ast.FunctionDef)
+        and f.name in ("_q15_edges_sql", "_q15_edges")
+    }
+    assert len(defs) == 2, sorted(defs)
+    allowed = {
+        ("queries.py", i)
+        for f in defs.values()
+        for i in range(f.lineno, f.end_lineno + 1)
+    }
+    cutoff = re.compile(r'orderkey"?\)? <')
+    found = [
+        f"{p.relative_to(root)}:{i}: {line.strip()}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if cutoff.search(line) and (str(p.relative_to(root)), i) not in allowed
+    ]
+    assert not found, found

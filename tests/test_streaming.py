@@ -600,6 +600,19 @@ def test_needs_no_data_batch_only_for_watermark_gated_append(spark, tmp_path):
             streaming_distinct(stream, "3650 days"), "append", False,
         ),
         "append, watermark, window aggregate (q27s)": (window_agg, "append", True),
+        # operator names as column names: only plan nodes count
+        "append, watermark, dedup, column `Joined`": (
+            streaming_distinct(
+                stream.withColumnRenamed("val", "Joined"), "3650 days"
+            ),
+            "append", False,
+        ),
+        "append, watermark, dedup, column `isAggregate`": (
+            streaming_distinct(
+                stream.withColumnRenamed("val", "isAggregate"), "3650 days"
+            ),
+            "append", False,
+        ),
     }
     got = {k: _needs_no_data_batch(sdf, mode) for k, (sdf, mode, _) in cases.items()}
     assert got == {k: want for k, (*_, want) in cases.items()}
